@@ -1,0 +1,5 @@
+"""Document-annotation benchmark: kernel and Spark workloads, per-layer traces.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``.
+"""
