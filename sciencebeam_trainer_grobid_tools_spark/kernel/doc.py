@@ -11,7 +11,9 @@ Reproduces the reference's token/line semantics:
   excluded from the matchable token stream (grobid_training_tei.py:618-619);
 - joined text for matching: tokens joined with their recorded whitespace
   (None -> single space), the last item of a join contributes none
-  (annotation/matching_utils.py:116-142).
+  (annotation/matching_utils.py:116-142).  The matcher's pending-text model
+  (the reference's SequenceWrapper / SequencesText / PendingSequences,
+  matching_utils.py:189-333) is the ``MatcherView`` of operators/annotate.py.
 
 The *extracted text* of a document is defined as this token-level
 reconstruction (lines joined with '\\n') — the exact string the reference's
@@ -21,7 +23,7 @@ matcher observes; byte-identity of this string is the per-url invariant.
 from __future__ import annotations
 
 import re
-from typing import Callable, Iterator, List, Optional, Sequence, Tuple
+from typing import Iterator, List, Optional, Sequence, Tuple
 
 IndexRange = Tuple[int, int]
 
@@ -161,9 +163,8 @@ def join_with_index_ranges(
     and return each item's index range in the joined string
     (matching_utils.py:116-142)."""
     if whitespace_list is None:
-        # hot path (every RunsText build): constant separator — one C-level
-        # join, ranges from a running sum; identical output to the general
-        # loop below by construction
+        # constant separator: one C-level join, ranges from a running sum;
+        # identical output to the general loop below by construction
         ranges = []
         append = ranges.append
         pos = 0
@@ -190,116 +191,6 @@ def join_with_index_ranges(
     return "".join(parts), ranges
 
 
-class TokenRun:
-    """A run of tokens with normalized joined text and char->token back-map
-    (the SequenceWrapper of matching_utils.py:189-257)."""
-
-    __slots__ = ("tokens", "normalize_fn", "joined", "ranges", "position", "_subcache")
-
-    def __init__(
-        self,
-        tokens: List[Token],
-        normalize_fn: Optional[Callable[[str], str]] = None,
-        position: int = 0,
-    ):
-        self.tokens = tokens
-        self.normalize_fn = normalize_fn
-        strings = [t.text for t in tokens]
-        if normalize_fn:
-            strings = [normalize_fn(s) for s in strings]
-        self.joined, self.ranges = join_with_index_ranges(
-            strings, [t.whitespace for t in tokens], sep=" "
-        )
-        self.position = position
-        self._subcache: Optional[Tuple[List[Optional[str]], list]] = None
-
-    def token_indices_between(self, index_range: IndexRange) -> Iterator[int]:
-        start, end = index_range
-        for i, (t_start, t_end) in enumerate(self.ranges):
-            if t_start >= end:
-                break
-            if t_end > start:
-                yield i
-
-    def tokens_between(self, index_range: IndexRange) -> Iterator[Token]:
-        for i in self.token_indices_between(index_range):
-            yield self.tokens[i]
-
-    def untagged_subruns(self) -> Iterator["TokenRun"]:
-        """Split at tagged tokens; yields self if fully untagged, nothing if
-        fully tagged (matching_utils.py:217-233).
-
-        The matcher's fixpoint calls this per target annotation while tags
-        change only when a match lands, so the split result is cached per
-        tag-state (an O(n) tags comparison replaces the TokenRun rebuilds —
-        join + normalization — on the unchanged-case hot path).  Sub-run
-        joined text does not depend on tags, so reusing the objects is safe."""
-        tags = [t.tag for t in self.tokens]
-        tagged = sum(1 for t in tags if t)
-        if tagged == 0:
-            yield self
-            return
-        if tagged == len(self.tokens):
-            return
-        if self._subcache is not None and self._subcache[0] == tags:
-            yield from self._subcache[1]
-            return
-        subruns: List[TokenRun] = []
-        pending: List[Token] = []
-        for token, tag in zip(self.tokens, tags):
-            if not tag:
-                pending.append(token)
-            elif pending:
-                subruns.append(TokenRun(pending, self.normalize_fn, position=self.position))
-                pending = []
-        if pending:
-            subruns.append(TokenRun(pending, self.normalize_fn, position=self.position))
-        self._subcache = (tags, subruns)
-        yield from subruns
-
-    def __str__(self) -> str:
-        return self.joined
-
-
 def join_tokens_text(tokens: List[Token]) -> str:
     """Single-space join of token texts (matching_utils.py:105-106)."""
     return " ".join(t.text for t in tokens)
-
-
-class RunsText:
-    """Multiple runs joined with '\\n' with char->token mapping
-    (the SequencesText of matching_utils.py:295-333)."""
-
-    __slots__ = ("runs", "joined", "ranges")
-
-    def __init__(self, runs: List[TokenRun], sep: str = "\n"):
-        self.runs = runs
-        self.joined, self.ranges = join_with_index_ranges(
-            [r.joined for r in runs], None, sep=sep
-        )
-
-    @property
-    def end_index(self) -> int:
-        return self.ranges[-1][1] if self.ranges else 0
-
-    def iter_runs_between(self, index_range: IndexRange) -> Iterator[TokenRun]:
-        start, end = index_range
-        for run, (r_start, r_end) in zip(self.runs, self.ranges):
-            if r_start >= end:
-                break
-            if r_end > start:
-                yield run
-
-    def iter_tokens_between(self, index_range: IndexRange) -> Iterator[Token]:
-        start, end = index_range
-        for run, (r_start, r_end) in zip(self.runs, self.ranges):
-            if r_start >= end:
-                break
-            if r_end > start:
-                yield from run.tokens_between((start - r_start, end - r_start))
-
-    def get_text_between(self, index_range: IndexRange) -> str:
-        return join_tokens_text(list(self.iter_tokens_between(index_range)))
-
-    def __str__(self) -> str:
-        return self.joined

@@ -14,16 +14,16 @@ Re-implements (from behavior, not code) the reference's fuzzy matching stack:
 - the search entry points (``fuzzy_search[_chunks]``, ``iter_fuzzy_search_all``):
   ``utils/fuzzy.py:520-644``.
 
-Everything here is pure python+numpy; it runs inside Spark executors via
+Everything here is pure python; it runs inside Spark executors via
 Arrow-batched ``mapInPandas`` (see ``plans/pipeline.py``).
 """
 
 from __future__ import annotations
 
-from functools import lru_cache
-from typing import Callable, Iterable, Iterator, List, Optional, Tuple
-
-import numpy as np
+import re
+from bisect import bisect_right
+from itertools import accumulate
+from typing import Callable, Iterable, Iterator, List, Optional, Tuple, Union
 
 from .align import (
     MatchingBlocks,
@@ -105,84 +105,43 @@ def complement_ranges(
         yield i, end
 
 
-# ---------------------------------------------------------------------------
-# vectorized junk masks (hot path: junk counting is per-character python in
-# the reference; here it is a cached numpy prefix-sum per string)
-
-_SPACE_CODE = ord(" ")
-_STAR_CODE = ord("*")
-_COMMA_CODE = ord(",")
-_DOT_CODE = ord(".")
-
-
-def _codes(s: str) -> "np.ndarray":
-    return np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
-
-
-@lru_cache(maxsize=32)
-def _positional_junk_prefix(s: str) -> "np.ndarray":
-    """Prefix sums of the positional junk mask (semantics of
-    ``positional_is_junk``), so junk-in-range is two lookups."""
-    n = len(s)
-    prefix = np.zeros(n + 1, dtype=np.int32)
-    if not n:
-        return prefix
-    codes = _codes(s)
-    is_space = codes == _SPACE_CODE
-    mask = is_space | (codes == _STAR_CODE)
-    # previous non-space character (forward-fill of indices)
-    idx = np.arange(n, dtype=np.int64)
-    nonspace_idx = np.where(~is_space, idx, np.int64(-1))
-    prev_ns = np.concatenate(([np.int64(-1)], np.maximum.accumulate(nonspace_idx)[:-1]))
-    has_prev = prev_ns >= 0
-    prev_codes = np.where(has_prev, codes[np.maximum(prev_ns, 0)], np.uint32(0))
-    # vectorized ASCII isalpha; the (rare) non-ascii chars get the exact
-    # python check — replaces a per-char genexpr over the full haystack
-    alpha_mask = ((codes >= 65) & (codes <= 90)) | ((codes >= 97) & (codes <= 122))
-    for k in np.flatnonzero(codes > 127):
-        if s[int(k)].isalpha():
-            alpha_mask[k] = True
-    prev_alpha = np.where(has_prev, alpha_mask[np.maximum(prev_ns, 0)], False)
-    mask |= (codes == _COMMA_CODE) & (prev_codes == _DOT_CODE)
-    mask |= (codes == _DOT_CODE) & prev_alpha
-    np.cumsum(mask, out=prefix[1:])
-    return prefix
+def _positional_junk_count(s: str, start: int, end: int) -> int:
+    """``positional_is_junk`` count over s[start:end]: spaces and stars by
+    ``str.count``, the look-back test only at the dots and commas."""
+    segment = s[start:end]
+    count = segment.count(" ") + segment.count("*")
+    for ch in ",.":
+        i = segment.find(ch)
+        while i >= 0:
+            k = start + i - 1
+            while k >= 0 and s[k] == " ":
+                k -= 1
+            if k >= 0 and (s[k] == "." if ch == "," else s[k].isalpha()):
+                count += 1
+            i = segment.find(ch, i + 1)
+    return count
 
 
-@lru_cache(maxsize=32)
-def _adjacent_junk_prefix(s: str) -> "np.ndarray":
-    """Prefix sums of the adjacent junk mask (``adjacent_is_junk``)."""
-    n = len(s)
-    prefix = np.zeros(n + 1, dtype=np.int32)
-    if not n:
-        return prefix
-    codes = _codes(s)
-    mask = codes == _STAR_CODE
-    if n > 1:
-        prev = codes[:-1]
-        cur = codes[1:]
-        # vectorized ASCII isalpha; the (rare) non-ascii chars get the exact
-        # python check — replaces a per-char genexpr over the full haystack
-        alpha_mask = ((codes >= 65) & (codes <= 90)) | ((codes >= 97) & (codes <= 122))
-        for k in np.flatnonzero(codes > 127):
-            if s[int(k)].isalpha():
-                alpha_mask[k] = True
-        adjacent = (
-            ((prev == _DOT_CODE) & ((cur == _SPACE_CODE) | (cur == _COMMA_CODE)))
-            | (alpha_mask[:-1] & (cur == _DOT_CODE))
-            | (prev == cur)
-        )
-        mask[1:] |= adjacent
-    np.cumsum(mask, out=prefix[1:])
-    return prefix
+def _adjacent_junk_count(s: str, start: int, end: int) -> int:
+    """``adjacent_is_junk`` count over s[start:end]."""
+    count = 0
+    prev = s[start - 1] if start > 0 else ""
+    for ch in s[start:end]:
+        if (
+            ch == "*"
+            or ch == prev
+            or (prev == "." and ch in " ,")
+            or (ch == "." and prev.isalpha())
+        ):
+            count += 1
+        prev = ch
+    return count
 
 
-def _junk_prefix_for(s: str, isjunk: IsJunk) -> Optional["np.ndarray"]:
-    if isjunk is positional_is_junk:
-        return _positional_junk_prefix(s)
-    if isjunk is adjacent_is_junk:
-        return _adjacent_junk_prefix(s)
-    return None
+_JUNK_COUNTS = {
+    positional_is_junk: _positional_junk_count,
+    adjacent_is_junk: _adjacent_junk_count,
+}
 
 
 class FuzzyScore:
@@ -234,10 +193,11 @@ class FuzzyScore:
         return self._b_range
 
     def _count_junk_in(self, s: str, index_range: IndexRange) -> int:
-        prefix = _junk_prefix_for(s, self.isjunk)
-        if prefix is not None:
-            return int(prefix[index_range[1]] - prefix[index_range[0]])
-        return sum(1 for i in range(index_range[0], index_range[1]) if self.isjunk(s, i))
+        start, end = index_range
+        count = _JUNK_COUNTS.get(self.isjunk)
+        if count is not None:
+            return count(s, start, end)
+        return sum(1 for i in range(start, end) if self.isjunk(s, i))
 
     def _non_matching_junk(
         self, s: str, blocks_ranges: List[IndexRange], index_range: Optional[IndexRange]
@@ -383,56 +343,63 @@ class FuzzyScore:
         )
 
 
+_UNMASKED_RUN = re.compile(r"[^ \t\n]+")
+
+
 class MaskedString:
-    """A string with some characters masked out, retaining an index back-map
-    (reference StringView: utils/fuzzy.py:104-129).
+    """A string with its ``space_is_junk`` characters removed, and a run table
+    back to the original (reference StringView: utils/fuzzy.py:104-129).
 
-    The back-map is computed lazily for the whitespace-masked hot path: a
-    search that finds no match (or hits the exact-occurrence fast path and
-    then only reads two positions) should not pay for materializing it."""
+    The run table holds, per maximal unmasked run, its start in the masked
+    string and in the original.  It is built from one regex scan on the first
+    back-map, so a search that finds nothing never pays for it."""
 
-    __slots__ = ("original", "masked", "_index_map")
+    __slots__ = ("original", "masked", "_runs")
 
-    def __init__(self, original: str, masked: str, index_map=None):
+    def __init__(self, original: str):
         self.original = original
-        self.masked = masked
-        self._index_map = index_map
+        # three C-level replaces beat str.translate, whose per-call table
+        # set-up dominates on short strings
+        self.masked = original.replace(" ", "").replace("\t", "").replace("\n", "")
+        self._runs: Optional[Tuple[List[int], List[int]]] = None
 
-    @property
-    def index_map(self):
-        if self._index_map is None:
-            codes = _codes(self.original)
-            keep = ~((codes == _SPACE_CODE) | (codes == 9) | (codes == 10))
-            self._index_map = np.flatnonzero(keep)
-        return self._index_map
+    def original_index(self, index: int) -> int:
+        """Position in ``original`` of position ``index`` of ``masked``."""
+        if self._runs is None:
+            masked_starts: List[int] = []
+            original_starts: List[int] = []
+            masked_pos = 0
+            for match in _UNMASKED_RUN.finditer(self.original):
+                start, end = match.span()
+                masked_starts.append(masked_pos)
+                original_starts.append(start)
+                masked_pos += end - start
+            self._runs = (masked_starts, original_starts)
+        masked_starts, original_starts = self._runs
+        run = bisect_right(masked_starts, index) - 1
+        return original_starts[run] + index - masked_starts[run]
 
-    @staticmethod
-    def from_keep_flags(original: str, keep: List[bool]) -> "MaskedString":
-        masked = "".join(ch for ch, k in zip(original, keep) if k)
-        index_map = [i for i, k in enumerate(keep) if k]
-        return MaskedString(original, masked, index_map)
 
-    @staticmethod
-    def mask_junk(original: str, isjunk: IsJunk) -> "MaskedString":
-        if isjunk is space_is_junk:
-            return _space_masked(original)
-        return MaskedString.from_keep_flags(
-            original, [not isjunk(original, i) for i in range(len(original))]
+class JoinedMaskedString:
+    """The ``MaskedString`` of ``"\\n".join(part.original for part in parts)``,
+    built from the parts' own views and their starts in the joined string:
+    the run table has one entry per part, and a part back-maps inside
+    itself."""
+
+    __slots__ = ("parts", "masked", "_masked_starts", "_original_starts")
+
+    def __init__(self, parts: List[MaskedString], original_starts: List[int]):
+        self.parts = parts
+        masked = [part.masked for part in parts]
+        self.masked = "".join(masked)
+        self._masked_starts = list(accumulate(map(len, masked[:-1]), initial=0))
+        self._original_starts = original_starts
+
+    def original_index(self, index: int) -> int:
+        k = bisect_right(self._masked_starts, index) - 1
+        return self._original_starts[k] + self.parts[k].original_index(
+            index - self._masked_starts[k]
         )
-
-
-# str.translate deletion table for the space_is_junk character set — one
-# C pass over the string, no numpy round-trip
-_WS_DELETE_TABLE = {ord(" "): None, ord("\t"): None, ord("\n"): None}
-
-
-@lru_cache(maxsize=32)
-def _space_masked(original: str) -> MaskedString:
-    """Whitespace masking (the hot path: the full pending-sequence haystack
-    is masked per fuzzy search).  The masked text comes from str.translate
-    (single C pass); the index back-map is materialized lazily on first
-    access (MaskedString.index_map)."""
-    return MaskedString(original, original.translate(_WS_DELETE_TABLE))
 
 
 def offset_blocks(blocks: MatchingBlocks, a_offset: int = 0, b_offset: int = 0) -> MatchingBlocks:
@@ -620,6 +587,7 @@ def fuzzy_search_chunks(
     max_chunks: int = 1,
     start_index: int = 0,
     isjunk: Optional[IsJunk] = None,
+    haystack_view: Optional[Union[MaskedString, JoinedMaskedString]] = None,
 ) -> Optional[ChunkedMatch]:
     """Dispatching fuzzy search (reference: utils/fuzzy.py:520-596):
 
@@ -629,6 +597,9 @@ def fuzzy_search_chunks(
       blocks back-mapped to original character offsets (the back-mapped block
       size spans any masked whitespace inside the matched haystack run —
       utils/fuzzy.py:563-578).
+
+    ``haystack_view``: a caller's masked view of ``haystack`` (any string
+    masking the same positions will do); used only when ``start_index`` is 0.
     """
     original_haystack = haystack
     if start_index:
@@ -642,8 +613,9 @@ def fuzzy_search_chunks(
         if fm.b_gap_ratio() < threshold:
             return None
         return ChunkedMatch([fm])
-    haystack_view = MaskedString.mask_junk(haystack, space_is_junk)
-    needle_view = MaskedString.mask_junk(needle, space_is_junk)
+    if haystack_view is None or start_index:
+        haystack_view = MaskedString(haystack)
+    needle_view = MaskedString(needle)
     raw_chunks: Optional[List[MatchingBlocks]] = None
     # Exact-occurrence fast path for the SINGLE-WINDOW regime (masked
     # haystack <= MIN_WINDOW_LENGTH, where auto_window returns one window
@@ -677,19 +649,17 @@ def fuzzy_search_chunks(
         )
     if not raw_chunks:
         return None
-    ha_map = haystack_view.index_map
-    nb_map = needle_view.index_map
+    to_haystack = haystack_view.original_index
+    to_needle = needle_view.original_index
     chunks: List[FuzzyScore] = []
     for raw_blocks in raw_chunks:
-        blocks = [
-            (
-                int(ha_map[ai]) + start_index,
-                int(nb_map[bi]),
-                int(ha_map[ai + size - 1]) - int(ha_map[ai]) + 1,
-            )
-            for ai, bi, size in raw_blocks
-            if size
-        ]
+        blocks = []
+        for ai, bi, size in raw_blocks:
+            if size:
+                a_start = to_haystack(ai)
+                blocks.append(
+                    (a_start + start_index, to_needle(bi), to_haystack(ai + size - 1) - a_start + 1)
+                )
         chunks.append(
             FuzzyScore(original_haystack, needle, blocks, isjunk=isjunk or positional_is_junk)
         )

@@ -1,25 +1,36 @@
 """Fuzzy target-annotation matcher over a tokenized document.
 
 Reproduces the semantics of the reference's ``SimpleMatchingAnnotator``
-(/root/reference/sciencebeam_trainer_grobid_tools/annotation/simple_matching_annotator.py):
-pending untagged line-runs with a lookahead window, whole-document rescan on
-block change, per-value fuzzy search with needle-reduction fallback and
-alternative spellings, multi-value range clustering, match-prefix regex
-extension, BIO tagging with sub-annotations, and extend-to-line
-post-processing.  Runs per document inside an Arrow-batched ``mapInPandas``
-UDF (one python call per *batch* of documents, sequential within a document —
-the reference's own per-document ordering semantics).
+(annotation/simple_matching_annotator.py): pending untagged line-runs with a
+lookahead window, whole-document rescan on block change, per-value fuzzy
+search with needle-reduction fallback and alternative spellings, multi-value
+range clustering, match-prefix regex extension, BIO tagging with
+sub-annotations, and extend-to-line post-processing.  Runs per document
+inside an Arrow-batched ``mapInPandas`` UDF (one python call per *batch* of
+documents, sequential within a document — the reference's own per-document
+ordering semantics).
+
+The reference's pending-sequence objects (SequenceWrapper, SequencesText and
+PendingSequences, annotation/matching_utils.py:189-333) are one
+``MatcherView`` per document, restarted each fixpoint round: normalised token
+texts, a tag mask and cached untagged sub-runs per line.  A ``PendingText``
+joins sub-runs; its character-to-token lookups are ``bisect`` calls on int
+offset lists.
 """
 
 from __future__ import annotations
 
 import re
-from itertools import groupby, islice
-from typing import Dict, Iterator, List, Optional, Sequence, Tuple, Union
+from bisect import bisect_left, bisect_right
+from itertools import accumulate, groupby
+from operator import add
+from typing import Dict, Iterator, List, Optional, Sequence, Set, Tuple, Union
 
-from ..kernel.doc import RunsText, Token, TokenRun, TokenizedDoc
+from ..kernel.doc import TokenizedDoc, join_with_index_ranges
 from ..kernel.fuzzy import (
     IndexRange,
+    JoinedMaskedString,
+    MaskedString,
     fuzzy_search_index_range_chunks,
     iter_fuzzy_search_all_index_ranges,
 )
@@ -186,62 +197,33 @@ def merge_index_ranges(index_ranges: Sequence[IndexRange]) -> IndexRange:
     )
 
 
-class _Cluster:
-    """Index-range cluster for multi-value matches
-    (simple_matching_annotator.py:161-231)."""
-
-    __slots__ = ("ranges",)
-
-    def __init__(self, ranges: List[IndexRange]):
-        self.ranges = sorted(ranges)
-
-    @property
-    def start(self) -> int:
-        return self.ranges[0][0]
-
-    @property
-    def end(self) -> int:
-        return self.ranges[-1][1]
-
-    @property
-    def length(self) -> int:
-        return self.end - self.start
-
-    def should_merge(self, other: "_Cluster") -> bool:
-        if other.start >= self.end:
-            gap = other.start - self.end
-        else:
-            gap = self.start - other.end
-        return gap <= max(self.length, other.length) + 10
-
-    def merged(self, other: "_Cluster") -> "_Cluster":
-        return _Cluster(self.ranges + other.ranges)
-
-
 def select_index_ranges(
     index_ranges: List[IndexRange],
 ) -> Tuple[List[IndexRange], List[IndexRange]]:
     """Cluster ranges by proximity; keep the longest cluster
-    (simple_matching_annotator.py:196-231)."""
+    (simple_matching_annotator.py:161-231)."""
     if len(index_ranges) <= 1:
         return index_ranges, []
-    clusters = [_Cluster([r]) for r in sorted(index_ranges)]
+    # a cluster is (start, end, ranges): a block of the sorted ranges, from
+    # its first range's start to its last range's end
+    clusters = [(r[0], r[1], [r]) for r in sorted(index_ranges)]
     while True:
         merged = [clusters[0]]
-        has_merged = False
         for cluster in clusters[1:]:
-            if merged[-1].should_merge(cluster):
-                merged[-1] = merged[-1].merged(cluster)
-                has_merged = True
+            start, end, ranges = merged[-1]
+            other_start, other_end, other_ranges = cluster
+            gap = other_start - end if other_start >= end else start - other_end
+            if gap <= max(end - start, other_end - other_start) + 10:
+                merged[-1] = (start, other_end, ranges + other_ranges)
             else:
                 merged.append(cluster)
-        if not has_merged:
+        if len(merged) == len(clusters):
             break
         clusters = merged
-    by_length = sorted(clusters, key=lambda c: c.length, reverse=True)
-    selected = by_length[0].ranges
-    unselected = sorted(r for c in by_length[1:] for r in c.ranges)
-    return selected, unselected
+    # the first of the longest clusters
+    best = max(clusters, key=lambda c: c[1] - c[0])
+    unselected = sorted(r for c in clusters if c is not best for r in c[2])
+    return best[2], unselected
 
 
 def get_extended_line_token_tags(
@@ -255,8 +237,9 @@ def get_extended_line_token_tags(
     (simple_matching_annotator.py:286-357)."""
     extend_map = extend_to_line_enabled_map or {}
     merge_map = merge_enabled_map or {}
+    values = {tag: strip_tag_prefix(tag) for tag in set(line_token_tags)}
     groups: List[List[Optional[str]]] = [
-        list(group) for _, group in groupby(line_token_tags, key=strip_tag_prefix)
+        list(group) for _, group in groupby(line_token_tags, key=values.__getitem__)
     ]
     # merge b-/i- within a same-value group when enabled
     merged_groups: List[List[Optional[str]]] = []
@@ -308,30 +291,174 @@ def get_extended_line_token_tags(
     return result
 
 
-class PendingRuns:
-    """Untagged line-runs, re-split against current tags on each access
-    (matching_utils.py:260-292)."""
+class SubRun:
+    """A maximal run of untagged tokens among one line's pending tokens:
+    their flat indices, the joined normalised text and its masked view."""
 
-    def __init__(self, runs: List[TokenRun]):
-        self._runs = runs
+    __slots__ = ("indices", "text", "masked", "_offsets")
 
-    def get_pending(self, limit: Optional[int] = None) -> List[TokenRun]:
-        gen = (sub for run in self._runs for sub in run.untagged_subruns())
-        if limit:
-            return list(islice(gen, limit))
-        return list(gen)
+    def __init__(self, view: "MatcherView", indices: List[int]):
+        first, last = indices[0], indices[-1]
+        if last - first + 1 == len(indices):
+            pieces = view.pieces[first:last]
+        else:
+            pieces = [view.pieces[i] for i in indices[:-1]]
+        # the last token contributes no whitespace
+        self.text = "".join(pieces) + view.texts[last]
+        self.indices = indices
+        self.masked = MaskedString(self.text)
+        self._offsets: Optional[Tuple[List[int], List[int]]] = None
 
-    @staticmethod
-    def from_doc(doc: TokenizedDoc) -> "PendingRuns":
-        runs: List[TokenRun] = []
+    def offsets(self, view: "MatcherView") -> Tuple[List[int], List[int]]:
+        """Each token's start and end in ``text``, built on first use."""
+        if self._offsets is None:
+            indices = self.indices
+            first, last = indices[0], indices[-1]
+            if last - first + 1 == len(indices):
+                piece_sizes = view.piece_sizes[first:last]
+                text_sizes = view.text_sizes[first : last + 1]
+            else:
+                piece_sizes = [view.piece_sizes[i] for i in indices[:-1]]
+                text_sizes = [view.text_sizes[i] for i in indices]
+            starts = list(accumulate(piece_sizes, initial=0))
+            self._offsets = (starts, list(map(add, starts, text_sizes)))
+        return self._offsets
+
+
+class MatcherView:
+    """The matcher's view of a document (PendingSequences,
+    matching_utils.py:260-292).
+
+    Holds the flat token list, each token's ``normalise_str`` text (the
+    reference composes it with a junk removal whose default predicate is
+    constant-False, matching_utils.py:43-44,62-67, i.e. a no-op), a ``tagged``
+    mask mirroring ``Token.tag``, and per line its pending tokens: those
+    untagged when the fixpoint round started.  A tagged token is left out of
+    the next round's pending tokens, not split at.
+
+    The untagged sub-runs of all lines are kept in one list in document
+    order, with their first flat token indices; a tag write re-splits only
+    its own line, on the next ``pending`` call."""
+
+    def __init__(self, doc: TokenizedDoc):
+        tokens = [token for line in doc.lines for token in line]
+        self.tokens = tokens
+        self.texts = [normalise_str(token.text) for token in tokens]
+        # normalised text plus recorded whitespace (None -> one space)
+        self.pieces = [
+            text + (" " if token.whitespace is None else token.whitespace)
+            for text, token in zip(self.texts, tokens)
+        ]
+        self.text_sizes = list(map(len, self.texts))
+        self.piece_sizes = list(map(len, self.pieces))
+        self.tagged = tagged = bytearray(map(bool, [token.tag for token in tokens]))
+        # each line's first flat token index, then the end of the last line
+        self._line_starts: List[int] = [0]
+        self._lines: List[List[int]] = []
         for line in doc.lines:
-            untagged = [t for t in line if not t.tag]
-            if untagged:
-                # normalize_fn is normalise_str: the reference composes it with
-                # a junk-removal whose default junk predicate is constant-False
-                # (matching_utils.py:43-44,62-67), i.e. a no-op.
-                runs.append(TokenRun(untagged, normalise_str, position=len(runs)))
-        return PendingRuns(runs)
+            pos = self._line_starts[-1]
+            self._line_starts.append(pos + len(line))
+            indices = list(range(pos, pos + len(line)))
+            if 1 in tagged[pos : pos + len(line)]:
+                indices = [i for i in indices if not tagged[i]]
+            self._lines.append(indices)
+        self._runs = [SubRun(self, indices) for indices in self._lines if indices]
+        self._firsts = [run.indices[0] for run in self._runs]
+        # lines tagged since the round started / since their last re-split
+        self._touched: Set[int] = set()
+        self._dirty: Set[int] = set()
+        # bumped by every change of the pending tokens or their tags
+        self.version = 0
+
+    def next_round(self) -> None:
+        """Start a fixpoint round: drop tagged tokens from the pending tokens
+        of the lines tagged in the last one."""
+        tagged = self.tagged
+        for line in self._touched:
+            self._lines[line] = [i for i in self._lines[line] if not tagged[i]]
+        self._dirty |= self._touched
+        self._touched.clear()
+        self.version += 1
+
+    def tag_tokens(self, indices: List[int], tags: List[str]) -> None:
+        """Set ``Token.tag`` of the tokens at these flat indices."""
+        tokens = self.tokens
+        tagged = self.tagged
+        for index, tag in zip(indices, tags):
+            tokens[index].tag = tag
+            tagged[index] = 1
+        lines = {bisect_right(self._line_starts, index) - 1 for index in indices}
+        self._touched |= lines
+        self._dirty |= lines
+        self.version += 1
+
+    def _resplit(self, line: int) -> None:
+        sub_runs = []
+        tagged = self.tagged
+        run: List[int] = []
+        for i in self._lines[line]:
+            if not tagged[i]:
+                run.append(i)
+            elif run:
+                sub_runs.append(SubRun(self, run))
+                run = []
+        if run:
+            sub_runs.append(SubRun(self, run))
+        # the line's old sub-runs start within its token range
+        lo = bisect_left(self._firsts, self._line_starts[line])
+        hi = bisect_left(self._firsts, self._line_starts[line + 1])
+        self._runs[lo:hi] = sub_runs
+        self._firsts[lo:hi] = [run.indices[0] for run in sub_runs]
+
+    def pending(
+        self,
+        first: int = 0,
+        limit: Optional[int] = None,
+        cached: Optional["PendingText"] = None,
+    ) -> "PendingText":
+        """The sub-runs that start at flat token ``first`` or later, the first
+        ``limit`` of them if ``limit`` is set, as one text; ``cached`` (an
+        earlier result) is returned again while it is still current."""
+        key = (first, limit, self.version)
+        if cached is not None and cached.key == key:
+            return cached
+        for line in self._dirty:
+            self._resplit(line)
+        self._dirty.clear()
+        start = bisect_left(self._firsts, first)
+        runs = self._runs[start : start + limit] if limit else self._runs[start:]
+        return PendingText(self, runs, key)
+
+
+class PendingText:
+    """Sub-runs joined with '\\n' (SequencesText, matching_utils.py:295-333):
+    the text, each sub-run's [start, end) in it, and its masked view."""
+
+    __slots__ = ("view", "runs", "key", "text", "starts", "ends", "masked")
+
+    def __init__(self, view: MatcherView, runs: List[SubRun], key: Tuple[int, Optional[int], int]):
+        self.view = view
+        self.runs = runs
+        self.key = key
+        texts = [run.text for run in runs]
+        self.text = "\n".join(texts)
+        sizes = list(map(len, texts))
+        self.starts = list(accumulate([size + 1 for size in sizes[:-1]], initial=0)) if runs else []
+        self.ends = list(map(add, self.starts, sizes))
+        self.masked = JoinedMaskedString([run.masked for run in runs], self.starts)
+
+    def token_indices_between(self, index_range: IndexRange) -> List[int]:
+        """Flat indices of the tokens overlapping ``index_range``."""
+        start, end = index_range
+        indices: List[int] = []
+        for k in range(bisect_right(self.ends, start), bisect_left(self.starts, end)):
+            run = self.runs[k]
+            offset = self.starts[k]
+            starts, ends = run.offsets(self.view)
+            indices.extend(
+                run.indices[bisect_right(ends, start - offset) : bisect_left(starts, end - offset)]
+            )
+        return indices
 
 
 class SimpleMatcher:
@@ -402,7 +529,7 @@ class SimpleMatcher:
 
     def _apply_match_prefix_regex(
         self,
-        text: RunsText,
+        text: PendingText,
         index_range: IndexRange,
         tag_name: str,
         target_annotation: TargetAnnotation,
@@ -424,29 +551,32 @@ class SimpleMatcher:
                     lambda m: re.escape(placeholders.get(m.group(1), "NOT_FOUND")),
                     pattern,
                 )
-            m = re.search(pattern, str(text)[:start_index])
+            m = re.search(pattern, text.text[:start_index])
             if m:
                 start_index = m.start()
         return start_index, end_index
 
-    def _tag_tokens_in_range(self, text: RunsText, index_range: IndexRange, tag_name: str) -> int:
+    def _tag_tokens_in_range(self, text: PendingText, index_range: IndexRange, tag_name: str) -> None:
         """BIO-tag untagged tokens in the matched range
-        (simple_matching_annotator.py:491-516). Returns tokens tagged."""
-        matching_tokens = list(text.iter_tokens_between(index_range))
-        untagged = [t for t in matching_tokens if not t.tag]
-        for index, token in enumerate(untagged):
-            prefix = None
-            if self.config.use_begin_prefix:
-                prefix = B_PREFIX if index == 0 else I_PREFIX
-            full_tag = add_tag_prefix(tag_name, prefix=prefix)
-            token.tag = full_tag
-            if not self.config.preserve_sub_annotations:
-                token.sub_tag = None
-        return len(untagged)
+        (simple_matching_annotator.py:491-516)."""
+        view = text.view
+        tagged = view.tagged
+        untagged = [i for i in text.token_indices_between(index_range) if not tagged[i]]
+        if not untagged:
+            return
+        if self.config.use_begin_prefix:
+            tags = [add_tag_prefix(tag_name, B_PREFIX)]
+            tags += [add_tag_prefix(tag_name, I_PREFIX)] * (len(untagged) - 1)
+        else:
+            tags = [tag_name] * len(untagged)
+        view.tag_tokens(untagged, tags)
+        if not self.config.preserve_sub_annotations:
+            for i in untagged:
+                view.tokens[i].sub_tag = None
 
     def _apply_sub_annotations(
         self,
-        text: RunsText,
+        text: PendingText,
         index_range: IndexRange,
         sub_annotations: List[TargetAnnotation],
     ) -> None:
@@ -454,9 +584,14 @@ class SimpleMatcher:
         (simple_matching_annotator.py:518-570)."""
         if not sub_annotations:
             return
-        tokens = list(text.iter_tokens_between(index_range))
-        sub_text = RunsText([TokenRun(tokens, normalize_fn=None)])
-        sub_text_str = str(sub_text).lower()
+        all_tokens = text.view.tokens
+        tokens = [all_tokens[i] for i in text.token_indices_between(index_range)]
+        sub_text_str, ranges = join_with_index_ranges(
+            [t.text for t in tokens], [t.whitespace for t in tokens], sep=" "
+        )
+        sub_text_str = sub_text_str.lower()
+        starts = [start for start, _ in ranges]
+        ends = [end for _, end in ranges]
         for sub_annotation in sub_annotations:
             target_value = sub_annotation.value
             assert not isinstance(target_value, list), "list sub annotation values not supported"
@@ -467,7 +602,9 @@ class SimpleMatcher:
                 threshold=self.config.threshold,
                 exact_word_match_threshold=self.config.exact_word_match_threshold,
             ):
-                matching_tokens = list(sub_text.iter_tokens_between(sub_index_range))
+                matching_tokens = tokens[
+                    bisect_right(ends, sub_index_range[0]) : bisect_left(starts, sub_index_range[1])
+                ]
                 if any(t.sub_tag for t in matching_tokens):
                     continue
                 for index, token in enumerate(matching_tokens):
@@ -480,18 +617,21 @@ class SimpleMatcher:
     # -- per-annotation matching -------------------------------------------
 
     def _iter_matching_index_ranges(
-        self, text: RunsText, target_annotation: TargetAnnotation
+        self, text: PendingText, target_annotation: TargetAnnotation
     ) -> Iterator[IndexRange]:
         """simple_matching_annotator.py:572-630."""
         tag_config = self.config.get_tag_config(target_annotation.name)
         alternative_spellings = tag_config.alternative_spellings
-        text_str = str(text)
+        text_str = text.text
         if isinstance(target_annotation.value, list):
             found = [
                 r
                 for r in (
                     self._search_with_alternatives(
-                        text_str, value, alternative_spellings=alternative_spellings
+                        text_str,
+                        value,
+                        alternative_spellings=alternative_spellings,
+                        haystack_view=text.masked,
                     )
                     for value in target_annotation.value
                 )
@@ -506,55 +646,41 @@ class SimpleMatcher:
             target_annotation.value,
             alternative_spellings=alternative_spellings,
             max_chunks=tag_config.max_chunks,
+            haystack_view=text.masked,
         )
         if chunks:
             yield from chunks
 
     def _process_target_annotations(
-        self, doc: TokenizedDoc, target_annotations: List[TargetAnnotation]
+        self, view: MatcherView, target_annotations: List[TargetAnnotation]
     ) -> List[TargetAnnotation]:
         """One pass over annotations; returns the unmatched ones
         (simple_matching_annotator.py:651-731)."""
         unmatched: List[TargetAnnotation] = []
-        pending = PendingRuns.from_doc(doc)
-        current_pending = pending
+        # the current block's pending text starts at this flat token index
+        block_first = 0
         current_block_name: Optional[str] = None
-        # The per-annotation RunsText depends only on the PendingRuns binding
-        # and the level-1 tag state of its tokens (sub_tag never feeds
-        # get_pending or joined text), and tags mutate only through
-        # _tag_tokens_in_range below — so the rebuilt text is identical until
-        # a match actually tags a token.  Memoize both shapes (lookahead and
-        # whole-doc rescan) on (source object identity, tag version); the
-        # source reference is held strongly, so identity cannot be a reused
-        # id.  Unmatched annotations then probe the SAME string object,
-        # which also keeps the masked-haystack lru caches downstream hot.
-        tag_version = 0
-        look_src = look_ver = look_text = None
-        full_ver = full_text = None
+        # the last lookahead and whole-document texts, reused until a tag write
+        lookahead: Optional[PendingText] = None
+        whole: Optional[PendingText] = None
         for tag_name, grouped in groupby(target_annotations, key=lambda t: t.name):
             tag_block_name = self.config.get_tag_config(tag_name).block_name or "default"
             for target_annotation in list(grouped):
-                if look_text is None or look_src is not current_pending or look_ver != tag_version:
-                    look_text = RunsText(
-                        current_pending.get_pending(limit=self.config.lookahead_sequence_count)
-                    )
-                    look_src = current_pending
-                    look_ver = tag_version
-                text = look_text
+                text = lookahead = view.pending(
+                    block_first, self.config.lookahead_sequence_count, cached=lookahead
+                )
                 index_ranges = list(self._iter_matching_index_ranges(text, target_annotation))
                 if not index_ranges and current_block_name != tag_block_name:
                     # block changed: rescan the whole document
-                    if full_text is None or full_ver != tag_version:
-                        full_text = RunsText(pending.get_pending(limit=None))
-                        full_ver = tag_version
-                    text = full_text
+                    text = whole = view.pending(cached=whole)
                     index_ranges = list(self._iter_matching_index_ranges(text, target_annotation))
                     if not index_ranges:
                         unmatched.append(target_annotation)
                         continue
-                    whole = merge_index_ranges(index_ranges)
-                    block_range = (whole[0], text.end_index)
-                    current_pending = PendingRuns(list(text.iter_runs_between(block_range)))
+                    # the new block: every sub-run from the one holding the
+                    # match start to the end of the document
+                    k = bisect_right(text.ends, merge_index_ranges(index_ranges)[0])
+                    block_first = text.runs[k].indices[0] if k < len(text.runs) else len(view.tokens)
                     current_block_name = tag_block_name
                 if not index_ranges:
                     unmatched.append(target_annotation)
@@ -563,8 +689,7 @@ class SimpleMatcher:
                     index_range = self._apply_match_prefix_regex(
                         text, index_range, tag_name, target_annotation
                     )
-                    if self._tag_tokens_in_range(text, index_range, tag_name):
-                        tag_version += 1
+                    self._tag_tokens_in_range(text, index_range, tag_name)
                     if self.config.use_sub_annotations:
                         self._apply_sub_annotations(
                             text, index_range, target_annotation.sub_annotations
@@ -574,6 +699,9 @@ class SimpleMatcher:
     def _extend_to_lines(self, doc: TokenizedDoc) -> None:
         for line in doc.lines:
             tags = [t.tag for t in line]
+            if not any(tags):
+                # nothing to extend from: every extended tag would be None
+                continue
             extended = get_extended_line_token_tags(
                 tags,
                 extend_to_line_enabled_map=self.extend_to_line_enabled_map,
@@ -587,11 +715,13 @@ class SimpleMatcher:
         """Fixpoint over unmatched annotations, then extend-to-line
         (simple_matching_annotator.py:733-748)."""
         remaining = self.target_annotations
+        view = MatcherView(doc) if remaining else None
         while remaining:
-            new_remaining = self._process_target_annotations(doc, remaining)
+            new_remaining = self._process_target_annotations(view, remaining)
             if len(new_remaining) == len(remaining):
                 break
             remaining = new_remaining
+            view.next_round()
         if self.config.extend_to_line_enabled:
             self._extend_to_lines(doc)
         return doc
@@ -662,7 +792,7 @@ class SubTagOnlyMatcher(SimpleMatcher):
     no-op at the main level, and original tags are restored afterwards."""
 
     def _tag_tokens_in_range(self, text, index_range, tag_name):  # type: ignore[override]
-        return 0
+        return None
 
     def _extend_to_lines(self, doc):  # type: ignore[override]
         return None

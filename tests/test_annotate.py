@@ -4,14 +4,23 @@ Expectations ported from the reference's
 tests/annotation/simple_matching_annotator_test.py (cited per case).
 """
 
+import pytest
+from hypothesis import given, settings, strategies as st
+
+from sciencebeam_trainer_grobid_tools_spark.kernel.doc import tokenize_lines
 from sciencebeam_trainer_grobid_tools_spark.operators.annotate import (
     MatcherConfig,
     SimpleMatcher,
     TagConfig,
     TargetAnnotation,
     extract_entity_spans,
+    extract_sub_entity_spans,
     get_extended_line_token_tags,
     select_index_ranges,
+)
+from sciencebeam_trainer_grobid_tools_spark.operators.tei_render import (
+    HEADER_TAG_TO_TEI_PATH_MAPPING,
+    render_tei_xml,
 )
 
 from tests.conftest import (
@@ -53,6 +62,51 @@ class TestSelectIndexRanges:
             [(1, 3), (3, 5)],
             [(103, 105)],
         )
+
+
+def _naive_select_index_ranges(index_ranges):
+    """Cluster merging as the reference writes it
+    (simple_matching_annotator.py:161-231): clusters are sorted range lists,
+    merged pairwise until a pass merges nothing; the longest one wins."""
+    if len(index_ranges) <= 1:
+        return index_ranges, []
+
+    def length(ranges):
+        return ranges[-1][1] - ranges[0][0]
+
+    def should_merge(a, b):
+        if b[0][0] >= a[-1][1]:
+            gap = b[0][0] - a[-1][1]
+        else:
+            gap = a[0][0] - b[-1][1]
+        return gap <= max(length(a), length(b)) + 10
+
+    clusters = [[r] for r in sorted(index_ranges)]
+    while True:
+        merged = [clusters[0]]
+        has_merged = False
+        for cluster in clusters[1:]:
+            if should_merge(merged[-1], cluster):
+                merged[-1] = sorted(merged[-1] + cluster)
+                has_merged = True
+            else:
+                merged.append(cluster)
+        if not has_merged:
+            break
+        clusters = merged
+    by_length = sorted(clusters, key=length, reverse=True)
+    return by_length[0], sorted(r for c in by_length[1:] for r in c)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 300), st.integers(0, 40)).map(lambda t: (t[0], t[0] + t[1])),
+        max_size=8,
+    )
+)
+def test_select_index_ranges_matches_naive_clustering(index_ranges):
+    assert select_index_ranges(index_ranges) == _naive_select_index_ranges(index_ranges)
 
 
 class TestGetExtendedLineTokenTags:
@@ -437,3 +491,120 @@ class TestEntitySpans:
         assert text[by_field[TAG1]["start"] : by_field[TAG1]["end"]] == "title here"
         # extend-to-line (default on) grows tag2 over the whole second line
         assert text[by_field[TAG2]["start"] : by_field[TAG2]["end"]] == "by john smith"
+
+
+def _annotate_lines(lines, targets, pretag=(), **config):
+    """Tokenize ``lines``, pre-tag ``(token index, tag)`` pairs, run the
+    matcher and return (spans, sub_spans, tei_xml)."""
+    doc = tokenize_lines(lines)
+    tokens = list(doc.iter_tokens())
+    for index, tag in pretag:
+        tokens[index].tag = tag
+    SimpleMatcher(targets, MatcherConfig(**config)).annotate(doc)
+    mapping = dict(HEADER_TAG_TO_TEI_PATH_MAPPING)
+    for target in targets:
+        mapping.setdefault(target.name, 'note[@type="%s"]' % target.name)
+    return extract_entity_spans(doc), extract_sub_entity_spans(doc), render_tei_xml(doc, mapping)
+
+
+class TestPinnedMatcherEdgeCases:
+    """Matcher edge cases with their spans, sub-spans and TEI as literals:
+    the outputs must stay byte-identical."""
+
+    SPLIT_LINES = [
+        "Primary Results of the Study",
+        "Prepared by John Smith at the University of Somewhere in 2020",
+        "Contact details follow here",
+    ]
+
+    @pytest.mark.parametrize("lookahead", [200, 1])
+    def test_mid_line_match_then_match_in_remainder(self, lookahead):
+        # "john smith" splits line 2 into two pending sub-runs; the
+        # affiliation then matches in the second one.  With a lookahead of
+        # one sub-run the matches need the whole-document rescan, the block
+        # re-scope and later fixpoint rounds.
+        spans, sub_spans, tei_xml = _annotate_lines(
+            self.SPLIT_LINES,
+            [
+                TargetAnnotation(
+                    "John Smith", "author", sub_annotations=[TargetAnnotation("Smith", "surname")]
+                ),
+                TargetAnnotation("University of Somewhere", "affiliation"),
+                TargetAnnotation("Primary Results of the Study", "title"),
+            ],
+            use_sub_annotations=True,
+            extend_to_line_enabled=False,
+            lookahead_sequence_count=lookahead,
+        )
+        assert spans == [
+            {"end": 28, "field": "title", "start": 0, "text": "Primary Results of the Study"},
+            {"end": 51, "field": "author", "start": 41, "text": "John Smith"},
+            {"end": 82, "field": "affiliation", "start": 59, "text": "University of Somewhere"},
+        ]
+        assert sub_spans == [{"end": 51, "field": "surname", "start": 46, "text": "Smith"}]
+        assert tei_xml == (
+            '<tei><text><front><docTitle><titlePart>Primary Results of the Study<lb '
+            '/></titlePart></docTitle><note type="other">Prepared by</note><byline> '
+            '<docAuthor>John</docAuthor></byline> <byline><docAuthor>Smith</docAuthor></byline> <note '
+            'type="other">at the</note> <note type="affiliation">University of Somewhere</note> <note '
+            'type="other">in 2020<lb />Contact details follow here</note></front></text></tei>'
+        )
+
+    def test_nbsp_and_thin_space_between_matched_tokens(self):
+        # NBSP and thin space are recorded token whitespace that the
+        # whitespace mask keeps in the masked haystack
+        spans, sub_spans, tei_xml = _annotate_lines(
+            [
+                "The\xa0Quantum Effects\u2009Revisited",
+                "by Jane\xa0Doe and Max\u2009Power",
+                "Abstract text follows",
+            ],
+            [
+                TargetAnnotation(
+                    "The Quantum Effects Revisited",
+                    "title",
+                    sub_annotations=[TargetAnnotation("Quantum", "keyword")],
+                ),
+                TargetAnnotation(["Jane Doe", "Max Power"], "author"),
+                TargetAnnotation("Doe", "surname"),
+            ],
+            use_sub_annotations=True,
+        )
+        assert spans == [
+            {"end": 29, "field": "title", "start": 0, "text": "The\xa0Quantum Effects\u2009Revisited"},
+            {"end": 55, "field": "author", "start": 30, "text": "by Jane\xa0Doe and Max\u2009Power"},
+        ]
+        assert sub_spans == [{"end": 11, "field": "keyword", "start": 4, "text": "Quantum"}]
+        assert tei_xml == (
+            '<tei><text><front><docTitle><titlePart>The</titlePart></docTitle>\xa0'
+            '<docTitle><titlePart>Quantum Effects\u2009Revisited<lb '
+            '/></titlePart></docTitle><byline><docAuthor>by Jane\xa0Doe and Max\u2009Power<lb '
+            '/></docAuthor></byline><note type="other">Abstract text follows</note></front></text></tei>'
+        )
+
+    def test_tokens_tagged_before_annotate_are_not_pending(self):
+        # "beta" is tagged up front, so the pending run of line 2 reads
+        # "alpha gamma delta" and "alpha gamma" matches across it
+        spans, sub_spans, tei_xml = _annotate_lines(
+            ["Header Title Here", "alpha beta gamma delta", "Author Name"],
+            [
+                TargetAnnotation("alpha gamma", "title"),
+                TargetAnnotation("Author Name", "author"),
+                TargetAnnotation("Header", "keywords"),
+            ],
+            pretag=[(4, "b-keywords")],
+        )
+        assert spans == [
+            {"end": 6, "field": "keywords", "start": 0, "text": "Header"},
+            {"end": 23, "field": "title", "start": 18, "text": "alpha"},
+            {"end": 28, "field": "keywords", "start": 24, "text": "beta"},
+            {"end": 34, "field": "title", "start": 29, "text": "gamma"},
+            {"end": 52, "field": "author", "start": 41, "text": "Author Name"},
+        ]
+        assert sub_spans == []
+        assert tei_xml == (
+            '<tei><text><front><note type="keywords">Header</note> <note type="other">Title Here<lb '
+            '/></note><docTitle><titlePart>alpha</titlePart></docTitle> <note type="keywords">beta</note> '
+            '<docTitle><titlePart>gamma</titlePart></docTitle> <note type="other">delta<lb '
+            '/></note><byline><docAuthor>Author Name</docAuthor></byline></front></text></tei>'
+        )

@@ -149,8 +149,8 @@ class TestIterFuzzySearchAll:
 
 
 class TestJunkPrefixParity:
-    """Randomized parity of the vectorized junk prefix sums vs the per-char
-    predicates they replace (guards the hot-path optimization layer)."""
+    """Randomized parity of the gap-local junk counts that FuzzyScore uses vs
+    prefix sums of the per-char predicates, over every range of each string."""
 
     @staticmethod
     def _random_strings():
@@ -164,30 +164,27 @@ class TestJunkPrefixParity:
             strings.append("".join(rng.choice(alphabet) for _ in range(n)))
         return strings
 
-    def test_adjacent_parity(self):
+    def _check(self, count, isjunk):
         import numpy as np
 
+        for s in self._random_strings():
+            prefix = [0] + list(np.cumsum([isjunk(s, i) for i in range(len(s))]))
+            for start in range(len(s) + 1):
+                for end in range(start, len(s) + 1):
+                    assert count(s, start, end) == prefix[end] - prefix[start], (s, start, end)
+
+    def test_adjacent_parity(self):
         from sciencebeam_trainer_grobid_tools_spark.kernel.fuzzy import (
-            _adjacent_junk_prefix,
+            _adjacent_junk_count,
             adjacent_is_junk,
         )
 
-        for s in self._random_strings():
-            expected = np.cumsum([adjacent_is_junk(s, i) for i in range(len(s))])
-            got = _adjacent_junk_prefix(s)
-            assert got[0] == 0
-            assert list(got[1:]) == list(expected), repr(s)
+        self._check(_adjacent_junk_count, adjacent_is_junk)
 
     def test_positional_parity(self):
-        import numpy as np
-
         from sciencebeam_trainer_grobid_tools_spark.kernel.fuzzy import (
-            _positional_junk_prefix,
+            _positional_junk_count,
             positional_is_junk,
         )
 
-        for s in self._random_strings():
-            expected = np.cumsum([positional_is_junk(s, i) for i in range(len(s))])
-            got = _positional_junk_prefix(s)
-            assert got[0] == 0
-            assert list(got[1:]) == list(expected), repr(s)
+        self._check(_positional_junk_count, positional_is_junk)

@@ -15,7 +15,13 @@ from sciencebeam_trainer_grobid_tools_spark.kernel.align import (
 )
 from sciencebeam_trainer_grobid_tools_spark.kernel.fuzzy import (
     FuzzyScore,
+    JoinedMaskedString,
+    MaskedString,
+    _adjacent_junk_count,
+    _positional_junk_count,
+    adjacent_is_junk,
     fuzzy_search,
+    positional_is_junk,
 )
 from sciencebeam_trainer_grobid_tools_spark.kernel.levenshtein import (
     levenshtein_distance,
@@ -115,3 +121,51 @@ def test_fuzzy_score_ratios_bounded(a, b):
     fm = FuzzyScore(a, b, blocks)
     assert 0.0 <= fm.b_gap_ratio() <= 1.0 + 1e-9 or fm.b_gap_ratio() >= 0
     assert fm.match_count() >= 0
+
+
+junk_texts = st.lists(
+    st.sampled_from(["a", "Z", "*", ".", ",", " ", "   ", "é", "Ж", "中", "\u0301"]), max_size=30
+).map("".join)
+
+
+@settings(max_examples=300, deadline=None)
+@given(junk_texts, st.data())
+def test_gap_local_junk_count_matches_prefix_sum(s, data):
+    start = data.draw(st.integers(min_value=0, max_value=len(s)))
+    end = data.draw(st.integers(min_value=start, max_value=len(s)))
+    for count, isjunk in (
+        (_positional_junk_count, positional_is_junk),
+        (_adjacent_junk_count, adjacent_is_junk),
+    ):
+        prefix = [0]
+        for i in range(len(s)):
+            prefix.append(prefix[-1] + isjunk(s, i))
+        assert count(s, start, end) == prefix[end] - prefix[start]
+
+
+masked_texts = st.text(alphabet="ab \t\n\xa0\u2009", max_size=30)
+
+
+def unmasked_positions(s: str):
+    import numpy as np
+
+    codes = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
+    return list(np.flatnonzero(~np.isin(codes, [ord(" "), ord("\t"), ord("\n")])))
+
+
+@settings(max_examples=300, deadline=None)
+@given(masked_texts)
+def test_run_table_back_map_matches_flatnonzero(s):
+    view = MaskedString(s)
+    expected = unmasked_positions(s)
+    assert view.masked == "".join(s[i] for i in expected)
+    assert [view.original_index(i) for i in range(len(view.masked))] == expected
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(masked_texts, max_size=5))
+def test_joined_run_table_back_map_matches_flatnonzero(parts):
+    starts = [sum(len(part) + 1 for part in parts[:k]) for k in range(len(parts))]
+    view = JoinedMaskedString([MaskedString(part) for part in parts], starts)
+    expected = unmasked_positions("\n".join(parts))
+    assert [view.original_index(i) for i in range(len(view.masked))] == expected
