@@ -8,16 +8,20 @@ sink (reference: annotation/annotator.py:185-196) via a partitioned write.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Set, Tuple
+from typing import Dict, List, Optional, Sequence, Set, Tuple
 
 from ..kernel.doc import TokenizedDoc
 from ..kernel.levenshtein import levenshtein_ratio
 from .annotate import TargetAnnotation, extract_entity_spans
 
 
-def entities_by_field(doc: TokenizedDoc) -> Dict[str, List[str]]:
+def entities_by_field(
+    doc: TokenizedDoc, spans: Optional[Sequence[Dict[str, object]]] = None
+) -> Dict[str, List[str]]:
+    """Entity texts per field; ``spans`` are the document's
+    :func:`extract_entity_spans` when the caller already has them."""
     result: Dict[str, List[str]] = {}
-    for span in extract_entity_spans(doc):
+    for span in extract_entity_spans(doc) if spans is None else spans:
         result.setdefault(str(span["field"]), []).append(str(span["text"]))
     return result
 
@@ -28,6 +32,7 @@ def check_document(
     require_matching_fields: Optional[Set[str]] = None,
     required_fields: Optional[Set[str]] = None,
     threshold: float = 0.8,
+    spans: Optional[Sequence[Dict[str, object]]] = None,
 ) -> Tuple[bool, Optional[str]]:
     require_matching = set(require_matching_fields or set()) | set(required_fields or set())
     if not require_matching:
@@ -50,7 +55,7 @@ def check_document(
             return False, "missing required fields: %s" % ",".join(sorted(missing))
     if not required_value_by_name:
         return True, None
-    entities = entities_by_field(doc)
+    entities = entities_by_field(doc, spans)
     for name, required_value in required_value_by_name.items():
         actual_values = entities.get(name, [])
         if not actual_values:

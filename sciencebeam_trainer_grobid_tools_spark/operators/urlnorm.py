@@ -37,6 +37,26 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 _TRACKING_PARAM_RE = r"(?i)(utm_[a-z0-9]+|fbclid|gclid|msclkid)=[^&#]*"
 
 
+class TempColumnCollisionError(ValueError):
+    """A caller column has a name a staged helper uses for its temporary
+    columns; the helper would overwrite it and then drop it."""
+
+
+def _check_temp_columns(df: DataFrame, prefixes: tuple = (), names: tuple = ()) -> None:
+    """Raise :class:`TempColumnCollisionError` naming every column of ``df``
+    that starts with one of ``prefixes`` or equals one of ``names`` (Spark
+    resolves column names case-insensitively by default)."""
+    clashes = [
+        c for c in df.columns
+        if c.lower().startswith(prefixes) or c.lower() in names
+    ]
+    if clashes:
+        raise TempColumnCollisionError(
+            "columns %s clash with temporary columns (%s); rename them first"
+            % (", ".join(clashes), ", ".join([p + "*" for p in prefixes] + list(names)))
+        )
+
+
 def canonical_url(url: Column) -> Column:
     """Canonical form of a URL column — pure Catalyst expression chain."""
     # 1. drop the fragment
@@ -107,7 +127,9 @@ def _with_staged_canonical(
     staged graph is linear; CollapseProject keeps multiply-referenced
     non-cheap steps staged and only inlines single-reference ones, which
     cannot duplicate work.  Returns ``(df, temp_col_names)`` — the caller
-    drops the temps."""
+    drops the temps.  Raises :class:`TempColumnCollisionError` when ``df``
+    already has a column named ``<tmp_prefix>_*``."""
+    _check_temp_columns(df, (tmp_prefix.lower() + "_",))
     names = []
 
     def add(name: str, expr: Column) -> Column:
@@ -179,11 +201,18 @@ def _with_staged_dedup_key(
 ) -> tuple:
     """Append the dedup key of :func:`canonical_dedup_key` (html hint
     mode) or :func:`canonical_url` (url mode) as ``out_col`` via the
-    staged column graph.  Returns ``(df, temp_col_names)``."""
+    staged column graph.  Returns ``(df, temp_col_names)``.
+
+    In hint mode every row pays both regex chains: the url's canonical form
+    is a staged column, computed even where the hint wins the ``coalesce``.
+    Raises :class:`TempColumnCollisionError` before adding any column when
+    ``df`` has a column named ``_cku_*`` (and, in hint mode, ``_ck_*`` or
+    ``_ckh_*``)."""
     temps = []
     if html_col is not None:
         from .htmlmeta import canonical_hint
 
+        _check_temp_columns(df, ("_ck_", "_ckh_", "_cku_"))
         df = df.withColumn("_ck_rawhint", canonical_hint(F.col(html_col)))
         temps.append("_ck_rawhint")
         df, c = _with_staged_canonical(df, F.col("_ck_rawhint"), "_ck_hintc", "_ckh")
@@ -236,12 +265,14 @@ def dedup_by_canonical_url(
     grouping key to the page-declared canonical (the
     :func:`canonical_dedup_key` composition), built through the staged
     column graph; ``key`` overrides the grouping expression entirely
-    (an opaque caller Column — no staging).
+    (an opaque caller Column — no staging).  A caller column named like
+    a temporary column raises :class:`TempColumnCollisionError`.
     """
     if keep not in ("latest", "earliest"):
         raise ValueError("keep must be latest/earliest, got %r" % keep)
     if key is not None and html_col is not None:
         raise ValueError("pass either key or html_col, not both")
+    _check_temp_columns(df, names=("_canon_key", "_rn"))
     ts = F.col(ts_col).desc() if keep == "latest" else F.col(ts_col).asc()
     # Materialize the canonical key as a column BEFORE the window: a
     # window partitioned by the raw expression re-evaluates it per row in

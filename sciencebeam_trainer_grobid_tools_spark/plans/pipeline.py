@@ -131,7 +131,9 @@ def annotate_document_row(
     spans = extract_entity_spans(doc)
     sub_spans = extract_sub_entity_spans(doc)
     required = {f for f in require_matching_fields.split(",") if f}
-    passed, reason = check_document(doc, targets, require_matching_fields=required)
+    passed, reason = check_document(
+        doc, targets, require_matching_fields=required, spans=spans
+    )
     target_fields = {t.name for t in targets}
     hit_fields = {str(s["field"]) for s in spans}
     tei_xml = None

@@ -99,3 +99,45 @@ def test_implicitly_selects_required_fields():
         required_fields={"tag1"},
     )
     assert not passed
+
+
+class TestCheckDocumentGivenSpans:
+    def test_given_spans_are_used_instead_of_a_token_walk(self):
+        doc = tagged_doc(["the actual title"], [["b-title", "i-title", "i-title"]])
+        targets = [TargetAnnotation("the actual title", "title")]
+        spans = [{"field": "title", "start": 0, "end": 5, "text": "other words"}]
+        assert check_document(doc, targets, require_matching_fields={"title"})[0]
+        passed, reason = check_document(
+            doc, targets, require_matching_fields={"title"}, spans=spans
+        )
+        assert not passed
+        assert reason == "field below threshold (0.19): title"
+
+    def test_pipeline_reason_below_threshold(self):
+        """The title matches case-insensitively but the check compares case:
+        ``passed``/``reason`` as recorded before the pipeline handed its
+        spans to the check."""
+        from sciencebeam_trainer_grobid_tools_spark.plans.pipeline import (
+            annotate_document_row,
+        )
+        from sciencebeam_trainer_grobid_tools_spark.sources.corpus import (
+            DEFAULT_XML_MAPPING,
+        )
+
+        target_xml = (
+            "<article><front><article-meta><title-group><article-title>"
+            "Research Batch Growth Batch"
+            "</article-title></title-group></article-meta></front></article>"
+        )
+        row = annotate_document_row(
+            "u",
+            None,
+            "RESEARCH BATCH GROWTH BATCH\nSome body text follows here.",
+            target_xml,
+            DEFAULT_XML_MAPPING,
+        )
+        assert [s["text"] for s in row["spans"]] == ["RESEARCH BATCH GROWTH BATCH"]
+        assert (row["passed"], row["reason"]) == (
+            False,
+            "field below threshold (0.26): title",
+        )

@@ -313,3 +313,20 @@ class TestStagedCanonicalKey:
             urlnorm.dedup_by_canonical_url(
                 df, key=F.col("url"), html_col="html"
             )
+
+    def test_temp_column_collision_raises_named_error(self, spark):
+        df = self._df(spark).withColumnRenamed("doc_id", "_ck_hintc")
+        df = df.withColumn("_CKU_u1", F.lit(1)).withColumn("_ckh_qs", F.lit(2))
+        with pytest.raises(urlnorm.TempColumnCollisionError) as err:
+            urlnorm.dedup_by_canonical_url(df, ts_col="warc_ts", html_col="html")
+        assert "_ck_hintc, _CKU_u1, _ckh_qs" in str(err.value)
+        assert isinstance(err.value, ValueError)
+        # url mode stages only _cku_* columns
+        with pytest.raises(urlnorm.TempColumnCollisionError, match="_CKU_u1"):
+            urlnorm.dedup_by_canonical_url(df.drop("_ck_hintc", "_ckh_qs"))
+        with pytest.raises(urlnorm.TempColumnCollisionError, match="_rn"):
+            urlnorm.dedup_by_canonical_url(self._df(spark).withColumn("_rn", F.lit(0)))
+        keyed, _ = urlnorm._with_staged_dedup_key(
+            df.drop("_ck_hintc", "_ckh_qs", "_CKU_u1"), "url", None, "k"
+        )
+        assert "k" in keyed.columns
