@@ -1946,9 +1946,7 @@ def q_docs_layout_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
                 doc = tokenize_lines(lines)
                 annotate_line_numbers(doc)
                 detected = sum(
-                    1
-                    for t in doc.iter_tokens()
-                    if strip_tag_prefix(t.tag) == "line_no"
+                    1 for tag in doc.tags if strip_tag_prefix(tag) == "line_no"
                 )
                 rows.append(
                     {"doc_id": row.doc_id, "signal": "line_numbers", "value": detected}
@@ -1970,7 +1968,7 @@ def q_docs_layout_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
                 headnotes = sum(
                     1
                     for line in doc.lines
-                    if line and strip_tag_prefix(line[0].tag) == "headnote"
+                    if line and strip_tag_prefix(doc.tags[line[0]]) == "headnote"
                 )
                 rows.append(
                     {"doc_id": row.doc_id, "signal": "page_headers", "value": headnotes}
@@ -2074,7 +2072,7 @@ def q_docs_segmentation_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 chain(doc, targets)
                 counts = {}
                 for line in doc.lines:
-                    seg = strip_tag_prefix(line[0].tag) or "untagged"
+                    seg = strip_tag_prefix(doc.tags[line[0]]) or "untagged"
                     counts[seg] = counts.get(seg, 0) + 1
                 rows.append(
                     {
@@ -2149,7 +2147,7 @@ def q_flagship_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for line in doc.lines:
                     if not line:
                         continue
-                    seg = strip_tag_prefix(line[0].tag) or "untagged"
+                    seg = strip_tag_prefix(doc.tags[line[0]]) or "untagged"
                     counts[seg] = counts.get(seg, 0) + 1
                 rows.append(
                     {

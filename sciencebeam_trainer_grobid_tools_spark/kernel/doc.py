@@ -1,4 +1,4 @@
-"""Tokenized document model: regex tokenization, whitespace-preserving joins.
+"""Tokenized document model: parallel per-token columns plus line offsets.
 
 Reproduces the reference's token/line semantics:
 
@@ -15,6 +15,14 @@ Reproduces the reference's token/line semantics:
   (the reference's SequenceWrapper / SequencesText / PendingSequences,
   matching_utils.py:189-333) is the ``MatcherView`` of operators/annotate.py.
 
+The reference's structured document holds one token object per token
+(grobid_training_tei.py:158-176,234-240); here those records are flat
+columns.  Token ``i`` is index ``i`` of ``texts``, ``whitespace``,
+``starts``/``ends`` (offsets into the extracted text), ``tags``,
+``sub_tags`` and ``preserved_tags`` (tag levels 1 and 2, preserved tag).
+Line ``k`` is ``range(line_starts[k], line_starts[k + 1])``; a line's
+tokens joined with their whitespace are its slice of the extracted text.
+
 The *extracted text* of a document is defined as this token-level
 reconstruction (lines joined with '\\n') — the exact string the reference's
 matcher observes; byte-identity of this string is the per-url invariant.
@@ -23,11 +31,19 @@ matcher observes; byte-identity of this string is the per-url invariant.
 from __future__ import annotations
 
 import re
-from typing import Iterator, List, Optional, Sequence, Tuple
+from bisect import bisect_left
+from itertools import accumulate
+from operator import add
+from typing import List, Optional, Sequence, Tuple
 
 IndexRange = Tuple[int, int]
 
 _NON_WORD_SPLIT = re.compile(r"(\W)")
+# a token (a word run or one non-space separator) and the whitespace character
+# right after it, if any: '\s' and str.isspace() agree on every code point, so
+# this is the (\W) split with whitespace fragments attached to their token
+_TOKEN_WS = re.compile(r"(\w+|[^\w\s])(\s?)")
+_ASCII_CAMEL = re.compile(r"[a-z][A-Z]")
 
 
 def split_camel_case(fragment: str) -> List[str]:
@@ -43,117 +59,151 @@ def split_camel_case(fragment: str) -> List[str]:
     return parts
 
 
-_HAS_UPPER_AFTER_LOWER = re.compile(r"[a-z][A-Z]")
-
-
 def tokenize_text(text: str) -> List[str]:
     """All fragments (words, separators, single whitespace chars), no empties."""
-    out: List[str] = []
-    for fragment in _NON_WORD_SPLIT.split(text):
-        if not fragment:
+    pairs = [(fragment, "") for fragment in _NON_WORD_SPLIT.split(text) if fragment]
+    return [part for part, _ in _split_camel_pairs(pairs)]
+
+
+def _split_camel_pairs(pairs: List[Tuple[str, str]]) -> List[Tuple[str, str]]:
+    """(token, whitespace) pairs with camelCase words split, the inner parts
+    followed directly by the next part.  Only a token with an upper-case
+    character after its first one can split (``str.islower()`` is False on any
+    string holding one; for ASCII that is exactly ``[a-z][A-Z]``)."""
+    out: List[Tuple[str, str]] = []
+    search = _ASCII_CAMEL.search
+    for pair in pairs:
+        text = pair[0]
+        if text[1:].islower() or text.isascii() and not search(text):
+            out.append(pair)
             continue
-        # camelCase split only applies to fragments with a lower->upper
-        # transition; the regex pre-check avoids a python loop per fragment
-        if len(fragment) > 1 and _HAS_UPPER_AFTER_LOWER.search(fragment):
-            out.extend(split_camel_case(fragment))
-        else:
-            out.append(fragment)
+        parts = split_camel_case(text)
+        out += [(part, "") for part in parts[:-1]]
+        out.append((parts[-1], pair[1]))
     return out
 
 
-class Token:
-    """A non-whitespace token with its following whitespace and absolute
-    character offsets into the document's extracted text."""
+class TokenizedDoc:
+    """Per-token columns, line offsets and the canonical extracted text."""
 
     __slots__ = (
-        "text", "whitespace", "tag", "sub_tag", "preserved_tag", "start", "end", "line_index",
+        "texts", "whitespace", "starts", "ends", "tags", "sub_tags", "preserved_tags",
+        "line_starts", "extracted_text",
     )
 
     def __init__(
         self,
-        text: str,
-        whitespace: Optional[str],
-        start: int,
-        end: int,
-        line_index: int,
+        texts: List[str],
+        whitespace: List[Optional[str]],
+        starts: List[int],
+        ends: List[int],
+        line_starts: List[int],
+        extracted_text: str,
     ):
-        self.text = text
+        self.texts = texts
         self.whitespace = whitespace
-        self.tag: Optional[str] = None
-        self.sub_tag: Optional[str] = None
-        self.preserved_tag: Optional[str] = None
-        self.start = start
-        self.end = end
-        self.line_index = line_index
-
-    def effective_whitespace(self) -> str:
-        return self.whitespace if self.whitespace is not None else " "
-
-    def __repr__(self) -> str:
-        return "Token(%r, ws=%r, tag=%r, @%d:%d)" % (
-            self.text,
-            self.whitespace,
-            self.tag,
-            self.start,
-            self.end,
-        )
-
-
-class TokenizedDoc:
-    """Lines of non-space tokens plus the canonical extracted text."""
-
-    __slots__ = ("lines", "extracted_text")
-
-    def __init__(self, lines: List[List[Token]], extracted_text: str):
-        self.lines = lines
+        self.starts = starts
+        self.ends = ends
+        self.line_starts = line_starts
         self.extracted_text = extracted_text
+        self.tags: List[Optional[str]] = [None] * len(texts)
+        self.sub_tags: List[Optional[str]] = [None] * len(texts)
+        self.preserved_tags: List[Optional[str]] = [None] * len(texts)
 
-    def iter_tokens(self) -> Iterator[Token]:
-        for line in self.lines:
-            yield from line
+    @classmethod
+    def from_lines(cls, lines: Sequence[Sequence[Tuple[str, Optional[str]]]]) -> "TokenizedDoc":
+        """A document of (text, recorded whitespace) pairs per line; the
+        extracted text joins each line's tokens with their effective
+        whitespace (None -> one space), the last one contributing none."""
+        texts: List[str] = []
+        whitespace: List[Optional[str]] = []
+        starts: List[int] = []
+        line_starts = [0]
+        out: List[str] = []
+        pos = 0
+        for line in lines:
+            line_texts = [text for text, _ in line]
+            line_ws = [ws for _, ws in line]
+            text, offsets = _join(line_texts, line_ws, " ", pos)
+            texts += line_texts
+            whitespace += line_ws
+            starts += offsets
+            out.append(text)
+            line_starts.append(len(texts))
+            pos += len(text) + 1
+        ends = list(map(add, starts, map(len, texts)))
+        return cls(texts, whitespace, starts, ends, line_starts, "\n".join(out))
+
+    @property
+    def lines(self) -> List[range]:
+        """Each line's token indices."""
+        bounds = self.line_starts
+        return [range(a, b) for a, b in zip(bounds, bounds[1:])]
+
+    def keep(self, indices: Sequence[int]) -> None:
+        """Keep only the tokens at ``indices`` (ascending) and drop the lines
+        left empty.  Offsets still point into the unchanged extracted text,
+        so keep only tagged tokens: the TEI renderer writes an untagged line
+        as one slice of it, which a shortened line no longer is."""
+        for name in ("texts", "whitespace", "starts", "ends", "tags", "sub_tags", "preserved_tags"):
+            column = getattr(self, name)
+            setattr(self, name, [column[i] for i in indices])
+        line_starts = [0]
+        for end in self.line_starts[1:]:
+            kept = bisect_left(indices, end)  # kept tokens before the line's end
+            if kept > line_starts[-1]:
+                line_starts.append(kept)
+        self.line_starts = line_starts
 
 
 def tokenize_lines(text_lines: Sequence[str]) -> TokenizedDoc:
-    """Build the token/line model and the canonical extracted text."""
-    lines: List[List[Token]] = []
-    out_parts: List[str] = []
+    """Build the token columns and the canonical extracted text: one regex
+    scan per line gives each token and the whitespace character after it."""
+    texts: List[str] = []
+    whitespace: List[Optional[str]] = []
+    starts: List[int] = []
+    ends: List[int] = []
+    line_starts = [0]
+    out: List[str] = []
     pos = 0
-    for line_index, raw_line in enumerate(text_lines):
-        fragments = tokenize_text(raw_line)
-        tokens: List[Token] = []
-        # single pass: emit text+whitespace optimistically, then retract the
-        # final token's trailing whitespace (a line's last token contributes
-        # no whitespace to the reconstruction)
-        for i, fragment in enumerate(fragments):
-            # separator fragments are single chars ((\W) split), so isspace()
-            # is the exact whitespace test — cheaper than strip() per fragment
-            if fragment.isspace():
-                continue
-            nxt = fragments[i + 1] if i + 1 < len(fragments) else None
-            if nxt is None:
-                ws: Optional[str] = None
-            elif nxt.isspace():
-                ws = nxt
-            else:
-                ws = ""
-            end = pos + len(fragment)
-            tokens.append(Token(fragment, ws, pos, end, line_index))
-            # a non-space fragment following directly (ws == "") contributes
-            # no join char; otherwise the effective whitespace (None -> " ")
-            emit_ws = " " if ws is None else ws
-            out_parts.append(fragment + emit_ws)
-            pos = end + len(emit_ws)
-        if tokens:
-            last = tokens[-1]
-            trailing = " " if last.whitespace is None else last.whitespace
-            if trailing:
-                out_parts[-1] = last.text
-                pos -= len(trailing)
-        lines.append(tokens)
-        if line_index + 1 < len(text_lines):
-            out_parts.append("\n")
-            pos += 1
-    return TokenizedDoc(lines, "".join(out_parts))
+    findall = _TOKEN_WS.findall
+    for line in text_lines:
+        pairs = findall(line)
+        if pairs:
+            # an ASCII line holds a camelCase word only if the pattern occurs
+            if not line.isascii() or _ASCII_CAMEL.search(line):
+                pairs = _split_camel_pairs(pairs)
+            line_texts, line_ws = zip(*pairs)
+            # each token followed by its whitespace; the last one contributes none
+            pieces = list(map("".join, pairs))
+            pieces[-1] = line_texts[-1]
+            offsets = list(accumulate(map(len, pieces), initial=pos))
+            pos = offsets.pop()
+            texts += line_texts
+            whitespace += line_ws
+            if not line_ws[-1]:
+                whitespace[-1] = None  # nothing after the last token
+            starts += offsets
+            ends += map(add, offsets, map(len, line_texts))
+            out.append("".join(pieces))
+        else:
+            out.append("")
+        line_starts.append(len(texts))
+        pos += 1  # the line break
+    return TokenizedDoc(texts, whitespace, starts, ends, line_starts, "\n".join(out))
+
+
+def _join(
+    texts: Sequence[str], whitespace: Sequence[Optional[str]], sep: str, pos: int
+) -> Tuple[str, List[int]]:
+    """``texts`` joined with their whitespace (None -> ``sep``), the last one
+    contributing none, and each one's start when the join starts at ``pos``."""
+    pieces = [text + (sep if ws is None else ws) for text, ws in zip(texts, whitespace)]
+    if pieces:
+        pieces[-1] = texts[-1]
+    starts = list(accumulate(map(len, pieces), initial=pos))
+    starts.pop()
+    return "".join(pieces), starts
 
 
 def join_with_index_ranges(
@@ -162,35 +212,5 @@ def join_with_index_ranges(
     """Join item strings with per-item whitespace (None -> sep; last item '')
     and return each item's index range in the joined string
     (matching_utils.py:116-142)."""
-    if whitespace_list is None:
-        # constant separator: one C-level join, ranges from a running sum;
-        # identical output to the general loop below by construction
-        ranges = []
-        append = ranges.append
-        pos = 0
-        sep_len = len(sep)
-        for s in item_strings:
-            end = pos + len(s)
-            append((pos, end))
-            pos = end + sep_len
-        return sep.join(item_strings), ranges
-    parts: List[str] = []
-    ranges = []
-    pos = 0
-    n = len(item_strings)
-    for i, s in enumerate(item_strings):
-        ranges.append((pos, pos + len(s)))
-        parts.append(s)
-        pos += len(s)
-        if i + 1 < n:
-            ws = sep
-            if whitespace_list[i] is not None:
-                ws = whitespace_list[i]  # type: ignore[assignment]
-            parts.append(ws)
-            pos += len(ws)
-    return "".join(parts), ranges
-
-
-def join_tokens_text(tokens: List[Token]) -> str:
-    """Single-space join of token texts (matching_utils.py:105-106)."""
-    return " ".join(t.text for t in tokens)
+    joined, starts = _join(item_strings, whitespace_list or [None] * len(item_strings), sep, 0)
+    return joined, list(zip(starts, map(add, starts, map(len, item_strings))))

@@ -13,16 +13,16 @@ ordering semantics).
 The reference's pending-sequence objects (SequenceWrapper, SequencesText and
 PendingSequences, annotation/matching_utils.py:189-333) are one
 ``MatcherView`` per document, restarted each fixpoint round: normalised token
-texts, a tag mask and cached untagged sub-runs per line.  A ``PendingText``
-joins sub-runs; its character-to-token lookups are ``bisect`` calls on int
-offset lists.
+texts beside the document's columns and cached untagged sub-runs per line.
+A ``PendingText`` joins sub-runs; its character-to-token lookups are
+``bisect`` calls on int offset lists.
 """
 
 from __future__ import annotations
 
 import re
 from bisect import bisect_left, bisect_right
-from itertools import accumulate, groupby
+from itertools import accumulate, compress, groupby
 from operator import add
 from typing import Dict, Iterator, List, Optional, Sequence, Set, Tuple, Union
 
@@ -329,39 +329,32 @@ class MatcherView:
     """The matcher's view of a document (PendingSequences,
     matching_utils.py:260-292).
 
-    Holds the flat token list, each token's ``normalise_str`` text (the
-    reference composes it with a junk removal whose default predicate is
-    constant-False, matching_utils.py:43-44,62-67, i.e. a no-op), a ``tagged``
-    mask mirroring ``Token.tag``, and per line its pending tokens: those
-    untagged when the fixpoint round started.  A tagged token is left out of
-    the next round's pending tokens, not split at.
+    Holds each token's ``normalise_str`` text (the reference composes it with
+    a junk removal whose default predicate is constant-False,
+    matching_utils.py:43-44,62-67, i.e. a no-op) and per line its pending
+    tokens: those untagged when the fixpoint round started.  Tag writes go to
+    the document's ``tags`` column.  A tagged token is left out of the next
+    round's pending tokens, not split at.
 
     The untagged sub-runs of all lines are kept in one list in document
-    order, with their first flat token indices; a tag write re-splits only
-    its own line, on the next ``pending`` call."""
+    order, with their first token indices; a tag write re-splits only its
+    own line, on the next ``pending`` call."""
 
     def __init__(self, doc: TokenizedDoc):
-        tokens = [token for line in doc.lines for token in line]
-        self.tokens = tokens
-        self.texts = [normalise_str(token.text) for token in tokens]
+        self.doc = doc
+        self.tags = tags = doc.tags
+        self.texts = list(map(normalise_str, doc.texts))
         # normalised text plus recorded whitespace (None -> one space)
         self.pieces = [
-            text + (" " if token.whitespace is None else token.whitespace)
-            for text, token in zip(self.texts, tokens)
+            text + (" " if ws is None else ws) for text, ws in zip(self.texts, doc.whitespace)
         ]
         self.text_sizes = list(map(len, self.texts))
         self.piece_sizes = list(map(len, self.pieces))
-        self.tagged = tagged = bytearray(map(bool, [token.tag for token in tokens]))
-        # each line's first flat token index, then the end of the last line
-        self._line_starts: List[int] = [0]
-        self._lines: List[List[int]] = []
-        for line in doc.lines:
-            pos = self._line_starts[-1]
-            self._line_starts.append(pos + len(line))
-            indices = list(range(pos, pos + len(line)))
-            if 1 in tagged[pos : pos + len(line)]:
-                indices = [i for i in indices if not tagged[i]]
-            self._lines.append(indices)
+        self._line_starts = doc.line_starts
+        self._lines: List[List[int]] = [
+            [i for i in range(a, b) if not tags[i]] if any(tags[a:b]) else list(range(a, b))
+            for a, b in zip(doc.line_starts, doc.line_starts[1:])
+        ]
         self._runs = [SubRun(self, indices) for indices in self._lines if indices]
         self._firsts = [run.indices[0] for run in self._runs]
         # lines tagged since the round started / since their last re-split
@@ -373,20 +366,18 @@ class MatcherView:
     def next_round(self) -> None:
         """Start a fixpoint round: drop tagged tokens from the pending tokens
         of the lines tagged in the last one."""
-        tagged = self.tagged
+        tags = self.tags
         for line in self._touched:
-            self._lines[line] = [i for i in self._lines[line] if not tagged[i]]
+            self._lines[line] = [i for i in self._lines[line] if not tags[i]]
         self._dirty |= self._touched
         self._touched.clear()
         self.version += 1
 
     def tag_tokens(self, indices: List[int], tags: List[str]) -> None:
-        """Set ``Token.tag`` of the tokens at these flat indices."""
-        tokens = self.tokens
-        tagged = self.tagged
+        """Set the tags of the tokens at these indices."""
+        doc_tags = self.tags
         for index, tag in zip(indices, tags):
-            tokens[index].tag = tag
-            tagged[index] = 1
+            doc_tags[index] = tag
         lines = {bisect_right(self._line_starts, index) - 1 for index in indices}
         self._touched |= lines
         self._dirty |= lines
@@ -394,10 +385,10 @@ class MatcherView:
 
     def _resplit(self, line: int) -> None:
         sub_runs = []
-        tagged = self.tagged
+        tags = self.tags
         run: List[int] = []
         for i in self._lines[line]:
-            if not tagged[i]:
+            if not tags[i]:
                 run.append(i)
             elif run:
                 sub_runs.append(SubRun(self, run))
@@ -560,8 +551,8 @@ class SimpleMatcher:
         """BIO-tag untagged tokens in the matched range
         (simple_matching_annotator.py:491-516)."""
         view = text.view
-        tagged = view.tagged
-        untagged = [i for i in text.token_indices_between(index_range) if not tagged[i]]
+        doc_tags = view.tags
+        untagged = [i for i in text.token_indices_between(index_range) if not doc_tags[i]]
         if not untagged:
             return
         if self.config.use_begin_prefix:
@@ -571,8 +562,9 @@ class SimpleMatcher:
             tags = [tag_name] * len(untagged)
         view.tag_tokens(untagged, tags)
         if not self.config.preserve_sub_annotations:
+            sub_tags = view.doc.sub_tags
             for i in untagged:
-                view.tokens[i].sub_tag = None
+                sub_tags[i] = None
 
     def _apply_sub_annotations(
         self,
@@ -584,10 +576,11 @@ class SimpleMatcher:
         (simple_matching_annotator.py:518-570)."""
         if not sub_annotations:
             return
-        all_tokens = text.view.tokens
-        tokens = [all_tokens[i] for i in text.token_indices_between(index_range)]
+        doc = text.view.doc
+        sub_tags = doc.sub_tags
+        indices = text.token_indices_between(index_range)
         sub_text_str, ranges = join_with_index_ranges(
-            [t.text for t in tokens], [t.whitespace for t in tokens], sep=" "
+            [doc.texts[i] for i in indices], [doc.whitespace[i] for i in indices], sep=" "
         )
         sub_text_str = sub_text_str.lower()
         starts = [start for start, _ in ranges]
@@ -602,16 +595,16 @@ class SimpleMatcher:
                 threshold=self.config.threshold,
                 exact_word_match_threshold=self.config.exact_word_match_threshold,
             ):
-                matching_tokens = tokens[
+                matching = indices[
                     bisect_right(ends, sub_index_range[0]) : bisect_left(starts, sub_index_range[1])
                 ]
-                if any(t.sub_tag for t in matching_tokens):
+                if any(sub_tags[i] for i in matching):
                     continue
-                for index, token in enumerate(matching_tokens):
+                for index, i in enumerate(matching):
                     prefix = None
                     if self.config.use_begin_prefix:
                         prefix = B_PREFIX if index == 0 else I_PREFIX
-                    token.sub_tag = add_tag_prefix(sub_annotation.name, prefix=prefix)
+                    sub_tags[i] = add_tag_prefix(sub_annotation.name, prefix=prefix)
                 break
 
     # -- per-annotation matching -------------------------------------------
@@ -680,7 +673,7 @@ class SimpleMatcher:
                     # the new block: every sub-run from the one holding the
                     # match start to the end of the document
                     k = bisect_right(text.ends, merge_index_ranges(index_ranges)[0])
-                    block_first = text.runs[k].indices[0] if k < len(text.runs) else len(view.tokens)
+                    block_first = text.runs[k].indices[0] if k < len(text.runs) else len(view.texts)
                     current_block_name = tag_block_name
                 if not index_ranges:
                     unmatched.append(target_annotation)
@@ -697,19 +690,18 @@ class SimpleMatcher:
         return unmatched
 
     def _extend_to_lines(self, doc: TokenizedDoc) -> None:
-        for line in doc.lines:
-            tags = [t.tag for t in line]
-            if not any(tags):
+        tags = doc.tags
+        for a, b in zip(doc.line_starts, doc.line_starts[1:]):
+            line_tags = tags[a:b]
+            if not any(line_tags):
                 # nothing to extend from: every extended tag would be None
                 continue
             extended = get_extended_line_token_tags(
-                tags,
+                line_tags,
                 extend_to_line_enabled_map=self.extend_to_line_enabled_map,
                 merge_enabled_map=self.merge_enabled_map,
             )
-            for token, tag in zip(line, extended):
-                if tag:
-                    token.tag = tag
+            tags[a:b] = [new or old for new, old in zip(extended, line_tags)]
 
     def annotate(self, doc: TokenizedDoc) -> TokenizedDoc:
         """Fixpoint over unmatched annotations, then extend-to-line
@@ -727,62 +719,38 @@ class SimpleMatcher:
         return doc
 
 
-def extract_entity_spans(doc: TokenizedDoc) -> List[Dict[str, object]]:
+def _bio_spans(doc: TokenizedDoc, tags: List[Optional[str]]) -> List[Dict[str, object]]:
     """Collapse BIO token tags into entity spans with absolute character
     offsets into the extracted text (semantics of annotation/checks.py:56-76:
-    a new entity starts at a b- prefix or a tag-value change)."""
+    a new entity starts at a b- prefix, a tag-value change or after an
+    untagged token).  Only tagged tokens are visited."""
     spans: List[Dict[str, object]] = []
+    if not any(tags):
+        return spans
     current: Optional[Dict[str, object]] = None
-    current_value: Optional[str] = None
-    for token in doc.iter_tokens():
-        tag = token.tag
-        if not tag:
-            # untagged fast path: the overwhelming majority of tokens —
-            # skip the split_tag_prefix call entirely
-            current = None
-            current_value = None
-            continue
-        prefix, value = split_tag_prefix(tag)
-        if not value:
-            current = None
-            current_value = None
-            continue
-        if current is not None and value == current_value and prefix != B_PREFIX:
-            current["end"] = token.end
-        else:
-            current = {"field": value, "start": token.start, "end": token.end}
-            current_value = value
+    for i in compress(range(len(tags)), tags):
+        prefix, value = split_tag_prefix(tags[i])
+        # the open span is the previous token's unless that one is untagged
+        if current is not None and value == current["field"] and prefix != B_PREFIX and tags[i - 1]:
+            current["end"] = doc.ends[i]
+        elif value:
+            current = {"field": value, "start": doc.starts[i], "end": doc.ends[i]}
             spans.append(current)
+        else:
+            current = None
     for span in spans:
         span["text"] = doc.extracted_text[span["start"] : span["end"]]  # type: ignore[index]
     return spans
+
+
+def extract_entity_spans(doc: TokenizedDoc) -> List[Dict[str, object]]:
+    """Entity spans of the level-1 (main) tags."""
+    return _bio_spans(doc, doc.tags)
 
 
 def extract_sub_entity_spans(doc: TokenizedDoc) -> List[Dict[str, object]]:
     """Entity spans of the level-2 (sub) tags."""
-    spans: List[Dict[str, object]] = []
-    current: Optional[Dict[str, object]] = None
-    current_value: Optional[str] = None
-    for token in doc.iter_tokens():
-        sub_tag = token.sub_tag
-        if not sub_tag:
-            current = None
-            current_value = None
-            continue
-        prefix, value = split_tag_prefix(sub_tag)
-        if not value:
-            current = None
-            current_value = None
-            continue
-        if current is not None and value == current_value and prefix != B_PREFIX:
-            current["end"] = token.end
-        else:
-            current = {"field": value, "start": token.start, "end": token.end}
-            current_value = value
-            spans.append(current)
-    for span in spans:
-        span["text"] = doc.extracted_text[span["start"] : span["end"]]  # type: ignore[index]
-    return spans
+    return _bio_spans(doc, doc.sub_tags)
 
 
 class SubTagOnlyMatcher(SimpleMatcher):
@@ -798,12 +766,8 @@ class SubTagOnlyMatcher(SimpleMatcher):
         return None
 
     def annotate(self, doc: TokenizedDoc) -> TokenizedDoc:
-        saved_tags = [(token, token.tag or token.preserved_tag) for token in doc.iter_tokens()]
-        for token, _ in saved_tags:
-            token.tag = None
-            if not self.config.preserve_sub_annotations:
-                token.sub_tag = token.sub_tag  # preserved sub-tags not modeled separately
+        saved_tags = [tag or preserved for tag, preserved in zip(doc.tags, doc.preserved_tags)]
+        doc.tags = [None] * len(saved_tags)
         super().annotate(doc)
-        for token, saved in saved_tags:
-            token.tag = saved
+        doc.tags = saved_tags
         return doc

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from typing import List, Optional
 
-from ..kernel.doc import Token, TokenizedDoc
+from ..kernel.doc import TokenizedDoc
 
 DEFAULT_MIN_LINE_NUMBER_COUNT = 10
 DEFAULT_MAX_LINE_NUMBER_GAP = 10
@@ -32,12 +32,14 @@ def find_line_number_tokens(
     min_count: int = DEFAULT_MIN_LINE_NUMBER_COUNT,
     max_gap: int = DEFAULT_MAX_LINE_NUMBER_GAP,
     ratio_threshold: float = DEFAULT_LINE_NUMBER_RATIO_THRESHOLD,
-) -> List[Token]:
-    first_tokens = [line[0] for line in doc.lines if line]
+) -> List[int]:
+    """Indices of the accepted line-number tokens."""
+    bounds = doc.line_starts
+    first_tokens = [a for a, b in zip(bounds, bounds[1:]) if a < b]
     candidates = [
         (token, value, 1 + index)
         for index, token in enumerate(first_tokens)
-        if (value := _parse_positive_int(token.text)) is not None
+        if (value := _parse_positive_int(doc.texts[token])) is not None
     ]
     if not candidates:
         return []
@@ -71,5 +73,5 @@ def annotate_line_numbers(
     for token in find_line_number_tokens(
         doc, min_count=min_count, max_gap=max_gap, ratio_threshold=ratio_threshold
     ):
-        token.tag = tag
+        doc.tags[token] = tag
     return doc

@@ -25,7 +25,7 @@ from __future__ import annotations
 from itertools import zip_longest
 from typing import Callable, Dict, Iterator, List, Optional, Tuple, Union
 
-from ..kernel.doc import Token, TokenizedDoc
+from ..kernel.doc import TokenizedDoc
 from ..kernel.fuzzy import FuzzyScore, direct_fuzzy_match, remove_junk
 from ..kernel.normalize import normalise_str
 from .annotate import B_PREFIX, I_PREFIX, TargetAnnotation, add_tag_prefix
@@ -52,25 +52,26 @@ def _normalise_value(value: Union[str, List[str]], junk: bool):
 class TokenSeq:
     """SequenceWrapper of the complex matcher: single-space join with
     char->token back-mapping by token-string lengths
-    (matching_annotator.py:81-127)."""
+    (matching_annotator.py:81-127); ``tokens`` are indices into ``doc``."""
 
-    __slots__ = ("tokens", "token_strings", "joined", "position", "normalize_fn")
+    __slots__ = ("doc", "tokens", "token_strings", "joined", "position", "normalize_fn")
 
     def __init__(
         self,
-        tokens: List[Token],
+        doc: TokenizedDoc,
+        tokens: List[int],
         normalize_fn: Optional[Callable[[str], str]] = None,
         position: int = 0,
     ):
+        self.doc = doc
         self.tokens = tokens
         self.normalize_fn = normalize_fn
-        self.token_strings = [
-            normalize_fn(t.text) if normalize_fn else t.text for t in tokens
-        ]
+        texts = [doc.texts[i] for i in tokens]
+        self.token_strings = list(map(normalize_fn, texts)) if normalize_fn else texts
         self.joined = " ".join(self.token_strings)
         self.position = position
 
-    def tokens_between(self, index_range: Tuple[int, int]) -> Iterator[Token]:
+    def tokens_between(self, index_range: Tuple[int, int]) -> Iterator[int]:
         start, end = index_range
         i = 0
         for token, token_str in zip(self.tokens, self.token_strings):
@@ -82,22 +83,23 @@ class TokenSeq:
             i = token_end + 1
 
     def untagged_subruns(self) -> Iterator["TokenSeq"]:
-        tags = [t.tag for t in self.tokens]
+        doc_tags = self.doc.tags
+        tags = [doc_tags[i] for i in self.tokens]
         tagged = sum(1 for t in tags if t)
         if tagged == 0:
             yield self
             return
         if tagged == len(self.tokens):
             return
-        pending: List[Token] = []
+        pending: List[int] = []
         for token, tag in zip(self.tokens, tags):
             if not tag:
                 pending.append(token)
             elif pending:
-                yield TokenSeq(pending, self.normalize_fn, self.position)
+                yield TokenSeq(self.doc, pending, self.normalize_fn, self.position)
                 pending = []
         if pending:
-            yield TokenSeq(pending, self.normalize_fn, self.position)
+            yield TokenSeq(self.doc, pending, self.normalize_fn, self.position)
 
     def __str__(self) -> str:
         return self.joined
@@ -398,10 +400,10 @@ class MatchingAnnotator:
         self.config = config or MatchingAnnotatorConfig()
 
     def _apply_sub_annotations(
-        self, target_annotation: TargetAnnotation, matching_tokens: List[Token]
+        self, target_annotation: TargetAnnotation, doc: TokenizedDoc, matching_tokens: List[int]
     ) -> None:
         """matching_annotator.py:570-606."""
-        seq = TokenSeq(matching_tokens, normalise_str, position=0)
+        seq = TokenSeq(doc, matching_tokens, normalise_str, position=0)
         matched_choices = PositionedSequenceSet()
         for sub_annotation in target_annotation.sub_annotations:
             finder = TargetAnnotationMatchFinder(
@@ -418,7 +420,7 @@ class MatchingAnnotator:
                     prefix = None
                     if self.config.use_tag_begin_prefix:
                         prefix = B_PREFIX if first_token else I_PREFIX
-                    token.sub_tag = add_tag_prefix(sub_annotation.name, prefix)
+                    doc.sub_tags[token] = add_tag_prefix(sub_annotation.name, prefix)
                     first_token = False
 
     def _apply_matches(
@@ -426,26 +428,29 @@ class MatchingAnnotator:
     ) -> None:
         """matching_annotator.py:609-641."""
         first_token = True
-        all_matching_tokens: List[Token] = []
+        all_matching_tokens: List[int] = []
         for m in matches:
+            tags = m.seq2.doc.tags
             for token in m.seq2.tokens_between(m.index2_range):
-                if not token.tag:
+                if not tags[token]:
                     prefix = None
                     if self.config.use_tag_begin_prefix:
                         prefix = B_PREFIX if first_token else I_PREFIX
-                    token.tag = add_tag_prefix(target_annotation.name, prefix)
+                    tags[token] = add_tag_prefix(target_annotation.name, prefix)
                     first_token = False
                     all_matching_tokens.append(token)
             if target_annotation.sub_annotations:
-                self._apply_sub_annotations(target_annotation, all_matching_tokens)
+                self._apply_sub_annotations(
+                    target_annotation, m.seq2.doc, all_matching_tokens
+                )
 
     def annotate(self, doc: TokenizedDoc) -> TokenizedDoc:
         pending: List[TokenSeq] = []
         for line in doc.lines:
-            untagged = [t for t in line if not t.tag]
+            untagged = [i for i in line if not doc.tags[i]]
             if untagged:
                 pending.append(
-                    TokenSeq(untagged, normalise_and_remove_junk, position=len(pending))
+                    TokenSeq(doc, untagged, normalise_and_remove_junk, position=len(pending))
                 )
         conditional_match: Optional[Dict] = None
         matched_choices_map: Dict[str, PositionedSequenceSet] = {}

@@ -19,39 +19,34 @@ pass over the document's non-space tokens:
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Iterable, List, Optional, Set
+from typing import Callable, Dict, List, Optional, Set
 
-from ..kernel.doc import Token, TokenizedDoc
+from ..kernel.doc import TokenizedDoc
 from .annotate import B_PREFIX, I_PREFIX, add_tag_prefix, split_tag_prefix, strip_tag_prefix
 
 
-def _tag_or_preserved(token: Token) -> Optional[str]:
-    return token.tag or token.preserved_tag
-
-
-def _tag_or_preserved_value(token: Token) -> Optional[str]:
-    return strip_tag_prefix(_tag_or_preserved(token))
+def _tags_or_preserved(doc: TokenizedDoc) -> List[Optional[str]]:
+    return [tag or preserved for tag, preserved in zip(doc.tags, doc.preserved_tags)]
 
 
 def expand_to_previous_untagged_tokens(
     doc: TokenizedDoc, enabled_tags: Set[str]
 ) -> TokenizedDoc:
-    previous_untagged: List[Token] = []
-    for token in doc.iter_tokens():
-        tag_value = _tag_or_preserved_value(token)
+    tags = doc.tags
+    previous_untagged: List[int] = []
+    for i, tag in enumerate(_tags_or_preserved(doc)):
+        tag_value = strip_tag_prefix(tag)
         if not tag_value:
-            previous_untagged.append(token)
+            previous_untagged.append(i)
             continue
         if not previous_untagged:
             continue
         if tag_value not in enabled_tags:
             previous_untagged.clear()
             continue
-        for index, untagged_token in enumerate(previous_untagged):
-            untagged_token.tag = add_tag_prefix(
-                tag_value, B_PREFIX if index == 0 else I_PREFIX
-            )
-        token.tag = add_tag_prefix(tag_value, I_PREFIX)
+        for index, untagged in enumerate(previous_untagged):
+            tags[untagged] = add_tag_prefix(tag_value, B_PREFIX if index == 0 else I_PREFIX)
+        tags[i] = add_tag_prefix(tag_value, I_PREFIX)
         previous_untagged.clear()
     return doc
 
@@ -59,15 +54,16 @@ def expand_to_previous_untagged_tokens(
 def expand_to_following_untagged_tokens(
     doc: TokenizedDoc, enabled_tags: Set[str]
 ) -> TokenizedDoc:
+    tags = doc.tags
     previous_enabled_tag: Optional[str] = None
-    for token in doc.iter_tokens():
-        tag_value = _tag_or_preserved_value(token)
+    for i, tag in enumerate(_tags_or_preserved(doc)):
+        tag_value = strip_tag_prefix(tag)
         if tag_value:
             previous_enabled_tag = tag_value if tag_value in enabled_tags else None
             continue
         if not previous_enabled_tag:
             continue
-        token.tag = add_tag_prefix(previous_enabled_tag, I_PREFIX)
+        tags[i] = add_tag_prefix(previous_enabled_tag, I_PREFIX)
     return doc
 
 
@@ -76,43 +72,35 @@ def merge_group_tags(
     get_group_tag: Callable[[str], Optional[str]],
     sub_level: bool = False,
 ) -> TokenizedDoc:
+    target = doc.sub_tags if sub_level else doc.tags
     current_group_tag: Optional[str] = None
-    for token in doc.iter_tokens():
+    for i, tag in enumerate(_tags_or_preserved(doc)):
         if sub_level:
-            if not _tag_or_preserved(token):
+            if not tag:
                 continue
-            tag_value = strip_tag_prefix(token.sub_tag)
+            tag_value = strip_tag_prefix(doc.sub_tags[i])
         else:
-            tag_value = _tag_or_preserved_value(token)
+            tag_value = strip_tag_prefix(tag)
         if tag_value:
             current_group_tag = get_group_tag(tag_value)
             continue
         if not current_group_tag:
             continue
-        grouped = add_tag_prefix(current_group_tag, I_PREFIX)
-        if sub_level:
-            token.sub_tag = grouped
-        else:
-            token.tag = grouped
+        target[i] = add_tag_prefix(current_group_tag, I_PREFIX)
     return doc
 
 
 def replace_tags(doc: TokenizedDoc, replaced_tag_by_tag: Dict[str, Optional[str]]) -> TokenizedDoc:
-    for token in doc.iter_tokens():
-        tag = _tag_or_preserved(token)
+    for i, tag in enumerate(_tags_or_preserved(doc)):
         prefix, tag_value = split_tag_prefix(tag)
         if not tag_value or tag_value not in replaced_tag_by_tag:
             continue
-        token.tag = add_tag_prefix(replaced_tag_by_tag[tag_value], prefix)
+        doc.tags[i] = add_tag_prefix(replaced_tag_by_tag[tag_value], prefix)
     return doc
 
 
 def remove_untagged_tokens(doc: TokenizedDoc) -> TokenizedDoc:
     """Drop untagged tokens (and then-empty lines); offsets keep pointing at
     the original extracted text."""
-    doc.lines = [
-        [t for t in line if t.tag or t.preserved_tag]
-        for line in doc.lines
-    ]
-    doc.lines = [line for line in doc.lines if line]
+    doc.keep([i for i, tag in enumerate(_tags_or_preserved(doc)) if tag])
     return doc

@@ -22,7 +22,7 @@ import re
 from itertools import groupby
 from typing import Dict, Iterator, List, Optional, Set, Tuple
 
-from ..kernel.doc import Token, TokenizedDoc, join_with_index_ranges
+from ..kernel.doc import TokenizedDoc, join_with_index_ranges
 from .annotate import (
     B_PREFIX,
     add_tag_prefix,
@@ -95,14 +95,14 @@ def default_reference_annotator_config() -> ReferenceAnnotatorConfig:
 
 
 def iter_entity_token_groups(
-    tokens: List[Token],
-) -> Iterator[Tuple[Optional[str], List[Token]]]:
-    """Group consecutive tokens by main-tag value, splitting at B- prefixes
-    (reference_annotator.py:73-96)."""
+    tags: List[Optional[str]],
+) -> Iterator[Tuple[Optional[str], List[int]]]:
+    """Group consecutive token indices by main-tag value, splitting at B-
+    prefixes (reference_annotator.py:73-96)."""
     pending_value: Optional[str] = None
-    pending: Optional[List[Token]] = None
-    for token in tokens:
-        prefix, value = split_tag_prefix(token.tag)
+    pending: Optional[List[int]] = None
+    for token, tag in enumerate(tags):
+        prefix, value = split_tag_prefix(tag)
         if pending and (pending_value != value or prefix == B_PREFIX):
             yield pending_value, pending
             pending = None
@@ -253,27 +253,32 @@ class ReferencePostProcessor:
     def __init__(self, config: Optional[ReferenceAnnotatorConfig] = None):
         self.config = config or default_reference_annotator_config()
 
-    def _apply_sub_tags(self, tokens: List[Token], new_tags: List[Optional[str]]) -> None:
+    def _apply_sub_tags(
+        self, doc: TokenizedDoc, tokens: List[int], new_tags: List[Optional[str]]
+    ) -> None:
         for token, sub_tag in zip(tokens, new_tags):
             if sub_tag:
-                token.sub_tag = sub_tag
+                doc.sub_tags[token] = sub_tag
 
     def annotate(self, doc: TokenizedDoc) -> TokenizedDoc:
         config = self.config
-        for _value, entity_tokens in iter_entity_token_groups(list(doc.iter_tokens())):
-            texts = [t.text for t in entity_tokens]
-            whitespaces = [t.whitespace for t in entity_tokens]
+        sub_tags = doc.sub_tags
+        for _value, entity_tokens in iter_entity_token_groups(doc.tags):
+            texts = [doc.texts[i] for i in entity_tokens]
+            whitespaces = [doc.whitespace[i] for i in entity_tokens]
             # 1. et-al merge
-            mapped = [_map_tag(t.sub_tag, config.sub_tag_map) for t in entity_tokens]
+            mapped = [_map_tag(sub_tags[i], config.sub_tag_map) for i in entity_tokens]
             self._apply_sub_tags(
+                doc,
                 entity_tokens,
                 get_etal_mapped_tags(
                     mapped, config.etal_sub_tag, config.etal_merge_enabled_sub_tags
                 ),
             )
             # 2. name suffix absorption
-            mapped = [_map_tag(t.sub_tag, config.sub_tag_map) for t in entity_tokens]
+            mapped = [_map_tag(sub_tags[i], config.sub_tag_map) for i in entity_tokens]
             self._apply_sub_tags(
+                doc,
                 entity_tokens,
                 get_suffix_extended_token_tags(
                     mapped,
@@ -283,8 +288,9 @@ class ReferencePostProcessor:
                 ),
             )
             # 3. idno prefix absorption
-            mapped = [_map_tag(t.sub_tag, config.sub_tag_map) for t in entity_tokens]
+            mapped = [_map_tag(sub_tags[i], config.sub_tag_map) for i in entity_tokens]
             self._apply_sub_tags(
+                doc,
                 entity_tokens,
                 get_prefix_extended_token_tags(
                     mapped,
@@ -295,8 +301,9 @@ class ReferencePostProcessor:
                 ),
             )
             # 4. sub-tag gap merge
-            mapped = [_map_tag(t.sub_tag, config.sub_tag_map) for t in entity_tokens]
+            mapped = [_map_tag(sub_tags[i], config.sub_tag_map) for i in entity_tokens]
             self._apply_sub_tags(
+                doc,
                 entity_tokens,
                 get_extended_line_token_tags(
                     mapped,

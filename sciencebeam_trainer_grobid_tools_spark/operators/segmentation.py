@@ -23,7 +23,7 @@ import re
 from collections import Counter
 from typing import Dict, List, Optional, Set
 
-from ..kernel.doc import Token, TokenizedDoc, join_tokens_text
+from ..kernel.doc import TokenizedDoc
 from .annotate import strip_tag_prefix
 
 
@@ -86,24 +86,26 @@ def parse_segmentation_config_string(config_text: str) -> SegmentationConfig:
 
 
 class _SegLine:
-    __slots__ = ("tokens", "line_index", "segmentation_tag", "text")
+    __slots__ = ("doc", "tokens", "line_index", "segmentation_tag", "text")
 
-    def __init__(self, tokens: List[Token], line_index: int):
+    def __init__(self, doc: TokenizedDoc, tokens: range, line_index: int):
+        self.doc = doc
         self.tokens = tokens
         self.line_index = line_index
         self.segmentation_tag: Optional[str] = None
-        self.text = join_tokens_text(tokens)
+        # single-space join of the token texts (matching_utils.py:105-106)
+        self.text = " ".join(doc.texts[tokens.start : tokens.stop])
+
+    def tags_or_preserved(self) -> List[Optional[str]]:
+        doc = self.doc
+        return [doc.tags[i] or doc.preserved_tags[i] for i in self.tokens]
 
     def set_segmentation_tag(self, tag: Optional[str]) -> None:
         self.segmentation_tag = tag
-        for token in self.tokens:
-            token.tag = tag
+        self.doc.tags[self.tokens.start : self.tokens.stop] = [tag] * len(self.tokens)
 
     def clear(self) -> None:
-        self.segmentation_tag = None
-        for token in self.tokens:
-            if token.tag:
-                token.tag = None
+        self.set_segmentation_tag(None)
 
 
 def _majority_value(values: List[Optional[str]]) -> Optional[str]:
@@ -198,8 +200,7 @@ def _apply_preserved_page_numbers(lines: List[_SegLine]) -> None:
     for line in lines:
         if line.segmentation_tag:
             continue
-        tags = [t.tag or t.preserved_tag for t in line.tokens]
-        if SegmentTags.PAGE in tags:
+        if SegmentTags.PAGE in line.tags_or_preserved():
             line.set_segmentation_tag(SegmentTags.PAGE)
 
 
@@ -229,9 +230,7 @@ def _merge_lines(
         if line.segmentation_tag:
             candidates = []
             continue
-        if preserve_tags and SegmentTags.PAGE in [
-            t.tag or t.preserved_tag for t in line.tokens
-        ]:
+        if preserve_tags and SegmentTags.PAGE in line.tags_or_preserved():
             continue
         if previous_tag in enabled_tags:
             candidates.append(line)
@@ -253,9 +252,9 @@ class SegmentationAnnotator:
         }
 
     def annotate(self, doc: TokenizedDoc) -> TokenizedDoc:
-        lines = [_SegLine(tokens, i) for i, tokens in enumerate(doc.lines)]
+        lines = [_SegLine(doc, tokens, i) for i, tokens in enumerate(doc.lines)]
         for line in lines:
-            tag_values = [strip_tag_prefix(t.tag) for t in line.tokens]
+            tag_values = [strip_tag_prefix(doc.tags[i]) for i in line.tokens]
             if not tag_values:
                 continue
             majority = _majority_value(tag_values)

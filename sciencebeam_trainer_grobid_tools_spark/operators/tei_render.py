@@ -10,7 +10,8 @@ reference does all this per token; here a line is cut into tag runs, the
 maximal stretches of tokens with one resolved path where no token after the
 first has a B- prefix (main or sub tag).  The reference's steps are no-ops
 for those later tokens, so only a run's first token does them and the run's
-texts and inner whitespace go in with one ``"".join``.
+texts and inner whitespace go in with one ``"".join``; a line with no tag at
+all is one run, its slice of the extracted text.
 
 Stdlib ``xml.etree.ElementTree`` (no lxml in this environment); a parent
 stack replaces lxml's ``getparent``.  Unknown fields fall back to
@@ -139,32 +140,47 @@ def render_tagged_lines(
     plans: Dict[Key, _RunPlan] = {}
     paths: Dict[Path, tuple] = {}
     writer = _TreeWriter(container)
-    run_path: Optional[Path] = None
-    last_line = len(doc.lines) - 1
-    for line_index, line in enumerate(doc.lines):
+
+    def plan_for(key: Key) -> _RunPlan:
+        return plans.get(key) or plans.setdefault(key, _RunPlan(key, mapping, paths))
+
+    texts, whitespace = doc.texts, doc.whitespace
+    tags, sub_tags, preserved_tags = doc.tags, doc.sub_tags, doc.preserved_tags
+    marked = any(tags) or any(sub_tags) or any(preserved_tags)
+    bounds = doc.line_starts
+    last_line = len(bounds) - 2
+    for line_index, (a, b) in enumerate(zip(bounds, bounds[1:])):
         if line_index:
             ET.SubElement(writer.stack[-1], "lb")
+        if a == b:
+            continue
         # the open run's token texts, each followed by its whitespace:
         # recorded whitespace as-is, an unset value a single space
         parts: List[str] = []
-        for token in line:
-            key = (token.tag or token.preserved_tag, token.sub_tag)
-            plan = plans.get(key) or plans.setdefault(key, _RunPlan(key, mapping, paths))
-            if plan.joins is not run_path or not parts:
-                # the last run's trailing whitespace goes where this run puts it
-                pending = parts.pop() if parts else None
-                if parts:
-                    writer.append_text("".join(parts))
-                    parts = []
-                writer.start_run(plan, pending)
-                run_path = plan.required
-            parts += (token.text, " " if token.whitespace is None else token.whitespace)
-        if parts:
-            # whitespace before a line break stays where we are, except an unset
-            # one (the reference has no space token there) or after the last line
-            if line_index == last_line or line[-1].whitespace is None:
-                parts.pop()
-            writer.append_text("".join(parts))
+        if not marked or not (any(tags[a:b]) or any(sub_tags[a:b]) or any(preserved_tags[a:b])):
+            # a line with no tag at all is one run: its unbroken slice of the
+            # extracted text (TokenizedDoc.keep() leaves only tagged lines)
+            writer.start_run(plan_for((None, None)), None)
+            parts += (doc.extracted_text[doc.starts[a] : doc.ends[b - 1]], whitespace[b - 1] or "")
+        else:
+            run_path: Optional[Path] = None
+            for i in range(a, b):
+                plan = plan_for((tags[i] or preserved_tags[i], sub_tags[i]))
+                if plan.joins is not run_path or not parts:
+                    # the last run's trailing whitespace goes where this run puts it
+                    pending = parts.pop() if parts else None
+                    if parts:
+                        writer.append_text("".join(parts))
+                        parts = []
+                    writer.start_run(plan, pending)
+                    run_path = plan.required
+                ws = whitespace[i]
+                parts += (texts[i], " " if ws is None else ws)
+        # whitespace before a line break stays where we are, except an unset
+        # one (the reference has no space token there) or after the last line
+        if line_index == last_line or whitespace[b - 1] is None:
+            parts.pop()
+        writer.append_text("".join(parts))
     return container
 
 

@@ -147,8 +147,8 @@ def annotate_document_row(
     return {
         "url": url,
         "extracted_text": doc.extracted_text,
-        "n_lines": len(doc.lines),
-        "n_tokens": sum(len(line) for line in doc.lines),
+        "n_lines": len(doc.line_starts) - 1,
+        "n_tokens": len(doc.texts),
         "spans": spans,
         "sub_spans": sub_spans,
         "alignment_attempts": len(target_fields),

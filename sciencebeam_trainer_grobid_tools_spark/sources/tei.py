@@ -12,8 +12,8 @@ Port of the reference's TEI structured-document load path
 - an element is tag-bearing when it has direct text or its path is one of the
   configured TEI paths (``root_paths = mapping.values()``);
 - preserved-tag step: path tags are reverse-mapped to simple field names
-  (``docTitle/titlePart -> title``) and moved onto ``preserved_tag`` /
-  ``sub_tag`` with current tags cleared — matchers then see an untagged
+  (``docTitle/titlePart -> title``) and moved onto the ``preserved_tags`` /
+  ``sub_tags`` columns with current tags cleared — matchers then see an untagged
   document but post-processors and rendering can honor the original
   annotation.
 
@@ -27,7 +27,7 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 from typing import Dict, List, Optional, Set, Tuple, Union
 
-from ..kernel.doc import Token, TokenizedDoc, tokenize_text
+from ..kernel.doc import TokenizedDoc, tokenize_text
 from ..operators.annotate import B_PREFIX, I_PREFIX, add_tag_prefix, split_tag_prefix
 
 
@@ -129,13 +129,12 @@ def _extract_lines(
 
 
 def _fragments_to_doc(fragment_lines: List[List[_Fragment]]) -> TokenizedDoc:
-    lines: List[List[Token]] = []
-    parts: List[str] = []
-    pos = 0
-    n_lines = len(fragment_lines)
-    for line_index, fragments in enumerate(fragment_lines):
-        tokens: List[Token] = []
-        metas: List[_Fragment] = []
+    """Non-space fragments become tokens; each records the whitespace
+    fragment right after it, '' before another token, None at line end."""
+    lines: List[List[Tuple[str, Optional[str]]]] = []
+    metas: List[_Fragment] = []
+    for fragments in fragment_lines:
+        line: List[Tuple[str, Optional[str]]] = []
         for i, fragment in enumerate(fragments):
             if not fragment.text.strip():
                 continue
@@ -146,25 +145,13 @@ def _fragments_to_doc(fragment_lines: List[List[_Fragment]]) -> TokenizedDoc:
                 ws = nxt
             else:
                 ws = ""
-            tokens.append(Token(fragment.text, ws, 0, 0, line_index))
+            line.append((fragment.text, ws))
             metas.append(fragment)
-        for j, (token, meta) in enumerate(zip(tokens, metas)):
-            token.tag = meta.tag
-            token.sub_tag = meta.sub_tag
-            token.start = pos
-            token.end = pos + len(token.text)
-            pos = token.end
-            if j + 1 < len(tokens):
-                emit_ws = token.effective_whitespace()
-                parts.append(token.text + emit_ws)
-                pos += len(emit_ws)
-            else:
-                parts.append(token.text)
-        lines.append(tokens)
-        if line_index + 1 < n_lines:
-            parts.append("\n")
-            pos += 1
-    return TokenizedDoc(lines, "".join(parts))
+        lines.append(line)
+    doc = TokenizedDoc.from_lines(lines)
+    doc.tags = [meta.tag for meta in metas]
+    doc.sub_tags = [meta.sub_tag for meta in metas]
+    return doc
 
 
 def load_tei_doc(
@@ -184,17 +171,18 @@ def load_tei_doc(
         _extract_lines(container, writer, [], root_paths)
     doc = _fragments_to_doc(writer.finish())
     reverse = {v: k for k, v in tag_to_tei_path_mapping.items()}
-    for token in doc.iter_tokens():
-        if preserve_tags:
-            prefix, value = split_tag_prefix(token.tag)
-            token.preserved_tag = add_tag_prefix(reverse.get(value, value), prefix)
-        token.tag = None
-        prefix, sub_value = split_tag_prefix(token.sub_tag)
-        token.sub_tag = (
-            add_tag_prefix(reverse.get(sub_value, sub_value), prefix)
-            if (preserve_tags and sub_value)
-            else None
-        )
+    if preserve_tags:
+        doc.preserved_tags = [
+            add_tag_prefix(reverse.get(value, value), prefix)
+            for prefix, value in map(split_tag_prefix, doc.tags)
+        ]
+    doc.tags = [None] * len(doc.tags)
+    doc.sub_tags = [
+        add_tag_prefix(reverse.get(sub_value, sub_value), prefix)
+        if (preserve_tags and sub_value)
+        else None
+        for prefix, sub_value in map(split_tag_prefix, doc.sub_tags)
+    ]
     return doc
 
 
@@ -219,19 +207,21 @@ def apply_preserve_policy(
     """
     exclude_fields = set(fields or ()) - set(preserve_fields or ())
     keep_main = bool(preserve_tags or preserve_fields)
-    for token in doc.iter_tokens():
-        if token.preserved_tag is not None:
-            _, value = split_tag_prefix(token.preserved_tag)
+    preserved_tags, sub_tags = doc.preserved_tags, doc.sub_tags
+    for i, preserved_tag in enumerate(preserved_tags):
+        if preserved_tag is not None:
+            _, value = split_tag_prefix(preserved_tag)
             if not keep_main:
-                token.preserved_tag = None
+                preserved_tags[i] = None
             elif exclude_fields and value in exclude_fields:
-                token.preserved_tag = None
+                preserved_tags[i] = None
             elif preserve_fields and value not in preserve_fields:
-                token.preserved_tag = None
-        if token.sub_tag is not None:
-            _, sub_value = split_tag_prefix(token.sub_tag)
+                preserved_tags[i] = None
+    for i, sub_tag in enumerate(sub_tags):
+        if sub_tag is not None:
+            _, sub_value = split_tag_prefix(sub_tag)
             if not preserve_sub_tags:
-                token.sub_tag = None
+                sub_tags[i] = None
             elif no_preserve_sub_fields and sub_value in no_preserve_sub_fields:
-                token.sub_tag = None
+                sub_tags[i] = None
     return doc

@@ -1,7 +1,7 @@
 import re
 from typing import List, Optional
 
-from sciencebeam_trainer_grobid_tools_spark.kernel.doc import Token, TokenizedDoc
+from sciencebeam_trainer_grobid_tools_spark.kernel.doc import TokenizedDoc
 
 
 def tokens_for_text(text: str) -> List[str]:
@@ -14,44 +14,20 @@ def doc_for_token_lines(token_lines: List[List[str]]) -> TokenizedDoc:
     """Build a TokenizedDoc from explicit token texts per line, with
     unset whitespace (None -> single space in joins), mirroring the
     reference's SimpleToken-based test documents."""
-    lines: List[List[Token]] = []
-    parts: List[str] = []
-    pos = 0
-    for line_index, token_texts in enumerate(token_lines):
-        tokens: List[Token] = []
-        for j, text in enumerate(token_texts):
-            ws: Optional[str] = None
-            token = Token(text, ws, pos, pos + len(text), line_index)
-            tokens.append(token)
-            parts.append(text)
-            pos += len(text)
-            if j + 1 < len(token_texts):
-                parts.append(" ")
-                pos += 1
-        lines.append(tokens)
-        if line_index + 1 < len(token_lines):
-            parts.append("\n")
-            pos += 1
-    return TokenizedDoc(lines, "".join(parts))
+    return TokenizedDoc.from_lines([[(text, None) for text in line] for line in token_lines])
 
 
 def doc_for_texts(texts: List[str]) -> TokenizedDoc:
     return doc_for_token_lines([tokens_for_text(t) for t in texts])
 
 
-def tag_values(doc_or_tokens) -> List[Optional[str]]:
+def tag_values(doc: TokenizedDoc) -> List[Optional[str]]:
     from sciencebeam_trainer_grobid_tools_spark.operators.annotate import strip_tag_prefix
 
-    tokens = doc_or_tokens
-    if isinstance(doc_or_tokens, TokenizedDoc):
-        tokens = list(doc_or_tokens.iter_tokens())
-    return [strip_tag_prefix(t.tag) for t in tokens]
+    return [strip_tag_prefix(tag) for tag in doc.tags]
 
 
-def sub_tag_values(doc_or_tokens) -> List[Optional[str]]:
+def sub_tag_values(doc: TokenizedDoc) -> List[Optional[str]]:
     from sciencebeam_trainer_grobid_tools_spark.operators.annotate import strip_tag_prefix
 
-    tokens = doc_or_tokens
-    if isinstance(doc_or_tokens, TokenizedDoc):
-        tokens = list(doc_or_tokens.iter_tokens())
-    return [strip_tag_prefix(t.sub_tag) for t in tokens]
+    return [strip_tag_prefix(tag) for tag in doc.sub_tags]

@@ -312,8 +312,7 @@ class TestSimpleMatcher:
                 TargetAnnotation(["2", "University of Madness"], TAG1),
             ],
         )
-        tokens = list(doc.iter_tokens())
-        assert [t.tag for t in tokens] == [B_TAG1, I_TAG1, I_TAG1, B_TAG1, I_TAG1, I_TAG1]
+        assert doc.tags == [B_TAG1, I_TAG1, I_TAG1, B_TAG1, I_TAG1, I_TAG1]
 
     def test_abstract_section_heading(self):
         doc = doc_for_texts(["Abstract this is matching."])
@@ -493,13 +492,47 @@ class TestEntitySpans:
         assert text[by_field[TAG2]["start"] : by_field[TAG2]["end"]] == "by john smith"
 
 
+def _oracle_spans(texts_starts_ends, tags, extracted_text):
+    """The per-token walk: a new entity starts at a b- prefix, a value
+    change or after an untagged token (annotation/checks.py:56-76)."""
+    spans, current, current_value = [], None, None
+    for (_, start, end), tag in zip(texts_starts_ends, tags):
+        prefix, value = (tag[:2], tag[2:]) if tag and tag[:2] in ("b-", "i-") else (None, tag)
+        if not value:
+            current = current_value = None
+        elif current is not None and value == current_value and prefix != "b-":
+            current["end"] = end
+        else:
+            current, current_value = {"field": value, "start": start, "end": end}, value
+            spans.append(current)
+    for span in spans:
+        span["text"] = extracted_text[span["start"] : span["end"]]
+    return spans
+
+
+_SPAN_TAGS = st.sampled_from([None, "", "b-", "b-x", "i-x", "x", "b-y", "i-y", "y"])
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_SPAN_TAGS, max_size=12), st.lists(_SPAN_TAGS, max_size=12))
+def test_spans_match_per_token_walk(tags, sub_tags):
+    doc = tokenize_lines(["a bb c", "dd e f", "g hh i", "j k ll"])
+    n = len(doc.texts)
+    doc.tags = (tags + [None] * n)[:n]
+    doc.sub_tags = (sub_tags + [None] * n)[:n]
+    columns = list(zip(doc.texts, doc.starts, doc.ends))
+    assert extract_entity_spans(doc) == _oracle_spans(columns, doc.tags, doc.extracted_text)
+    assert extract_sub_entity_spans(doc) == _oracle_spans(
+        columns, doc.sub_tags, doc.extracted_text
+    )
+
+
 def _annotate_lines(lines, targets, pretag=(), **config):
     """Tokenize ``lines``, pre-tag ``(token index, tag)`` pairs, run the
     matcher and return (spans, sub_spans, tei_xml)."""
     doc = tokenize_lines(lines)
-    tokens = list(doc.iter_tokens())
     for index, tag in pretag:
-        tokens[index].tag = tag
+        doc.tags[index] = tag
     SimpleMatcher(targets, MatcherConfig(**config)).annotate(doc)
     mapping = dict(HEADER_TAG_TO_TEI_PATH_MAPPING)
     for target in targets:

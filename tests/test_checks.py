@@ -10,7 +10,7 @@ def tagged_doc(lines, tags_per_line):
     doc = doc_for_texts(lines)
     for line, tags in zip(doc.lines, tags_per_line):
         for token, tag in zip(line, tags):
-            token.tag = tag
+            doc.tags[token] = tag
     return doc
 
 
@@ -90,8 +90,7 @@ def test_implicitly_selects_required_fields():
     from tests.conftest import doc_for_token_lines
 
     doc = doc_for_token_lines([["other"]])
-    for token in doc.iter_tokens():
-        token.tag = "b-tag1"
+    doc.tags = ["b-tag1"] * len(doc.tags)
     passed, reason = check_document(
         doc,
         [TargetAnnotation("value1", "other")],

@@ -2,15 +2,19 @@
 tokenizer round-trip invariants, and the matcher view's pending text against a
 naive oracle."""
 
+import re
+import sys
+
 from hypothesis import given, settings, strategies as st
 
 from sciencebeam_trainer_grobid_tools_spark.kernel.doc import (
-    Token,
     TokenizedDoc,
     join_with_index_ranges,
+    split_camel_case,
     tokenize_lines,
     tokenize_text,
 )
+from sciencebeam_trainer_grobid_tools_spark.operators.extract import text_to_lines
 from sciencebeam_trainer_grobid_tools_spark.kernel.normalize import normalise_str
 from sciencebeam_trainer_grobid_tools_spark.operators.annotate import MatcherView
 
@@ -20,7 +24,7 @@ from tests.conftest import doc_for_token_lines
 def pending_token_texts(doc, index_range):
     view = MatcherView(doc)
     text = view.pending()
-    return [view.tokens[i].text for i in text.token_indices_between(index_range)]
+    return [doc.texts[i] for i in text.token_indices_between(index_range)]
 
 
 class TestJoinWithIndexRanges:
@@ -45,8 +49,7 @@ class TestTokenRun:
         assert MatcherView(doc).pending().text == "token1 token2"
 
     def test_joined_respects_recorded_whitespace(self):
-        doc = doc_for_token_lines([["token1", "token2"]])
-        doc.lines[0][0].whitespace = ""
+        doc = TokenizedDoc.from_lines([[("token1", ""), ("token2", None)]])
         assert MatcherView(doc).pending().text == "token1token2"
 
     def test_tokens_between(self):
@@ -86,8 +89,123 @@ class TestTokenizer:
 
     def test_offsets_slice_extracted_text(self):
         doc = tokenize_lines(["Hello there", "second line"])
-        for token in doc.iter_tokens():
-            assert doc.extracted_text[token.start : token.end] == token.text
+        for text, start, end in zip(doc.texts, doc.starts, doc.ends):
+            assert doc.extracted_text[start:end] == text
+
+
+    def test_unicode_camel_case_is_split(self):
+        assert tokenize_text("caf\u00e9Time") == ["caf\u00e9", "Time"]
+        assert tokenize_text("abc\u0394x") == ["abc", "\u0394x"]
+        assert tokenize_text("ab\u03b4\u0394x") == ["ab\u03b4", "\u0394x"]
+        assert tokenize_lines(["caf\u00e9Time x"]).texts == ["caf\u00e9", "Time", "x"]
+
+
+_CAMEL_CHARS = "aZb\u00e9\u00c9\u03b4\u0394\u01c5\u00df1_"
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.text(alphabet=_CAMEL_CHARS, min_size=1, max_size=8))
+def test_camel_split_matches_reference_rule_on_unicode_words(word):
+    """The reference splits every word fragment with ``split_camel_case``
+    (grobid_training_tei.py:224-231), ASCII or not."""
+    assert tokenize_text(word) == split_camel_case(word)
+    assert tokenize_lines([word]).texts == split_camel_case(word)
+
+
+def test_regex_whitespace_class_is_str_isspace():
+    """The tokenizer's ``\\s`` stands for the ``isspace`` test of the
+    ``(\\W)`` split: they agree on every code point."""
+    space = re.compile(r"\s")
+    for code in range(sys.maxunicode + 1):
+        c = chr(code)
+        assert bool(space.fullmatch(c)) == c.isspace(), hex(code)
+
+
+
+def test_upper_case_character_makes_str_islower_false():
+    """The camelCase split passes over a token whose tail ``islower()``: no
+    upper-case character can hide in a string that is lower case."""
+    for code in range(sys.maxunicode + 1):
+        c = chr(code)
+        if c.isupper():
+            assert not ("a" + c).islower(), hex(code)
+            assert not ("a" + c + "b").islower(), hex(code)
+
+_ORACLE_ASCII_CAMEL = re.compile(r"[a-z][A-Z]")
+
+
+def _oracle_tokenize_text(text):
+    """The per-fragment tokenizer: (\\W) split, camelCase split of every
+    fragment with a lower->upper transition (any script)."""
+    out = []
+    for fragment in re.split(r"(\W)", text):
+        if not fragment:
+            continue
+        if len(fragment) > 1 and (not fragment.isascii() or _ORACLE_ASCII_CAMEL.search(fragment)):
+            out.extend(split_camel_case(fragment))
+        else:
+            out.append(fragment)
+    return out
+
+
+def _oracle_tokenize_lines(text_lines):
+    """The per-fragment token loop the columnar tokenizer replaced: each
+    non-space fragment records the fragment after it when that is
+    whitespace, '' before another token, None at line end; the extracted
+    text joins tokens with their whitespace (None -> ' '), a line's last
+    token contributing none."""
+    columns = {name: [] for name in ("texts", "whitespace", "starts", "ends")}
+    line_starts = [0]
+    out_parts = []
+    pos = 0
+    for line_index, raw_line in enumerate(text_lines):
+        fragments = _oracle_tokenize_text(raw_line)
+        last_ws = "no token"
+        for i, fragment in enumerate(fragments):
+            if fragment.isspace():
+                continue
+            nxt = fragments[i + 1] if i + 1 < len(fragments) else None
+            ws = None if nxt is None else (nxt if nxt.isspace() else "")
+            end = pos + len(fragment)
+            for name, value in zip(columns, (fragment, ws, pos, end)):
+                columns[name].append(value)
+            emit_ws = " " if ws is None else ws
+            out_parts.append(fragment + emit_ws)
+            pos = end + len(emit_ws)
+            last_ws = ws
+        if last_ws != "no token":
+            trailing = " " if last_ws is None else last_ws
+            if trailing:
+                out_parts[-1] = columns["texts"][-1]
+                pos -= len(trailing)
+        line_starts.append(len(columns["texts"]))
+        if line_index + 1 < len(text_lines):
+            out_parts.append("\n")
+            pos += 1
+    return columns, line_starts, "".join(out_parts)
+
+
+# pieces of text_to_lines input: words (ASCII and non-ASCII camel
+# transitions), separators, whitespace runs and line breaks
+_PIECES = st.sampled_from(
+    ["a", "b", "Z", "Ab", "aB", "caf\u00e9T", "\u03b4\u0394", "\u00c9x", "_", "7",
+     ".", ",", "-", "(", "\u2014", " ", " ", "  ", "\t", "\xa0", "\u2009", "\n"]
+)
+
+
+@settings(max_examples=1000, deadline=None)
+@given(st.lists(_PIECES, max_size=60).map("".join))
+def test_tokenize_lines_matches_per_fragment_oracle(text):
+    lines = text_to_lines(text)
+    doc = tokenize_lines(lines)
+    columns, line_starts, extracted_text = _oracle_tokenize_lines(lines)
+    for name, values in columns.items():
+        assert getattr(doc, name) == values, name
+    assert doc.line_starts == line_starts
+    assert doc.extracted_text == extracted_text
+    for i, text in enumerate(doc.texts):
+        assert doc.extracted_text[doc.starts[i] : doc.ends[i]] == text
+    assert doc.tags == doc.sub_tags == doc.preserved_tags == [None] * len(doc.texts)
 
 
 class TestRunsText:
@@ -174,16 +292,9 @@ def _check_pending(view, lines, first, limit):
     st.booleans(),
 )
 def test_pending_text_matches_naive_oracle(lines, first, limit, read_after_tagging):
-    doc = TokenizedDoc(
-        [
-            [Token(text, ws, 0, 0, line_index) for text, ws, _, _ in line]
-            for line_index, line in enumerate(lines)
-        ],
-        "",
-    )
+    doc = TokenizedDoc.from_lines([[(text, ws) for text, ws, _, _ in line] for line in lines])
     flags = [(pre, post) for line in lines for _, _, pre, post in line]
-    for token, (pre, _) in zip(doc.iter_tokens(), flags):
-        token.tag = "b-x" if pre else None
+    doc.tags = ["b-x" if pre else None for pre, _ in flags]
     view = MatcherView(doc)
     untagged = [[(text, ws, pre, False) for text, ws, pre, _ in line] for line in lines]
     _check_pending(view, untagged, first, limit)

@@ -29,8 +29,7 @@ class TestFlavors:
 
     def test_reference_flavor_sub_tags_only(self):
         doc = doc_for_texts(["1 Smith J Some Title 2001"])
-        for t in doc.iter_tokens():
-            t.tag = "i-reference" if t.start else "b-reference"
+        doc.tags = ["i-reference" if start else "b-reference" for start in doc.starts]
         reference_flavor()(
             doc,
             [
@@ -51,13 +50,12 @@ class TestFlavors:
 
     def test_fulltext_flavor_merges_list_items(self):
         doc = doc_for_texts(["item one gap item two"])
-        tokens = list(doc.iter_tokens())
-        tokens[0].tag = "b-list_item"
-        tokens[1].tag = "i-list_item"
-        tokens[3].tag = "b-list_item"
-        tokens[4].tag = "i-list_item"
+        doc.tags[0] = "b-list_item"
+        doc.tags[1] = "i-list_item"
+        doc.tags[3] = "b-list_item"
+        doc.tags[4] = "i-list_item"
         fulltext_flavor(MatcherConfig(extend_to_line_enabled=False))(doc, [])
-        assert tokens[2].tag == "i-list"
+        assert doc.tags[2] == "i-list"
 
 
 class TestSegmentationFlavorRichDocument:
@@ -86,7 +84,7 @@ class TestSegmentationFlavorRichDocument:
                 TargetAnnotation("1. Maison M. A reference title. 2020.", "reference"),
             ],
         )
-        line_classes = [line[0].tag for line in doc.lines]
+        line_classes = [doc.tags[line[0]] for line in doc.lines]
         assert line_classes == [
             "headnote",
             "page",   # '11' inferred: all-digit line fitting before anchor '12'

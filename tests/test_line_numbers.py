@@ -16,7 +16,7 @@ def numbered_lines(n, start=1, suffix=None):
 
 
 def line_no_flags(doc):
-    return [[t.tag == "line_no" for t in line] for line in doc.lines]
+    return [[doc.tags[i] == "line_no" for i in line] for line in doc.lines]
 
 
 class TestLineNumbers:

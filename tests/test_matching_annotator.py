@@ -99,8 +99,7 @@ class TestMatchingAnnotator:
             [TargetAnnotation("this is matching", "tag1")],
             use_tag_begin_prefix=True,
         )
-        tokens = list(doc.iter_tokens())
-        assert [t.tag for t in tokens] == ["b-tag1", "i-tag1", "i-tag1"]
+        assert doc.tags == ["b-tag1", "i-tag1", "i-tag1"]
 
     def test_sub_annotations(self):
         doc = doc_for_texts(["1 this is reference alpha"])

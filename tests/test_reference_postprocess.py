@@ -111,12 +111,10 @@ class TestReferencePostProcessor:
         doc = doc_for_token_lines(
             [["1", "Smith", ",", "J", ".", "DOI", ":", "12345"]]
         )
-        tokens = list(doc.iter_tokens())
-        for token in tokens:
-            token.tag = "i-reference" if token is not tokens[0] else "b-reference"
-        tokens[1].sub_tag = "b-reference-author"
-        tokens[3].sub_tag = "i-reference-author"
-        tokens[7].sub_tag = "b-reference-doi"
+        doc.tags = ["b-reference"] + ["i-reference"] * (len(doc.tags) - 1)
+        doc.sub_tags[1] = "b-reference-author"
+        doc.sub_tags[3] = "i-reference-author"
+        doc.sub_tags[7] = "b-reference-doi"
         from sciencebeam_trainer_grobid_tools_spark.operators.reference import (
             IDNO_PREFIX_REGEX_MAP,
             default_reference_annotator_config,
@@ -126,7 +124,7 @@ class TestReferencePostProcessor:
         # idno prefix absorption is opt-in (reference CLI flag)
         config.include_prefix_enabled_sub_tags = set(IDNO_PREFIX_REGEX_MAP.keys())
         ReferencePostProcessor(config).annotate(doc)
-        sub_tags = [t.sub_tag for t in tokens]
+        sub_tags = doc.sub_tags
         # ',' between author tokens merged; '.' suffix absorbed;
         # 'DOI :' prefix absorbed into the idno span
         assert sub_tags[1:5] == [
@@ -141,47 +139,41 @@ class TestReferencePostProcessor:
 class TestPostProcessors:
     def test_expand_to_previous_untagged(self):
         doc = doc_for_token_lines([["a", "b", "c"]])
-        tokens = list(doc.iter_tokens())
-        tokens[2].tag = "b-title"
+        doc.tags[2] = "b-title"
         expand_to_previous_untagged_tokens(doc, {"title"})
-        assert [t.tag for t in tokens] == ["b-title", "i-title", "i-title"]
+        assert doc.tags == ["b-title", "i-title", "i-title"]
 
     def test_expand_to_previous_disabled_tag(self):
         doc = doc_for_token_lines([["a", "b", "c"]])
-        tokens = list(doc.iter_tokens())
-        tokens[2].tag = "b-other"
+        doc.tags[2] = "b-other"
         expand_to_previous_untagged_tokens(doc, {"title"})
-        assert [t.tag for t in tokens] == [None, None, "b-other"]
+        assert doc.tags == [None, None, "b-other"]
 
     def test_expand_to_following_untagged(self):
         doc = doc_for_token_lines([["a", "b", "c"]])
-        tokens = list(doc.iter_tokens())
-        tokens[0].tag = "b-title"
+        doc.tags[0] = "b-title"
         expand_to_following_untagged_tokens(doc, {"title"})
-        assert [t.tag for t in tokens] == ["b-title", "i-title", "i-title"]
+        assert doc.tags == ["b-title", "i-title", "i-title"]
 
     def test_merge_group_tags(self):
         doc = doc_for_token_lines([["item", "gap", "item"]])
-        tokens = list(doc.iter_tokens())
-        tokens[0].tag = "b-list_item"
-        tokens[2].tag = "b-list_item"
+        doc.tags[0] = "b-list_item"
+        doc.tags[2] = "b-list_item"
         merge_group_tags(doc, {"list_item": "list"}.get)
-        assert tokens[1].tag == "i-list"
+        assert doc.tags[1] == "i-list"
 
     def test_replace_tags_preserves_prefix(self):
         doc = doc_for_token_lines([["a", "b"]])
-        tokens = list(doc.iter_tokens())
-        tokens[0].tag = "b-note_other"
-        tokens[1].tag = "i-note_other"
+        doc.tags[0] = "b-note_other"
+        doc.tags[1] = "i-note_other"
         replace_tags(doc, {"note_other": "other"})
-        assert [t.tag for t in tokens] == ["b-other", "i-other"]
+        assert doc.tags == ["b-other", "i-other"]
 
     def test_remove_untagged(self):
         doc = doc_for_token_lines([["a", "b"], ["c", "d"]])
-        tokens = list(doc.iter_tokens())
-        tokens[0].tag = "b-title"
+        doc.tags[0] = "b-title"
         remove_untagged_tokens(doc)
-        remaining = [t.text for t in doc.iter_tokens()]
+        remaining = doc.texts
         assert remaining == ["a"]
         assert len(doc.lines) == 1
 
@@ -192,11 +184,9 @@ class TestMergeGroupTagsSubLevel:
         # (auto_annotate_affiliation_address.py:107-118) — untagged sub-gaps
         # between address sub-fields of a tagged affiliation get the group tag
         doc = doc_for_token_lines([["City", ",", "Country"]])
-        tokens = list(doc.iter_tokens())
-        for t in tokens:
-            t.tag = "i-author_aff"
-        tokens[0].sub_tag = "b-author_aff-address-city"
-        tokens[2].sub_tag = "b-author_aff-address-country"
+        doc.tags = ["i-author_aff"] * len(doc.tags)
+        doc.sub_tags[0] = "b-author_aff-address-city"
+        doc.sub_tags[2] = "b-author_aff-address-country"
         merge_group_tags(
             doc,
             {
@@ -205,17 +195,16 @@ class TestMergeGroupTagsSubLevel:
             }.get,
             sub_level=True,
         )
-        assert tokens[1].sub_tag == "i-author_aff-address"
+        assert doc.sub_tags[1] == "i-author_aff-address"
 
     def test_sub_level_ignores_untagged_main_tokens(self):
         doc = doc_for_token_lines([["City", "outside", "Country"]])
-        tokens = list(doc.iter_tokens())
-        tokens[0].tag = "i-author_aff"
-        tokens[2].tag = "i-author_aff"
-        tokens[0].sub_tag = "b-author_aff-address-city"
-        tokens[2].sub_tag = "b-author_aff-address-country"
+        doc.tags[0] = "i-author_aff"
+        doc.tags[2] = "i-author_aff"
+        doc.sub_tags[0] = "b-author_aff-address-city"
+        doc.sub_tags[2] = "b-author_aff-address-country"
         merge_group_tags(
             doc, {"author_aff-address-city": "author_aff-address"}.get, sub_level=True
         )
         # token without a main tag is skipped entirely at sub level
-        assert tokens[1].sub_tag is None
+        assert doc.sub_tags[1] is None

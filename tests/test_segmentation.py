@@ -34,12 +34,12 @@ def build_doc(lines: List[List[Tuple[Optional[str], str]]]):
     doc = doc_for_token_lines([[token for _, token in line] for line in lines])
     for line, doc_line in zip(lines, doc.lines):
         for (tag, _), token in zip(line, doc_line):
-            token.tag = tag
+            doc.tags[token] = tag
     return doc
 
 
 def tagged_lines(doc) -> List[List[Tuple[Optional[str], str]]]:
-    return [[(t.tag, t.text) for t in line] for line in doc.lines]
+    return [[(doc.tags[i], doc.texts[i]) for i in line] for line in doc.lines]
 
 
 class TestPageHeaderCandidate:
@@ -284,9 +284,8 @@ class TestSegmentationAnnotator:
                 [("section_title", "token2")],
             ]
         )
-        all_tokens = list(doc.iter_tokens())
-        all_tokens[0].preserved_tag = "page"
-        all_tokens[2].preserved_tag = "page"
+        doc.preserved_tags[0] = "page"
+        doc.preserved_tags[2] = "page"
         SegmentationAnnotator(CONFIG, preserve_tags=True).annotate(doc)
         assert tagged_lines(doc) == [
             [("page", "1")],

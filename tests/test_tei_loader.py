@@ -40,25 +40,23 @@ class TestLoadTeiDoc:
             "</front></text></tei>"
         )
         doc = load_tei_doc(tei, HEADER_MAPPING)
-        tokens = list(doc.iter_tokens())
-        assert [t.preserved_tag for t in tokens] == [
+        assert doc.preserved_tags == [
             "b-title",
             "i-title",
             "b-author",
             "i-author",
         ]
-        assert all(t.tag is None for t in tokens)
+        assert all(tag is None for tag in doc.tags)
 
     def test_unmapped_tagged_element_keeps_path_tag(self):
         tei = "<tei><text><front><note>some note</note></front></text></tei>"
         doc = load_tei_doc(tei, HEADER_MAPPING)
-        tokens = list(doc.iter_tokens())
-        assert tokens[0].preserved_tag == "b-note"
+        assert doc.preserved_tags[0] == "b-note"
 
     def test_no_preserve_clears_everything(self):
         tei = "<tei><text><front><docTitle><titlePart>T x</titlePart></docTitle></front></text></tei>"
         doc = load_tei_doc(tei, HEADER_MAPPING, preserve_tags=False)
-        assert all(t.preserved_tag is None and t.tag is None for t in doc.iter_tokens())
+        assert all(tag is None for tag in doc.preserved_tags + doc.tags)
 
 
 class TestAffiliationFlavorGolden:
@@ -132,9 +130,9 @@ class TestApplyPreservePolicy:
         )
 
         return {
-            strip_tag_prefix(t.preserved_tag)
-            for t in doc.iter_tokens()
-            if t.preserved_tag
+            strip_tag_prefix(tag)
+            for tag in doc.preserved_tags
+            if tag
         }
 
     @staticmethod
@@ -144,7 +142,7 @@ class TestApplyPreservePolicy:
         )
 
         return {
-            strip_tag_prefix(t.sub_tag) for t in doc.iter_tokens() if t.sub_tag
+            strip_tag_prefix(tag) for tag in doc.sub_tags if tag
         }
 
     def test_should_not_preserve_tags(self):

@@ -5,6 +5,7 @@ import re
 import xml.etree.ElementTree as ET
 from itertools import zip_longest
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from sciencebeam_trainer_grobid_tools_spark.operators.annotate import (
@@ -135,14 +136,13 @@ class TestLinesToTeiShapes:
         doc = tokenize_lines([" ".join(t for t in line if t) for line in token_lines])
         prev_tag = None
         flat_tags = [tag for line in tags for tag in line]
-        tokens = list(doc.iter_tokens())
-        assert len(tokens) == len(flat_tags), (tokens, flat_tags)
-        for token, tag in zip(tokens, flat_tags):
+        assert len(doc.texts) == len(flat_tags), (doc.texts, flat_tags)
+        for i, tag in enumerate(flat_tags):
             if tag is None:
-                token.tag = None
+                doc.tags[i] = None
             else:
                 prefix = I_PREFIX if tag == prev_tag else B_PREFIX
-                token.tag = add_tag_prefix(tag, prefix)
+                doc.tags[i] = add_tag_prefix(tag, prefix)
             prev_tag = tag
         container = ET.Element("front")
         render_tagged_lines(container, doc, mapping or {})
@@ -214,13 +214,11 @@ class TestLinesToTeiShapes:
             render_tagged_lines,
         )
 
-        from tests.conftest import doc_for_token_lines
+        from sciencebeam_trainer_grobid_tools_spark.kernel.doc import TokenizedDoc
 
-        doc = doc_for_token_lines([["token1", "token2"]])
-        tokens = list(doc.iter_tokens())
-        tokens[0].tag = add_tag_prefix("tag1", B_PREFIX)
-        tokens[0].whitespace = ""
-        tokens[1].tag = add_tag_prefix("tag2", B_PREFIX)
+        doc = TokenizedDoc.from_lines([[("token1", ""), ("token2", None)]])
+        doc.tags[0] = add_tag_prefix("tag1", B_PREFIX)
+        doc.tags[1] = add_tag_prefix("tag2", B_PREFIX)
         front = ET.Element("front")
         render_tagged_lines(
             front, doc, {"tag1": "parent/child1", "tag2": "parent/child2"}
@@ -262,11 +260,8 @@ class TestSubTagQuirks:
         from tests.conftest import doc_for_token_lines
 
         doc = doc_for_token_lines([["by", "Mary", "Maison", "Smith"]])
-        tokens = list(doc.iter_tokens())
-        tokens[1].tag = "b-author"
-        tokens[2].tag = "i-author"
-        tokens[2].sub_tag = "b-surname"
-        tokens[3].tag = "i-author"
+        doc.tags[1:] = ["b-author", "i-author", "i-author"]
+        doc.sub_tags[2] = "b-surname"
         front = ET.Element("front")
         render_tagged_lines(front, doc, {
             "author": "byline/docAuthor",
@@ -278,6 +273,57 @@ class TestSubTagQuirks:
             "<byline> <docAuthor>Mary</docAuthor></byline>"
             " <byline><docAuthor>Maison Smith</docAuthor></byline></front>"
         )
+
+
+class TestWholeLineRuns:
+    """Lines with no main, sub or preserved tag render as one run (their
+    slice of the extracted text); expected XML recorded on the per-token
+    writer."""
+
+    CASES = {
+        "untagged_line_after_tagged_run": (
+            ["The Title here", "plain body text"],
+            {0: ("b-title", None, None), 1: ("i-title", None, None), 2: ("i-title", None, None)},
+            '<docTitle><titlePart>The Title here<lb /></titlePart></docTitle>'
+            '<note type="other">plain body text</note>',
+            "<title>The Title here<lb /></title>plain body text",
+        ),
+        "recorded_trailing_whitespace_stays_before_lb": (
+            ["plain text\t", "more\xa0", "The Title"],
+            {3: ("b-title", None, None), 4: ("i-title", None, None)},
+            '<note type="other">plain text\t<lb />more\xa0<lb /></note>'
+            "<docTitle><titlePart>The Title</titlePart></docTitle>",
+            "plain text\t<lb />more\xa0<lb /><title>The Title</title>",
+        ),
+        "untagged_last_line": (
+            ["The Title", "last line  "],
+            {0: ("b-title", None, None), 1: ("i-title", None, None)},
+            '<docTitle><titlePart>The Title<lb /></titlePart></docTitle>'
+            '<note type="other">last line</note>',
+            "<title>The Title<lb /></title>last line",
+        ),
+        "line_with_only_preserved_or_sub_tag": (
+            ["a b c ", "d e f", "g h"],
+            {1: (None, None, "b-author"), 4: (None, "b-title", None)},
+            '<note type="other">a</note><byline> <docAuthor>b</docAuthor></byline> '
+            '<note type="other">c <lb />d</note> <note type="other">e f<lb />g h</note>',
+            "a <author>b</author> c <lb />d <title>e</title> f<lb />g h",
+        ),
+    }
+
+    @pytest.mark.parametrize("name", sorted(CASES))
+    @pytest.mark.parametrize("with_mapping", [True, False])
+    def test_matches_recorded_xml(self, name, with_mapping):
+        from sciencebeam_trainer_grobid_tools_spark.kernel.doc import tokenize_lines
+
+        lines, marks, expected_mapped, expected_plain = self.CASES[name]
+        doc = tokenize_lines(lines)
+        for i, (tag, sub_tag, preserved) in marks.items():
+            doc.tags[i], doc.sub_tags[i], doc.preserved_tags[i] = tag, sub_tag, preserved
+        mapping = HEADER_TAG_TO_TEI_PATH_MAPPING if with_mapping else {}
+        expected = expected_mapped if with_mapping else expected_plain
+        expected_xml = "<tei><text><front>%s</front></text></tei>" % expected
+        assert render_tei_xml(doc, mapping) == expected_xml
 
 
 # --- property test against the per-token writer --------------------------
@@ -354,9 +400,9 @@ def _oracle_render(container, doc, mapping):
                 writer.append_text(pending)
                 pending = None
             writer.stack[-1].append(ET.Element("lb"))
-        for token_index, token in enumerate(line):
-            sub_full = token.sub_tag
-            main_prefix, main_tag = split_tag_prefix(token.tag or token.preserved_tag)
+        for token_index, i in enumerate(line):
+            sub_full = doc.sub_tags[i]
+            main_prefix, main_tag = split_tag_prefix(doc.tags[i] or doc.preserved_tags[i])
             sub_prefix, sub_tag = split_tag_prefix(sub_full)
             main_path = _oracle_required_path(main_tag, mapping)
             sub_path = _oracle_required_path(sub_tag, mapping) if sub_full else []
@@ -373,9 +419,9 @@ def _oracle_render(container, doc, mapping):
                 writer.append_text(pending)
                 pending = None
             writer.require_path(required)
-            writer.append_text(token.text)
-            if token.whitespace is not None:
-                pending = token.whitespace or None
+            writer.append_text(doc.texts[i])
+            if doc.whitespace[i] is not None:
+                pending = doc.whitespace[i] or None
             else:
                 pending = " " if token_index < len(line) - 1 else None
     return container
@@ -434,14 +480,11 @@ _TOKENS = st.tuples(
     mapping=st.sampled_from(_MAPPINGS),
 )
 def test_render_matches_per_token_oracle(lines, mapping):
-    from tests.conftest import doc_for_token_lines
+    from sciencebeam_trainer_grobid_tools_spark.kernel.doc import TokenizedDoc
 
-    doc = doc_for_token_lines([[t[0] for t in line] for line in lines])
-    for token, (_, whitespace, tag, sub_tag, preserved) in zip(
-        doc.iter_tokens(), (t for line in lines for t in line)
-    ):
-        token.whitespace = whitespace
-        token.tag = tag
-        token.sub_tag = sub_tag
-        token.preserved_tag = preserved
+    doc = TokenizedDoc.from_lines([[t[:2] for t in line] for line in lines])
+    flat = [t for line in lines for t in line]
+    doc.tags = [t[2] for t in flat]
+    doc.sub_tags = [t[3] for t in flat]
+    doc.preserved_tags = [t[4] for t in flat]
     assert render_tei_xml(doc, mapping) == _oracle_tei_xml(doc, mapping)
