@@ -26,6 +26,8 @@ from typing import List, Tuple
 
 import numpy as np
 
+from .native import native_match_blocks
+
 MATCH_SCORE = 2
 MISMATCH_SCORE = -1
 GAP_SCORE = -2
@@ -39,6 +41,7 @@ MatchingBlocks = List[MatchingBlock]
 
 # Memory guard for the stored DP matrix (int32 cells). 64M cells = 256 MB.
 # The windowed search (fuzzy.auto_window) keeps real inputs far below this.
+# It also keeps min(n, m) <= 8000, inside the native kernel's int16 scores.
 MAX_DP_CELLS = 64_000_000
 
 
@@ -143,45 +146,29 @@ def local_matching_blocks(haystack: str, needle: str) -> MatchingBlocks:
     # as one block.  str.find performs the same code-point comparison at C
     # speed, skipping the O(n*m) DP.  Guarded to the exact-DP regime so the
     # MAX_DP_CELLS needle-truncation behavior is unchanged.
-    if needle and len(haystack) * len(needle) <= MAX_DP_CELLS:
-        idx = haystack.find(needle)
+    n = len(haystack)
+    m = len(needle)
+    if n * m <= MAX_DP_CELLS:
+        m_dp = m
+        idx = haystack.find(needle) if needle else -1
         if idx >= 0:
-            return [
-                (idx, 0, len(needle)),
-                (len(haystack), len(needle), 0),
-            ]
-    a_codes = np.frombuffer(haystack.encode("utf-32-le"), dtype=np.uint32)
-    b_codes = np.frombuffer(needle.encode("utf-32-le"), dtype=np.uint32)
-    if a_codes.shape[0] * b_codes.shape[0] > MAX_DP_CELLS:
+            return [(idx, 0, m), (n, m, 0)]
+    else:
         # Guard: bound memory by truncating the needle for the DP; the windowed
         # driver (kernel.fuzzy) never reaches this for realistic inputs.
-        b_codes = b_codes[: max(1, MAX_DP_CELLS // max(1, a_codes.shape[0]))]
-    # prefer the compiled kernel (kernel/native.py) — same contract as the
-    # reference's pinned C alignment kernel; numpy path is the fallback
-    from .native import (
-        native_match_blocks,
-        native_sw_matrix_and_best,
-        native_traceback16,
-    )
-
-    fused = native_match_blocks(a_codes, b_codes)
-    if fused is not None:
-        fused.append((len(haystack), len(needle), 0))
-        return fused
-
-    native_result = native_sw_matrix_and_best(a_codes, b_codes)
-    if native_result is not None:
-        h, (i, j, score) = native_result
-    else:
+        m_dp = max(1, MAX_DP_CELLS // n)
+    a_bytes = haystack.encode("utf-32-le")
+    b_bytes = needle.encode("utf-32-le")
+    # the compiled kernel (kernel/native.py) — same contract as the
+    # reference's pinned C alignment kernel; numpy path without a compiler
+    blocks = native_match_blocks(a_bytes, n, b_bytes, m_dp)
+    if blocks is None:
+        a_codes = np.frombuffer(a_bytes, dtype=np.uint32)
+        b_codes = np.frombuffer(b_bytes, dtype=np.uint32)[:m_dp]
         h = _smith_waterman_matrix(a_codes, b_codes)
         i, j, score = _pick_max_cell(h)
-    if score > 0:
-        blocks = native_traceback16(a_codes, b_codes, h, i, j)
-        if blocks is None:
-            blocks = _traceback_blocks(h, a_codes, b_codes, i, j)
-    else:
-        blocks = []
-    blocks.append((len(haystack), len(needle), 0))
+        blocks = _traceback_blocks(h, a_codes, b_codes, i, j) if score > 0 else []
+    blocks.append((n, m, 0))
     return blocks
 
 

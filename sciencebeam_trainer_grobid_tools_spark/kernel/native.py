@@ -1,12 +1,27 @@
-"""Optional C acceleration for the Smith-Waterman inner loop.
+"""C acceleration for the Smith-Waterman alignment DP.
 
 The reference pins a thin C alignment kernel (``sciencebeam-alignment``,
 requirements.txt:7) under python orchestration; this module mirrors that
-design: a ~30-line C function compiled once per machine with the system gcc
-(cached as a shared object), loaded via ctypes, releasing the GIL during the
-DP.  When no compiler is available (e.g. a locked-down executor image), the
-vectorized numpy path in ``align.py`` is used — identical results, ~5x
-slower on the DP.
+design: one fused C call (score matrix, best cell and traceback) compiled
+once per machine with the system gcc (cached as a shared object) and loaded
+via ctypes.  When no compiler is available (e.g. a locked-down executor
+image), the vectorized numpy DP in ``align.py`` is used — identical results,
+several times slower.
+
+- **Row kernel.** Each DP row is computed eight int16 cells at a time with
+  SSE2: the code-point comparison is two ``_mm_cmpeq_epi32`` narrowed by
+  ``_mm_packs_epi32``, and the in-row left-gap dependency is an in-register
+  prefix max (shift-sub-max by 1, 2 and 4 lanes, then the carry from the
+  previous eight cells).  The row maximum decides whether the row can hold
+  the best cell, so the per-cell best-cell branch is gone.  Scores, best
+  cell and traceback are exactly those of the scalar recurrence.
+- **Build.** Plain ``gcc -O3``: SSE2 is the x86-64 baseline, so the shared
+  object needs no ``-march`` and no CPU dispatch and runs on every executor.
+- **FFI.** The haystack and needle cross as the UTF-32-LE ``bytes`` the
+  caller already holds (``c_char_p`` passes the bytes object's own buffer,
+  no copy).  The scratch buffers are grow-only ctypes arrays whose
+  addresses are taken when they grow, not on every call, and the blocks
+  come back as one slice of the blocks buffer.
 
 The compile cache lives under the repo (``.native_cache/``, gitignored); at
 cluster scale the .so would be baked into the executor image or shipped as an
@@ -20,67 +35,98 @@ import hashlib
 import os
 import subprocess
 import tempfile
-from typing import Optional
-
-import numpy as np
+from typing import List, Optional, Tuple
 
 _C_SOURCE = r"""
 #include <stddef.h>
 #include <stdint.h>
-#include <stdlib.h>
 #include <emmintrin.h>
 
-/* Smith-Waterman score matrix: h is (m+1) x (n+1) int32 row-major,
-   row 0 / col 0 pre-zeroed.  Scoring: match +2, mismatch -1, gap -2. */
-void sw_matrix(const uint32_t* a, int n, const uint32_t* b, int m, int32_t* h) {
-    for (int j = 1; j <= m; j++) {
-        const int32_t* prev = h + (size_t)(j - 1) * (n + 1);
-        int32_t* cur = h + (size_t)j * (n + 1);
-        uint32_t bj = b[j - 1];
-        int32_t left = 0;
-        cur[0] = 0;
-        for (int i = 1; i <= n; i++) {
-            int32_t best = prev[i - 1] + (a[i - 1] == bj ? 2 : -1);
-            int32_t up = prev[i] - 2;
-            if (up > best) best = up;
-            int32_t lft = left - 2;
-            if (lft > best) best = lft;
-            if (best < 0) best = 0;
-            cur[i] = best;
-            left = best;
-        }
+/* One Smith-Waterman row (match +2, mismatch -1, gap -2), eight int16 cells
+   per step:
+     t[i]   = max(0, prev[i-1] + (a[i-1] == bj ? 2 : -1), prev[i] - 2)
+     cur[i] = max(t[i], cur[i-1] - 2),   cur[0] = 0.
+   The left-gap penalty is linear, so within eight lanes cur is the prefix
+   max of t[p] - 2(l-p): shift-sub-max by 1, 2 and 4 lanes, then
+   max(x, left - {2, 4, ..., 16}) carries the previous eight cells in.
+   The n mod 8 tail runs scalar.  Returns the row maximum.  Scores stay
+   within int16 while 2*min(n, m) does (native_match_blocks checks it). */
+static int16_t sw_row16(const uint32_t* a, int n, uint32_t bj,
+                        const int16_t* prev, int16_t* cur) {
+    const __m128i zero = _mm_setzero_si128();
+    const __m128i code = _mm_set1_epi32((int32_t)bj);
+    const __m128i three = _mm_set1_epi16(3);
+    const __m128i minus1 = _mm_set1_epi16(-1);
+    const __m128i gap1 = _mm_set1_epi16(2);
+    const __m128i gap2 = _mm_set1_epi16(4);
+    const __m128i gap4 = _mm_set1_epi16(8);
+    const __m128i carry_gaps = _mm_setr_epi16(2, 4, 6, 8, 10, 12, 14, 16);
+    __m128i row_max = zero;
+    int left = 0;
+    int i = 0;  /* this step computes cells i+1 .. i+8 */
+    cur[0] = 0;
+    for (; i + 8 <= n; i += 8) {
+        __m128i eq = _mm_packs_epi32(
+            _mm_cmpeq_epi32(_mm_loadu_si128((const __m128i*)(a + i)), code),
+            _mm_cmpeq_epi32(_mm_loadu_si128((const __m128i*)(a + i + 4)), code));
+        __m128i sub = _mm_add_epi16(minus1, _mm_and_si128(eq, three));
+        __m128i diag = _mm_add_epi16(_mm_loadu_si128((const __m128i*)(prev + i)), sub);
+        __m128i up = _mm_sub_epi16(_mm_loadu_si128((const __m128i*)(prev + i + 1)), gap1);
+        __m128i x = _mm_max_epi16(_mm_max_epi16(diag, up), zero);
+        x = _mm_max_epi16(x, _mm_sub_epi16(_mm_slli_si128(x, 2), gap1));
+        x = _mm_max_epi16(x, _mm_sub_epi16(_mm_slli_si128(x, 4), gap2));
+        x = _mm_max_epi16(x, _mm_sub_epi16(_mm_slli_si128(x, 8), gap4));
+        /* the next step's carry, max(x[7], left - 16), uses x[7] before this
+           step's carry is applied: the cross-step chain is one sub, one max */
+        int top = (int16_t)_mm_extract_epi16(x, 7);
+        x = _mm_max_epi16(x, _mm_sub_epi16(_mm_set1_epi16((int16_t)left), carry_gaps));
+        left = top > left - 16 ? top : left - 16;
+        _mm_storeu_si128((__m128i*)(cur + i + 1), x);
+        row_max = _mm_max_epi16(row_max, x);
     }
+    row_max = _mm_max_epi16(row_max, _mm_srli_si128(row_max, 8));
+    row_max = _mm_max_epi16(row_max, _mm_srli_si128(row_max, 4));
+    row_max = _mm_max_epi16(row_max, _mm_srli_si128(row_max, 2));
+    int best = (int16_t)_mm_extract_epi16(row_max, 0);
+    for (; i < n; i++) {
+        int v = prev[i] + (a[i] == bj ? 2 : -1);
+        if (prev[i + 1] - 2 > v) v = prev[i + 1] - 2;
+        if (left - 2 > v) v = left - 2;
+        if (v < 0) v = 0;
+        cur[i + 1] = (int16_t)v;
+        left = v;
+        if (v > best) best = v;
+    }
+    return (int16_t)best;
 }
 
-/* int16 variant with the best cell tracked during generation: halves the
-   memory traffic and saves the full re-scan — valid while 2*min(n,m) stays
-   below INT16_MAX (checked by the caller). */
-void sw_matrix16(const uint32_t* a, int n, const uint32_t* b, int m,
-                 int16_t* h, int32_t* out) {
-    int16_t best = 0; int bi = 0; int bj = 0;
-    for (int j = 1; j <= m; j++) {
-        const int16_t* prev = h + (size_t)(j - 1) * (n + 1);
-        int16_t* cur = h + (size_t)j * (n + 1);
-        uint32_t bj_code = b[j - 1];
-        int16_t left = 0;
-        cur[0] = 0;
-        for (int i = 1; i <= n; i++) {
-            int16_t v = prev[i - 1] + (a[i - 1] == bj_code ? 2 : -1);
-            int16_t up = prev[i] - 2;
-            if (up > v) v = up;
-            int16_t lft = left - 2;
-            if (lft > v) v = lft;
-            if (v < 0) v = 0;
-            cur[i] = v;
-            left = v;
-            /* first max in a-major order: prefer larger v; on ties prefer
-               smaller i, then smaller j */
-            if (v > best || (v == best && v > 0 && i < bi)) {
-                best = v; bi = i; bj = j;
-            }
-        }
+/* Smallest i in 1 .. limit-1 with row[i] == v, or 0 when there is none. */
+static int first_eq16(const int16_t* row, int limit, int16_t v) {
+    const __m128i target = _mm_set1_epi16(v);
+    int i = 1;
+    for (; i + 8 <= limit; i += 8) {
+        int mask = _mm_movemask_epi8(
+            _mm_cmpeq_epi16(_mm_loadu_si128((const __m128i*)(row + i)), target));
+        if (mask) return i + (__builtin_ctz(mask) >> 1);
     }
-    out[0] = bi; out[1] = bj; out[2] = best;
+    for (; i < limit; i++) {
+        if (row[i] == v) return i;
+    }
+    return 0;
+}
+
+/* Best cell, first maximum in a-major order (larger score; on ties the
+   smaller i, then the smaller j).  Rows arrive in j order, so row j can only
+   move the best cell to the first position of its maximum rm, and only when
+   rm beats the best or ties it at a smaller i. */
+static void keep_best(const int16_t* row, int n, int16_t rm, int j,
+                      int16_t* best, int* bi, int* bj) {
+    if (rm > *best) {
+        *best = rm; *bi = first_eq16(row, n + 1, rm); *bj = j;
+    } else if (rm == *best && rm > 0) {
+        int i = first_eq16(row, *bi, rm);
+        if (i) { *bi = i; *bj = j; }
+    }
 }
 
 /* Traceback from cell (a=i, b=j) while the score is positive, preferring
@@ -146,94 +192,51 @@ static void nt_copy_row(int16_t* dst, const int16_t* src, int count) {
     for (; i < count; i++) dst[i] = src[i];
 }
 
-/* Cache-invisible int16 DP: identical recurrence and best-cell tie-breaks
-   to sw_matrix16, but the recurrence runs over two small ping-pong row
-   buffers (rowbuf, capacity 2*(n+1), stays L1/L2-hot at any matrix size)
-   and each finished row is streamed to `h` with non-temporal stores.  The
-   stored matrix is byte-identical to sw_matrix16's; only the traffic
-   pattern differs.  For matrices larger than the private L2 this removes
-   the RFO read of every matrix line AND the LLC pollution that thrashes
-   sibling cores at high core counts — the one genuinely scale-relevant
-   footprint in the alignment path (see scripts/profile_dp_footprint.py). */
-void sw_matrix16_nt(const uint32_t* a, int n, const uint32_t* b, int m,
-                    int16_t* h, int16_t* rowbuf, int32_t* out) {
+/* Fused alignment: score matrix + best cell + traceback in ONE call.  The DP
+   matrix h ((m+1) x (n+1) int16, row-major) is caller-provided scratch (a
+   grow-only buffer reused across calls: per-call malloc of the larger
+   matrices crosses the mmap threshold and the resulting page faults / TLB
+   shootdowns serialize at high process counts); rows are written in place.
+   Returns the block count written to `blocks`. */
+int sw_align16(const uint32_t* a, int n, const uint32_t* b, int m,
+               int16_t* h, int32_t* blocks) {
+    int16_t best = 0; int bi = 0; int bj = 0;
+    for (int i = 0; i <= n; i++) h[i] = 0;
+    for (int j = 1; j <= m; j++) {
+        int16_t* cur = h + (size_t)j * (n + 1);
+        int16_t rm = sw_row16(a, n, b[j - 1], cur - (n + 1), cur);
+        keep_best(cur, n, rm, j, &best, &bi, &bj);
+    }
+    return best > 0 ? sw_traceback16(a, b, h, n, m, bi, bj, blocks) : 0;
+}
+
+/* Cache-invisible variant for large matrices: the same rows are computed
+   into two small ping-pong buffers (rowbuf, capacity 2*(n+1), L1/L2-hot at
+   any matrix size) and each finished row is streamed to `h` with
+   non-temporal stores, so the stored matrix is byte-identical to
+   sw_align16's.  Beyond the private L2 this removes the RFO read of every
+   matrix line and the LLC pollution that thrashes sibling cores (see
+   scripts/profile_dp_footprint.py); the traceback touches only the ~path
+   cells of the stored matrix. */
+int sw_align16_nt(const uint32_t* a, int n, const uint32_t* b, int m,
+                  int16_t* h, int16_t* rowbuf, int32_t* blocks) {
     int16_t best = 0; int bi = 0; int bj = 0;
     int16_t* prev = rowbuf;
     int16_t* cur = rowbuf + (n + 1);
     for (int i = 0; i <= n; i++) prev[i] = 0;
     nt_copy_row(h, prev, n + 1);
     for (int j = 1; j <= m; j++) {
-        uint32_t bj_code = b[j - 1];
-        int16_t left = 0;
-        cur[0] = 0;
-        for (int i = 1; i <= n; i++) {
-            int16_t v = prev[i - 1] + (a[i - 1] == bj_code ? 2 : -1);
-            int16_t up = prev[i] - 2;
-            if (up > v) v = up;
-            int16_t lft = left - 2;
-            if (lft > v) v = lft;
-            if (v < 0) v = 0;
-            cur[i] = v;
-            left = v;
-            if (v > best || (v == best && v > 0 && i < bi)) {
-                best = v; bi = i; bj = j;
-            }
-        }
+        int16_t rm = sw_row16(a, n, b[j - 1], prev, cur);
+        keep_best(cur, n, rm, j, &best, &bi, &bj);
         nt_copy_row(h + (size_t)j * (n + 1), cur, n + 1);
         int16_t* t = prev; prev = cur; cur = t;
     }
     _mm_sfence();
-    out[0] = bi; out[1] = bj; out[2] = best;
-}
-
-/* Fused alignment over the streaming DP (large-matrix path): same contract
-   as sw_align16; the traceback touches only the ~path cells of the stored
-   matrix, so the DRAM reads it incurs are negligible next to the avoided
-   RFO+LLC traffic of the generation. */
-int sw_align16_nt(const uint32_t* a, int n, const uint32_t* b, int m,
-                  int16_t* h, int16_t* rowbuf, int32_t* blocks) {
-    int32_t out[3];
-    sw_matrix16_nt(a, n, b, m, h, rowbuf, out);
-    int n_blocks = 0;
-    if (out[2] > 0) {
-        n_blocks = sw_traceback16(a, b, h, n, m, out[0], out[1], blocks);
-    }
-    return n_blocks;
-}
-
-/* Fused alignment: matrix16 + best cell + traceback in ONE call.  The DP
-   matrix lives in caller-provided scratch (a grow-only buffer reused across
-   calls: per-call malloc of the larger matrices crosses the mmap threshold
-   and the resulting page faults / TLB shootdowns serialize at high
-   process counts).  Returns the block count written to `blocks`. */
-int sw_align16(const uint32_t* a, int n, const uint32_t* b, int m,
-               int16_t* h, int32_t* blocks) {
-    for (int i = 0; i <= n; i++) h[i] = 0;
-    for (int j = 1; j <= m; j++) h[(size_t)j * (n + 1)] = 0;
-    int32_t out[3];
-    sw_matrix16(a, n, b, m, h, out);
-    int n_blocks = 0;
-    if (out[2] > 0) {
-        n_blocks = sw_traceback16(a, b, h, n, m, out[0], out[1], blocks);
-    }
-    return n_blocks;
-}
-
-/* First maximum cell in a-major order (smallest a, then smallest b). */
-void sw_best(const int32_t* h, int n, int m, int32_t* out) {
-    int32_t best = 0; int bi = 0; int bj = 0;
-    for (int j = 0; j <= m; j++) {
-        const int32_t* row = h + (size_t)j * (n + 1);
-        for (int i = 0; i <= n; i++) {
-            int32_t v = row[i];
-            if (v > best || (v == best && v > 0 && (i < bi || (i == bi && j < bj)))) {
-                best = v; bi = i; bj = j;
-            }
-        }
-    }
-    out[0] = bi; out[1] = bj; out[2] = best;
+    return best > 0 ? sw_traceback16(a, b, h, n, m, bi, bj, blocks) : 0;
 }
 """
+
+_GCC_ARGS = ("gcc", "-O3", "-shared", "-fPIC")
 
 _CACHE_DIR = os.environ.get(
     "SPARK_GRAFT_NATIVE_CACHE",
@@ -256,30 +259,37 @@ def _cache_dir_candidates():
 
 
 def _compile() -> Optional[str]:
-    digest = hashlib.sha1(_C_SOURCE.encode()).hexdigest()[:16]
+    # the key covers the compile command too: a changed flag must not reuse
+    # a shared object built with the old one
+    key = "\0".join(_GCC_ARGS + (_C_SOURCE,))
+    digest = hashlib.sha1(key.encode()).hexdigest()[:16]
     for cache_dir in _cache_dir_candidates():
         so_path = os.path.join(cache_dir, "swkernel_%s.so" % digest)
         if os.path.exists(so_path):
             return so_path
+        tmp_so = so_path + ".tmp.%d" % os.getpid()
+        c_path = None
         try:
             os.makedirs(cache_dir, exist_ok=True)
             with tempfile.NamedTemporaryFile(
                 "w", suffix=".c", dir=cache_dir, delete=False
             ) as fh:
-                fh.write(_C_SOURCE)
                 c_path = fh.name
-            tmp_so = so_path + ".tmp.%d" % os.getpid()
+                fh.write(_C_SOURCE)
             subprocess.run(
-                ["gcc", "-O3", "-shared", "-fPIC", "-o", tmp_so, c_path],
+                list(_GCC_ARGS) + ["-o", tmp_so, c_path],
                 check=True,
                 capture_output=True,
                 timeout=60,
             )
             os.replace(tmp_so, so_path)  # atomic vs concurrent workers
-            os.unlink(c_path)
             return so_path
         except Exception:
             continue
+        finally:
+            for path in (c_path, tmp_so):
+                if path is not None and os.path.exists(path):
+                    os.unlink(path)
     return None
 
 
@@ -293,188 +303,50 @@ def get_native_lib() -> Optional[ctypes.CDLL]:
         return None
     try:
         lib = ctypes.CDLL(so_path)
-        lib.sw_matrix.argtypes = [
-            ctypes.POINTER(ctypes.c_uint32),
-            ctypes.c_int,
-            ctypes.POINTER(ctypes.c_uint32),
-            ctypes.c_int,
-            ctypes.POINTER(ctypes.c_int32),
-        ]
-        lib.sw_matrix.restype = None
-        lib.sw_best.argtypes = [
-            ctypes.POINTER(ctypes.c_int32),
-            ctypes.c_int,
-            ctypes.c_int,
-            ctypes.POINTER(ctypes.c_int32),
-        ]
-        lib.sw_best.restype = None
-        lib.sw_matrix16.argtypes = [
-            ctypes.POINTER(ctypes.c_uint32),
-            ctypes.c_int,
-            ctypes.POINTER(ctypes.c_uint32),
-            ctypes.c_int,
-            ctypes.POINTER(ctypes.c_int16),
-            ctypes.POINTER(ctypes.c_int32),
-        ]
-        lib.sw_matrix16.restype = None
-        lib.sw_traceback16.argtypes = [
-            ctypes.POINTER(ctypes.c_uint32),
-            ctypes.POINTER(ctypes.c_uint32),
-            ctypes.POINTER(ctypes.c_int16),
-            ctypes.c_int,
-            ctypes.c_int,
-            ctypes.c_int,
-            ctypes.c_int,
-            ctypes.POINTER(ctypes.c_int32),
-        ]
-        lib.sw_traceback16.restype = ctypes.c_int
-        lib.sw_align16.argtypes = [
-            ctypes.POINTER(ctypes.c_uint32),
-            ctypes.c_int,
-            ctypes.POINTER(ctypes.c_uint32),
-            ctypes.c_int,
-            ctypes.POINTER(ctypes.c_int16),
-            ctypes.POINTER(ctypes.c_int32),
-        ]
-        lib.sw_align16.restype = ctypes.c_int
-        # hot-path handle with ndpointer argtypes: numpy arrays pass
-        # directly (pointer extraction happens in C), skipping the four
-        # per-call ctypes cast objects of the hand-rolled signature —
-        # measurable at the flagship's ~40 short alignments per document.
-        # CDLL.__getitem__ returns a fresh uncached function object, so the
-        # same symbol carries both signatures.
-        align16_np = lib["sw_align16"]
-        align16_np.argtypes = [
-            np.ctypeslib.ndpointer(dtype=np.uint32, flags="C_CONTIGUOUS"),
-            ctypes.c_int,
-            np.ctypeslib.ndpointer(dtype=np.uint32, flags="C_CONTIGUOUS"),
-            ctypes.c_int,
-            np.ctypeslib.ndpointer(dtype=np.int16, flags="C_CONTIGUOUS"),
-            np.ctypeslib.ndpointer(dtype=np.int32, flags="C_CONTIGUOUS"),
-        ]
-        align16_np.restype = ctypes.c_int
-        lib.sw_align16_np = align16_np
-        lib.sw_align16_nt.argtypes = [
-            ctypes.POINTER(ctypes.c_uint32),
-            ctypes.c_int,
-            ctypes.POINTER(ctypes.c_uint32),
-            ctypes.c_int,
-            ctypes.POINTER(ctypes.c_int16),
-            ctypes.POINTER(ctypes.c_int16),
-            ctypes.POINTER(ctypes.c_int32),
-        ]
-        lib.sw_align16_nt.restype = ctypes.c_int
-        _lib = lib
-    except Exception:
-        _lib = None
+    except OSError:
+        return None
+    lib.sw_align16.argtypes = [
+        ctypes.c_char_p,
+        ctypes.c_int,
+        ctypes.c_char_p,
+        ctypes.c_int,
+        ctypes.c_void_p,
+        ctypes.c_void_p,
+    ]
+    lib.sw_align16.restype = ctypes.c_int
+    lib.sw_align16_nt.argtypes = [
+        ctypes.c_char_p,
+        ctypes.c_int,
+        ctypes.c_char_p,
+        ctypes.c_int,
+        ctypes.c_void_p,
+        ctypes.c_void_p,
+        ctypes.c_void_p,
+    ]
+    lib.sw_align16_nt.restype = ctypes.c_int
+    _lib = lib
     return _lib
 
 
-def native_sw_matrix_and_best(
-    a_codes: np.ndarray, b_codes: np.ndarray
-) -> Optional[tuple]:
-    """C path returning (h, (i, j, score)): int16 fused-best variant when the
-    score range allows (halves memory traffic), int32 two-pass otherwise.
-    None when the native lib is unavailable."""
-    lib = get_native_lib()
-    if lib is None:
-        return None
-    n = a_codes.shape[0]
-    m = b_codes.shape[0]
-    if n == 0 or m == 0:
-        return np.zeros((m + 1, n + 1), dtype=np.int16), (0, 0, 0)
-    if 2 * min(n, m) < 32000:
-        # only row 0 / col 0 need zeroing; the C loop writes every other cell
-        h16 = np.empty((m + 1, n + 1), dtype=np.int16)
-        h16[0, :] = 0
-        h16[:, 0] = 0
-        out = np.zeros(3, dtype=np.int32)
-        a_contig = np.ascontiguousarray(a_codes, dtype=np.uint32)
-        b_contig = np.ascontiguousarray(b_codes, dtype=np.uint32)
-        lib.sw_matrix16(
-            a_contig.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
-            n,
-            b_contig.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
-            m,
-            h16.ctypes.data_as(ctypes.POINTER(ctypes.c_int16)),
-            out.ctypes.data_as(ctypes.POINTER(ctypes.c_int32)),
-        )
-        return h16, (int(out[0]), int(out[1]), int(out[2]))
-    h = native_sw_matrix(a_codes, b_codes)
-    assert h is not None
-    best = native_pick_max(h)
-    return h, best
+class _Scratch:
+    """Grow-only ctypes buffer reused across calls (python workers are
+    single-threaded); its address is taken once per growth."""
+
+    __slots__ = ("ctype", "size", "array", "ptr")
+
+    def __init__(self, ctype, size: int) -> None:
+        self.ctype = ctype
+        self.grow(size)
+
+    def grow(self, size: int) -> None:
+        self.size = size
+        self.array = (self.ctype * size)()
+        self.ptr = ctypes.c_void_p(ctypes.addressof(self.array))
 
 
-def native_sw_matrix(a_codes: np.ndarray, b_codes: np.ndarray) -> Optional[np.ndarray]:
-    """C-path score matrix; None when the native lib is unavailable."""
-    lib = get_native_lib()
-    if lib is None:
-        return None
-    n = a_codes.shape[0]
-    m = b_codes.shape[0]
-    h = np.zeros((m + 1, n + 1), dtype=np.int32)
-    if n and m:
-        a_contig = np.ascontiguousarray(a_codes, dtype=np.uint32)
-        b_contig = np.ascontiguousarray(b_codes, dtype=np.uint32)
-        lib.sw_matrix(
-            a_contig.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
-            n,
-            b_contig.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
-            m,
-            h.ctypes.data_as(ctypes.POINTER(ctypes.c_int32)),
-        )
-    return h
-
-
-def native_traceback16(
-    a_codes: np.ndarray, b_codes: np.ndarray, h16: np.ndarray, i: int, j: int
-):
-    """C traceback over an int16 matrix; None when unavailable or when the
-    matrix is not int16 (the int32 fallback paths keep the python walk)."""
-    lib = get_native_lib()
-    if lib is None or h16.dtype != np.int16:
-        return None
-    n = a_codes.shape[0]
-    m = b_codes.shape[0]
-    # blocks area (3 per block, <= n+m blocks) + pairs scratch (2 per match)
-    buffer = np.empty(3 * (n + m) + 2 * (n + m) + 8, dtype=np.int32)
-    a_contig = np.ascontiguousarray(a_codes, dtype=np.uint32)
-    b_contig = np.ascontiguousarray(b_codes, dtype=np.uint32)
-    n_blocks = lib.sw_traceback16(
-        a_contig.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
-        b_contig.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
-        np.ascontiguousarray(h16).ctypes.data_as(ctypes.POINTER(ctypes.c_int16)),
-        n,
-        m,
-        i,
-        j,
-        buffer.ctypes.data_as(ctypes.POINTER(ctypes.c_int32)),
-    )
-    return [
-        (int(buffer[3 * k]), int(buffer[3 * k + 1]), int(buffer[3 * k + 2]))
-        for k in range(n_blocks)
-    ]
-
-
-def native_pick_max(h: np.ndarray) -> Optional[tuple]:
-    lib = get_native_lib()
-    if lib is None:
-        return None
-    m_plus, n_plus = h.shape
-    out = np.zeros(3, dtype=np.int32)
-    lib.sw_best(
-        np.ascontiguousarray(h).ctypes.data_as(ctypes.POINTER(ctypes.c_int32)),
-        n_plus - 1,
-        m_plus - 1,
-        out.ctypes.data_as(ctypes.POINTER(ctypes.c_int32)),
-    )
-    return int(out[0]), int(out[1]), int(out[2])
-
-
-_blocks_scratch: Optional[np.ndarray] = None
-_matrix_scratch: Optional[np.ndarray] = None
-_rowbuf_scratch: Optional[np.ndarray] = None
+_blocks = _Scratch(ctypes.c_int32, 4096)
+_matrix = _Scratch(ctypes.c_int16, 1 << 16)
+_rowbuf = _Scratch(ctypes.c_int16, 4096)
 
 # Above this matrix size the cache-invisible streaming DP takes over.
 # Measured on this box (scripts/profile_dp_footprint.py + bench_dp_nt.py,
@@ -493,66 +365,40 @@ _NT_THRESHOLD_BYTES = int(
 )
 
 
-def native_match_blocks(a_codes: np.ndarray, b_codes: np.ndarray):
+def native_match_blocks(
+    a_bytes: bytes, n: int, b_bytes: bytes, m: int
+) -> Optional[List[Tuple[int, int, int]]]:
     """Fused C path: matrix + best cell + traceback in ONE FFI call; the DP
-    matrix is C-internal scratch and never crosses into Python.  Returns the
-    difflib-style blocks (without terminator), or None when the native lib
-    is unavailable / the int16 score range would overflow (caller falls back
-    to the two-call or numpy paths).
+    matrix is C-internal scratch and never crosses into Python.
 
-    The blocks buffer is reused across calls (python workers are
-    single-threaded; the buffer only grows)."""
-    global _blocks_scratch
+    ``a_bytes`` and ``b_bytes`` are UTF-32-LE code points; only the first
+    ``n`` and ``m`` of them are aligned (``m`` below the needle's length
+    truncates it).  ``2 * min(n, m)`` must stay below 32768 (int16 scores).
+    Returns the difflib-style blocks (without terminator), or None when the
+    native lib is unavailable."""
     lib = get_native_lib()
     if lib is None:
         return None
-    n = a_codes.shape[0]
-    m = b_codes.shape[0]
+    if not (0 <= n <= len(a_bytes) // 4 and 0 <= m <= len(b_bytes) // 4):
+        raise ValueError("alignment lengths %d, %d exceed the code points given" % (n, m))
+    if 2 * min(n, m) > 32767:
+        raise ValueError("int16 scores overflow at min(n, m) = %d" % min(n, m))
     if n == 0 or m == 0:
         return []
-    if 2 * min(n, m) >= 32000:
-        return None
-    global _matrix_scratch
-    need = 5 * (n + m) + 8
-    if _blocks_scratch is None or _blocks_scratch.shape[0] < need:
-        _blocks_scratch = np.empty(max(need, 4096), dtype=np.int32)
-    buffer = _blocks_scratch
+    if 5 * (n + m) + 8 > _blocks.size:
+        # blocks area (3 per block, <= n+m blocks) + pairs scratch (2 per match)
+        _blocks.grow(5 * (n + m) + 8)
     cells = (n + 1) * (m + 1)
-    if _matrix_scratch is None or _matrix_scratch.shape[0] < cells:
-        _matrix_scratch = np.empty(max(cells, 1 << 16), dtype=np.int16)
-    matrix = _matrix_scratch
-    a_contig = (
-        a_codes
-        if a_codes.flags.c_contiguous and a_codes.dtype == np.uint32
-        else np.ascontiguousarray(a_codes, dtype=np.uint32)
-    )
-    b_contig = (
-        b_codes
-        if b_codes.flags.c_contiguous and b_codes.dtype == np.uint32
-        else np.ascontiguousarray(b_codes, dtype=np.uint32)
-    )
+    if cells > _matrix.size:
+        _matrix.grow(cells)
     if cells * 2 <= _NT_THRESHOLD_BYTES:
-        # common case first: ndpointer signature, no per-call casts
-        n_blocks = lib.sw_align16_np(a_contig, n, b_contig, m, matrix, buffer)
-        return [
-            (int(buffer[3 * k]), int(buffer[3 * k + 1]), int(buffer[3 * k + 2]))
-            for k in range(n_blocks)
-        ]
-    # large matrix: cache-invisible streaming DP (byte-identical values)
-    global _rowbuf_scratch
-    row_need = 2 * (n + 1)
-    if _rowbuf_scratch is None or _rowbuf_scratch.shape[0] < row_need:
-        _rowbuf_scratch = np.empty(max(row_need, 4096), dtype=np.int16)
-    n_blocks = lib.sw_align16_nt(
-        a_contig.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
-        n,
-        b_contig.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
-        m,
-        matrix.ctypes.data_as(ctypes.POINTER(ctypes.c_int16)),
-        _rowbuf_scratch.ctypes.data_as(ctypes.POINTER(ctypes.c_int16)),
-        buffer.ctypes.data_as(ctypes.POINTER(ctypes.c_int32)),
-    )
-    return [
-        (int(buffer[3 * k]), int(buffer[3 * k + 1]), int(buffer[3 * k + 2]))
-        for k in range(n_blocks)
-    ]
+        n_blocks = lib.sw_align16(a_bytes, n, b_bytes, m, _matrix.ptr, _blocks.ptr)
+    else:
+        # large matrix: cache-invisible streaming DP (byte-identical values)
+        if 2 * (n + 1) > _rowbuf.size:
+            _rowbuf.grow(2 * (n + 1))
+        n_blocks = lib.sw_align16_nt(
+            a_bytes, n, b_bytes, m, _matrix.ptr, _rowbuf.ptr, _blocks.ptr
+        )
+    flat = _blocks.array[: 3 * n_blocks]
+    return list(zip(flat[0::3], flat[1::3], flat[2::3]))

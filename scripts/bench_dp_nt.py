@@ -23,29 +23,27 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def make_inputs(needle_len: int, seed: int = 42):
-    import numpy as np  # local: workers import lazily after fork
-
+    """native_match_blocks arguments: UTF-32-LE haystack and needle bytes
+    with their lengths."""
     rng = random.Random(seed)
     alphabet = "abcdefghij klmnop.,"
     window = max(1000, int(needle_len * 1.2 + 0.5) * 4)
     a = "".join(rng.choice(alphabet) for _ in range(window))
     start = window // 3
     b = a[start : start + needle_len]
-    ac = np.frombuffer(a.encode("utf-32-le"), dtype=np.uint32)
-    bc = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32)
-    return ac, bc
+    return a.encode("utf-32-le"), len(a), b.encode("utf-32-le"), len(b)
 
 
 def time_calls(nt: bool, needle_len: int, seconds: float = 1.0):
     from sciencebeam_trainer_grobid_tools_spark.kernel import native
 
     native._NT_THRESHOLD_BYTES = 0 if nt else (1 << 30)
-    ac, bc = make_inputs(needle_len)
-    native.native_match_blocks(ac, bc)  # warm scratch + compile
+    args = make_inputs(needle_len)
+    native.native_match_blocks(*args)  # warm scratch + compile
     count = 0
     t0 = time.perf_counter()
     while time.perf_counter() - t0 < seconds:
-        native.native_match_blocks(ac, bc)
+        native.native_match_blocks(*args)
         count += 1
     dt = time.perf_counter() - t0
     return count / dt, dt / count * 1000.0  # calls/s, ms/call

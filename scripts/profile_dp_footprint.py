@@ -26,7 +26,7 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sciencebeam_trainer_grobid_tools_spark.kernel import native
+from sciencebeam_trainer_grobid_tools_spark.kernel import align
 from sciencebeam_trainer_grobid_tools_spark.kernel.fuzzy import auto_window
 from sciencebeam_trainer_grobid_tools_spark.plans.pipeline import annotate_document_row
 from sciencebeam_trainer_grobid_tools_spark.sources.corpus import DEFAULT_XML_MAPPING
@@ -62,21 +62,14 @@ def main():
     )
 
     calls = []
-    original = native.native_match_blocks
+    original = align.native_match_blocks
 
-    def recording(a_codes, b_codes):
-        calls.append((a_codes.shape[0], b_codes.shape[0]))
-        return original(a_codes, b_codes)
+    def recording(a_bytes, n, b_bytes, m):
+        calls.append((n, m))
+        return original(a_bytes, n, b_bytes, m)
 
-    native.native_match_blocks = recording
-    # the fallback paths also allocate matrices; record them too
-    original_two = native.native_sw_matrix_and_best
-
-    def recording_two(a_codes, b_codes):
-        calls.append((a_codes.shape[0], b_codes.shape[0]))
-        return original_two(a_codes, b_codes)
-
-    native.native_sw_matrix_and_best = recording_two
+    # every DP call goes through the one name local_matching_blocks resolves
+    align.native_match_blocks = recording
 
     table = pq.read_table(
         os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
@@ -101,8 +94,7 @@ def main():
             DEFAULT_XML_MAPPING,
         )
 
-    native.native_match_blocks = original
-    native.native_sw_matrix_and_best = original_two
+    align.native_match_blocks = original
 
     sizes = np.array(
         [(n + 1) * (m + 1) * 2 for n, m in calls], dtype=np.int64

@@ -120,8 +120,6 @@ class TestStreamingDpParity:
     def test_random_parity_nt_vs_cached(self):
         import random
 
-        import numpy as np
-
         from sciencebeam_trainer_grobid_tools_spark.kernel import native
 
         if native.get_native_lib() is None:
@@ -137,20 +135,17 @@ class TestStreamingDpParity:
                 m = rng.randint(1, 80)
                 a = "".join(rng.choice(alphabet) for _ in range(n))
                 b = "".join(rng.choice(alphabet) for _ in range(m))
-                ac = np.frombuffer(a.encode("utf-32-le"), dtype=np.uint32)
-                bc = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32)
+                ab, bb = a.encode("utf-32-le"), b.encode("utf-32-le")
                 native._NT_THRESHOLD_BYTES = 0
-                nt_blocks = native.native_match_blocks(ac, bc)
+                nt_blocks = native.native_match_blocks(ab, n, bb, m)
                 native._NT_THRESHOLD_BYTES = 1 << 30
-                cached_blocks = native.native_match_blocks(ac, bc)
+                cached_blocks = native.native_match_blocks(ab, n, bb, m)
                 assert nt_blocks == cached_blocks, (a, b)
         finally:
             native._NT_THRESHOLD_BYTES = saved
 
     def test_large_matrix_parity(self):
         import random
-
-        import numpy as np
 
         from sciencebeam_trainer_grobid_tools_spark.kernel import native
 
@@ -163,13 +158,12 @@ class TestStreamingDpParity:
         alphabet = "abcdefghij klmnop.,"
         a = "".join(rng.choice(alphabet) for _ in range(6000))
         b = a[1000:2200]  # production-shaped: 1200-char needle, ~14 MB matrix
-        ac = np.frombuffer(a.encode("utf-32-le"), dtype=np.uint32)
-        bc = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32)
+        ab, bb = a.encode("utf-32-le"), b.encode("utf-32-le")
         try:
             native._NT_THRESHOLD_BYTES = 0
-            nt_blocks = native.native_match_blocks(ac, bc)
+            nt_blocks = native.native_match_blocks(ab, len(a), bb, len(b))
             native._NT_THRESHOLD_BYTES = 1 << 30
-            cached_blocks = native.native_match_blocks(ac, bc)
+            cached_blocks = native.native_match_blocks(ab, len(a), bb, len(b))
         finally:
             native._NT_THRESHOLD_BYTES = saved
         assert nt_blocks == cached_blocks

@@ -5,12 +5,18 @@ oracle (same scoring, straightforward O(n*m) python) on random inputs, plus
 structural invariants of the matching-block contract and the fuzzy search.
 """
 
+import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
+from sciencebeam_trainer_grobid_tools_spark.kernel import native
 from sciencebeam_trainer_grobid_tools_spark.kernel.align import (
     GAP_SCORE,
     MATCH_SCORE,
     MISMATCH_SCORE,
+    _pick_max_cell,
+    _smith_waterman_matrix,
+    _traceback_blocks,
     local_matching_blocks,
 )
 from sciencebeam_trainer_grobid_tools_spark.kernel.fuzzy import (
@@ -94,6 +100,58 @@ def test_sw_path_reaches_scalar_oracle_score(a, b):
 def test_identical_strings_fully_match(s):
     blocks = [blk for blk in local_matching_blocks(s, s) if blk[2]]
     assert blocks == [(0, 0, len(s))]
+
+
+def numpy_oracle_blocks(a: str, b: str):
+    """The no-compiler DP: score matrix, first maximum cell, traceback."""
+    a_codes = np.frombuffer(a.encode("utf-32-le"), dtype=np.uint32)
+    b_codes = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32)
+    h = _smith_waterman_matrix(a_codes, b_codes)
+    i, j, score = _pick_max_cell(h)
+    return _traceback_blocks(h, a_codes, b_codes, i, j) if score > 0 else []
+
+
+# lengths on both sides of the kernel's 8-lane steps, n < 8, m = 1 and empty
+lane_lengths = st.one_of(
+    st.sampled_from([0, 1, 2, 7, 8, 9, 15, 16, 17, 23, 24, 25, 31, 32, 33]),
+    st.integers(min_value=0, max_value=70),
+)
+
+
+@st.composite
+def dp_pairs(draw):
+    # tie-heavy alphabets, astral code points and a sparse alphabet; about
+    # half the needles are noisy slices of the haystack, so real alignments
+    # (long diagonals, ties between rows) occur on every alphabet
+    alphabet = draw(st.sampled_from(["ab", "ab ", "a\u00e9\U0001f600 ", "abcdefghijklmnopqrstuvwxyz"]))
+    n = draw(lane_lengths)
+    m = draw(lane_lengths)
+    a = draw(st.text(alphabet=alphabet, min_size=n, max_size=n))
+    b = draw(st.text(alphabet=alphabet, min_size=m, max_size=m))
+    if a and draw(st.booleans()):
+        start = draw(st.integers(min_value=0, max_value=n - 1))
+        b = "".join(
+            draw(st.sampled_from([c, c, c, alphabet[0]])) for c in a[start : start + m]
+        )
+    return a, b
+
+
+@pytest.mark.parametrize("nt_threshold", [1 << 30, 0], ids=["cached", "streaming"])
+@settings(max_examples=400, deadline=None)
+@given(pair=dp_pairs())
+def test_native_dp_blocks_equal_numpy_oracle(nt_threshold, pair):
+    """The fused C kernel (SIMD rows, best cell, traceback) returns exactly
+    the numpy DP's blocks, on both the in-place and the streaming path."""
+    if native.get_native_lib() is None:
+        pytest.skip("native kernel unavailable")
+    a, b = pair
+    saved = native._NT_THRESHOLD_BYTES
+    native._NT_THRESHOLD_BYTES = nt_threshold
+    try:
+        got = native.native_match_blocks(a.encode("utf-32-le"), len(a), b.encode("utf-32-le"), len(b))
+    finally:
+        native._NT_THRESHOLD_BYTES = saved
+    assert got == numpy_oracle_blocks(a, b)
 
 
 @settings(max_examples=100, deadline=None)
