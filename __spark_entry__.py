@@ -577,20 +577,9 @@ def q_docs_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_docs_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup candidates (kernel hash not SQL-portable: rows-only).
-
-    ``persist_intermediate=False``: the signature table feeds its three
-    consumers through ONE shuffle that Spark de-duplicates via
-    ReusedExchange, so an explicit cache only adds memory-serialization
-    cost here (measured 2.53s vs 1.73s noop at sf1.0) — and a per-invocation
-    persist in a repeatedly-run query leaks cached blocks (the gate variant
-    already runs uncached for the same reason).  A multi-stage production
-    pipeline materializes the signature table to storage instead
-    (documented on minhash_candidate_pairs)."""
+    """MinHash+LSH near-dup candidates (kernel hash not SQL-portable: rows-only)."""
     docs = _spread(_load(spark, sf_dir, "documents"), spark)
-    return dedup.minhash_candidate_pairs(
-        docs, k=5, num_hashes=32, bands=8, persist_intermediate=False
-    )
+    return dedup.minhash_candidate_pairs(docs, k=5, num_hashes=32, bands=8)
 
 
 def q_docs_minhash_xxhash_crosscheck(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -613,9 +602,7 @@ def q_docs_minhash_xxhash_crosscheck(spark: SparkSession, sf_dir: str) -> DataFr
     ~10^4 retained pairs), so equality holds for any plausible regeneration
     while still exercising 24 of the 25 seeded near-dup pairs at sf0.01."""
     docs = _spread(_load(spark, sf_dir, "documents"), spark)
-    pairs = dedup.minhash_candidate_pairs(
-        docs, k=5, num_hashes=32, bands=8, persist_intermediate=False
-    )
+    pairs = dedup.minhash_candidate_pairs(docs, k=5, num_hashes=32, bands=8)
     return pairs.filter(F.col("jaccard") >= 0.95)
 
 
@@ -684,11 +671,7 @@ def q_docs_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     in DuckDB.  Verifies the banding LOGIC the production xxhash64 path
     (docs_minhash_near_dups) shares."""
     docs = _spread(_load(spark, sf_dir, "documents"), spark)
-    # persist_intermediate=False: the gate runs every query repeatedly in one
-    # session; an unreleased cache per invocation would accumulate blocks.
-    return dedup.portable_minhash_pairs(
-        docs, k=5, num_hashes=8, bands=4, persist_intermediate=False
-    )
+    return dedup.portable_minhash_pairs(docs, k=5, num_hashes=8, bands=4)
 
 
 def q_docs_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4109,7 +4092,7 @@ def _lsh_prebucketed_oracle_sql() -> str:
 
 # DuckDB replica of the full portable MinHash+LSH banding pipeline
 # (q_docs_minhash_portable); also the expected-side of the xxhash64-path
-# cross-check when restricted to jaccard >= 0.8
+# cross-check when restricted to jaccard >= 0.95
 def _minhash_portable_sql(num_hashes: int = 8, bands: int = 4) -> str:
     """DuckDB replica of the portable MinHash+LSH banding pipeline at the
     given (num_hashes, bands); rows_per_band = num_hashes // bands."""

@@ -3,11 +3,13 @@
 All stages are Catalyst expressions (whole-stage codegen; no Python UDFs):
 
 - exact:     hash-groupBy on a normalized md5 fingerprint;
-- minhash:   word-shingles -> per-seed xxhash64 minima -> LSH band buckets ->
-             candidate pairs -> exact Jaccard verification.  The only shuffle
-             is the band-bucket groupBy, keyed by (band, band_hash) — at
-             10^12 docs this is the textbook near-dup plan (band count and
-             rows/band trade recall vs shuffle width);
+- minhash:   word-shingles -> per-seed minima -> LSH band buckets ->
+             candidate pairs -> exact Jaccard verification, rendered from
+             one SQL template for both hash families (xxhash64 for
+             production, md5 for the DuckDB-checked gate).  The band
+             self-join is keyed by (band, band_hash) — at 10^12 docs this
+             is the textbook near-dup plan (band count and rows/band trade
+             recall vs shuffle width);
 - simhash:   per-token 64-bit hashes, bitwise majority vote folded to one
              long; near-dups = small hamming distance (cheap xor+popcount
              self-join within LSH-prefix buckets);
@@ -47,9 +49,11 @@ def exact_duplicate_groups(
 def word_shingles(text: Column, k: int = 5) -> Column:
     """Distinct k-word shingles of the normalized text (JVM-side arrays).
 
-    String-building form — kept as the exact/portable baseline (the
-    ``docs_ngram_jaccard`` oracle compares these strings with DuckDB).  The
-    minhash scale path uses :func:`shingle_hashes` instead.
+    String-building form — kept as the exact baseline (the
+    ``docs_ngram_jaccard`` oracle compares these strings with DuckDB).  Its
+    ``transform`` lambda is interpreted, so the MinHash pipeline
+    (:func:`_minhash_pairs_sql`) builds the same shingles by exploding
+    positions instead.
     """
     tokens = F.split(normalized_text(text), " ")
     n = F.size(tokens)
@@ -61,63 +65,6 @@ def word_shingles(text: Column, k: int = 5) -> Column:
                 lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, k)),
             ),
         ).otherwise(F.array(F.concat_ws(" ", tokens)))
-    )
-
-
-def shingle_hashes(text: Column, k: int = 5) -> Column:
-    """64-bit shingle identities without building shingle strings: one
-    multi-argument ``xxhash64`` over the k token positions per offset.
-
-    Versus the string form this skips the per-shingle ``slice`` +
-    ``concat_ws`` allocation (the round-1 hot spot: ~2.5s/5000 docs), and —
-    unlike an explode+window construction — stays map-side: nothing is
-    shuffled until the per-document signature minima, which combine
-    partially.  MinHash minima are identical over a multiset, so no
-    ``array_distinct`` is needed.
-    """
-    tokens = F.split(normalized_text(text), " ")
-    n = F.size(tokens)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - k + 1),
-            lambda i: F.xxhash64(*[F.element_at(tokens, i + j) for j in range(k)]),
-        ),
-    ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", tokens))))
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature as an array expression (per seed, the minimum
-    xxhash64 over the shingles).  NOTE: higher-order array functions are
-    interpreted, not codegen'd — prefer ``minhash_signature_table`` (explode +
-    grouped min aggregates, fully codegen'd with map-side combine) on large
-    inputs."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s: F.xxhash64(s, F.lit(seed)))
-            )
-            for seed in range(num_hashes)
-        ]
-    )
-
-
-def minhash_signature_table(
-    shingled: DataFrame, num_hashes: int = 32, shingle_col: str = "shingles"
-) -> DataFrame:
-    """(doc_id, shingles) -> (doc_id, sig array): explode the shingles
-    (string or 64-bit hash identities) and take per-seed grouped minima —
-    whole-stage-codegen aggregation with map-side partial combine, one
-    shuffle keyed by doc_id."""
-    exploded = shingled.select("doc_id", F.explode(shingle_col).alias("shingle"))
-    mins = exploded.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.col("shingle"), F.lit(seed))).alias("h%d" % seed)
-            for seed in range(num_hashes)
-        ]
-    )
-    return mins.select(
-        "doc_id", F.array(*[F.col("h%d" % seed) for seed in range(num_hashes)]).alias("sig")
     )
 
 
@@ -153,28 +100,73 @@ def shingle_hash_table(
 
 
 def _minhash_pairs_sql(
-    id_col: str, text_col: str, k: int, num_hashes: int, bands: int
+    id_col: str,
+    text_col: str,
+    k: int,
+    num_hashes: int,
+    bands: int,
+    family: str = "xxhash64",
 ) -> str:
-    """The whole uncached candidate-pair pipeline as ONE SQL string.
+    """The whole MinHash+LSH candidate-pair pipeline as ONE SQL string:
+    tokenize -> positional k-word shingles -> one combined collect_set +
+    per-seed-minima aggregate -> id-only band self-join -> exact-Jaccard
+    verification.  A single driver call, and no higher-order array function
+    (Catalyst interprets those rather than codegens them).
 
-    Expression-for-expression the same query the Column-API path below
-    builds (tokenize -> positional xxhash64 shingles -> combined
-    collect_set + per-seed-minima aggregate with the pruning-barrier zero
-    terms -> id-only band self-join -> exact-Jaccard verification), but a
-    single driver call: the Column form crossed py4j ~1,000 times and cost
-    ~0.2 s of driver time per construction (values identical — equality
-    pinned by test and oracle at three scale factors)."""
+    Three expressions differ by hash ``family``; everything else is shared:
+
+    - ``xxhash64`` (production): shingle ``g`` is the multi-arg xxhash64
+      over the k token slots at a position, minima are ``xxhash64(g,
+      seed)``, band keys ``xxhash64`` over the band's signature slots;
+    - ``md5`` (oracle-portable): ``g`` is the shingle string itself, minima
+      are the lexicographic ``md5(seed || ':' || g)`` hex, band keys
+      ``md5`` of the band's minima joined by ',' — every value reproducible
+      in DuckDB, and ``g`` is exactly a :func:`word_shingles` element.
+
+    A document with fewer than k tokens is one shingle: its whole token
+    string.  NULL text tokenizes like ``''`` (one empty shingle), so NULL
+    and empty documents pair with each other at Jaccard 1.0.  Duplicate
+    positions are fine: minima ignore multiplicity and ``collect_set``
+    takes the shingle set.
+
+    Pruning barrier: Catalyst duplicates the aggregate subtree into each
+    of its three consumers and column-prunes each copy — the band copies
+    would keep only the minima (HashAggregate) and the verification copies
+    only collect_set (ObjectHashAggregate), so the corpus would be shingled
+    and aggregated TWICE even though AQE reuses byte-identical exchanges.
+    Each consumer references BOTH ``shingles`` and the whole ``sig``
+    through value-preserving zero terms — ``least(0, size(shingles))`` and
+    ``pmod(xxhash64(sig), 1)`` are always 0 but not constant-foldable — so
+    all four exchange subtrees are canonically equal and AQE executes ONE
+    shuffle stage + three ReusedExchange (plan-asserted in tests).  If a
+    future optimizer folds them the plan degrades to the two-pass shape,
+    values unchanged.  Band buckets carry only (doc_id, band, band_hash):
+    the shingle arrays never enter the band shuffle."""
     rows_per_band = num_hashes // bands
-    shingle_args = ", ".join("element_at(toks, i + %d)" % j for j in range(k))
+    if family == "xxhash64":
+        shingle = (
+            "CASE WHEN n >= %d THEN xxhash64(%s)\n"
+            "              ELSE xxhash64(concat_ws(' ', toks)) END"
+            % (k, ", ".join("element_at(toks, i + %d)" % j for j in range(k)))
+        )
+        seed_min = "min(xxhash64(g, %d))"
+        band_key = "xxhash64(%s)"
+    else:  # md5
+        # slice() stops at the array end, so a short document's one
+        # position yields its whole token string — no CASE needed
+        shingle = "concat_ws(' ', slice(toks, i, %d))" % k
+        seed_min = "min(md5(concat_ws(':', '%d', g)))"
+        band_key = "md5(concat_ws(',', %s))"
     mins = ", ".join(
-        "min(xxhash64(g, %d)) AS h%d" % (s, s) for s in range(num_hashes)
+        (seed_min + " AS h%d") % (s, s) for s in range(num_hashes)
     )
     sig_array = ", ".join("h%d" % s for s in range(num_hashes))
     band_structs = ", ".join(
-        "struct(%d + least(0, size(shingles)) AS band, xxhash64(%s) AS band_hash)"
+        "struct(%d + least(0, size(shingles)) AS band, %s AS band_hash)"
         % (
             b,
-            ", ".join(
+            band_key
+            % ", ".join(
                 "element_at(sig, %d)" % (b * rows_per_band + r + 1)
                 for r in range(rows_per_band)
             ),
@@ -194,8 +186,7 @@ pos AS (
 ),
 per_shingle AS (
   SELECT doc_id,
-         CASE WHEN n >= {k} THEN xxhash64({shingle_args})
-              ELSE xxhash64(concat_ws(' ', toks)) END AS g
+         {shingle} AS g
   FROM pos
 ),
 sig_shingles AS (
@@ -227,9 +218,8 @@ JOIN shingled sb ON p.doc_id_b = sb.doc_id
 """.format(
         id_col=id_col,
         text_col=text_col,
-        k=k,
         km1=k - 1,
-        shingle_args=shingle_args,
+        shingle=shingle,
         sig_array=sig_array,
         mins=mins,
         band_structs=band_structs,
@@ -243,129 +233,16 @@ def minhash_candidate_pairs(
     k: int = 5,
     num_hashes: int = 32,
     bands: int = 8,
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """LSH banding: docs sharing any band bucket become candidate pairs,
     then candidates are verified with exact shingle Jaccard.
 
-    Shingles are 64-bit hash identities (:func:`shingle_hash_table`) —
-    Jaccard over hashed shingles equals string-shingle Jaccard up to
-    negligible collision probability, and the exploded construction stays
-    inside whole-stage codegen (the array-HOF form was 38x slower)."""
-    if not persist_intermediate:
-        # the uncached pipeline is pure dataflow — build it as one SQL
-        # string (:func:`_minhash_pairs_sql`) for a single driver
-        # round-trip; the cached form below needs the DataFrame handle to
-        # persist the signature table mid-pipeline
-        return df.sparkSession.sql(
-            _minhash_pairs_sql(id_col, text_col, k, num_hashes, bands),
-            corpus=df,
-        )
-    rows_per_band = num_hashes // bands
-    per_shingle = shingle_hash_table(df, id_col=id_col, text_col=text_col, k=k)
-    # ONE shuffle produces both the per-doc shingle SET (for the exact
-    # Jaccard verification) and the minhash signature (for banding):
-    # collect_set + the per-seed minima aggregate together, map-side partial
-    # expression trees built as single SQL strings: the column-API form
-    # crossed py4j per function call and cost ~0.3 s of DRIVER time per
-    # query construction (4x the expr form, values identical)
-    sig_shingles = (
-        per_shingle.groupBy("doc_id")
-        .agg(
-            F.expr("collect_set(g) AS shingles"),
-            *[
-                F.expr("min(xxhash64(g, %d)) AS h%d" % (seed, seed))
-                for seed in range(num_hashes)
-            ],
-        )
-        .select(
-            "doc_id",
-            "shingles",
-            F.expr(
-                "array(%s) AS sig"
-                % ", ".join("h%d" % s for s in range(num_hashes))
-            ),
-        )
-    )
-    if persist_intermediate:
-        # feeds the band buckets AND both verification joins; without
-        # materialization the plan rebuilds it three times (in a multi-stage
-        # production pipeline this is a written table)
-        sig_shingles = sig_shingles.persist()
-    # Pruning barrier (uncached form): Catalyst duplicates the aggregate
-    # subtree into each of its three consumers and column-prunes each copy —
-    # the band copies keep only the 32 minima (HashAggregate) and the
-    # verification copies only collect_set (ObjectHashAggregate), so the
-    # corpus is shingled and aggregated TWICE even though AQE reuses
-    # byte-identical exchanges.  Keeping every copy's column set identical
-    # (each consumer referencing BOTH `shingles` and the whole `sig` through
-    # value-preserving zero terms below) makes all four exchange subtrees
-    # canonically equal, and AQE executes ONE shuffle stage + three
-    # ReusedExchange: the shingle pass runs once.  `least(0, size(shingles))`
-    # and `pmod(xxhash64(sig), 1)` are always 0 but not constant-foldable
-    # (plan-asserted in tests); if a future optimizer learns to fold them the
-    # plan gracefully degrades to today's two-pass shape, values unchanged.
-    shingled = sig_shingles.select(
-        "doc_id",
-        F.expr(
-            "slice(shingles, 1, size(shingles) + pmod(xxhash64(sig), 1)) AS shingles"
-        ),
-    )
-    # band buckets carry ONLY (doc_id, band, band_hash): the heavy shingle
-    # arrays never enter the band shuffle — at corpus scale that is the
-    # difference between shuffling ids and shuffling the corpus.  The band
-    # structs are unrolled literals (bands is a config int), keeping the
-    # band-key hash a codegen'd multi-arg xxhash64 over signature slots.
-    band_structs = F.expr(
-        "array(%s)"
-        % ", ".join(
-            "struct(%d + least(0, size(shingles)) AS band, xxhash64(%s) AS band_hash)"
-            % (
-                b,
-                ", ".join(
-                    "element_at(sig, %d)" % (b * rows_per_band + r + 1)
-                    for r in range(rows_per_band)
-                ),
-            )
-            for b in range(bands)
-        )
-    )
-    buckets = sig_shingles.select(
-        "doc_id", F.explode(band_structs).alias("bucket")
-    ).select("doc_id", "bucket.band", "bucket.band_hash")
-    pairs = (
-        buckets.alias("l")
-        .join(
-            buckets.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_id_a"),
-            F.col("r.doc_id").alias("doc_id_b"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
-    # verification join re-attaches shingles only for the candidate set
-    return (
-        pairs.join(
-            shingled.select(F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("shingles_a")),
-            "doc_id_a",
-        )
-        .join(
-            shingled.select(F.col("doc_id").alias("doc_id_b"), F.col("shingles").alias("shingles_b")),
-            "doc_id_b",
-        )
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            F.round(
-                F.size(F.array_intersect("shingles_a", "shingles_b"))
-                / F.size(F.array_union("shingles_a", "shingles_b")),
-                6,
-            ).alias("jaccard"),
-        )
+    Shingles are 64-bit hash identities — Jaccard over hashed shingles
+    equals string-shingle Jaccard up to negligible collision probability.
+    Built by :func:`_minhash_pairs_sql`.  Nothing is cached: a multi-stage
+    production pipeline materializes the signature table to storage."""
+    return df.sparkSession.sql(
+        _minhash_pairs_sql(id_col, text_col, k, num_hashes, bands), corpus=df
     )
 
 
@@ -376,146 +253,18 @@ def portable_minhash_pairs(
     k: int = 5,
     num_hashes: int = 8,
     bands: int = 4,
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """MinHash+LSH with an oracle-portable hash family: per-seed minima of
     ``md5(seed || ':' || shingle)`` hex strings (lexicographic min), band
     keys ``md5(minima joined by ',')``.
 
-    Same plan shape as :func:`minhash_candidate_pairs` (band shuffle carries
-    only ids+band keys; exact-Jaccard verification joins) but every value is
-    reproducible in ANSI SQL/DuckDB — this is the variant the driver's
-    correctness gate hash-checks; production uses the xxhash64 path.
-
-    ``persist_intermediate=False`` recomputes the shingle table instead of
-    caching it — use when the caller runs many invocations in one session
-    (repeated gate/bench runs) and cached blocks would otherwise accumulate.
-    """
-    rows_per_band = num_hashes // bands
-    shingled = df.select(
-        F.col(id_col).alias("doc_id"),
-        word_shingles(F.col(text_col), k).alias("shingles"),
-    )
-    if persist_intermediate:
-        shingled = shingled.persist()
-    exploded = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
-    # single-string expression construction (same rationale as the
-    # xxhash64 path: the per-function Column form crosses py4j per call)
-    if not persist_intermediate:
-        # Uncached form: ONE combined aggregate feeds banding AND
-        # verification, with the same value-preserving pruning-barrier zero
-        # terms as :func:`minhash_candidate_pairs` (see the comment there) —
-        # without them, column pruning splits the aggregate copies into a
-        # minima flavor and a collect_set flavor and the interpreted
-        # word_shingles projection executes once per consumer (three times;
-        # the gate entry composes this query twice, so six).  collect_set
-        # over the exploded DISTINCT shingles equals the word_shingles
-        # array as a set — array_intersect/array_union sizes, and therefore
-        # every jaccard value, are identical.  (A NULL-text document has a
-        # NULL shingle array, is dropped by the explode here as it always
-        # was from the signature table, and can never appear in a pair.)
-        sig_shingles = exploded.groupBy("doc_id").agg(
-            F.expr("collect_set(shingle) AS shingles"),
-            *[
-                F.expr(
-                    "min(md5(concat_ws(':', '%d', shingle))) AS h%d"
-                    % (seed, seed)
-                )
-                for seed in range(num_hashes)
-            ],
-        )
-        all_h = ", ".join("h%d" % s for s in range(num_hashes))
-        band_structs = F.expr(
-            "array(%s)"
-            % ", ".join(
-                "struct(%d + least(0, size(shingles)) AS band,"
-                " md5(concat_ws(',', %s)) AS band_key)"
-                % (
-                    b,
-                    ", ".join(
-                        "h%d" % (b * rows_per_band + r)
-                        for r in range(rows_per_band)
-                    ),
-                )
-                for b in range(bands)
-            )
-        )
-        buckets = sig_shingles.select(
-            "doc_id",
-            F.explode(band_structs).alias("bucket"),
-        ).select("doc_id", "bucket.band", "bucket.band_key")
-        shingled = sig_shingles.select(
-            "doc_id",
-            F.expr(
-                "slice(shingles, 1, size(shingles)"
-                " + pmod(xxhash64(concat_ws(',', %s)), 1)) AS shingles"
-                % all_h
-            ),
-        )
-    else:
-        sig = exploded.groupBy("doc_id").agg(
-            *[
-                F.expr(
-                    "min(md5(concat_ws(':', '%d', shingle))) AS h%d"
-                    % (seed, seed)
-                )
-                for seed in range(num_hashes)
-            ]
-        )
-        band_structs = F.expr(
-            "array(%s)"
-            % ", ".join(
-                "struct(%d AS band, md5(concat_ws(',', %s)) AS band_key)"
-                % (
-                    b,
-                    ", ".join(
-                        "h%d" % (b * rows_per_band + r)
-                        for r in range(rows_per_band)
-                    ),
-                )
-                for b in range(bands)
-            )
-        )
-        buckets = sig.select(
-            "doc_id",
-            F.explode(band_structs).alias("bucket"),
-        ).select("doc_id", "bucket.band", "bucket.band_key")
-    pairs = (
-        buckets.alias("l")
-        .join(
-            buckets.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_id_a"),
-            F.col("r.doc_id").alias("doc_id_b"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
-    return (
-        pairs.join(
-            shingled.select(
-                F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("shingles_a")
-            ),
-            "doc_id_a",
-        )
-        .join(
-            shingled.select(
-                F.col("doc_id").alias("doc_id_b"), F.col("shingles").alias("shingles_b")
-            ),
-            "doc_id_b",
-        )
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            F.round(
-                F.size(F.array_intersect("shingles_a", "shingles_b"))
-                / F.size(F.array_union("shingles_a", "shingles_b")),
-                6,
-            ).alias("jaccard"),
-        )
+    Same pipeline as :func:`minhash_candidate_pairs` (one SQL template) but
+    every value is reproducible in ANSI SQL/DuckDB — this is the variant
+    the DuckDB oracle gate hash-checks; production uses the xxhash64
+    family."""
+    return df.sparkSession.sql(
+        _minhash_pairs_sql(id_col, text_col, k, num_hashes, bands, family="md5"),
+        corpus=df,
     )
 
 

@@ -216,8 +216,7 @@ def pagerank(
         # the final ranks table is already materialized (counted above),
         # so the iteration-support caches release here instead of leaking
         # in long-lived sessions; the returned ranks stays persisted and
-        # the CALLER owns its unpersist (same contract as
-        # minhash_candidate_pairs(persist_intermediate=...))
+        # the CALLER owns its unpersist
         edges_w.unpersist()
         nodes.unpersist()
         if dang is not None:

@@ -188,8 +188,7 @@ def unigram_logprob_features(
     ``persist_vocab`` (default True) caches the vocabulary between the
     N/V collect and the score join — without it the vocab aggregate (a
     full corpus scan) runs twice; pass False only in repeated-query
-    harnesses that must not accumulate cache blocks (the oracle gate),
-    mirroring ``minhash_candidate_pairs(persist_intermediate=...)``.
+    harnesses that must not accumulate cache blocks (the oracle gate).
 
     Cache lifecycle: with ``persist_vocab=True`` the cached vocabulary
     OUTLIVES the returned (lazy) plan — the function cannot unpersist it

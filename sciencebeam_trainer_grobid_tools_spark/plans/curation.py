@@ -102,9 +102,8 @@ def curate_corpus(
     honest trade at 100 TB: either pay the recompute (cheap codegen
     stages, IO-bound) or pass ``persist_intermediate=True`` to cache the
     post-quality intermediate so everything downstream reads it once —
-    the caller owns the unpersist (same contract as
-    ``minhash_candidate_pairs(persist_intermediate=...)``; a production
-    run would checkpoint to storage here instead)."""
+    the caller owns the unpersist (a production run would checkpoint to
+    storage here instead)."""
     out = df
     if blocked_domains is not None:
         # FIRST, before any content work: the blocklist is the cheapest

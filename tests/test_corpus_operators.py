@@ -35,6 +35,9 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+_MINHASH_FAMILIES = [dedup.minhash_candidate_pairs, dedup.portable_minhash_pairs]
+
+
 class TestDedup:
     def test_exact_duplicate_groups(self, docs):
         groups = dedup.exact_duplicate_groups(docs).collect()
@@ -54,66 +57,98 @@ class TestDedup:
         near = pairs.get((0, 2)) or pairs.get((1, 2))
         assert near is not None and 0.3 < near < 1.0
 
-    def test_minhash_sql_path_equals_column_path(self, spark, docs):
-        """The uncached form is built as one SQL string; the cached form
-        builds the same query through the Column API.  Same rows, columns
-        and jaccard values — the SQL text must stay expression-identical."""
-        a = sorted(
-            map(
-                tuple,
-                dedup.minhash_candidate_pairs(
-                    docs, k=3, num_hashes=16, bands=8, persist_intermediate=False
-                ).collect(),
-            )
-        )
-        b = sorted(
-            map(
-                tuple,
-                dedup.minhash_candidate_pairs(
-                    docs, k=3, num_hashes=16, bands=8, persist_intermediate=True
-                ).collect(),
-            )
-        )
-        assert a == b and len(a) > 0
-
-    def test_minhash_uncached_single_shingle_pass(self, spark, docs):
-        """Plan pin for the round-11 single-pass shape: with
-        ``persist_intermediate=False`` the pruning-barrier terms keep every
-        consumer's copy of the sig/shingles aggregate canonically identical,
-        so AQE executes ONE shuffle stage (the source is scanned and
-        shingled once) and the other consumers are ReusedExchange.  If a
-        future optimizer folds the zero terms this degrades to the two-pass
-        shape — this test is the tripwire."""
+    def test_minhash_uncached_single_shingle_pass(self, spark):
+        """Plan pin for the single-pass shape, on both hash families: the
+        pruning-barrier terms keep every consumer's copy of the
+        sig/shingles aggregate canonically identical, so AQE executes ONE
+        shuffle stage (the source is scanned and shingled once) and the
+        other consumers are ReusedExchange.  If a future optimizer folds
+        the zero terms this degrades to the two-pass shape — this test is
+        the tripwire."""
         import re
 
-        # fresh rows, NOT the shared ``docs`` fixture: an earlier test's
-        # persist_intermediate=True run leaves a plan-keyed cache entry the
-        # CacheManager would substitute into this uncached plan
+        # fresh rows, NOT the shared ``docs`` fixture, so no cached plan
+        # from another test can be substituted into this one
         base = "one two three four five six seven eight nine ten"
         local = spark.createDataFrame(
             [(0, base), (1, base), (2, base.replace("ten", "eleven"))],
             "doc_id long, text string",
         )
-        df = dedup.minhash_candidate_pairs(
-            local, k=3, num_hashes=16, bands=8, persist_intermediate=False
-        )
-        df.collect()
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
+        for pairs_fn in _MINHASH_FAMILIES:
+            df = pairs_fn(local, k=3, num_hashes=16, bands=8)
+            df.collect()
+            plan = df._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                    "formatted"
+                )
             )
+            final = plan.split("== Initial Plan ==")[0]
+            scans = len(re.findall(r"Scan ExistingRDD|LocalTableScan", final))
+            reused = len(re.findall(r"\bReusedExchange\b", final))
+            assert scans == 1, "%s: corpus must be scanned once, saw %d:\n%s" % (
+                pairs_fn.__name__,
+                scans,
+                final,
+            )
+            assert reused >= 3, "%s: expected >=3 ReusedExchange, saw %d:\n%s" % (
+                pairs_fn.__name__,
+                reused,
+                final,
+            )
+
+    @pytest.mark.parametrize(
+        "pairs_fn", _MINHASH_FAMILIES, ids=lambda fn: fn.__name__
+    )
+    def test_minhash_null_and_empty_text_pair(self, spark, pairs_fn):
+        """NULL text tokenizes like '' (one empty shingle), so NULL and
+        empty documents pair with each other at Jaccard 1.0 — and with
+        nothing else."""
+        df = spark.createDataFrame(
+            [(0, None), (1, ""), (2, "some real text with five tokens")],
+            "doc_id long, text string",
         )
-        final = plan.split("== Initial Plan ==")[0]
-        scans = len(re.findall(r"Scan ExistingRDD|LocalTableScan", final))
-        reused = len(re.findall(r"\bReusedExchange\b", final))
-        assert scans == 1, "corpus must be scanned once, saw %d:\n%s" % (
-            scans,
-            final,
+        got = {
+            (r["doc_id_a"], r["doc_id_b"]): r["jaccard"]
+            for r in pairs_fn(df, k=3, num_hashes=16, bands=8).collect()
+        }
+        assert got == {(0, 1): 1.0}
+
+    def test_portable_minhash_jaccard_equals_word_shingles(self, spark, docs):
+        """The md5 family's shingle ``g`` is exactly a ``word_shingles``
+        element: every portable pair's Jaccard equals the exact n-gram
+        baseline's for the same pair, on the fixture plus edge rows (NULL,
+        '', fewer than k tokens, whitespace runs, mixed case, repeats)."""
+        base = "the quick brown fox jumps over the lazy dog near the river bank today"
+        edge = spark.createDataFrame(
+            [
+                (100, None),
+                (101, ""),
+                (102, "two tokens"),
+                (103, "two tokens"),
+                (104, "  spaced   out\n\ntext  here  "),
+                (105, base.upper()),
+                (106, "a a a a a a a a a"),
+                (107, "a a a a a a a a a a a a"),
+            ],
+            "doc_id long, text string",
         )
-        assert reused >= 3, "expected >=3 ReusedExchange, saw %d:\n%s" % (
-            reused,
-            final,
-        )
+        frame = docs.unionByName(edge)
+        for k in (2, 3, 5):
+            want = {
+                (r["doc_id_a"], r["doc_id_b"]): r["jaccard"]
+                for r in dedup.ngram_jaccard_pairs(
+                    frame, k=k, min_jaccard=0.0
+                ).collect()
+            }
+            # one row per band: any shared minimum makes a candidate
+            got = dedup.portable_minhash_pairs(
+                frame, k=k, num_hashes=16, bands=16
+            ).collect()
+            assert len(got) >= 8, (k, got)
+            assert any(0.0 < r["jaccard"] < 1.0 for r in got), (k, got)
+            for r in got:
+                pair = (r["doc_id_a"], r["doc_id_b"])
+                assert r["jaccard"] == want[pair], (k, pair, r["jaccard"], want[pair])
 
     def test_ngram_jaccard_exact_baseline(self, docs):
         pairs = {

@@ -469,8 +469,7 @@ class _RefAnchorParser:
     markup inside comments or ``<script>`` CDATA is NOT markup.  Used
     only to BOUND the divergence of the codegen regex fast path
     (operators/linkgraph.py extract_anchors) on malformed real-web
-    markup — the honest DOM-block parser for content extraction lives
-    in operators/domblocks.py."""
+    markup."""
 
     def __init__(self):
         from html.parser import HTMLParser
