@@ -15,6 +15,12 @@ Layout:
   plans/      end-to-end Spark pipelines (the flagship extraction plan)
   functions/  Spark column-expression helpers
   streaming/  incremental / resumable execution
+  zipcache    stat-guarded zip directory reloads, installed in PySpark
+              workers only
 """
 
+from .zipcache import install_in_worker as _install_in_worker
+
 __version__ = "0.1.0"
+
+_install_in_worker()

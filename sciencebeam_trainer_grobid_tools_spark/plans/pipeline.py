@@ -33,6 +33,7 @@ from ..operators.targets import (
 )
 from ..kernel.doc import tokenize_lines
 from ..sources.corpus import DEFAULT_XML_MAPPING
+from ..zipcache import install_in_worker
 
 SPAN_TYPE = "array<struct<field:string,start:int,end:int,text:string>>"
 
@@ -201,6 +202,10 @@ def annotate_documents(
     max_bytes = _resolve_max_doc_bytes(max_doc_bytes)
 
     def annotate_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        # the package installs the guard on import in a worker; a custom
+        # daemon module (spark.python.daemon.module) may have imported the
+        # package before pyspark.worker, so check again here
+        install_in_worker()
         for pdf in batches:
             if kernel_counter is not None:
                 kernel_counter.add(len(pdf))

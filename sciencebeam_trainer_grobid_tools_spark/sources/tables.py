@@ -35,12 +35,36 @@ def append_annotated(annotated: DataFrame, location: str, fmt: str = "parquet") 
     annotated.write.mode("append").format(fmt).save(location)
 
 
+class CompletedOutputUnreadable(RuntimeError):
+    """The output table has data files but Spark cannot read them (e.g. a
+    damaged parquet footer).  Resuming as if nothing were done would append a
+    second copy of every finished document, so the run stops instead."""
+
+
+def _has_part_files(spark: SparkSession, location: str) -> bool:
+    """Whether ``location`` holds any ``part-`` data file (Hadoop filesystem
+    API, so any scheme Spark reads works)."""
+    jvm = spark.sparkContext._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(location.rstrip("/") + "/part-*")
+    fs = pattern.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    matches = fs.globStatus(pattern)
+    return matches is not None and len(matches) > 0
+
+
 def read_completed_urls(
     spark: SparkSession, location: str, fmt: str = "parquet"
 ) -> Optional[DataFrame]:
     """The resume snapshot (reference S2): the set of already-produced urls.
-    Returns None when no output exists yet (first run)."""
+
+    Returns None when no output exists yet: no directory, or no ``part-``
+    file in it (a first write that died leaves only ``_temporary``).
+    Raises ``CompletedOutputUnreadable`` when part files exist but cannot
+    be read."""
+    if not _has_part_files(spark, location):
+        return None
     try:
         return spark.read.format(fmt).load(location).select("url")
-    except Exception:
-        return None
+    except Exception as exc:
+        raise CompletedOutputUnreadable(
+            "completed output at %s has part files but cannot be read" % location
+        ) from exc

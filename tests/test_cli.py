@@ -551,6 +551,37 @@ class TestAnnotateCorpusCli:
         counters = annotate_corpus.main(argv)
         assert counters == {"chunks": 0, "rows": 0}
 
+    def test_limit_chunks_come_from_the_planned_urls(self, spark, tmp_path):
+        """--limit 30 --chunk-size 10: each chunk writes 10 distinct urls of
+        the 30 the plan numbered, and a second run finds nothing left."""
+        import json
+
+        from sciencebeam_trainer_grobid_tools_spark.cli import annotate_corpus
+        from sciencebeam_trainer_grobid_tools_spark.sources.corpus import (
+            corpus_dataframe,
+        )
+
+        corpus_path = str(tmp_path / "corpus")
+        corpus_dataframe(spark, 40, seed=5, partitions=3).write.parquet(corpus_path)
+        out_dir = str(tmp_path / "out")
+        argv = [
+            "--input-path", corpus_path,
+            "--output-path", out_dir,
+            "--chunk-size", "10",
+            "--limit", "30",
+        ]
+        assert annotate_corpus.main(argv) == {"chunks": 3, "rows": 30}
+        manifest = [
+            json.loads(line)
+            for line in open(tmp_path / "out" / "manifest.jsonl", encoding="utf-8")
+        ]
+        assert [m["rows"] for m in manifest] == [10, 10, 10]
+        urls = [
+            r.url for r in spark.read.parquet(out_dir + "/annotated").select("url").collect()
+        ]
+        assert len(urls) == len(set(urls)) == 30
+        assert annotate_corpus.main(argv) == {"chunks": 0, "rows": 0}
+
     def test_max_doc_bytes_flag_routes_oversized_docs(self, spark, tmp_path):
         """--max-doc-bytes: oversized payloads become accounted
         oversized_document error rows instead of entering the kernel."""

@@ -1768,6 +1768,90 @@ class TestResumable:
         assert [m["rows"] for m in manifest] == [10, 10]
         assert all(m["alignment_hits"] >= 0 and "errors" in m for m in manifest)
 
+    @pytest.mark.parametrize(
+        "partitions,chunk_size,sizes", [(2, 10, [10, 10, 10]), (3, 7, [7, 7, 7, 7, 2])]
+    )
+    def test_partial_run_then_resume(self, spark, tmp_path, partitions, chunk_size, sizes):
+        """A run cut after one chunk, then resumed: the chunks are exact,
+        the sink holds every corpus url once, and the kernel sees every
+        document exactly once over both runs."""
+        import json
+
+        from sciencebeam_trainer_grobid_tools_spark.sources.corpus import corpus_dataframe
+        from sciencebeam_trainer_grobid_tools_spark.streaming.resume import run_resumable
+
+        docs = corpus_dataframe(spark, 30, seed=11, partitions=partitions)
+        out = str(tmp_path / "out")
+        counter = spark.sparkContext.accumulator(0)
+        first = run_resumable(
+            spark, docs, out, chunk_size=chunk_size, max_chunks=1,
+            kernel_counter=counter,
+        )
+        assert first == {"chunks": 1, "rows": chunk_size}
+        rest = run_resumable(
+            spark, docs, out, chunk_size=chunk_size, kernel_counter=counter
+        )
+        assert rest["rows"] == 30 - chunk_size
+        manifest = [
+            json.loads(line)
+            for line in (tmp_path / "out" / "manifest.jsonl").read_text().splitlines()
+        ]
+        assert [m["rows"] for m in manifest] == sizes
+        sink = [r.url for r in spark.read.parquet(out + "/annotated").select("url").collect()]
+        assert len(sink) == len(set(sink))
+        assert set(sink) == {r.url for r in docs.select("url").collect()}
+        assert counter.value == 30
+
+    def test_run_resumable_releases_its_plan(self, spark, tmp_path):
+        from sciencebeam_trainer_grobid_tools_spark.sources.corpus import corpus_dataframe
+        from sciencebeam_trainer_grobid_tools_spark.streaming.resume import run_resumable
+
+        persistent = spark.sparkContext._jsc.getPersistentRDDs
+        before = persistent().size()
+        docs = corpus_dataframe(spark, 12, seed=3, partitions=2)
+        result = run_resumable(spark, docs, str(tmp_path / "out"), chunk_size=5)
+        assert result == {"chunks": 3, "rows": 12}
+        assert persistent().size() == before
+
+
+class TestReadCompletedUrls:
+    def test_missing_directory_is_a_first_run(self, spark, tmp_path):
+        from sciencebeam_trainer_grobid_tools_spark.sources.tables import read_completed_urls
+
+        assert read_completed_urls(spark, str(tmp_path / "annotated")) is None
+
+    def test_directory_without_part_files_is_a_first_run(self, spark, tmp_path):
+        from sciencebeam_trainer_grobid_tools_spark.sources.tables import read_completed_urls
+
+        location = tmp_path / "annotated"
+        (location / "_temporary" / "0").mkdir(parents=True)
+        (location / "_SUCCESS").write_text("")
+        assert read_completed_urls(spark, str(location)) is None
+
+    def test_damaged_part_file_raises_with_the_path(self, spark, tmp_path):
+        """A damaged sink must stop the run: returning None would append a
+        second copy of every finished document."""
+        from sciencebeam_trainer_grobid_tools_spark.sources.tables import (
+            CompletedOutputUnreadable,
+            read_completed_urls,
+        )
+        from sciencebeam_trainer_grobid_tools_spark.streaming.resume import run_resumable
+
+        location = tmp_path / "out" / "annotated"
+        spark.createDataFrame([("u%d" % i,) for i in range(5)], "url string").coalesce(
+            1
+        ).write.parquet(str(location))
+        part = sorted(location.glob("part-*"))[0]
+        data = bytearray(part.read_bytes())
+        data[-16:] = bytes(16)  # footer length and magic gone
+        part.write_bytes(bytes(data))
+        with pytest.raises(CompletedOutputUnreadable, match=str(location)):
+            read_completed_urls(spark, str(location))
+        docs = spark.createDataFrame([("u9", "<p>x</p>")], "url string, html string")
+        with pytest.raises(CompletedOutputUnreadable):
+            run_resumable(spark, docs, str(tmp_path / "out"), chunk_size=5)
+        assert sorted(p.name for p in location.glob("part-*")) == [part.name]
+
 
 class TestIdentifierExtraction:
     def test_extracts_ids_from_text(self, spark):
