@@ -15,6 +15,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from sciencebeam_trainer_grobid_tools_spark.memo import IdentityMemo
 from sciencebeam_trainer_grobid_tools_spark.operators import (
     dedup,
     packing,
@@ -41,24 +42,14 @@ TABLES = (
 # footer/schema read, py4j round-trips), and the repeated-timing protocol
 # re-builds every query per iteration.  Reusing the immutable DataFrame
 # handle removes that driver-side constant; every action still computes
-# from the parquet files.  Entries hold the session strongly so a live
-# key's id can never be reused; bounded FIFO.
-from collections import OrderedDict as _OrderedDict
-
-_LOAD_CACHE: "_OrderedDict[tuple, tuple]" = _OrderedDict()
-_SPREAD_CACHE: "_OrderedDict[int, tuple]" = _OrderedDict()
+# from the parquet files.
+_LOAD_CACHE = IdentityMemo(64)
+_SPREAD_CACHE = IdentityMemo(64)
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), sf_dir.rstrip("/"), name)
-    hit = _LOAD_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    df = spark.read.parquet("%s/%s.parquet" % (sf_dir.rstrip("/"), name))
-    _LOAD_CACHE[key] = (spark, df)
-    while len(_LOAD_CACHE) > 64:
-        _LOAD_CACHE.popitem(last=False)
-    return df
+    path = "%s/%s.parquet" % (sf_dir.rstrip("/"), name)
+    return _LOAD_CACHE.get(spark, path, lambda: spark.read.parquet(path))
 
 
 def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -74,15 +65,7 @@ def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     bench iteration otherwise.
     """
     target = spark.sparkContext.defaultParallelism
-    key = id(df)
-    hit = _SPREAD_CACHE.get(key)
-    if hit is not None and hit[0] is df:
-        n = hit[1]
-    else:
-        n = df.rdd.getNumPartitions()
-        _SPREAD_CACHE[key] = (df, n)
-        while len(_SPREAD_CACHE) > 64:
-            _SPREAD_CACHE.popitem(last=False)
+    n = _SPREAD_CACHE.get(df, None, lambda: df.rdd.getNumPartitions())
     if n < target:
         return df.repartition(target)
     return df
@@ -244,10 +227,9 @@ def q_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The two event-window aggregates in ONE labeled entry (same-family
     gate merge, freeing a 50-cap slot for `crawl_snapshot_diff`):
     `majority_vote` — per-user majority with deterministic ties (A2
-    analogue); `hourly_rollup` — the tumbling time-window aggregate
-    (streaming-shaped, batch-executed; its streaming twin is pytest-
-    pinned in tests/test_streaming.py).  NULL-padded variant columns,
-    the established merge shape."""
+    analogue); `hourly_rollup` — the tumbling time-window aggregate,
+    batch-executed.  NULL-padded variant columns, the established merge
+    shape."""
     mv = q_event_majority_vote(spark, sf_dir).select(
         F.lit("majority_vote").alias("variant"),
         "user_id",
@@ -1386,7 +1368,7 @@ def q_docs_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embeddings: similarity search
 
 
-_QUERY_VEC_CACHE: "_OrderedDict[tuple, tuple]" = _OrderedDict()
+_QUERY_VEC_CACHE = IdentityMemo(16)
 
 
 def _query_vector(spark: SparkSession, sf_dir: str):
@@ -1396,52 +1378,23 @@ def _query_vector(spark: SparkSession, sf_dir: str):
     (each ANN entry means "top-k closest to vector 0"), not a query result;
     it is still read from parquet once per session, and re-fetching it ran
     a full scan+filter Spark job inside every timed construction."""
-    key = (id(spark), sf_dir.rstrip("/"))
-    hit = _QUERY_VEC_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    row = (
-        _load(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == 0)
-        .select("embedding")
-        .collect()[0]
-    )
-    vec = [float(v) for v in row["embedding"]]
-    _QUERY_VEC_CACHE[key] = (spark, vec)
-    while len(_QUERY_VEC_CACHE) > 16:
-        _QUERY_VEC_CACHE.popitem(last=False)
-    return vec
+
+    def build() -> list:
+        row = (
+            _load(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") == 0)
+            .select("embedding")
+            .collect()[0]
+        )
+        return [float(v) for v in row["embedding"]]
+
+    return _QUERY_VEC_CACHE.get(spark, sf_dir.rstrip("/"), build)
 
 
 def q_emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings = _load(spark, sf_dir, "embeddings")
     return similarity.cosine_topk(
         embeddings, _query_vector(spark, sf_dir), k=10, round_digits=4
-    )
-
-
-def q_emb_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed ANN — oracle-checked: hyperplanes are deterministic
-    (seed 42), so DuckDB recomputes the exact bucket assignments, the
-    hamming<=1 probe set, and the candidate re-rank; the gate verifies the
-    bucketing machinery itself, not a recall proxy."""
-    embeddings = _load(spark, sf_dir, "embeddings")
-    return similarity.lsh_topk(
-        embeddings, _query_vector(spark, sf_dir), k=10, round_digits=4
-    )
-
-
-def q_emb_lsh_prebucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized-bucket LSH ANN: the ingest stage stores ``lsh_bucket``
-    (add_lsh_bucket), the query filters ONLY the stored column (probe set
-    computed driver-side) and re-ranks — the serving-scale pattern where the
-    filter becomes partition pruning on a bucket-partitioned layout.  The
-    oracle recomputes bucket assignments, probe set, and re-rank, so the
-    returned bucket values check the materialization itself."""
-    embeddings = _load(spark, sf_dir, "embeddings")
-    prebucketed = similarity.add_lsh_bucket(embeddings)
-    return similarity.lsh_topk_prebucketed(
-        prebucketed, _query_vector(spark, sf_dir), k=10, round_digits=4
     )
 
 
@@ -1786,7 +1739,7 @@ def q_align_exact_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # flagship: full extraction + alignment pipeline
 
 
-_CORPUS_CACHE: "_OrderedDict[tuple, tuple]" = _OrderedDict()
+_CORPUS_CACHE = IdentityMemo(16)
 
 
 def _documents_as_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1808,10 +1761,12 @@ def _documents_as_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes after the shuffle).  Same key (xxhash64(url)) and partition count
     as annotate_documents' own spread, so row placement is unchanged —
     callers skip the second repartition."""
-    key = (id(spark), sf_dir.rstrip("/"))
-    hit = _CORPUS_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    return _CORPUS_CACHE.get(
+        spark, sf_dir.rstrip("/"), lambda: _build_corpus(spark, sf_dir)
+    )
+
+
+def _build_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load(spark, sf_dir, "documents").select(
         F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
         F.col("text"),
@@ -1833,17 +1788,13 @@ def _documents_as_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         title,
         F.lit("</article-title></title-group></article-meta></front></article>"),
     )
-    corpus = docs.select(
+    return docs.select(
         "url",
         F.encode(html, "utf-8").alias("html"),
         F.col("text"),
         F.col("lang"),
         target_xml.alias("target_xml"),
     )
-    _CORPUS_CACHE[key] = (spark, corpus)
-    while len(_CORPUS_CACHE) > 16:
-        _CORPUS_CACHE.popitem(last=False)
-    return corpus
 
 
 def q_flagship_extract_align(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4003,9 +3954,9 @@ _EMB_IVF_TRAIN_STEP_ORACLE_SQL = """
 
 
 def _lsh_topk_oracle_sql() -> str:
-    """DuckDB replica of q_emb_lsh_topk: the seed-42 hyperplanes are inlined
-    as literals; buckets, the hamming<=1 probe set and the cosine re-rank
-    are recomputed in SQL (dim=64 per TESTDATA.md)."""
+    """DuckDB replica of q_emb_lsh's ``adhoc`` variant: the seed-42
+    hyperplanes are inlined as literals; buckets, the hamming<=1 probe set
+    and the cosine re-rank are recomputed in SQL (dim=64 per TESTDATA.md)."""
     from sciencebeam_trainer_grobid_tools_spark.operators.similarity import (
         random_hyperplanes,
     )
@@ -4047,9 +3998,10 @@ def _lsh_topk_oracle_sql() -> str:
 
 
 def _lsh_prebucketed_oracle_sql() -> str:
-    """DuckDB replica of q_emb_lsh_prebucketed: identical bucket/probe/re-rank
-    math, but the result carries the bucket column so the stored-column
-    materialization (add_lsh_bucket) is value-checked too."""
+    """DuckDB replica of q_emb_lsh's ``prebucketed`` variant: identical
+    bucket/probe/re-rank math, but the result carries the bucket column so
+    the stored-column materialization (add_lsh_bucket) is value-checked
+    too."""
     from sciencebeam_trainer_grobid_tools_spark.operators.similarity import (
         random_hyperplanes,
     )

@@ -115,7 +115,7 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # loadavg+steal gate (disable with SPARK_GRAFT_BENCH_GATE=0): the
-    # same discipline as scripts/quiet_scaling.py, so per-query numbers
+    # same discipline as scripts/scaling_bench.py, so per-query numbers
     # stop needing host-contention forensics round over round
     gate = None
     if os.environ.get("SPARK_GRAFT_BENCH_GATE", "1") != "0":
@@ -236,7 +236,7 @@ def main() -> None:
         "steal_monitor": monitor.stats(),
     }
     # embed the committed loadavg-gated scaling + skew samples (scripts/
-    # quiet_scaling.py, scripts/skew_bench.py) so the round's BENCH json
+    # scaling_bench.py, scripts/skew_bench.py) so the round's BENCH json
     # records that evidence without re-measuring under unknown load
     bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
     for name in (

@@ -28,11 +28,11 @@ import configparser
 import json
 import re
 import xml.etree.ElementTree as ET
-from collections import OrderedDict
 from itertools import chain
 from typing import Dict, List, Optional, Set, Tuple, Union
 
 from ..kernel.normalize import strip_whitespace
+from ..memo import IdentityMemo
 from .annotate import TagConfig, TargetAnnotation
 from .xpath import XPathContext
 
@@ -505,27 +505,18 @@ class _FieldPlan:
         self.xpaths = parse_xpaths(mapping[field])
 
 
-# Keyed by id() of the mapping dict; each entry keeps a STRONG reference to
-# the mapping so a live cache key's id can never be reused by a new dict.
-# Bounded FIFO — mapping configs are tiny and few per process.
-_FIELD_PLAN_CACHE: "OrderedDict[int, Tuple[Dict[str, str], List[_FieldPlan]]]" = (
-    OrderedDict()
-)
-_FIELD_PLAN_CACHE_MAX = 16
+# Owned by the mapping dict; mapping configs are tiny and few per process.
+_FIELD_PLAN_CACHE = IdentityMemo(16)
 
 
 def _field_plans(mapping: Dict[str, str]) -> List[_FieldPlan]:
-    key = id(mapping)
-    hit = _FIELD_PLAN_CACHE.get(key)
-    if hit is not None and hit[0] is mapping:
-        return hit[1]
-    plans = [
-        _FieldPlan(mapping, field) for field in mapping.keys() if "." not in field
-    ]
-    _FIELD_PLAN_CACHE[key] = (mapping, plans)
-    while len(_FIELD_PLAN_CACHE) > _FIELD_PLAN_CACHE_MAX:
-        _FIELD_PLAN_CACHE.popitem(last=False)
-    return plans
+    return _FIELD_PLAN_CACHE.get(
+        mapping,
+        None,
+        lambda: [
+            _FieldPlan(mapping, field) for field in mapping.keys() if "." not in field
+        ],
+    )
 
 
 def xml_root_to_target_annotations(

@@ -39,6 +39,8 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..memo import IdentityMemo
+
 # the Gopher "must contain at least 2 of" stopword list (Rae et al. 2021)
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
@@ -313,13 +315,9 @@ def c4_clean(
 # it on every timed iteration).  Column objects wrap immutable unresolved
 # expressions and are safely reusable across .select() calls — this
 # projection already uses the same stat Columns twice in one plan (the
-# emitted stats and the inline g_keep).  Keyed on the py4j gateway id so a
-# fresh driver JVM can never see a stale JavaObject; bounded FIFO, same
-# pattern as the entry-point DataFrame-handle memo and the target-mapping
-# field-plan cache.
-from collections import OrderedDict as _OrderedDict
-
-_FEATURE_COLS_CACHE: "_OrderedDict[tuple, tuple]" = _OrderedDict()
+# emitted stats and the inline g_keep).  Owned by the py4j gateway so a
+# fresh driver JVM can never see a stale JavaObject.
+_FEATURE_COLS_CACHE = IdentityMemo(16)
 
 
 def _derived_feature_columns(
@@ -327,11 +325,16 @@ def _derived_feature_columns(
 ) -> list:
     from pyspark import SparkContext
 
-    gateway = SparkContext._gateway
-    key = (id(gateway), id_col, text_col, num_buckets, threshold)
-    hit = _FEATURE_COLS_CACHE.get(key)
-    if hit is not None and hit[0] is gateway:
-        return hit[1]
+    return _FEATURE_COLS_CACHE.get(
+        SparkContext._gateway,
+        (id_col, text_col, num_buckets, threshold),
+        lambda: _build_feature_columns(id_col, text_col, num_buckets, threshold),
+    )
+
+
+def _build_feature_columns(
+    id_col: str, text_col: str, num_buckets: int, threshold: float
+) -> list:
     stats = _gopher_stat_columns(F.col(text_col))
     kept, clean, n_sentences, has_brace, has_lorem = _c4_parts(
         F.col(text_col), min_line_words=5
@@ -339,7 +342,7 @@ def _derived_feature_columns(
     clf_cols = inline_classifier_columns(
         F.col(text_col), num_buckets=num_buckets, threshold=threshold
     )
-    cols = [
+    return [
         F.col(id_col).alias("doc_id"),
         *(expr.alias(name) for name, expr in stats.items()),
         F.size(F.split(F.col(text_col), "\n")).alias("c4_total_lines"),
@@ -354,10 +357,6 @@ def _derived_feature_columns(
         ).alias("g_keep"),
         *(expr.alias(name) for name, expr in clf_cols.items()),
     ]
-    _FEATURE_COLS_CACHE[key] = (gateway, cols)
-    while len(_FEATURE_COLS_CACHE) > 16:
-        _FEATURE_COLS_CACHE.popitem(last=False)
-    return cols
 
 
 def web_filter_features(

@@ -1,57 +1,71 @@
-"""Two-cluster-size scaling bench (the BASELINE.json north_rule criterion).
+"""The two-cluster-size scaling criterion (BASELINE.json north_rule).
 
-No real multi-HOST cluster exists in this sandbox; the closest faithful
-evidence is the ``--local-cluster`` mode (CANONICAL since round 4): the
-identical flagship job on Spark's ``local-cluster[n, cores, mem]`` master at
-n=1 vs n=4 — a real standalone master, n separate worker JVMs, n separate
-CoarseGrainedExecutorBackend JVM processes, Spark's own scheduler/shuffle
-between them, and the package shipped to executors as a --py-files zip (the
-north_rule deployment shape).  Each leg is loadavg-gated and core-pinned to
-its executor-core budget + 2 driver cores; efficiency = (rate_4N/rate_N)/4,
-median of SCALING_BENCH_SAMPLES samples, min-of-RUNS within a leg.  The
-executor JVM pids and Spark's executor registry are recorded as evidence
-that the parallelism really crosses JVM boundaries.
+No real multi-host cluster exists in this sandbox; the closest faithful
+evidence is the identical flagship job on Spark's ``local-cluster[n, c,
+mem]`` master at n=1 vs n=4: a real standalone master, n worker JVMs, n
+separate CoarseGrainedExecutorBackend JVMs, Spark's own scheduler and
+shuffle between them, and the package shipped to executors as a
+--py-files zip (the north_rule deployment shape).  Each leg is
+loadavg-gated and core-pinned to its executor cores + 2 driver cores, so
+the N leg models one c-core node and the 4N leg four of them;
+``efficiency = (rate_4N / rate_N) / 4`` with min-of-RUNS within a leg.
+Executors run with ``-XX:ActiveProcessorCount=c``: on a real cluster each
+executor JVM owns a c-core node and sizes its GC, JIT and ForkJoin pools
+for c cores, while under taskset on one box it would read the whole
+pinned span.
 
-The older hand-rolled emulation (default mode, kept for round-over-round
-comparability) emulates executors as separate pinned processes on one box:
+One batch, in order:
 
-- **N leg**: one executor = one subprocess running Spark local[4], pinned to
-  cores 0-3, processing the full pre-materialized corpus.
-- **4N leg**: four executors = four concurrent subprocesses, each Spark
-  local[4] pinned to its own disjoint 4-core set, each processing a disjoint
-  hash shard (``pmod(xxhash64(url), 4) == k``) of the same corpus — exactly
-  how a 4-executor cluster partitions by url-hash.  The leg's wall-clock is
-  the slowest executor (stragglers count against us, as they would on a real
-  cluster).
-
-``efficiency = (rate_4N / rate_N) / 4`` (target >= 0.8).
-
-A secondary single-JVM variant (local[4] vs local[16], both core-pinned) is
-available via ``--single-jvm``; it under-reports because 16 workers in one
-JVM/box share memory bandwidth that 4 real executor nodes would not.
+1. the quiet-host gate (loadavg and /proc/stat steal, up to 1800 s);
+2. a memory-bandwidth probe (numpy triad GB/s at 1, 6 and 24 workers),
+   the contention axis steal cannot see;
+3. a steal monitor, running until the batch ends;
+4. a Spark-free control: the raw C alignment kernel under plain
+   multiprocessing at the two protocol widths;
+5. SCALING_BENCH_SAMPLES gated samples, each an N leg and a 4N leg;
+6. the kernel control again, in the same host window;
+7. the batch is appended to the record file and the headline (per
+   executor core count, over every batch's samples) is recomputed.
 
 Usage:
-    python scripts/scaling_bench.py                 # executor-emulation mode
-    python scripts/scaling_bench.py --single-jvm    # single-JVM levels mode
+    python scripts/scaling_bench.py BENCH/quiet_scaling_rNN.json
+
+Env: SCALING_BENCH_DOCS (64000; the corpus is materialized once under
+.bench/scaling_corpus_<docs>), SCALING_BENCH_EXEC_CORES (6),
+SCALING_BENCH_RUNS (2), SCALING_BENCH_SAMPLES (3).
+
+``--cluster-worker <n_executors> <runs>`` runs one leg in the current
+process and prints its JSON; the batch starts each leg that way under
+taskset.
 """
 
 import json
+import multiprocessing as mp
 import os
+import statistics
 import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-N_DOCS = int(os.environ.get("SCALING_BENCH_DOCS", "8000"))
-CORPUS_DIR = os.path.abspath(
-    os.environ.get("SCALING_BENCH_CORPUS", ".bench/scaling_corpus")
-)
+N_DOCS = int(os.environ.get("SCALING_BENCH_DOCS", "64000"))
+CORPUS_DIR = os.path.join(REPO, ".bench", "scaling_corpus_%d" % N_DOCS)
 CORES_PER_EXECUTOR = int(os.environ.get("SCALING_BENCH_EXEC_CORES", "6"))
 N_EXECUTORS_BIG = 4
 RUNS = int(os.environ.get("SCALING_BENCH_RUNS", "2"))
-LEVELS = tuple(
-    int(v) for v in os.environ.get("SCALING_BENCH_LEVELS", "4,16").split(",")
+SAMPLES = int(os.environ.get("SCALING_BENCH_SAMPLES", "3"))
+TARGET = 0.8
+
+PROTOCOL = (
+    "local-cluster multi-JVM samples: identical flagship job on Spark "
+    "local-cluster[n,c,4096] at n=1 vs n=4, separate executor JVMs (pids "
+    "recorded) with -XX:ActiveProcessorCount=c, package via addPyFile zip, "
+    "core-pinned legs, warm-up then min-of-RUNS per leg, per-leg engine "
+    "forensics.  Each batch is gated on loadavg<=0.7 and /proc/stat "
+    "steal<=1%, carries a steal monitor, a triad bandwidth probe and a "
+    "Spark-free kernel control before and after its samples."
 )
 
 
@@ -67,34 +81,6 @@ def materialize_corpus() -> None:
         "overwrite"
     ).parquet(CORPUS_DIR)
     spark.stop()
-
-
-def run_worker(cpus: int, shard: int, n_shards: int, runs: int) -> dict:
-    """One 'executor': annotate (a shard of) the corpus `runs` times."""
-    from pyspark.sql import functions as F
-
-    from sciencebeam_trainer_grobid_tools_spark.plans.pipeline import annotate_documents
-    from sciencebeam_trainer_grobid_tools_spark.plans.session import build_session
-
-    spark = build_session(
-        "scaling-%d-%d" % (cpus, shard), cpus=cpus, shuffle_partitions=cpus * 2
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = spark.read.parquet(CORPUS_DIR)
-    if n_shards > 1:
-        docs = docs.filter(F.pmod(F.xxhash64("url"), F.lit(n_shards)) == shard)
-    n_docs = docs.count()
-    # warm-up pass: codegen + python workers + page cache
-    annotate_documents(docs, repartition=cpus * 4).count()
-    times = []
-    for _ in range(runs):
-        t0 = time.time()
-        annotate_documents(docs, repartition=cpus * 4).agg(
-            F.count(F.lit(1)).alias("docs")
-        ).collect()
-        times.append(time.time() - t0)
-    spark.stop()
-    return {"docs": n_docs, "runs_sec": [round(t, 2) for t in times]}
 
 
 def _pids_of(pattern: str) -> list:
@@ -153,36 +139,20 @@ def _fetch_executor_metrics(ui_url: str, app_id: str) -> list:
 
 
 def run_cluster_worker(n_executors: int, runs: int) -> dict:
-    """One leg of the REAL multi-JVM scaling sample: the flagship job on a
-    ``local-cluster[n, c, mem]`` master — Spark standalone master + n worker
-    JVMs + n separate CoarseGrainedExecutorBackend JVMs + a real shuffle
-    service between them, with the package shipped to executors as a
-    --py-files zip (the north_rule's deployment shape).  Unlike the
-    hand-rolled executor emulation (run_executor_emulation), Spark does the
-    scheduling/sharding itself; the result includes evidence that the
-    executors really are separate JVM processes.
-
-    Co-location fidelity (round 10): on a real cluster every executor JVM
-    sits on its OWN c-core node, so ``Runtime.availableProcessors`` — which
-    sizes the JVM's GC worker, JIT compiler, and ForkJoin pools — reads c.
-    Under taskset on one box it reads the WHOLE pinned span (26 cores on
-    the 4N leg), so four co-located executors each spawn ~full-host GC/JIT
-    thread pools that contend.  ``-XX:ActiveProcessorCount=c`` restores the
-    real-node value (exactly what cgroup-aware container deployments get
-    automatically); SCALING_BENCH_ACP=0 disables it for A/B forensics.
-    Each leg also records per-role /proc CPU-seconds over the timed runs
-    (executors / worker daemons / python workers / driver) plus the REST
-    API's per-executor GC time, so a scaling loss decomposes into named
-    components instead of a bare ratio."""
+    """One leg: the flagship job on a ``local-cluster[n, c, 4096]`` master,
+    a warm-up pass, then ``runs`` timed passes.  Spark does the scheduling
+    and sharding itself.  The result carries evidence that the executors
+    really are separate JVM processes, and per-role /proc CPU-seconds
+    (executors / worker daemons / python workers / driver) over the timed
+    passes plus the REST API's per-executor GC time, so a scaling loss
+    decomposes into named components instead of a bare ratio."""
     from pyspark.sql import SparkSession, functions as F
 
     from scripts.build_pyfiles_zip import build
 
     archive = build()
     c = CORES_PER_EXECUTOR
-    use_acp = os.environ.get("SCALING_BENCH_ACP", "1") != "0"
-    exec_java = "-XX:ActiveProcessorCount=%d" % c if use_acp else ""
-    builder = (
+    spark = (
         SparkSession.builder.master(
             "local-cluster[%d,%d,4096]" % (n_executors, c)
         )
@@ -198,10 +168,9 @@ def run_cluster_worker(n_executors: int, runs: int) -> dict:
         # clock; equal overhead on both legs
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "0")
+        .config("spark.executor.extraJavaOptions", "-XX:ActiveProcessorCount=%d" % c)
+        .getOrCreate()
     )
-    if exec_java:
-        builder = builder.config("spark.executor.extraJavaOptions", exec_java)
-    spark = builder.getOrCreate()
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
     sc.addPyFile(archive)
@@ -265,7 +234,7 @@ def run_cluster_worker(n_executors: int, runs: int) -> dict:
         "runs_sec": [round(t, 2) for t in times],
         "executor_jvms_reported": reported,
         "executor_jvm_pids": pids,
-        "active_processor_count": c if use_acp else None,
+        "active_processor_count": c,
         "forensics": {
             "loop_wall_sec": round(loop_wall, 2),
             "task_core_budget": n_executors * c,
@@ -304,18 +273,28 @@ def _gate_load(max_load: float = 0.7, timeout: int = 900) -> float:
     return round(load, 2)
 
 
-def run_local_cluster() -> None:
-    """The canonical two-cluster-size sample on REAL separate executor JVMs:
-    local-cluster[1,c,4096] vs local-cluster[4,c,4096], loadavg-gated,
-    min-of-RUNS within each leg, median efficiency across samples.
+def _spawn(cores: str, args: list) -> subprocess.Popen:
+    return subprocess.Popen(
+        ["taskset", "-c", cores, sys.executable, os.path.abspath(__file__)] + args,
+        stdout=subprocess.PIPE,
+        stderr=subprocess.DEVNULL,
+        text=True,
+        cwd=REPO,
+    )
 
-    Pinning mirrors the emulation protocol: each leg is pinned to (its
-    executor cores + 2 driver cores), so the N leg models one 6-core node
-    (plus driver) and the 4N leg four of them."""
+
+def _result_of(proc: subprocess.Popen) -> dict:
+    out, _ = proc.communicate()
+    lines = [ln for ln in out.splitlines() if ln.startswith("{")]
+    return json.loads(lines[-1])
+
+
+def run_local_cluster() -> dict:
+    """SAMPLES loadavg-gated N/4N sample pairs; returns the batch summary
+    with the median efficiency across samples."""
     c = CORES_PER_EXECUTOR
-    n_samples = int(os.environ.get("SCALING_BENCH_SAMPLES", "3"))
     samples = []
-    for s in range(n_samples):
+    for s in range(SAMPLES):
         load_n = _gate_load()
         n_res = _result_of(
             _spawn("0-%d" % (c + 1), ["--cluster-worker", "1", str(RUNS)])
@@ -343,183 +322,190 @@ def run_local_cluster() -> None:
             "executor_jvms_n_leg": n_res["executor_jvms_reported"],
             "executor_jvms_4n_leg": big_res["executor_jvms_reported"],
             "executor_jvm_pids_4n_leg": big_res["executor_jvm_pids"],
-            "active_processor_count": big_res.get("active_processor_count"),
-            "forensics_n_leg": n_res.get("forensics"),
-            "forensics_4n_leg": big_res.get("forensics"),
+            "active_processor_count": big_res["active_processor_count"],
+            "forensics_n_leg": n_res["forensics"],
+            "forensics_4n_leg": big_res["forensics"],
         }
         samples.append(sample)
-        print(json.dumps(sample))
+        print(json.dumps(sample), flush=True)
     effs = sorted(x["efficiency"] for x in samples)
-    median = (
-        effs[len(effs) // 2]
-        if len(effs) % 2
-        else (effs[len(effs) // 2 - 1] + effs[len(effs) // 2]) / 2
+    median = statistics.median(effs)
+    return {
+        "mode": "local-cluster",
+        "docs": samples[0]["docs"],
+        "executors": [1, N_EXECUTORS_BIG],
+        "cores_per_executor": c,
+        "samples": samples,
+        "efficiencies": effs,
+        "median_efficiency": round(median, 3),
+        "target": TARGET,
+        "meets_target": median >= TARGET,
+    }
+
+
+_TRIAD_N = 30_000_000  # 240 MB per array — far beyond LLC
+
+
+def _triad_rate(dur: float = 2.5) -> float:
+    import numpy as np
+
+    a = np.zeros(_TRIAD_N)
+    b = np.ones(_TRIAD_N)
+    c = np.ones(_TRIAD_N)
+    np.multiply(c, 2.5, out=a)
+    a += b
+    reps = 0
+    t0 = time.perf_counter()
+    while time.perf_counter() - t0 < dur:
+        np.multiply(c, 2.5, out=a)
+        a += b
+        reps += 1
+    dt = time.perf_counter() - t0
+    # ~5 array passes of 8*N bytes per rep (2 reads + 2 writes + RFO)
+    return reps * 5 * 8 * _TRIAD_N / dt / 1e9
+
+
+def _bw_worker(q, barrier) -> None:
+    barrier.wait()
+    q.put(_triad_rate())
+
+
+def _bw_aggregate(nw: int) -> float:
+    q = mp.Queue()
+    barrier = mp.Barrier(nw)
+    ps = [mp.Process(target=_bw_worker, args=(q, barrier)) for _ in range(nw)]
+    for p in ps:
+        p.start()
+    rates = [q.get() for _ in range(nw)]
+    for p in ps:
+        p.join()
+    return sum(rates)
+
+
+def bandwidth_probe() -> dict:
+    """Triad GB/s single / 6-worker / 24-worker aggregate — the same
+    core counts as the N and 4N legs.  scaling_6_to_24 near 1.0 means
+    the box can feed 24 bandwidth-hungry cores at 4x the 6-core
+    aggregate today; well under 1.0 means a shared-bandwidth ceiling
+    (neighbor VM pressure) that will depress the 4N leg no matter how
+    low steal reads."""
+    out = {"single_GBps": round(_triad_rate(), 2)}
+    for nw in (6, 24):
+        out["agg_%dw_GBps" % nw] = round(_bw_aggregate(nw), 2)
+    out["scaling_6_to_24"] = round(
+        out["agg_24w_GBps"] / (4 * out["agg_6w_GBps"]), 3
     )
-    print(
-        json.dumps(
-            {
-                "mode": "local-cluster",
-                "docs": samples[0]["docs"],
-                "executors": [1, N_EXECUTORS_BIG],
-                "cores_per_executor": c,
-                "samples": samples,
-                "efficiencies": effs,
-                "median_efficiency": round(median, 3),
-                "target": 0.8,
-                "meets_target": median >= 0.8,
-            }
+    return out
+
+
+def kernel_control() -> dict:
+    """The raw C alignment kernel under plain multiprocessing at the two
+    protocol widths — no JVM, no shuffle, no Python rows.  If the bare
+    kernel cannot scale 4x on this box now, no engine can; the engine's
+    own scaling loss is the delta between the Spark batch and this."""
+    from scripts.bench_dp_nt import contention
+
+    section = {"needle_len": 1000, "nt_kernel": True, "ts": round(time.time(), 1)}
+    for lo, hi in ((4, 16), (6, 24)):
+        low = contention(True, lo, 1000)
+        high = contention(True, hi, 1000)
+        section["%dw_to_%dw" % (lo, hi)] = {
+            "agg_low_calls_s": round(low, 1),
+            "agg_high_calls_s": round(high, 1),
+            "scaling_eff": round(high / low / 4.0, 3),
+        }
+    return section
+
+
+def compute_headline(batches: list) -> dict:
+    """Per-protocol (executor core count) efficiency stats over every
+    batch's samples; each N->4N pair is its own protocol row so a 6-core
+    and a 4-core batch never average into one number."""
+    per_cores: dict = {}
+    for b in batches:
+        cores = b.get("exec_cores", 6)
+        for s in b.get("samples", []):
+            if isinstance(s, dict) and "efficiency" in s:
+                per_cores.setdefault(cores, []).append(s["efficiency"])
+    protocols = {}
+    for cores, effs in sorted(per_cores.items()):
+        effs = sorted(effs)
+        # efficiencies carry 3 decimals, so a two-sample mean needs 4
+        median = round(statistics.median(effs), 4)
+        protocols["%dc_to_%dc" % (cores, 4 * cores)] = {
+            "efficiencies": effs,
+            "median": median,
+            "max": effs[-1],
+            "n_samples": len(effs),
+            "meets_target": median >= TARGET,
+        }
+    best = max((p["median"] for p in protocols.values()), default=None)
+    return {
+        "per_protocol": protocols,
+        "best_protocol_median": best,
+        "target": TARGET,
+        "meets_target": bool(best and best >= TARGET),
+    }
+
+
+def run_batch(out_path: str) -> None:
+    from bench import _StealMonitor, _gate_quiet
+
+    needed = N_EXECUTORS_BIG * CORES_PER_EXECUTOR + 2
+    if (os.cpu_count() or 0) < needed:
+        sys.exit(
+            "the 4N leg is pinned to %d cores; this host has %s"
+            % (needed, os.cpu_count())
         )
-    )
-
-
-def _spawn(cores: str, args: list) -> subprocess.Popen:
-    return subprocess.Popen(
-        ["taskset", "-c", cores, sys.executable, os.path.abspath(__file__)] + args,
-        stdout=subprocess.PIPE,
-        stderr=subprocess.DEVNULL,
-        text=True,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    )
-
-
-def _result_of(proc: subprocess.Popen) -> dict:
-    out, _ = proc.communicate()
-    lines = [ln for ln in out.splitlines() if ln.startswith("{")]
-    return json.loads(lines[-1])
-
-
-def run_executor_emulation() -> None:
-    c = CORES_PER_EXECUTOR
-    # N leg: one pinned executor, full corpus
-    single = _result_of(
-        _spawn("0-%d" % (c - 1), ["--worker", str(c), "0", "1", str(RUNS)])
-    )
-    single_sec = min(single["runs_sec"])
-    rate_n = single["docs"] / single_sec
-    # 4N leg: four pinned executors over disjoint hash shards, concurrently.
-    procs = [
-        _spawn(
-            "%d-%d" % (k * c, k * c + c - 1),
-            ["--worker", str(c), str(k), str(N_EXECUTORS_BIG), str(RUNS)],
-        )
-        for k in range(N_EXECUTORS_BIG)
-    ]
-    shard_results = [_result_of(p) for p in procs]
-    total_docs = sum(r["docs"] for r in shard_results)
-    assert total_docs == single["docs"], (total_docs, single["docs"])
-    # per run, the leg's wall is the slowest executor
-    per_run_wall = [max(r["runs_sec"][i] for r in shard_results) for i in range(RUNS)]
-    big_sec = min(per_run_wall)
-    rate_4n = total_docs / big_sec
-    efficiency = (rate_4n / rate_n) / N_EXECUTORS_BIG
-    print(
-        json.dumps(
-            {
-                "mode": "executor-emulation",
-                "docs": total_docs,
-                "executors": [1, N_EXECUTORS_BIG],
-                "cores_per_executor": c,
-                "single_runs_sec": single["runs_sec"],
-                "sharded_runs_wall_sec": [round(t, 2) for t in per_run_wall],
-                "shard_docs": [r["docs"] for r in shard_results],
-                "rate_n": round(rate_n, 1),
-                "rate_4n": round(rate_4n, 1),
-                "speedup": round(rate_4n / rate_n, 3),
-                "efficiency": round(efficiency, 3),
-                "target": 0.8,
-                "meets_target": efficiency >= 0.8,
-            }
-        )
-    )
-
-
-def run_single_jvm_levels() -> None:
-    results = {}
-    for cpus in LEVELS:
-        proc = _spawn("0-%d" % (cpus - 1), ["--worker", str(cpus), "0", "1", str(RUNS)])
-        results[cpus] = _result_of(proc)
-        print("local[%d]: %s" % (cpus, json.dumps(results[cpus])))
-    rate_n = results[LEVELS[0]]["docs"] / min(results[LEVELS[0]]["runs_sec"])
-    rate_4n = results[LEVELS[1]]["docs"] / min(results[LEVELS[1]]["runs_sec"])
-    efficiency = (rate_4n / rate_n) / (LEVELS[1] / LEVELS[0])
-    print(
-        json.dumps(
-            {
-                "mode": "single-jvm",
-                "docs": results[LEVELS[0]]["docs"],
-                "levels": list(LEVELS),
-                "rate_n": round(rate_n, 1),
-                "rate_4n": round(rate_4n, 1),
-                "speedup": round(rate_4n / rate_n, 3),
-                "efficiency": round(efficiency, 3),
-                "target": 0.8,
-                "meets_target": efficiency >= 0.8,
-            }
-        )
-    )
-
-
-def run_interleaved_levels() -> None:
-    """Noise-robust variant: alternate N-core and 4N-core runs so both legs
-    sample the same neighbor-load windows, then report the median of the
-    per-pair efficiencies (each pair = one N run + the 4N run right after
-    it).  On a shared VM this bounds the bias a one-sided noise burst can
-    introduce; min-of-legs (the default protocol) is kept for comparison."""
-    pairs = []
-    rates_n, rates_4n = [], []
-    for _ in range(RUNS):
-        n_res = _result_of(
-            _spawn("0-%d" % (LEVELS[0] - 1), ["--worker", str(LEVELS[0]), "0", "1", "1"])
-        )
-        big_res = _result_of(
-            _spawn("0-%d" % (LEVELS[1] - 1), ["--worker", str(LEVELS[1]), "0", "1", "1"])
-        )
-        rate_n = n_res["docs"] / n_res["runs_sec"][0]
-        rate_4n = big_res["docs"] / big_res["runs_sec"][0]
-        rates_n.append(rate_n)
-        rates_4n.append(rate_4n)
-        pairs.append((rate_4n / rate_n) / (LEVELS[1] / LEVELS[0]))
-        print("pair: rate_n=%.1f rate_4n=%.1f eff=%.3f" % (rate_n, rate_4n, pairs[-1]))
-    pairs.sort()
-    median = pairs[len(pairs) // 2] if len(pairs) % 2 else (
-        (pairs[len(pairs) // 2 - 1] + pairs[len(pairs) // 2]) / 2
-    )
-    best_eff = (max(rates_4n) / max(rates_n)) / (LEVELS[1] / LEVELS[0])
-    print(
-        json.dumps(
-            {
-                "mode": "interleaved",
-                "levels": list(LEVELS),
-                "pair_efficiencies": [round(p, 3) for p in pairs],
-                "median_efficiency": round(median, 3),
-                "best_of_legs_efficiency": round(best_eff, 3),
-                "target": 0.8,
-                "meets_target": median >= 0.8,
-            }
-        )
-    )
+    materialize_corpus()
+    gate = _gate_quiet(timeout=1800.0)
+    probe = bandwidth_probe()
+    monitor = _StealMonitor()
+    monitor.start()
+    control_pre = kernel_control()
+    t0 = time.time()
+    summary = run_local_cluster()
+    spark_wall = round(time.time() - t0, 1)
+    control_post = kernel_control()
+    monitor.stop()
+    batch = {
+        "exec_cores": CORES_PER_EXECUTOR,
+        "active_processor_count_fix": True,
+        "gate": gate,
+        "bandwidth_probe": probe,
+        "kernel_control_pre": control_pre,
+        "kernel_control_post": control_post,
+        "spark_wall_sec": spark_wall,
+        "steal_monitor": monitor.stats(),
+        "samples": summary["samples"],
+        "summary": summary,
+    }
+    record = {"protocol": PROTOCOL, "batches": []}
+    if os.path.exists(out_path):
+        with open(out_path) as fh:
+            record = json.load(fh)
+    record["batches"].append(batch)
+    record["headline"] = compute_headline(record["batches"])
+    os.makedirs(os.path.dirname(os.path.abspath(out_path)), exist_ok=True)
+    with open(out_path, "w") as fh:
+        json.dump(record, fh, indent=2)
+        fh.write("\n")
+    print(json.dumps({
+        "headline": record["headline"],
+        "this_batch_median": summary["median_efficiency"],
+    }))
 
 
 def main() -> None:
-    if "--worker" in sys.argv:
-        i = sys.argv.index("--worker")
-        cpus, shard, n_shards, runs = (int(v) for v in sys.argv[i + 1 : i + 5])
-        print(json.dumps(run_worker(cpus, shard, n_shards, runs)))
-        return
     if "--cluster-worker" in sys.argv:
         i = sys.argv.index("--cluster-worker")
         n_executors, runs = (int(v) for v in sys.argv[i + 1 : i + 3])
+        materialize_corpus()
         print(json.dumps(run_cluster_worker(n_executors, runs)))
         return
-    materialize_corpus()
-    if "--local-cluster" in sys.argv:
-        run_local_cluster()
-    elif "--interleaved" in sys.argv:
-        run_interleaved_levels()
-    elif "--single-jvm" in sys.argv:
-        run_single_jvm_levels()
-    else:
-        run_executor_emulation()
+    if len(sys.argv) != 2:
+        sys.exit(__doc__)
+    run_batch(sys.argv[1])
 
 
 if __name__ == "__main__":

@@ -7,7 +7,7 @@ cross-JVM scheduler/shuffle — with the package shipped to executors as the
 deployment shape.  Results must be byte-identical to the in-process kernel:
 proves serialization, zip deployment, and cross-JVM shuffle don't perturb
 the extraction/alignment output.  (Scaling throughput on this topology is
-measured separately: scripts/scaling_bench.py --local-cluster.)
+measured separately: scripts/scaling_bench.py <record.json>.)
 """
 
 import os

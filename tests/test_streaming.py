@@ -54,386 +54,3 @@ class TestStreamAnnotate:
         finally:
             query2.stop()
         assert spark.read.parquet(output_dir).count() == 24
-
-
-class TestStreamingWindows:
-    """§2.9 watermark + stateful operators (streaming/windows.py), verified
-    against their batch twins on the same events data."""
-
-    def _events_stream(self, spark, tmp_path, n_chunks=2):
-        import pyspark.sql.functions as F
-
-        events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        stream_dir = tmp_path / "events_stream"
-        stream_dir.mkdir()
-        # time-ordered chunks -> per-user event order holds across batches
-        ordered = events.orderBy("ts")
-        rows = ordered.count()
-        per = rows // n_chunks + 1
-        pdf = ordered.toPandas()
-        for k in range(n_chunks):
-            chunk = pdf.iloc[k * per : (k + 1) * per]
-            if len(chunk):
-                spark.createDataFrame(chunk).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(str(stream_dir / ("chunk%d" % k)))
-        schema = events.schema
-        return (
-            spark.readStream.schema(schema)
-            .option("recursiveFileLookup", "true")
-            # one file per micro-batch: state must carry ACROSS batches
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(stream_dir)),
-            events,
-        )
-
-    def test_hourly_rollup_matches_batch(self, spark, tmp_path):
-        import pyspark.sql.functions as F
-
-        from sciencebeam_trainer_grobid_tools_spark.streaming.windows import (
-            stream_hourly_rollup,
-        )
-
-        stream, events = self._events_stream(spark, tmp_path)
-        q = (
-            stream_hourly_rollup(stream)
-            .writeStream.format("memory")
-            .queryName("rollup_test")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            (r["hour"], r["event_type"]): (r["n"], float(r["total_value"]))
-            for r in spark.table("rollup_test").collect()
-        }
-        expected = {
-            (r["hour"], r["event_type"]): (r["n"], float(r["total_value"]))
-            for r in events.groupBy(
-                F.date_trunc("hour", F.col("ts")).alias("hour"), "event_type"
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(F.sum("value"), 4).alias("total_value"),
-            )
-            .collect()
-        }
-        assert got == expected
-
-    def test_sessionize_matches_batch(self, spark, tmp_path):
-        import pyspark.sql.functions as F
-        from pyspark.sql.window import Window
-
-        from sciencebeam_trainer_grobid_tools_spark.streaming.windows import (
-            stream_sessionize,
-        )
-
-        stream, events = self._events_stream(spark, tmp_path)
-        q = (
-            stream_sessionize(stream)
-            .writeStream.format("memory")
-            .queryName("session_test")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # n_events grows monotonically per user: the max row is the final state
-        updates = spark.table("session_test")
-        w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-        got = {
-            (r["user_id"]): (r["n_sessions"], r["n_events"])
-            for r in updates.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .collect()
-        }
-        lagw = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        expected = {
-            r["user_id"]: (r["n_sessions"], r["n_events"])
-            for r in events.withColumn(
-                "new_session",
-                F.when(
-                    F.unix_timestamp("ts")
-                    - F.unix_timestamp(F.lag("ts").over(lagw))
-                    > 1800,
-                    1,
-                )
-                .otherwise(0)
-                + F.when(F.lag("ts").over(lagw).isNull(), 1).otherwise(0),
-            )
-            .groupBy("user_id")
-            .agg(
-                F.sum("new_session").alias("n_sessions"),
-                F.count(F.lit(1)).alias("n_events"),
-            )
-            .collect()
-        }
-        assert got == expected
-
-
-class TestStreamFirstSeen:
-    def _pages_stream(self, spark, tmp_path, n_chunks=4):
-        """URL stream with planted recrawls across micro-batches: url
-        u{i%20} appears in several chunks with increasing timestamps."""
-        import datetime
-
-        import pyspark.sql.functions as F
-
-        base = datetime.datetime(2026, 8, 1)
-        rows = []
-        for i in range(80):
-            rows.append(
-                (
-                    "https://example.org/u%d" % (i % 20),
-                    base + datetime.timedelta(minutes=i),
-                    i,
-                )
-            )
-        pages = spark.createDataFrame(
-            rows, "url string, warc_ts timestamp, seq long"
-        )
-        stream_dir = tmp_path / "pages_stream"
-        pdf = pages.orderBy("warc_ts").toPandas()
-        per = len(pdf) // n_chunks + 1
-        for k in range(n_chunks):
-            chunk = pdf.iloc[k * per : (k + 1) * per]
-            if len(chunk):
-                spark.createDataFrame(chunk).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(str(stream_dir / ("chunk%d" % k)))
-        return (
-            spark.readStream.schema(pages.schema)
-            .option("recursiveFileLookup", "true")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(stream_dir)),
-            pages,
-        )
-
-    def test_first_seen_matches_batch_min_ts(self, spark, tmp_path):
-        import pyspark.sql.functions as F
-
-        from sciencebeam_trainer_grobid_tools_spark.streaming.windows import (
-            stream_first_seen,
-        )
-
-        stream, pages = self._pages_stream(spark, tmp_path)
-        q = (
-            stream_first_seen(stream)
-            .writeStream.format("memory")
-            .queryName("first_seen_test")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            r["url"]: r["warc_ts"]
-            for r in spark.table("first_seen_test").collect()
-        }
-        expected = {
-            r["url"]: r["first_ts"]
-            for r in pages.groupBy("url")
-            .agg(F.min("warc_ts").alias("first_ts"))
-            .collect()
-        }
-        assert got == expected  # one survivor per url, the earliest row
-
-    def test_first_seen_observed_drop_metrics(self, spark, tmp_path):
-        """rows_in/rows_out observations land in StreamingQueryProgress
-        so dropped-duplicate counts are free per micro-batch: summed
-        across batches, in - out == planted duplicate count."""
-        from sciencebeam_trainer_grobid_tools_spark.streaming.windows import (
-            stream_first_seen,
-        )
-
-        stream, pages = self._pages_stream(spark, tmp_path)
-        q = (
-            stream_first_seen(stream)
-            .writeStream.format("memory")
-            .queryName("first_seen_metrics")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows_in = rows_out = 0
-        for p in q.recentProgress:
-            om = p["observedMetrics"] if "observedMetrics" in p else {}
-            if "first_seen_in" in om:
-                rows_in += om["first_seen_in"]["rows_in"]
-            if "first_seen_out" in om:
-                rows_out += om["first_seen_out"]["rows_out"]
-        n_total = pages.count()
-        n_keys = pages.select("url").distinct().count()
-        assert rows_in == n_total
-        assert rows_out == n_keys
-        assert rows_in - rows_out == n_total - n_keys  # 60 planted dups
-
-    def test_first_seen_readmits_after_watermark_expiry(
-        self, spark, tmp_path
-    ):
-        """A recrawl past the watermark horizon is a legitimate new
-        snapshot and must RE-ENTER: the key's seen-state ages out once
-        the event-time watermark passes it, while a recrawl within the
-        horizon still drops."""
-        import datetime
-
-        from sciencebeam_trainer_grobid_tools_spark.streaming.windows import (
-            stream_first_seen,
-        )
-
-        base = datetime.datetime(2026, 8, 1, 8, 0)
-
-        def chunk(k, rows):
-            df = spark.createDataFrame(
-                rows, "url string, warc_ts timestamp, seq long"
-            )
-            df.coalesce(1).write.mode("overwrite").parquet(
-                str(tmp_path / "readmit" / ("chunk%d" % k))
-            )
-            return df.schema
-
-        u = "https://example.org/u"
-        # batch 0: first sight of u + an in-horizon recrawl (drops)
-        schema = chunk(
-            0,
-            [
-                (u, base, 0),
-                (u, base + datetime.timedelta(minutes=10), 1),
-            ],
-        )
-        # batch 1: filler traffic 4h later advances the watermark past
-        # u's 1h horizon
-        chunk(1, [("https://example.org/f", base + datetime.timedelta(hours=4), 2)])
-        # batch 2: state CLEANUP runs against the batch-START watermark,
-        # which lags one batch behind the data — this batch's start
-        # watermark (11:00) is what evicts u's seen-state
-        chunk(
-            2,
-            [("https://example.org/f2", base + datetime.timedelta(hours=4, minutes=10), 3)],
-        )
-        # batch 3: u recrawled past the horizon -> re-admitted
-        chunk(3, [(u, base + datetime.timedelta(hours=4, minutes=30), 4)])
-        stream = (
-            spark.readStream.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(tmp_path / "readmit"))
-        )
-        q = (
-            stream_first_seen(stream, watermark="1 hour")
-            .writeStream.format("memory")
-            .queryName("first_seen_readmit")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = sorted(
-            (r["url"], r["seq"])
-            for r in spark.table("first_seen_readmit").collect()
-        )
-        # u emitted twice (seq 0 first sight, seq 4 post-horizon recrawl);
-        # the seq-1 in-horizon recrawl dropped
-        assert got == [
-            ("https://example.org/f", 2),
-            ("https://example.org/f2", 3),
-            (u, 0),
-            (u, 4),
-        ]
-
-
-class TestStreamingCurationComposition:
-    """stream_first_seen survivors driven through curate_corpus stages
-    via foreachBatch — the streaming ingest front-end composed with the
-    batch curation stack, pinned equivalent to the all-batch path
-    (first-seen dedup -> hygiene floor).  The curation config here is
-    per-row (scrub + quality; the cross-doc stages are off), so
-    per-micro-batch application must equal whole-corpus application —
-    any survivor drift means the composition broke."""
-
-    GOOD = (
-        "This is a perfectly ordinary paragraph of running prose that "
-        "keeps going for long enough to clear the length floor and reads "
-        "like ordinary everyday text written by a person. "
-    )
-
-    def test_streamed_curation_matches_batch(self, spark, tmp_path):
-        import datetime
-
-        import pyspark.sql.functions as F
-
-        from sciencebeam_trainer_grobid_tools_spark.plans.curation import (
-            curate_corpus,
-        )
-        from sciencebeam_trainer_grobid_tools_spark.streaming.windows import (
-            stream_first_seen,
-        )
-
-        base = datetime.datetime(2026, 8, 1)
-        rows = []
-        for i in range(60):
-            url = "https://example.org/p%d" % (i % 15)
-            # recrawls carry a crawl marker so the first-seen choice is
-            # visible in the curated text; p0/p5/p10 are quality
-            # casualties (too short) in EVERY crawl
-            text = (
-                "short page"
-                if i % 15 % 5 == 0
-                else self.GOOD + "crawl %d of page %d. " % (i // 15, i % 15)
-                + "Mail admin%d@example.com today." % (i % 15)
-            )
-            rows.append((url, base + datetime.timedelta(minutes=i), text))
-        pages = spark.createDataFrame(
-            rows, "url string, warc_ts timestamp, text string"
-        )
-        stream_dir = tmp_path / "curation_stream"
-        pdf = pages.orderBy("warc_ts").toPandas()
-        per = len(pdf) // 4 + 1
-        for k in range(4):
-            chunk = pdf.iloc[k * per : (k + 1) * per]
-            if len(chunk):
-                spark.createDataFrame(chunk).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(str(stream_dir / ("chunk%d" % k)))
-        stream = (
-            spark.readStream.schema(pages.schema)
-            .option("recursiveFileLookup", "true")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(stream_dir))
-        )
-        out_dir = str(tmp_path / "curated_out")
-
-        def sink(bdf, _bid):
-            curate_corpus(bdf).write.mode("append").parquet(out_dir)
-
-        q = (
-            stream_first_seen(stream)
-            .writeStream.foreachBatch(sink)
-            .option(
-                "checkpointLocation", str(tmp_path / "curation_checkpoint")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        streamed = {
-            (r["url"], r["text"])
-            for r in spark.read.parquet(out_dir).collect()
-        }
-        first_seen = pages.groupBy("url").agg(
-            F.min_by("text", "warc_ts").alias("text"),
-            F.min("warc_ts").alias("warc_ts"),
-        )
-        batch = {
-            (r["url"], r["text"])
-            for r in curate_corpus(first_seen).collect()
-        }
-        assert streamed == batch
-        # the composition did real work: quality dropped the short pages,
-        # the scrub replaced every planted email, first-seen kept crawl 0
-        assert len(streamed) == 12
-        assert all("@example.com" not in t for _, t in streamed)
-        assert all("crawl 0 of" in t for _, t in streamed)
