@@ -7,15 +7,9 @@ import argparse
 import logging
 from typing import Optional
 
-from ..operators.annotate import SimpleMatcher
-from ..operators.postprocess import (
-    expand_to_following_untagged_tokens,
-    expand_to_previous_untagged_tokens,
-    merge_group_tags,
-    replace_tags,
-)
 from ..operators.targets import parse_xml_mapping_string
 from ..plans.auto_annotate import get_xml_mapping_with_overrides
+from ..plans.flavors import fulltext_flavor
 from . import shared
 
 FULLTEXT_CONTAINER_NODE_PATH = "text"
@@ -116,19 +110,14 @@ def run(args: argparse.Namespace) -> dict:
 
     # reference _get_annotator (auto_annotate_fulltext.py:142-187): the
     # prev/following expansions are gated independently
-    def chain(doc, targets):
-        SimpleMatcher(targets, matcher_config).annotate(doc)
-        replace_tags(doc, REPLACED_TAG_BY_TAG_MAP)
-        merge_group_tags(doc, GROUP_TAG_BY_TAG_MAP.get)
-        if args.expand_to_previous_untagged_lines:
-            expand_to_previous_untagged_tokens(
-                doc, EXPAND_TO_UNTAGGED_LINES_ENABLED_TAGS
-            )
-        if args.expand_to_following_untagged_lines:
-            expand_to_following_untagged_tokens(
-                doc, EXPAND_TO_UNTAGGED_LINES_ENABLED_TAGS
-            )
-        return doc
+    expand_tags = EXPAND_TO_UNTAGGED_LINES_ENABLED_TAGS
+    chain = fulltext_flavor(
+        matcher_config,
+        replaced_tag_by_tag=REPLACED_TAG_BY_TAG_MAP,
+        group_tag_by_tag=GROUP_TAG_BY_TAG_MAP,
+        expand_previous_tags=expand_tags if args.expand_to_previous_untagged_lines else None,
+        expand_following_tags=expand_tags if args.expand_to_following_untagged_lines else None,
+    )
 
     return shared.run_pipeline_from_args(
         args,

@@ -180,20 +180,14 @@ def _split_pattern(separators: str):
     return re.compile("[%s]|[^%s]+" % (escaped, escaped))
 
 
-@lru_cache(maxsize=32)
-def split_with_offsets(s: str, separators: str) -> List[Tuple[int, str]]:
-    """Split ``s`` into (offset, fragment) pairs, keeping separator chars as
-    their own single-char fragments (reference: utils/fuzzy.py:132-144).
-    Regex scan (C speed) instead of a per-character python loop; cached, as
-    the haystack side repeats across the short-needle searches of one doc."""
-    return [(m.start(), m.group()) for m in _split_pattern(separators).finditer(s)]
-
-
 @lru_cache(maxsize=64)
 def _split_offsets_and_words(s: str, separators: str) -> Tuple[List[int], List[str]]:
-    """split_with_offsets as two parallel lists — the word matcher needs the
-    word list alone for SequenceMatcher, so pre-splitting here avoids a
-    per-call unpacking pass over every fragment."""
+    """Split ``s`` into fragments, keeping separator chars as their own
+    single-char fragments (reference: utils/fuzzy.py:132-144), as two
+    parallel lists: the offsets and the fragments.  The word matcher needs
+    the word list alone for SequenceMatcher.  One regex scan (C speed);
+    cached, as the haystack side repeats across the short-needle searches
+    of one doc."""
     offsets: List[int] = []
     words: List[str] = []
     for m in _split_pattern(separators).finditer(s):

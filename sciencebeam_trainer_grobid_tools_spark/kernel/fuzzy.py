@@ -62,11 +62,6 @@ def positional_is_junk(s: str, i: int) -> bool:
     return False
 
 
-def space_is_junk(s: str, i: int) -> bool:
-    """Reference: utils/fuzzy.py:51-52."""
-    return s[i] in (" ", "\t", "\n")
-
-
 def adjacent_is_junk(s: str, i: int) -> bool:
     """Junk predicate of the complex matcher (reference:
     core/annotation/fuzzy_match.py:34-40): space/comma right after a dot,
@@ -347,7 +342,7 @@ _UNMASKED_RUN = re.compile(r"[^ \t\n]+")
 
 
 class MaskedString:
-    """A string with its ``space_is_junk`` characters removed, and a run table
+    """A string with its spaces, tabs and newlines removed, and a run table
     back to the original (reference StringView: utils/fuzzy.py:104-129).
 
     The run table holds, per maximal unmasked run, its start in the masked
@@ -406,10 +401,6 @@ def offset_blocks(blocks: MatchingBlocks, a_offset: int = 0, b_offset: int = 0) 
     if not a_offset and not b_offset:
         return blocks
     return [(a + a_offset, b + b_offset, size) for a, b, size in blocks]
-
-
-def _blocks_size(blocks: MatchingBlocks) -> int:
-    return sum(size for _, _, size in blocks)
 
 
 def _blocks_b_end(blocks: MatchingBlocks) -> int:

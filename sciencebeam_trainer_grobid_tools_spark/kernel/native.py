@@ -15,6 +15,8 @@ several times slower.
   previous eight cells).  The row maximum decides whether the row can hold
   the best cell, so the per-cell best-cell branch is gone.  Scores, best
   cell and traceback are exactly those of the scalar recurrence.
+- **One driver.** ``sw_align16`` writes every row in place into one
+  grow-only matrix, at every matrix size; the traceback reads it back.
 - **Build.** Plain ``gcc -O3``: SSE2 is the x86-64 baseline, so the shared
   object needs no ``-march`` and no CPU dispatch and runs on every executor.
 - **FFI.** The haystack and needle cross as the UTF-32-LE ``bytes`` the
@@ -178,20 +180,6 @@ int sw_traceback16(const uint32_t* a, const uint32_t* b, const int16_t* h,
     return n_blocks;
 }
 
-/* Copy one DP row to the stored matrix with non-temporal (streaming)
-   stores: the bytes bypass the cache hierarchy entirely, so a large matrix
-   neither evicts the hot row buffers nor occupies shared-LLC capacity that
-   sibling cores need.  Head/tail handled scalar for alignment. */
-static void nt_copy_row(int16_t* dst, const int16_t* src, int count) {
-    int i = 0;
-    while (i < count && (((uintptr_t)(dst + i)) & 15)) { dst[i] = src[i]; i++; }
-    for (; i + 8 <= count; i += 8) {
-        __m128i v = _mm_loadu_si128((const __m128i*)(src + i));
-        _mm_stream_si128((__m128i*)(dst + i), v);
-    }
-    for (; i < count; i++) dst[i] = src[i];
-}
-
 /* Fused alignment: score matrix + best cell + traceback in ONE call.  The DP
    matrix h ((m+1) x (n+1) int16, row-major) is caller-provided scratch (a
    grow-only buffer reused across calls: per-call malloc of the larger
@@ -207,31 +195,6 @@ int sw_align16(const uint32_t* a, int n, const uint32_t* b, int m,
         int16_t rm = sw_row16(a, n, b[j - 1], cur - (n + 1), cur);
         keep_best(cur, n, rm, j, &best, &bi, &bj);
     }
-    return best > 0 ? sw_traceback16(a, b, h, n, m, bi, bj, blocks) : 0;
-}
-
-/* Cache-invisible variant for large matrices: the same rows are computed
-   into two small ping-pong buffers (rowbuf, capacity 2*(n+1), L1/L2-hot at
-   any matrix size) and each finished row is streamed to `h` with
-   non-temporal stores, so the stored matrix is byte-identical to
-   sw_align16's.  Beyond the private L2 this removes the RFO read of every
-   matrix line and the LLC pollution that thrashes sibling cores (see
-   scripts/profile_dp_footprint.py); the traceback touches only the ~path
-   cells of the stored matrix. */
-int sw_align16_nt(const uint32_t* a, int n, const uint32_t* b, int m,
-                  int16_t* h, int16_t* rowbuf, int32_t* blocks) {
-    int16_t best = 0; int bi = 0; int bj = 0;
-    int16_t* prev = rowbuf;
-    int16_t* cur = rowbuf + (n + 1);
-    for (int i = 0; i <= n; i++) prev[i] = 0;
-    nt_copy_row(h, prev, n + 1);
-    for (int j = 1; j <= m; j++) {
-        int16_t rm = sw_row16(a, n, b[j - 1], prev, cur);
-        keep_best(cur, n, rm, j, &best, &bi, &bj);
-        nt_copy_row(h + (size_t)j * (n + 1), cur, n + 1);
-        int16_t* t = prev; prev = cur; cur = t;
-    }
-    _mm_sfence();
     return best > 0 ? sw_traceback16(a, b, h, n, m, bi, bj, blocks) : 0;
 }
 """
@@ -314,16 +277,6 @@ def get_native_lib() -> Optional[ctypes.CDLL]:
         ctypes.c_void_p,
     ]
     lib.sw_align16.restype = ctypes.c_int
-    lib.sw_align16_nt.argtypes = [
-        ctypes.c_char_p,
-        ctypes.c_int,
-        ctypes.c_char_p,
-        ctypes.c_int,
-        ctypes.c_void_p,
-        ctypes.c_void_p,
-        ctypes.c_void_p,
-    ]
-    lib.sw_align16_nt.restype = ctypes.c_int
     _lib = lib
     return _lib
 
@@ -346,23 +299,6 @@ class _Scratch:
 
 _blocks = _Scratch(ctypes.c_int32, 4096)
 _matrix = _Scratch(ctypes.c_int16, 1 << 16)
-_rowbuf = _Scratch(ctypes.c_int16, 4096)
-
-# Above this matrix size the cache-invisible streaming DP takes over.
-# Measured on this box (scripts/profile_dp_footprint.py + bench_dp_nt.py,
-# quiet window): flagship matrices are <=45 KB (L1-resident — the cached
-# path is optimal and r2's L3-thrash theory does NOT apply to the bench
-# workload); production-length needles cross L2 at ~500 chars and a
-# 16-core LLC share at ~1000 chars, yet the cached path still scales
-# 0.87-0.91 at 4->32 workers here (260 MB L3, ample DRAM bandwidth) while
-# NT costs 1-10% single-core and wins ~5% aggregate only at the largest
-# sizes.  Default 16 MB: NT engages only where the matrix exceeds any
-# plausible per-core LLC share — on bandwidth/LLC-constrained production
-# executors (1-3 MB LLC/core is typical) the no-RFO, zero-LLC-occupancy
-# behavior is the right one; tune with SPARK_GRAFT_SW_NT_THRESHOLD.
-_NT_THRESHOLD_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SW_NT_THRESHOLD", str(1 << 24))
-)
 
 
 def native_match_blocks(
@@ -391,14 +327,6 @@ def native_match_blocks(
     cells = (n + 1) * (m + 1)
     if cells > _matrix.size:
         _matrix.grow(cells)
-    if cells * 2 <= _NT_THRESHOLD_BYTES:
-        n_blocks = lib.sw_align16(a_bytes, n, b_bytes, m, _matrix.ptr, _blocks.ptr)
-    else:
-        # large matrix: cache-invisible streaming DP (byte-identical values)
-        if 2 * (n + 1) > _rowbuf.size:
-            _rowbuf.grow(2 * (n + 1))
-        n_blocks = lib.sw_align16_nt(
-            a_bytes, n, b_bytes, m, _matrix.ptr, _rowbuf.ptr, _blocks.ptr
-        )
+    n_blocks = lib.sw_align16(a_bytes, n, b_bytes, m, _matrix.ptr, _blocks.ptr)
     flat = _blocks.array[: 3 * n_blocks]
     return list(zip(flat[0::3], flat[1::3], flat[2::3]))

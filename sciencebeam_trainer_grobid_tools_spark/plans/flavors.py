@@ -207,7 +207,8 @@ def fulltext_flavor(
     matcher_config: Optional[MatcherConfig] = None,
     replaced_tag_by_tag: Optional[Dict[str, Optional[str]]] = None,
     group_tag_by_tag: Optional[Dict[str, str]] = None,
-    expand_enabled_tags: Optional[Set[str]] = None,
+    expand_previous_tags: Optional[Set[str]] = None,
+    expand_following_tags: Optional[Set[str]] = None,
 ) -> AnnotatorChain:
     replacements = (
         replaced_tag_by_tag if replaced_tag_by_tag is not None else {"note_other": None}
@@ -220,9 +221,10 @@ def fulltext_flavor(
             replace_tags(doc, replacements)
         if groups:
             merge_group_tags(doc, groups.get)
-        if expand_enabled_tags:
-            expand_to_previous_untagged_tokens(doc, expand_enabled_tags)
-            expand_to_following_untagged_tokens(doc, expand_enabled_tags)
+        if expand_previous_tags:
+            expand_to_previous_untagged_tokens(doc, expand_previous_tags)
+        if expand_following_tags:
+            expand_to_following_untagged_tokens(doc, expand_following_tags)
         return doc
 
     return annotate

@@ -403,12 +403,12 @@ def kernel_control() -> dict:
     protocol widths — no JVM, no shuffle, no Python rows.  If the bare
     kernel cannot scale 4x on this box now, no engine can; the engine's
     own scaling loss is the delta between the Spark batch and this."""
-    from scripts.bench_dp_nt import contention
+    from scripts.bench_dp import contention
 
-    section = {"needle_len": 1000, "nt_kernel": True, "ts": round(time.time(), 1)}
+    section = {"needle_len": 1000, "ts": round(time.time(), 1)}
     for lo, hi in ((4, 16), (6, 24)):
-        low = contention(True, lo, 1000)
-        high = contention(True, hi, 1000)
+        low = contention(lo, 1000)
+        high = contention(hi, 1000)
         section["%dw_to_%dw" % (lo, hi)] = {
             "agg_low_calls_s": round(low, 1),
             "agg_high_calls_s": round(high, 1),

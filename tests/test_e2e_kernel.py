@@ -113,58 +113,43 @@ class TestAnnotationE2E:
         assert passed >= int(N_DOCS * 0.85), passed
 
 
-class TestStreamingDpParity:
-    """The non-temporal (cache-invisible) DP must produce byte-identical
-    blocks to the cached DP at any size (kernel/native.py sw_align16_nt)."""
+class TestLargeMatrixDp:
+    """The C DP returns the numpy oracle's blocks on production-sized
+    matrices, not only on the small property-test pairs."""
 
-    def test_random_parity_nt_vs_cached(self):
+    def test_large_matrices_equal_numpy_oracle(self):
         import random
 
-        from sciencebeam_trainer_grobid_tools_spark.kernel import native
-
-        if native.get_native_lib() is None:
-            import pytest
-
-            pytest.skip("native kernel unavailable")
-        saved = native._NT_THRESHOLD_BYTES
-        rng = random.Random(99)
-        alphabet = "abcdef ghij.,*"
-        try:
-            for _ in range(200):
-                n = rng.randint(1, 500)
-                m = rng.randint(1, 80)
-                a = "".join(rng.choice(alphabet) for _ in range(n))
-                b = "".join(rng.choice(alphabet) for _ in range(m))
-                ab, bb = a.encode("utf-32-le"), b.encode("utf-32-le")
-                native._NT_THRESHOLD_BYTES = 0
-                nt_blocks = native.native_match_blocks(ab, n, bb, m)
-                native._NT_THRESHOLD_BYTES = 1 << 30
-                cached_blocks = native.native_match_blocks(ab, n, bb, m)
-                assert nt_blocks == cached_blocks, (a, b)
-        finally:
-            native._NT_THRESHOLD_BYTES = saved
-
-    def test_large_matrix_parity(self):
-        import random
+        import numpy as np
+        import pytest
 
         from sciencebeam_trainer_grobid_tools_spark.kernel import native
+        from sciencebeam_trainer_grobid_tools_spark.kernel.align import (
+            _pick_max_cell,
+            _smith_waterman_matrix,
+            _traceback_blocks,
+        )
+        from sciencebeam_trainer_grobid_tools_spark.kernel.fuzzy import auto_window
 
         if native.get_native_lib() is None:
-            import pytest
-
             pytest.skip("native kernel unavailable")
-        saved = native._NT_THRESHOLD_BYTES
-        rng = random.Random(7)
         alphabet = "abcdefghij klmnop.,"
+        rng = random.Random(7)
         a = "".join(rng.choice(alphabet) for _ in range(6000))
-        b = a[1000:2200]  # production-shaped: 1200-char needle, ~14 MB matrix
-        ab, bb = a.encode("utf-32-le"), b.encode("utf-32-le")
-        try:
-            native._NT_THRESHOLD_BYTES = 0
-            nt_blocks = native.native_match_blocks(ab, len(a), bb, len(b))
-            native._NT_THRESHOLD_BYTES = 1 << 30
-            cached_blocks = native.native_match_blocks(ab, len(a), bb, len(b))
-        finally:
-            native._NT_THRESHOLD_BYTES = saved
-        assert nt_blocks == cached_blocks
-        assert nt_blocks and nt_blocks[0][2] >= 1200  # the real alignment found
+        # production-shaped: 1200-char needle, ~14 MB int16 matrix
+        pairs = [(a, a[1000:2200], 1200)]
+        # a 1400-char needle in its auto_window window: 9.4 M cells, 18.8 MB
+        window, _ = auto_window(100_000, 1400, 0.8)
+        a = "".join(rng.choice(alphabet) for _ in range(window))
+        pairs.append((a, a[2000:3400], 1400))
+        assert 2 * (window + 1) * 1401 > 16 << 20
+        for a, b, needle_len in pairs:
+            a_codes = np.frombuffer(a.encode("utf-32-le"), dtype=np.uint32)
+            b_codes = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32)
+            h = _smith_waterman_matrix(a_codes, b_codes)
+            i, j, _ = _pick_max_cell(h)
+            expected = _traceback_blocks(h, a_codes, b_codes, i, j)
+            del h
+            got = native.native_match_blocks(a_codes.tobytes(), len(a), b_codes.tobytes(), len(b))
+            assert got == expected
+            assert got[0][2] >= needle_len  # the real alignment found

@@ -57,6 +57,16 @@ class TestFlavors:
         fulltext_flavor(MatcherConfig(extend_to_line_enabled=False))(doc, [])
         assert doc.tags[2] == "i-list"
 
+    def test_fulltext_flavor_expands_previous_and_following_separately(self):
+        doc = doc_for_texts(["before it", "Figure 1", "after it"])
+        doc.tags[2] = "b-figure"
+        doc.tags[3] = "i-figure"
+        fulltext_flavor(
+            MatcherConfig(extend_to_line_enabled=False),
+            expand_previous_tags={"figure"},
+        )(doc, [])
+        assert tag_values(doc) == ["figure"] * 4 + [None, None]
+
 
 class TestSegmentationFlavorRichDocument:
     def test_full_document_segment_classes(self):

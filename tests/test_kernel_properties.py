@@ -136,21 +136,15 @@ def dp_pairs(draw):
     return a, b
 
 
-@pytest.mark.parametrize("nt_threshold", [1 << 30, 0], ids=["cached", "streaming"])
 @settings(max_examples=400, deadline=None)
 @given(pair=dp_pairs())
-def test_native_dp_blocks_equal_numpy_oracle(nt_threshold, pair):
+def test_native_dp_blocks_equal_numpy_oracle(pair):
     """The fused C kernel (SIMD rows, best cell, traceback) returns exactly
-    the numpy DP's blocks, on both the in-place and the streaming path."""
+    the numpy DP's blocks."""
     if native.get_native_lib() is None:
         pytest.skip("native kernel unavailable")
     a, b = pair
-    saved = native._NT_THRESHOLD_BYTES
-    native._NT_THRESHOLD_BYTES = nt_threshold
-    try:
-        got = native.native_match_blocks(a.encode("utf-32-le"), len(a), b.encode("utf-32-le"), len(b))
-    finally:
-        native._NT_THRESHOLD_BYTES = saved
+    got = native.native_match_blocks(a.encode("utf-32-le"), len(a), b.encode("utf-32-le"), len(b))
     assert got == numpy_oracle_blocks(a, b)
 
 
