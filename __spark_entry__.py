@@ -1130,11 +1130,7 @@ def q_docs_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the count table (no second corpus scan), (w1, w2)-keyed score
     join, per-doc mean."""
     docs = _spread(_load(spark, sf_dir, "documents"), spark)
-    # persist_counts=False: same repeated-query-harness rationale as
-    # q_docs_unigram_logprob
-    return textstats.bigram_logprob_features(
-        docs, persist_counts=False
-    ).orderBy("doc_id")
+    return textstats.bigram_logprob_features(docs).orderBy("doc_id")
 
 
 def q_docs_bigram_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1144,7 +1140,7 @@ def q_docs_bigram_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     a row-count over the bigram count table, no extra corpus scan."""
     docs = _spread(_load(spark, sf_dir, "documents"), spark)
     return textstats.bigram_logprob_features(
-        docs, persist_counts=False, smoothing_mode="kn"
+        docs, smoothing_mode="kn"
     ).orderBy("doc_id")
 
 
@@ -1160,7 +1156,7 @@ def q_docs_bigram_kn_heldout(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = docs.filter(F.col("doc_id") % 2 == 0)
     held = docs.filter(F.col("doc_id") % 2 == 1)
     return textstats.bigram_logprob_features(
-        train, persist_counts=False, smoothing_mode="kn", score_df=held
+        train, smoothing_mode="kn", score_df=held
     ).orderBy("doc_id")
 
 
@@ -2293,9 +2289,7 @@ def _run_flavor_query(
 def q_flavor_refseg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-segmenter flavor gate (auto_annotate_reference_segmenter.py):
     label + citation per doc -> listBibl/bibl with label sub field."""
-    from sciencebeam_trainer_grobid_tools_spark.plans.flavors import (
-        reference_segmenter_flavor,
-    )
+    from sciencebeam_trainer_grobid_tools_spark.plans.flavors import default_flavor
 
     return _run_flavor_query(
         spark,
@@ -2314,7 +2308,7 @@ reference.sub.reference-label = ./label
             "<mixed-citation>Ref title {i} words</mixed-citation></ref>"
             "</ref-list></back></article>"
         ),
-        flavor_factory=lambda cfg: reference_segmenter_flavor(cfg),
+        flavor_factory=default_flavor,
         tei_render_mapping={
             "DEFAULT": 'note[@type="other"]',
             "reference": "listBibl/bibl",

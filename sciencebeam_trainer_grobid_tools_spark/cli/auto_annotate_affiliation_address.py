@@ -7,8 +7,6 @@ import argparse
 import logging
 from typing import Optional
 
-from ..operators.targets import parse_xml_mapping_string
-from ..plans.auto_annotate import get_xml_mapping_with_overrides
 from ..plans.flavors import affiliation_flavor
 from . import shared
 
@@ -56,37 +54,21 @@ def parse_args(argv: Optional[list] = None) -> argparse.Namespace:
 
 
 def run(args: argparse.Namespace) -> dict:
-    mapping_text = shared.resolve_xml_mapping_text(args)
-    mapping = get_xml_mapping_with_overrides(
-        parse_xml_mapping_string(mapping_text), args.xml_mapping_overrides
-    )
-    matcher_config = shared.build_matcher_config(
-        args,
-        mapping,
-        use_sub_annotations=True,
-        preserve_sub_annotations=True,
-        extend_to_line_enabled=False,
-    )
-    chain = affiliation_flavor(
-        matcher_config,
-        segment_affiliations=args.segment_affiliation,
-        remove_untagged_enabled=args.remove_invalid_affiliations,
-    )
     return shared.run_pipeline_from_args(
         args,
         app_name="auto-annotate-affiliation-address",
-        flavor_chain=chain,
+        make_chain=lambda matcher_config: affiliation_flavor(
+            matcher_config,
+            segment_affiliations=args.segment_affiliation,
+            remove_untagged_enabled=args.remove_invalid_affiliations,
+        ),
+        matcher_options=shared.SUB_TAG_MATCHER_OPTIONS,
         tag_to_tei_path_mapping=AFFILIATION_TAG_TO_TEI_PATH_MAPPING,
         container_path=AFFILIATION_CONTAINER_NODE_PATH,
         source_pattern="*.affiliation.tei.xml*",
-        xml_mapping_text=mapping_text,
-        fields=set(args.fields) if args.fields else None,
-        sub_fields=set(args.sub_fields) if args.sub_fields else None,
-        preserve_sub_tags=args.preserve_sub_tags,
         default_always_preserve_fields=(
             None if args.segment_affiliation else {"author_aff"}
         ),
-        no_preserve_sub_fields=set(args.no_preserve_sub_fields or []) or None,
     )
 
 

@@ -7,8 +7,7 @@ import argparse
 import logging
 from typing import Optional
 
-from ..operators.targets import parse_xml_mapping_string
-from ..plans.auto_annotate import get_xml_mapping_with_overrides
+from ..operators.tei_render import with_field_notes
 from ..plans.flavors import fulltext_flavor
 from . import shared
 
@@ -92,43 +91,30 @@ def parse_args(argv: Optional[list] = None) -> argparse.Namespace:
 
 
 def run(args: argparse.Namespace) -> dict:
-    mapping_text = shared.resolve_xml_mapping_text(args)
-    mapping = get_xml_mapping_with_overrides(
-        parse_xml_mapping_string(mapping_text), args.xml_mapping_overrides
-    )
-    tag_mapping = dict(FULLTEXT_TAG_TO_TEI_PATH_MAPPING)
-    for field in args.fields or []:
-        if field not in tag_mapping:
-            tag_mapping[field] = 'note[@type="%s"]' % field
-    matcher_config = shared.build_matcher_config(
-        args,
-        mapping,
-        use_sub_annotations=True,
-        preserve_sub_annotations=True,
-        extend_to_line_enabled=not args.no_extend_to_line,
-    )
-
     # reference _get_annotator (auto_annotate_fulltext.py:142-187): the
     # prev/following expansions are gated independently
     expand_tags = EXPAND_TO_UNTAGGED_LINES_ENABLED_TAGS
-    chain = fulltext_flavor(
-        matcher_config,
-        replaced_tag_by_tag=REPLACED_TAG_BY_TAG_MAP,
-        group_tag_by_tag=GROUP_TAG_BY_TAG_MAP,
-        expand_previous_tags=expand_tags if args.expand_to_previous_untagged_lines else None,
-        expand_following_tags=expand_tags if args.expand_to_following_untagged_lines else None,
-    )
-
+    previous_tags = expand_tags if args.expand_to_previous_untagged_lines else None
+    following_tags = expand_tags if args.expand_to_following_untagged_lines else None
     return shared.run_pipeline_from_args(
         args,
         app_name="auto-annotate-fulltext",
-        flavor_chain=chain,
-        tag_to_tei_path_mapping=tag_mapping,
+        make_chain=lambda matcher_config: fulltext_flavor(
+            matcher_config,
+            replaced_tag_by_tag=REPLACED_TAG_BY_TAG_MAP,
+            group_tag_by_tag=GROUP_TAG_BY_TAG_MAP,
+            expand_previous_tags=previous_tags,
+            expand_following_tags=following_tags,
+        ),
+        matcher_options=dict(
+            shared.SUB_TAG_MATCHER_OPTIONS,
+            extend_to_line_enabled=not args.no_extend_to_line,
+        ),
+        tag_to_tei_path_mapping=with_field_notes(
+            FULLTEXT_TAG_TO_TEI_PATH_MAPPING, args.fields or []
+        ),
         container_path=FULLTEXT_CONTAINER_NODE_PATH,
         source_pattern="*.fulltext.tei.xml*",
-        xml_mapping_text=mapping_text,
-        fields=set(args.fields) if args.fields else None,
-        sub_fields=set(args.sub_fields) if args.sub_fields else None,
     )
 
 

@@ -7,9 +7,8 @@ import argparse
 import logging
 from typing import Optional
 
-from ..operators.tei_render import HEADER_TAG_TO_TEI_PATH_MAPPING
-from ..operators.targets import parse_xml_mapping_string
-from ..plans.auto_annotate import get_xml_mapping_with_overrides
+from ..operators.tei_render import HEADER_TAG_TO_TEI_PATH_MAPPING, with_field_notes
+from ..plans.flavors import default_flavor
 from . import shared
 
 HEADER_CONTAINER_NODE_PATH = "text/front"
@@ -31,29 +30,20 @@ def parse_args(argv: Optional[list] = None) -> argparse.Namespace:
 
 
 def run(args: argparse.Namespace) -> dict:
-    mapping_text = shared.resolve_xml_mapping_text(args)
-    mapping = get_xml_mapping_with_overrides(
-        parse_xml_mapping_string(mapping_text), args.xml_mapping_overrides
-    )
-    # reference auto_annotate_header.py:69-72: fields without an explicit TEI
-    # path render as note[@type="<field>"]
-    tag_mapping = dict(HEADER_TAG_TO_TEI_PATH_MAPPING)
-    for field in args.fields or []:
-        if field not in tag_mapping:
-            tag_mapping[field] = 'note[@type="%s"]' % field
-    matcher_config = shared.build_matcher_config(
-        args, mapping, use_sub_annotations=False
-    )
-    stage = shared.make_default_matcher_stage(args, matcher_config)
     return shared.run_pipeline_from_args(
         args,
         app_name="auto-annotate-header",
-        flavor_chain=lambda doc, targets: stage(doc, targets),
-        tag_to_tei_path_mapping=tag_mapping,
+        make_chain=lambda matcher_config: default_flavor(
+            matcher_config, **shared.default_stack_options(args)
+        ),
+        matcher_options={"use_sub_annotations": False},
+        # reference auto_annotate_header.py:69-72: fields without an explicit
+        # TEI path render as note[@type="<field>"]
+        tag_to_tei_path_mapping=with_field_notes(
+            HEADER_TAG_TO_TEI_PATH_MAPPING, args.fields or []
+        ),
         container_path=HEADER_CONTAINER_NODE_PATH,
         source_pattern="*.header.tei.xml*",
-        xml_mapping_text=mapping_text,
-        fields=set(args.fields) if args.fields else None,
     )
 
 

@@ -8,8 +8,7 @@ import logging
 from typing import Optional
 
 from ..operators.reference import default_reference_annotator_config
-from ..operators.targets import parse_xml_mapping_string
-from ..plans.auto_annotate import get_xml_mapping_with_overrides
+from ..operators.tei_render import with_field_notes
 from ..plans.flavors import reference_flavor
 from . import shared
 
@@ -72,35 +71,24 @@ def parse_args(argv: Optional[list] = None) -> argparse.Namespace:
 
 
 def run(args: argparse.Namespace) -> dict:
-    mapping_text = shared.resolve_xml_mapping_text(args)
-    mapping = get_xml_mapping_with_overrides(
-        parse_xml_mapping_string(mapping_text), args.xml_mapping_overrides
-    )
-    tag_mapping = dict(REFERENCE_TAG_TO_TEI_PATH_MAPPING)
-    for field in args.fields or []:
-        if field not in tag_mapping:
-            tag_mapping[field] = 'note[@type="%s"]' % field
     reference_config = default_reference_annotator_config()
     if args.include_idno_prefix:
         reference_config.include_prefix_enabled_sub_tags = set(IDNO_SUB_TAGS)
-    matcher_config = shared.build_matcher_config(
-        args, mapping, use_sub_annotations=True, extend_to_line_enabled=False
-    )
-    chain = reference_flavor(
-        matcher_config,
-        reference_config=reference_config,
-        segment_references=args.segment_references,
-        remove_untagged_enabled=args.remove_invalid_references,
-    )
     return shared.run_pipeline_from_args(
         args,
         app_name="auto-annotate-reference",
-        flavor_chain=chain,
-        tag_to_tei_path_mapping=tag_mapping,
+        make_chain=lambda matcher_config: reference_flavor(
+            matcher_config,
+            reference_config=reference_config,
+            segment_references=args.segment_references,
+            remove_untagged_enabled=args.remove_invalid_references,
+        ),
+        matcher_options={"use_sub_annotations": True, "extend_to_line_enabled": False},
+        tag_to_tei_path_mapping=with_field_notes(
+            REFERENCE_TAG_TO_TEI_PATH_MAPPING, args.fields or []
+        ),
         container_path=REFERENCE_CONTAINER_NODE_PATH,
         source_pattern="*.references.tei.xml*",
-        xml_mapping_text=mapping_text,
-        fields=set(args.fields) if args.fields else None,
         default_always_preserve_fields=(
             None if args.segment_references else {"reference"}
         ),

@@ -7,8 +7,7 @@ import argparse
 import logging
 from typing import Optional
 
-from ..operators.targets import parse_xml_mapping_string
-from ..plans.auto_annotate import get_xml_mapping_with_overrides
+from ..plans.flavors import default_flavor
 from . import shared
 
 REFERENCE_SEGMENTER_CONTAINER_NODE_PATH = "text"
@@ -40,23 +39,16 @@ def parse_args(argv: Optional[list] = None) -> argparse.Namespace:
 
 
 def run(args: argparse.Namespace) -> dict:
-    mapping_text = shared.resolve_xml_mapping_text(args)
-    mapping = get_xml_mapping_with_overrides(
-        parse_xml_mapping_string(mapping_text), args.xml_mapping_overrides
-    )
-    matcher_config = shared.build_matcher_config(
-        args, mapping, use_sub_annotations=True
-    )
-    stage = shared.make_default_matcher_stage(args, matcher_config)
     return shared.run_pipeline_from_args(
         args,
         app_name="auto-annotate-reference-segmenter",
-        flavor_chain=lambda doc, targets: stage(doc, targets),
+        make_chain=lambda matcher_config: default_flavor(
+            matcher_config, **shared.default_stack_options(args)
+        ),
+        matcher_options={"use_sub_annotations": True},
         tag_to_tei_path_mapping=REFERENCE_SEGMENTER_TAG_TO_TEI_PATH_MAPPING,
         container_path=REFERENCE_SEGMENTER_CONTAINER_NODE_PATH,
         source_pattern="*.references.referenceSegmenter.tei.xml*",
-        xml_mapping_text=mapping_text,
-        fields=set(args.fields) if args.fields else None,
     )
 
 

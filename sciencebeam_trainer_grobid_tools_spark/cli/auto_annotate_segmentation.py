@@ -9,11 +9,10 @@ from typing import Optional
 
 from ..operators.segmentation import (
     DEFAULT_SEGMENTATION_CONFIG_TEXT,
-    SegmentationAnnotator,
     parse_segmentation_config_string,
 )
-from ..operators.targets import parse_xml_mapping_string
-from ..plans.auto_annotate import comma_separated_str_to_list, get_xml_mapping_with_overrides
+from ..plans.auto_annotate import comma_separated_str_to_list
+from ..plans.flavors import segmentation_flavor
 from . import shared
 
 SEGMENTATION_CONTAINER_NODE_PATH = "text"
@@ -82,32 +81,20 @@ def load_segmentation_config(args: argparse.Namespace):
 
 
 def run(args: argparse.Namespace) -> dict:
-    mapping_text = shared.resolve_xml_mapping_text(args)
-    mapping = get_xml_mapping_with_overrides(
-        parse_xml_mapping_string(mapping_text), args.xml_mapping_overrides
-    )
     seg_config = load_segmentation_config(args)
-    preserve_tags = not args.no_preserve_tags
-    matcher_config = shared.build_matcher_config(
-        args, mapping, use_sub_annotations=False
-    )
-    stage = shared.make_default_matcher_stage(args, matcher_config)
-
-    def chain(doc, targets):
-        stage(doc, targets)
-        SegmentationAnnotator(seg_config, preserve_tags=preserve_tags).annotate(doc)
-        return doc
-
     return shared.run_pipeline_from_args(
         args,
         app_name="auto-annotate-segmentation",
-        flavor_chain=chain,
+        make_chain=lambda matcher_config: segmentation_flavor(
+            matcher_config,
+            seg_config,
+            preserve_tags=not args.no_preserve_tags,
+            **shared.default_stack_options(args),
+        ),
+        matcher_options={"use_sub_annotations": False},
         tag_to_tei_path_mapping=SEGMENTATION_TAG_TO_TEI_PATH_MAPPING,
         container_path=SEGMENTATION_CONTAINER_NODE_PATH,
         source_pattern="*.segmentation.tei.xml*",
-        xml_mapping_text=mapping_text,
-        fields=set(args.fields) if args.fields else None,
-        no_preserve_fields=set(args.no_preserve_fields or []) or None,
     )
 
 

@@ -7,6 +7,11 @@ threshold, lookahead, debug-match), line-number group, document checks, and
 the ``+field,-field`` selection syntax.  The Beam cloud/runner flags are
 replaced by a Spark group; ``--multi-processing`` is accepted for script
 compatibility but ignored (Spark owns the parallelism).
+
+A flavor main names its annotator chain from ``plans.flavors`` and hands it
+to :func:`run_pipeline_from_args`, which reads every shared flag, resolves
+the mapping and builds the matcher config; :func:`default_stack_options`
+turns the line-number and matcher flags into the default stack's options.
 """
 
 from __future__ import annotations
@@ -14,20 +19,18 @@ from __future__ import annotations
 import argparse
 import logging
 import os
-from typing import Dict, List, Optional, Set
+from typing import Any, Callable, Dict, List, Optional, Set
 
 from pyspark.sql import SparkSession
 
-from ..operators.annotate import MatcherConfig, SimpleMatcher, TargetAnnotation
+from ..operators.annotate import MatcherConfig
 from ..operators.line_numbers import (
     DEFAULT_LINE_NUMBER_RATIO_THRESHOLD,
     DEFAULT_MAX_LINE_NUMBER_GAP,
     DEFAULT_MIN_LINE_NUMBER_COUNT,
-    annotate_line_numbers,
 )
 from ..operators.matching import (
     CsvMatchDetailReporter,
-    MatchingAnnotator,
     MatchingAnnotatorConfig,
     get_simple_fuzzy_match_filter,
 )
@@ -38,6 +41,7 @@ from ..plans.auto_annotate import (
     plus_minus_comma_separated_str_to_list,
     run_auto_annotate,
 )
+from ..plans.flavors import AnnotatorChain
 from ..plans.session import build_session
 from ..sources.corpus import DEFAULT_XML_MAPPING
 
@@ -46,11 +50,13 @@ LOGGER = logging.getLogger(__name__)
 MATCHER_NAMES = ["complex", "simple"]
 DEFAULT_MATCHER_NAME = "simple"
 
-# matching.py defaults (reference matching_annotator.py / auto_annotate_utils)
-DEFAULT_SEQ_MIN_MATCH_COUNT = 10
-DEFAULT_SEQ_RATIO_MIN_MATCH_COUNT = 20
-DEFAULT_CHOICE_MIN_MATCH_COUNT = 2
-DEFAULT_CHOICE_RATIO_MIN_MATCH_COUNT = 10
+# the matcher options of the sub-tag flavors (affiliation, figure, table;
+# fulltext sets extend_to_line_enabled from its flag)
+SUB_TAG_MATCHER_OPTIONS = {
+    "use_sub_annotations": True,
+    "preserve_sub_annotations": True,
+    "extend_to_line_enabled": False,
+}
 
 
 def parse_dict(value: str) -> Dict[str, str]:
@@ -65,10 +71,6 @@ def parse_dict(value: str) -> Dict[str, str]:
             raise argparse.ArgumentTypeError("expected key=value, got %r" % item)
         result[key.strip()] = val.strip()
     return result
-
-
-def comma_separated_set(value: str) -> Set[str]:
-    return set(comma_separated_str_to_list(value))
 
 
 def add_debug_argument(parser: argparse.ArgumentParser) -> argparse.ArgumentParser:
@@ -224,13 +226,6 @@ def process_annotation_pipeline_arguments(
         parser.error("one of --source-base-path or --source-path required")
 
 
-def resolve_xml_mapping_text(args: argparse.Namespace) -> str:
-    if args.xml_mapping_path:
-        with open(args.xml_mapping_path, encoding="utf-8") as handle:
-            return handle.read()
-    return DEFAULT_XML_MAPPING
-
-
 def get_or_create_session(args: argparse.Namespace, app_name: str) -> SparkSession:
     active = SparkSession.getActiveSession()
     if active is not None:
@@ -242,26 +237,19 @@ def get_or_create_session(args: argparse.Namespace, app_name: str) -> SparkSessi
     )
 
 
-def build_matcher_config(
-    args: argparse.Namespace,
-    mapping: Dict[str, Dict[str, str]],
-    **kwargs,
-) -> MatcherConfig:
-    """args + parsed mapping -> the simple-matcher family config
-    (reference AnnotatorConfig.get_simple_annotator_config)."""
-    return MatcherConfig(
-        threshold=args.matcher_score_threshold,
-        lookahead_sequence_count=args.matcher_lookahead_lines,
-        tag_config_map=get_tag_config_map(mapping),
-        **kwargs,
-    )
-
-
-def make_default_matcher_stage(args: argparse.Namespace, matcher_config: MatcherConfig):
-    """The get_default_annotators equivalent (auto_annotate_utils.py:488-514):
-    optional line-number annotator, then simple OR complex matcher.  Returns a
-    ``(doc, targets) -> doc`` stage for flavors built on the default stack
-    (header / segmentation / reference-segmenter)."""
+def default_stack_options(args: argparse.Namespace) -> Dict[str, Any]:
+    """The ``line_numbers`` and ``complex_config`` options of
+    ``flavors.default_flavor`` from the line-number and matcher flags
+    (get_default_annotators, auto_annotate_utils.py:488-514)."""
+    line_numbers = None
+    if args.use_line_number_annotator:
+        line_numbers = {
+            "min_count": args.min_line_numbers_per_page,
+            "max_gap": args.max_line_number_gap,
+            "ratio_threshold": args.min_line_number_ratio,
+        }
+    if args.matcher != "complex":
+        return {"line_numbers": line_numbers, "complex_config": None}
 
     # one debug-match reporter per task (lazy), not per document: per-document
     # reporters would reopen the same per-task part file in 'w' mode and keep
@@ -275,64 +263,64 @@ def make_default_matcher_stage(args: argparse.Namespace, matcher_config: Matcher
     # closed is replaced on next use instead of written-to-after-close.
     reporter_cell: list = []
 
-    def get_reporter():
-        if not args.debug_match:
-            return None
-        if reporter_cell and reporter_cell[0]._closed:
-            reporter_cell.clear()
-        if not reporter_cell:
-            reporter_cell.append(CsvMatchDetailReporter(args.debug_match))
-        return reporter_cell[0]
-
-    def build_complex_config() -> MatchingAnnotatorConfig:
-        reporter = get_reporter()
+    def complex_config() -> MatchingAnnotatorConfig:
+        reporter = None
+        if args.debug_match:
+            if reporter_cell and reporter_cell[0]._closed:
+                reporter_cell.clear()
+            if not reporter_cell:
+                reporter_cell.append(CsvMatchDetailReporter(args.debug_match))
+            reporter = reporter_cell[0]
+        threshold = args.matcher_score_threshold
         return MatchingAnnotatorConfig(
             match_detail_reporter=reporter,
+            # the CLI's filters (reference auto_annotate_utils.py)
             seq_match_filter=get_simple_fuzzy_match_filter(
-                args.matcher_score_threshold,
-                min_match_count=DEFAULT_SEQ_MIN_MATCH_COUNT,
-                ratio_min_match_count=DEFAULT_SEQ_RATIO_MIN_MATCH_COUNT,
+                threshold, min_match_count=10, ratio_min_match_count=20
             ),
             choice_match_filter=get_simple_fuzzy_match_filter(
-                args.matcher_score_threshold,
-                min_match_count=DEFAULT_CHOICE_MIN_MATCH_COUNT,
-                ratio_min_match_count=DEFAULT_CHOICE_RATIO_MIN_MATCH_COUNT,
+                threshold, min_match_count=2, ratio_min_match_count=10
             ),
         )
 
-    def stage(doc, targets: List[TargetAnnotation]):
-        if args.use_line_number_annotator:
-            annotate_line_numbers(
-                doc,
-                min_count=args.min_line_numbers_per_page,
-                max_gap=args.max_line_number_gap,
-                ratio_threshold=args.min_line_number_ratio,
-            )
-        if args.matcher == "complex":
-            MatchingAnnotator(targets, build_complex_config()).annotate(doc)
-        else:
-            SimpleMatcher(targets, matcher_config).annotate(doc)
-        return doc
+    return {"line_numbers": line_numbers, "complex_config": complex_config}
 
-    return stage
+
+def _arg_set(args: argparse.Namespace, name: str) -> Optional[Set[str]]:
+    """A list-valued flag as a set; None when the flavor lacks it or it is
+    empty."""
+    return set(getattr(args, name, None) or []) or None
 
 
 def run_pipeline_from_args(
     args: argparse.Namespace,
     app_name: str,
-    flavor_chain,
+    make_chain: Callable[[MatcherConfig], AnnotatorChain],
+    matcher_options: Dict[str, bool],
     tag_to_tei_path_mapping: Dict[str, str],
     container_path: str,
     source_pattern: str,
-    xml_mapping_text: str,
-    fields: Optional[Set[str]] = None,
-    sub_fields: Optional[Set[str]] = None,
-    preserve_sub_tags: bool = False,
-    no_preserve_sub_fields: Optional[Set[str]] = None,
-    no_preserve_fields: Optional[Set[str]] = None,
     default_always_preserve_fields: Optional[Set[str]] = None,
 ) -> Dict[str, int]:
-    """Map the shared args onto :func:`run_auto_annotate` and run the job."""
+    """Map the shared args onto :func:`run_auto_annotate` and run the job.
+
+    Resolves the mapping (``--xml-mapping-path``, ``--xml-mapping-overrides``)
+    once, builds the matcher config from it, the matcher flags and
+    ``matcher_options``, and runs the chain ``make_chain`` returns for it."""
+    xml_mapping_text = DEFAULT_XML_MAPPING
+    if args.xml_mapping_path:
+        with open(args.xml_mapping_path, encoding="utf-8") as handle:
+            xml_mapping_text = handle.read()
+    mapping = get_xml_mapping_with_overrides(
+        parse_xml_mapping_string(xml_mapping_text), args.xml_mapping_overrides
+    )
+    # reference AnnotatorConfig.get_simple_annotator_config
+    matcher_config = MatcherConfig(
+        threshold=args.matcher_score_threshold,
+        lookahead_sequence_count=args.matcher_lookahead_lines,
+        tag_config_map=get_tag_config_map(mapping),
+        **matcher_options,
+    )
     spark = get_or_create_session(args, app_name)
     source_base_path = args.source_base_path
     limit = args.limit
@@ -348,17 +336,15 @@ def run_pipeline_from_args(
         output_path=args.output_path,
         xml_path=args.xml_path,
         xml_filename_regex=args.xml_filename_regex,
-        flavor_chain=flavor_chain,
+        flavor_chain=make_chain(matcher_config),
         xml_mapping_text=xml_mapping_text,
         tag_to_tei_path_mapping=tag_to_tei_path_mapping,
         container_path=container_path,
-        fields=fields,
-        sub_fields=sub_fields,
+        fields=_arg_set(args, "fields"),
+        sub_fields=_arg_set(args, "sub_fields"),
         failed_output_path=args.failed_output_path,
-        require_matching_fields=(
-            set(getattr(args, "require_matching_fields", None) or []) or None
-        ),
-        required_fields=set(getattr(args, "required_fields", None) or []) or None,
+        require_matching_fields=_arg_set(args, "require_matching_fields"),
+        required_fields=_arg_set(args, "required_fields"),
         source_pattern=source_pattern,
         preserve_tags=not args.no_preserve_tags,
         # sub-tag-only flavors always-preserve their main field when NOT
@@ -371,9 +357,9 @@ def run_pipeline_from_args(
             if args.always_preserve_fields
             else (default_always_preserve_fields or None)
         ),
-        preserve_sub_tags=preserve_sub_tags,
-        no_preserve_sub_fields=no_preserve_sub_fields,
-        no_preserve_fields=no_preserve_fields,
+        preserve_sub_tags=getattr(args, "preserve_sub_tags", False),
+        no_preserve_sub_fields=_arg_set(args, "no_preserve_sub_fields"),
+        no_preserve_fields=_arg_set(args, "no_preserve_fields"),
         xml_mapping_overrides=args.xml_mapping_overrides,
         limit=limit,
         resume=args.resume,

@@ -65,9 +65,3 @@ def split_and_join_with_space(text: str) -> str:
     """Re-tokenize a needle the way document text is tokenized and join with
     single spaces, so it compares against token-joined document text."""
     return " ".join(t for t in _NON_WORD_SPLIT.split(text) if t.strip())
-
-
-def split_and_join_with_space_or_list(value: Union[str, List[str]]):
-    if isinstance(value, list):
-        return [split_and_join_with_space(s) for s in value]
-    return split_and_join_with_space(value)

@@ -404,30 +404,16 @@ def _get_sub_mapping(mapping: Dict[str, str], field: str) -> Dict[str, str]:
 def _extract_sub_annotations(
     parent_node: ET.Element,
     sub_xpaths: Dict[str, str],
-    mapping: Dict[str, str],
-    parent_key: str,
     ctx: XPathContext,
-    sub_extract_compiled: Optional[Dict[str, Optional["re.Pattern[str]"]]] = None,
+    sub_extract_compiled: Dict[str, Optional["re.Pattern[str]"]],
 ) -> List[TargetAnnotation]:
     if not sub_xpaths:
         return []
     sub_annotations: List[TargetAnnotation] = []
     for sub_tag, sub_xpath in sub_xpaths.items():
-        if sub_extract_compiled is not None:
-            compiled = sub_extract_compiled.get(sub_tag)
-        else:
-            extract_pattern = mapping.get(
-                parent_key
-                + MappingSuffix.SUB
-                + "."
-                + sub_tag
-                + MappingSuffix.EXTRACT_REGEX
-            )
-            compiled = re.compile(extract_pattern) if extract_pattern else None
+        compiled = sub_extract_compiled.get(sub_tag)
         for node in match_xpaths(parent_node, [sub_xpath], ctx):
             value: Union[str, List[str], None] = stripped_text_content(node)
-            if value:
-                value = strip_whitespace(value).strip()
             if compiled is not None and value:
                 value = extract_using_regex(value, compiled)
             if value:
@@ -552,7 +538,7 @@ def xml_root_to_target_annotations(
         for node in match_xpaths(xml_root, xpaths, ctx):
             node_pos = ctx.doc_position(node)
             sub_annotations = _extract_sub_annotations(
-                node, sub_xpaths, mapping, field, ctx, plan.sub_extract_compiled
+                node, sub_xpaths, ctx, plan.sub_extract_compiled
             )
             # wildcard children on mixed-content nodes fall back to raw text
             # (annotation/target_annotation.py:150-168)

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import re
 import xml.etree.ElementTree as ET
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, Iterable, List, Optional, Tuple
 
 from ..kernel.doc import TokenizedDoc
 from .annotate import B_PREFIX, split_tag_prefix
@@ -40,6 +40,16 @@ HEADER_TAG_TO_TEI_PATH_MAPPING = {
     "author_aff": "byline/affiliation",
     "line_no": 'note[@type="line_no"]',
 }
+
+
+def with_field_notes(mapping: Dict[str, str], fields: Iterable[str]) -> Dict[str, str]:
+    """A copy of ``mapping`` where each of ``fields`` it has no path for
+    renders as ``note[@type="<field>"]`` (auto_annotate_header.py:68-71)."""
+    out = dict(mapping)
+    for field in fields:
+        out.setdefault(field, 'note[@type="%s"]' % field)
+    return out
+
 
 _TAG_EXPRESSION = re.compile(r'^([^\[]+)(\[@?([^=]+)="(.+)"\])?$')
 

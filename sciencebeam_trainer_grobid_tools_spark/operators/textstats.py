@@ -50,17 +50,6 @@ def whitespace_token_count(text: Column) -> Column:
     return F.size(F.split(text, " "))
 
 
-def word_token_count(text: Column) -> Column:
-    """Regex word tokens — a BPE-ish proxy: runs of word chars or single
-    punctuation marks, mirroring the engine tokenizer's fragment count."""
-    return F.size(
-        F.filter(
-            F.split(text, r"(?<=\W)|(?=\W)"),
-            lambda t: F.trim(t) != "",
-        )
-    )
-
-
 def cleanliness_columns(text: Column) -> "dict[str, Column]":
     """Encoding-damage / text-cleanliness signals (the ftfy-adjacent
     heuristics web pipelines threshold before spending quality-model
@@ -227,7 +216,6 @@ def bigram_logprob_features(
     id_col: str = "doc_id",
     text_col: str = "text",
     smoothing: float = 0.5,
-    persist_counts: bool = True,
     smoothing_mode: str = "additive",
     kn_discount: float = 0.75,
     score_df: "DataFrame" = None,
@@ -293,11 +281,9 @@ def bigram_logprob_features(
     the (much smaller) count table, not from a second corpus scan, and
     the model join ``bcounts x ccounts`` shuffles only count tables.
     The per-bigram score join is (w1, w2)-keyed — AQE picks broadcast
-    vs sort-merge by the model's actual size.  ``persist_counts``
-    mirrors ``unigram_logprob_features(persist_vocab)`` (the count
-    table has two consumers: V and the score join); the cached table
-    outlives the returned plan — long-lived sessions own the lifecycle,
-    repeated-query harnesses pass False."""
+    vs sort-merge by the model's actual size.  The count table is not
+    cached: only the score plan is returned, so a cached table could
+    never be unpersisted by the caller."""
     from pyspark.sql import functions as _F
 
     def _bigrams(src: "DataFrame") -> "DataFrame":
@@ -331,8 +317,6 @@ def bigram_logprob_features(
             " got %r" % smoothing_mode
         )
     bcounts = bg.groupBy("w1", "w2").agg(_F.count(_F.lit(1)).alias("c2"))
-    if persist_counts:
-        bcounts = bcounts.persist()
     if score_df is not None:
         return _heldout_bigram_scores(
             _bigrams(score_df), bcounts, smoothing_mode,

@@ -1,12 +1,17 @@
-"""Pipeline flavors mirroring the reference's entry points (SURVEY.md §3).
+"""Annotator chains of the auto-annotate flavors (SURVEY.md §3).
 
-Each reference ``auto_annotate_<flavor>`` module is the same skeleton with a
-different annotator chain + tag->TEI mapping; here each flavor is a function
-``TokenizedDoc + targets -> TokenizedDoc`` composing the engine's operators:
+This module is the one place an annotator chain is written: the flavor CLIs
+(``cli/auto_annotate_*``), the flagship row kernel
+(``plans.pipeline.annotate_document_row``) and the gate queries all build
+their chain here.  Each reference ``auto_annotate_<flavor>`` module is the
+same skeleton with a different annotator chain + tag->TEI mapping; here each
+flavor is a function ``TokenizedDoc + targets -> TokenizedDoc`` composing
+the engine's operators:
 
-- header:        SimpleMatcher (+ optional line numbers) —
-                 auto_annotate_header.py:52-96
-- segmentation:  SimpleMatcher -> SegmentationAnnotator —
+- default (header, reference-segmenter, the row kernel): [line numbers ->]
+                 SimpleMatcher or the complex MatchingAnnotator —
+                 auto_annotate_utils.py:488-514
+- segmentation:  the default stack -> SegmentationAnnotator —
                  auto_annotate_segmentation.py:93-104
 - reference:     SubTagOnlyMatcher (or SimpleMatcher when segmenting) ->
                  ReferencePostProcessor [-> remove untagged] —
@@ -22,17 +27,16 @@ different annotator chain + tag->TEI mapping; here each flavor is a function
                  the matcher) — auto_annotate_figure.py:49-88
 - table:         identical chain for table/table-label/table-caption —
                  auto_annotate_table.py:44-84
-- reference_segmenter: [line numbers ->] SimpleMatcher (default annotators) —
-                 auto_annotate_reference_segmenter.py:27-46 +
-                 auto_annotate_utils.py:488-514
 
 The flavor callable plugs into ``annotate_documents`` as the per-document
-kernel's annotator chain.
+kernel's annotator chain.  The row kernel imports this module at start-up,
+so each flavor imports the operators it adds to the simple matcher when it
+builds its chain.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Dict, List, Optional, Set
+from typing import TYPE_CHECKING, Any, Callable, Dict, List, Optional, Set
 
 from ..kernel.doc import TokenizedDoc
 from ..operators.annotate import (
@@ -41,33 +45,38 @@ from ..operators.annotate import (
     SubTagOnlyMatcher,
     TargetAnnotation,
 )
-from ..operators.line_numbers import annotate_line_numbers
-from ..operators.postprocess import (
-    expand_to_following_untagged_tokens,
-    expand_to_previous_untagged_tokens,
-    merge_group_tags,
-    remove_untagged_tokens,
-    replace_tags,
-)
-from ..operators.reference import ReferenceAnnotatorConfig, ReferencePostProcessor
-from ..operators.segmentation import (
-    DEFAULT_SEGMENTATION_CONFIG_TEXT,
-    SegmentationAnnotator,
-    SegmentationConfig,
-    parse_segmentation_config_string,
-)
+
+if TYPE_CHECKING:
+    from ..operators.matching import MatchingAnnotatorConfig
+    from ..operators.reference import ReferenceAnnotatorConfig
+    from ..operators.segmentation import SegmentationConfig
 
 AnnotatorChain = Callable[[TokenizedDoc, List[TargetAnnotation]], TokenizedDoc]
 
 
-def header_flavor(
-    config: Optional[MatcherConfig] = None,
-    detect_line_numbers: bool = False,
+def default_flavor(
+    matcher_config: Optional[MatcherConfig] = None,
+    line_numbers: Optional[Dict[str, Any]] = None,
+    complex_config: Optional[Callable[[], MatchingAnnotatorConfig]] = None,
 ) -> AnnotatorChain:
+    """The default annotator stack (auto_annotate_utils.py:488-514).
+
+    ``line_numbers``: keyword arguments of ``annotate_line_numbers``, which
+    runs first when given.  ``complex_config``: a zero-argument factory of
+    the complex matcher's config, called once per document; when given, the
+    ``MatchingAnnotator`` runs instead of ``SimpleMatcher(matcher_config)``."""
+    if line_numbers is not None:
+        from ..operators.line_numbers import annotate_line_numbers
+    if complex_config is not None:
+        from ..operators.matching import MatchingAnnotator
+
     def annotate(doc: TokenizedDoc, targets: List[TargetAnnotation]) -> TokenizedDoc:
-        if detect_line_numbers:
-            annotate_line_numbers(doc)
-        SimpleMatcher(targets, config).annotate(doc)
+        if line_numbers is not None:
+            annotate_line_numbers(doc, **line_numbers)
+        if complex_config is not None:
+            MatchingAnnotator(targets, complex_config()).annotate(doc)
+        else:
+            SimpleMatcher(targets, matcher_config).annotate(doc)
         return doc
 
     return annotate
@@ -77,14 +86,44 @@ def segmentation_flavor(
     matcher_config: Optional[MatcherConfig] = None,
     segmentation_config: Optional[SegmentationConfig] = None,
     preserve_tags: bool = False,
+    line_numbers: Optional[Dict[str, Any]] = None,
+    complex_config: Optional[Callable[[], MatchingAnnotatorConfig]] = None,
 ) -> AnnotatorChain:
+    """The default stack (see ``default_flavor``), then segmentation."""
+    from ..operators.segmentation import (
+        DEFAULT_SEGMENTATION_CONFIG_TEXT,
+        SegmentationAnnotator,
+        parse_segmentation_config_string,
+    )
+
     seg_config = segmentation_config or parse_segmentation_config_string(
         DEFAULT_SEGMENTATION_CONFIG_TEXT
     )
+    match = default_flavor(matcher_config, line_numbers, complex_config)
 
     def annotate(doc: TokenizedDoc, targets: List[TargetAnnotation]) -> TokenizedDoc:
-        SimpleMatcher(targets, matcher_config).annotate(doc)
+        match(doc, targets)
         SegmentationAnnotator(seg_config, preserve_tags=preserve_tags).annotate(doc)
+        return doc
+
+    return annotate
+
+
+def _sub_tag_flavor(
+    matcher_config: Optional[MatcherConfig],
+    segment: bool,
+) -> AnnotatorChain:
+    """The matcher of the reference, affiliation, figure and table chains
+    (auto_annotate_figure.py:62-88, auto_annotate_table.py:58-84):
+    sub annotations on, extend-to-line off by default; the segment flag
+    swaps SubTagOnly for the full SimpleMatcher."""
+    config = matcher_config or MatcherConfig(
+        use_sub_annotations=True, extend_to_line_enabled=False
+    )
+    matcher = SimpleMatcher if segment else SubTagOnlyMatcher
+
+    def annotate(doc: TokenizedDoc, targets: List[TargetAnnotation]) -> TokenizedDoc:
+        matcher(targets, config).annotate(doc)
         return doc
 
     return annotate
@@ -96,14 +135,13 @@ def reference_flavor(
     segment_references: bool = False,
     remove_untagged_enabled: bool = False,
 ) -> AnnotatorChain:
+    from ..operators.postprocess import remove_untagged_tokens
+    from ..operators.reference import ReferencePostProcessor
+
+    match = _sub_tag_flavor(matcher_config, segment_references)
+
     def annotate(doc: TokenizedDoc, targets: List[TargetAnnotation]) -> TokenizedDoc:
-        config = matcher_config or MatcherConfig(
-            use_sub_annotations=True, extend_to_line_enabled=False
-        )
-        if segment_references:
-            SimpleMatcher(targets, config).annotate(doc)
-        else:
-            SubTagOnlyMatcher(targets, config).annotate(doc)
+        match(doc, targets)
         ReferencePostProcessor(reference_config).annotate(doc)
         if remove_untagged_enabled:
             remove_untagged_tokens(doc)
@@ -133,39 +171,15 @@ def affiliation_flavor(
     """Affiliation-address flavor (auto_annotate_affiliation_address.py:86-118):
     sub-tag-level matching with preserved sub annotations, optional untagged
     removal, then sub-level group-merge of the address sub fields."""
+    from ..operators.postprocess import merge_group_tags, remove_untagged_tokens
+
+    match = _sub_tag_flavor(matcher_config, segment_affiliations)
 
     def annotate(doc: TokenizedDoc, targets: List[TargetAnnotation]) -> TokenizedDoc:
-        config = matcher_config or MatcherConfig(
-            use_sub_annotations=True, extend_to_line_enabled=False
-        )
-        if segment_affiliations:
-            SimpleMatcher(targets, config).annotate(doc)
-        else:
-            SubTagOnlyMatcher(targets, config).annotate(doc)
+        match(doc, targets)
         if remove_untagged_enabled:
             remove_untagged_tokens(doc)
         merge_group_tags(doc, address_group_tag, sub_level=True)
-        return doc
-
-    return annotate
-
-
-def _sub_tag_flavor(
-    matcher_config: Optional[MatcherConfig],
-    segment: bool,
-) -> AnnotatorChain:
-    """Shared figure/table chain (auto_annotate_figure.py:62-88,
-    auto_annotate_table.py:58-84): preserve sub annotations, extend-to-line
-    off; the segment flag swaps SubTagOnly for the full SimpleMatcher."""
-
-    def annotate(doc: TokenizedDoc, targets: List[TargetAnnotation]) -> TokenizedDoc:
-        config = matcher_config or MatcherConfig(
-            use_sub_annotations=True, extend_to_line_enabled=False
-        )
-        if segment:
-            SimpleMatcher(targets, config).annotate(doc)
-        else:
-            SubTagOnlyMatcher(targets, config).annotate(doc)
         return doc
 
     return annotate
@@ -185,24 +199,6 @@ def table_flavor(
     return _sub_tag_flavor(matcher_config, segment_tables)
 
 
-def reference_segmenter_flavor(
-    matcher_config: Optional[MatcherConfig] = None,
-    detect_line_numbers: bool = False,
-) -> AnnotatorChain:
-    """Reference-segmenter flavor (auto_annotate_reference_segmenter.py:27-46):
-    the default annotator stack — optional line-number detection then the
-    plain SimpleMatcher; the reference/reference-label fields come from the
-    mapping config."""
-
-    def annotate(doc: TokenizedDoc, targets: List[TargetAnnotation]) -> TokenizedDoc:
-        if detect_line_numbers:
-            annotate_line_numbers(doc)
-        SimpleMatcher(targets, matcher_config).annotate(doc)
-        return doc
-
-    return annotate
-
-
 def fulltext_flavor(
     matcher_config: Optional[MatcherConfig] = None,
     replaced_tag_by_tag: Optional[Dict[str, Optional[str]]] = None,
@@ -210,6 +206,13 @@ def fulltext_flavor(
     expand_previous_tags: Optional[Set[str]] = None,
     expand_following_tags: Optional[Set[str]] = None,
 ) -> AnnotatorChain:
+    from ..operators.postprocess import (
+        expand_to_following_untagged_tokens,
+        expand_to_previous_untagged_tokens,
+        merge_group_tags,
+        replace_tags,
+    )
+
     replacements = (
         replaced_tag_by_tag if replaced_tag_by_tag is not None else {"note_other": None}
     )

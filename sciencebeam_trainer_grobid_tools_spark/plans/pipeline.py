@@ -18,12 +18,12 @@ the task (reference: auto_annotate_utils.py:677-686).
 
 from __future__ import annotations
 
-from functools import lru_cache
+from functools import lru_cache, partial
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.annotate import MatcherConfig, SimpleMatcher, extract_entity_spans, extract_sub_entity_spans
+from ..operators.annotate import MatcherConfig, extract_entity_spans, extract_sub_entity_spans
 from ..operators.checks import check_document
 from ..operators.extract import html_to_lines, text_to_lines
 from ..operators.targets import (
@@ -34,6 +34,7 @@ from ..operators.targets import (
 from ..kernel.doc import tokenize_lines
 from ..sources.corpus import DEFAULT_XML_MAPPING
 from ..zipcache import install_in_worker
+from .flavors import default_flavor
 
 SPAN_TYPE = "array<struct<field:string,start:int,end:int,text:string>>"
 
@@ -111,24 +112,22 @@ def annotate_document_row(
     targets = (
         xml_string_to_target_annotations(target_xml, mapping) if target_xml else []
     )
+    complex_config = None
     if matcher == "complex":
         # the reference's legacy MatchingAnnotator (threshold 0.9, bonding /
         # match_multiple / require_next semantics)
-        from ..operators.matching import MatchingAnnotator, MatchingAnnotatorConfig
+        from ..operators.matching import MatchingAnnotatorConfig
 
-        MatchingAnnotator(
-            targets, MatchingAnnotatorConfig(use_tag_begin_prefix=True)
-        ).annotate(doc)
-    else:
-        SimpleMatcher(
-            targets,
-            MatcherConfig(
-                threshold=threshold,
-                lookahead_sequence_count=lookahead_lines,
-                use_sub_annotations=use_sub_annotations,
-                tag_config_map=tag_config_map,
-            ),
-        ).annotate(doc)
+        complex_config = partial(MatchingAnnotatorConfig, use_tag_begin_prefix=True)
+    default_flavor(
+        MatcherConfig(
+            threshold=threshold,
+            lookahead_sequence_count=lookahead_lines,
+            use_sub_annotations=use_sub_annotations,
+            tag_config_map=tag_config_map,
+        ),
+        complex_config=complex_config,
+    )(doc, targets)
     spans = extract_entity_spans(doc)
     sub_spans = extract_sub_entity_spans(doc)
     required = {f for f in require_matching_fields.split(",") if f}
@@ -139,12 +138,15 @@ def annotate_document_row(
     hit_fields = {str(s["field"]) for s in spans}
     tei_xml = None
     if render_tei:
-        from ..operators.tei_render import HEADER_TAG_TO_TEI_PATH_MAPPING, render_tei_xml
+        from ..operators.tei_render import (
+            HEADER_TAG_TO_TEI_PATH_MAPPING,
+            render_tei_xml,
+            with_field_notes,
+        )
 
-        tei_mapping = dict(HEADER_TAG_TO_TEI_PATH_MAPPING)
-        for field in target_fields:
-            tei_mapping.setdefault(field, 'note[@type="%s"]' % field)
-        tei_xml = render_tei_xml(doc, tei_mapping)
+        tei_xml = render_tei_xml(
+            doc, with_field_notes(HEADER_TAG_TO_TEI_PATH_MAPPING, target_fields)
+        )
     return {
         "url": url,
         "extracted_text": doc.extracted_text,
@@ -158,6 +160,25 @@ def annotate_document_row(
         "reason": reason,
         "error": None,
         "tei_xml": tei_xml,
+    }
+
+
+def _error_row(url: str, lang: Optional[str], reason: Optional[str], error: str) -> dict:
+    """The output row of a document the kernel did not annotate."""
+    return {
+        "url": url,
+        "lang": lang,
+        "extracted_text": None,
+        "n_lines": 0,
+        "n_tokens": 0,
+        "spans": [],
+        "sub_spans": [],
+        "alignment_attempts": 0,
+        "alignment_hits": 0,
+        "passed": False,
+        "reason": reason,
+        "error": error,
+        "tei_xml": None,
     }
 
 
@@ -218,22 +239,13 @@ def annotate_documents(
                     # oversized-document guard: payload was nulled JVM-side;
                     # account for the doc on the error/failed output
                     out.append(
-                        {
-                            "url": url,
-                            "lang": lang,
-                            "extracted_text": None,
-                            "n_lines": 0,
-                            "n_tokens": 0,
-                            "spans": [],
-                            "sub_spans": [],
-                            "alignment_attempts": 0,
-                            "alignment_hits": 0,
-                            "passed": False,
-                            "reason": "oversized_document",
-                            "error": "oversized_document: %d bytes > max_doc_bytes=%d"
+                        _error_row(
+                            url,
+                            lang,
+                            "oversized_document",
+                            "oversized_document: %d bytes > max_doc_bytes=%d"
                             % (int(doc_bytes), max_bytes),
-                            "tei_xml": None,
-                        }
+                        )
                     )
                     continue
                 try:
@@ -252,21 +264,9 @@ def annotate_documents(
                     )
                     result["lang"] = lang
                 except Exception as exc:  # per-document error isolation
-                    result = {
-                        "url": url,
-                        "lang": lang,
-                        "extracted_text": None,
-                        "n_lines": 0,
-                        "n_tokens": 0,
-                        "spans": [],
-                        "sub_spans": [],
-                        "alignment_attempts": 0,
-                        "alignment_hits": 0,
-                        "passed": False,
-                        "reason": None,
-                        "error": "%s: %s" % (type(exc).__name__, exc),
-                        "tei_xml": None,
-                    }
+                    result = _error_row(
+                        url, lang, None, "%s: %s" % (type(exc).__name__, exc)
+                    )
                 out.append(result)
             yield pd.DataFrame(out, columns=list(ANNOTATED_COLUMNS))
 

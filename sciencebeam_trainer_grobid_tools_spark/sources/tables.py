@@ -1,14 +1,11 @@
-"""Table IO seam: parquet now, Iceberg at deployment.
+"""The resume snapshot of an output table.
 
-BASELINE.json specifies Iceberg tables; this sandbox has no Iceberg runtime
-jar, so the engine abstracts the table format behind these helpers
-(SURVEY.md §7.3 item 6).  Semantics that matter to the pipeline — atomic
-appends, a snapshot to anti-join against for resume, partition pruning — are
-preserved by the parquet fallback (directory + `_SUCCESS` manifest); swapping
-``format("iceberg")`` in below (plus ``days(warc_ts)`` / ``bucket(url)``
-partitioning DDL) is the only change needed on a real cluster, and drops the
-pipeline's one shuffle (the salted repartition) when the table is bucketed by
-url hash.
+Provides ``read_completed_urls`` (the urls an output table already holds,
+which a resumed run anti-joins against) and ``CompletedOutputUnreadable``,
+raised when that table has data files Spark cannot read.  The table format
+is parquet (directory + ``_SUCCESS`` manifest); with Iceberg (BASELINE.json;
+no Iceberg runtime jar ships with the package) the read becomes
+``format("iceberg")``.
 """
 
 from __future__ import annotations
@@ -16,23 +13,6 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def read_documents(spark: SparkSession, location: str, fmt: str = "parquet") -> DataFrame:
-    """Scan the documents table (reference S1: glob scan -> table scan).
-
-    With Iceberg: ``spark.read.format("iceberg").load(location)`` — snapshot
-    isolation and partition pruning come from the table format.
-    """
-    return spark.read.format(fmt).load(location)
-
-
-def append_annotated(annotated: DataFrame, location: str, fmt: str = "parquet") -> None:
-    """Append an output batch (reference S6).  With Iceberg this is an atomic
-    snapshot commit (``annotated.writeTo(table).append()``); the parquet
-    fallback appends files + `_SUCCESS`, which the chunked driver
-    (streaming/resume.py) orders so a crash between chunks loses nothing."""
-    annotated.write.mode("append").format(fmt).save(location)
 
 
 class CompletedOutputUnreadable(RuntimeError):

@@ -21,7 +21,7 @@ from sciencebeam_trainer_grobid_tools_spark.plans.auto_annotate import (
     regex_change_name,
     run_auto_annotate,
 )
-from sciencebeam_trainer_grobid_tools_spark.plans.flavors import header_flavor
+from sciencebeam_trainer_grobid_tools_spark.plans.flavors import default_flavor
 from sciencebeam_trainer_grobid_tools_spark.sources.corpus import DEFAULT_XML_MAPPING
 
 TEI_FILENAME_1 = "document1.header.tei.xml"
@@ -82,7 +82,7 @@ def run_header_job(spark, tmp_path, **kwargs):
         output_path=str(tmp_path / "tei-auto"),
         xml_path=str(tmp_path / "xml"),
         xml_filename_regex=TEI_FILENAME_REGEX,
-        flavor_chain=header_flavor(config),
+        flavor_chain=default_flavor(config),
         xml_mapping_text=mapping_text,
         tag_to_tei_path_mapping=HEADER_TAG_TO_TEI_PATH_MAPPING,
         source_pattern="*.header.tei.xml",

@@ -166,6 +166,37 @@ class TestSegmentationCli:
         out = (tmp_path / "tei-auto" / "document1.segmentation.tei.xml").read_text()
         assert TITLE_1 in xpath_text(out, ".//front")
 
+    def test_line_number_annotator_renders_margin_numbers(self, spark, tmp_path):
+        """--use-line-number-annotator: margin line numbers, each extracted
+        as a line of its own before its text line, are tagged line_no and
+        render as note[@type="line_no"]."""
+        (tmp_path / "tei-raw").mkdir(exist_ok=True)
+        (tmp_path / "xml").mkdir(exist_ok=True)
+        numbered = "".join(
+            "%d<lb/>body text line %d<lb/>" % (i + 1, i + 1) for i in range(12)
+        )
+        (tmp_path / "tei-raw" / "document1.segmentation.tei.xml").write_text(
+            "<tei><text>%s<lb/>%s</text></tei>" % (TITLE_1, numbered)
+        )
+        (tmp_path / "xml" / "document1.xml").write_text(target_xml(TITLE_1))
+        counters = auto_annotate_segmentation.main(
+            [
+                "--source-base-path", str(tmp_path / "tei-raw"),
+                "--output-path", str(tmp_path / "tei-auto"),
+                "--xml-path", str(tmp_path / "xml"),
+                "--xml-filename-regex", r"/(.*).segmentation.tei.xml/\1.xml/",
+                "--use-line-number-annotator",
+            ]
+        )
+        assert counters == {"passed": 1, "failed": 0}
+        out = ET.fromstring(
+            (tmp_path / "tei-auto" / "document1.segmentation.tei.xml").read_text()
+        )
+        assert texts(out, './/note[@type="line_no"]') == [
+            str(i + 1) for i in range(12)
+        ]
+        assert TITLE_1 in " ".join(texts(out, ".//front"))
+
 
 REFSEG_XML_MAPPING = """
 [article]

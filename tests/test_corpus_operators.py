@@ -2006,9 +2006,7 @@ class TestBigramLogprob:
         )
         got = {
             r["doc_id"]: r
-            for r in textstats.bigram_logprob_features(
-                docs, persist_counts=False
-            ).collect()
+            for r in textstats.bigram_logprob_features(docs).collect()
         }
         assert sorted(got) == [1, 2]
         s, v = 0.5, 3.0
@@ -2032,10 +2030,21 @@ class TestBigramLogprob:
             [(i, "tok%d the common run of words %d" % (i % 3, i)) for i in range(20)],
             "doc_id long, text string",
         )
-        a = textstats.bigram_logprob_features(docs, persist_counts=False).collect()
-        b = textstats.bigram_logprob_features(docs, persist_counts=False).collect()
+        a = textstats.bigram_logprob_features(docs).collect()
+        b = textstats.bigram_logprob_features(docs).collect()
         assert sorted(map(tuple, a)) == sorted(map(tuple, b))
         assert len(a) == 20
+
+    def test_default_call_caches_nothing(self, spark):
+        """Only the score plan is returned, so a cached count table could
+        never be unpersisted: a default call leaves no persisted RDD."""
+        docs = spark.createDataFrame(
+            [(1, "a b a b c"), (2, "a b")], "doc_id long, text string"
+        )
+        persistent = spark.sparkContext._jsc.getPersistentRDDs
+        before = persistent().size()
+        textstats.bigram_logprob_features(docs).collect()
+        assert persistent().size() == before
 
     def test_hand_computed_kneser_ney_scores(self, spark):
         """Same corpus as the additive test, D=0.75.  Count-table stats:
@@ -2052,7 +2061,7 @@ class TestBigramLogprob:
         got = {
             r["doc_id"]: r
             for r in textstats.bigram_logprob_features(
-                docs, persist_counts=False, smoothing_mode="kn"
+                docs, smoothing_mode="kn"
             ).collect()
         }
         assert sorted(got) == [1, 2]
@@ -2096,7 +2105,7 @@ class TestBigramLogprob:
         got = {
             r["doc_id"]: r
             for r in textstats.bigram_logprob_features(
-                train, persist_counts=False, smoothing_mode="kn",
+                train, smoothing_mode="kn",
                 score_df=held,
             ).collect()
         }
@@ -2121,7 +2130,7 @@ class TestBigramLogprob:
         got = {
             r["doc_id"]: r["avg_neg_logprob2"]
             for r in textstats.bigram_logprob_features(
-                train, persist_counts=False, score_df=held
+                train, score_df=held
             ).collect()
         }
         assert got[10] == round(-math.log(3.5 / 4.5), 6)
@@ -2141,13 +2150,13 @@ class TestBigramLogprob:
         in_corpus = {
             r["doc_id"]: r
             for r in textstats.bigram_logprob_features(
-                train, persist_counts=False, smoothing_mode="kn"
+                train, smoothing_mode="kn"
             ).collect()
         }
         held = {
             r["doc_id"]: r
             for r in textstats.bigram_logprob_features(
-                train, persist_counts=False, smoothing_mode="kn",
+                train, smoothing_mode="kn",
                 score_df=train,
             ).collect()
         }

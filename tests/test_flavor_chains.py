@@ -25,8 +25,8 @@ from sciencebeam_trainer_grobid_tools_spark.operators.targets import (
 from sciencebeam_trainer_grobid_tools_spark.operators.tei_render import render_tagged_lines
 from sciencebeam_trainer_grobid_tools_spark.plans.flavors import (
     affiliation_flavor,
+    default_flavor,
     figure_flavor,
-    reference_segmenter_flavor,
     table_flavor,
 )
 from sciencebeam_trainer_grobid_tools_spark.sources.tei import load_tei_doc
@@ -70,7 +70,7 @@ def run_refseg(tei_raw: str, target_xml: str, **flavor_kwargs) -> ET.Element:
     mapping = parse_xml_mapping_string(REFSEG_XML_MAPPING)
     doc = tokenize_lines(html_to_lines(tei_raw))
     targets = xml_string_to_target_annotations(target_xml, mapping)
-    chain = reference_segmenter_flavor(
+    chain = default_flavor(
         MatcherConfig(
             use_sub_annotations=True, tag_config_map=get_tag_config_map(mapping)
         ),

@@ -4,21 +4,46 @@ from sciencebeam_trainer_grobid_tools_spark.operators.annotate import (
     MatcherConfig,
     TargetAnnotation,
 )
+from sciencebeam_trainer_grobid_tools_spark.operators.matching import (
+    MatchingAnnotatorConfig,
+)
 from sciencebeam_trainer_grobid_tools_spark.plans.flavors import (
+    default_flavor,
     fulltext_flavor,
-    header_flavor,
     reference_flavor,
     segmentation_flavor,
 )
 
-from tests.conftest import doc_for_texts, sub_tag_values, tag_values
+from tests.conftest import (
+    doc_for_texts,
+    doc_for_token_lines,
+    sub_tag_values,
+    tag_values,
+)
 
 
 class TestFlavors:
-    def test_header_flavor(self):
+    def test_default_flavor(self):
         doc = doc_for_texts(["The Title", "by someone"])
-        header_flavor()(doc, [TargetAnnotation("The Title", "title")])
+        default_flavor()(doc, [TargetAnnotation("The Title", "title")])
         assert tag_values(doc)[:2] == ["title", "title"]
+
+    def test_default_flavor_line_numbers_then_complex_matcher(self):
+        doc = doc_for_token_lines(
+            [["1", "The", "Title"]] + [[str(i), "body", "text"] for i in range(2, 13)]
+        )
+        configs = []
+
+        def complex_config():
+            configs.append(MatchingAnnotatorConfig())
+            return configs[-1]
+
+        default_flavor(line_numbers={"min_count": 12}, complex_config=complex_config)(
+            doc, [TargetAnnotation("The Title", "title")]
+        )
+        assert [tag_values(doc)[line[0]] for line in doc.lines] == ["line_no"] * 12
+        assert tag_values(doc)[1:3] == ["title", "title"]
+        assert len(configs) == 1
 
     def test_segmentation_flavor_maps_title_to_front_and_rest_to_body(self):
         doc = doc_for_texts(["The Title", "body text here"])

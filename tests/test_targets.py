@@ -4,6 +4,9 @@ config/xml-mapping.conf)."""
 
 import textwrap
 
+from hypothesis import given, strategies as st
+
+from sciencebeam_trainer_grobid_tools_spark.kernel.normalize import strip_whitespace
 from sciencebeam_trainer_grobid_tools_spark.operators.targets import (
     get_tag_config_map,
     parse_xml_mapping_string,
@@ -155,3 +158,12 @@ class TestTagConfigMap:
         assert tag2.extend_to_line_enabled is True
         assert tag2.max_chunks == 1
         assert tag2.block_name is None
+
+
+@given(st.text(alphabet="ab \t\r\n"))
+def test_stripped_text_is_a_fixpoint_of_strip_whitespace(text):
+    """``stripped_text_content`` returns ``strip_whitespace(s.strip())``;
+    sub annotations use that value as it is, since normalizing it again
+    changes nothing."""
+    stripped = strip_whitespace(text.strip())
+    assert strip_whitespace(stripped).strip() == stripped
