@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import threading
 import time
@@ -108,6 +109,19 @@ class _StealMonitor(threading.Thread):
                 round(sum(active) / len(active), 2) if active else None
             ),
         }
+
+
+def scaling_record_paths(bench_dir: str) -> list:
+    """The ``quiet_scaling_r<N>.json`` records in ``bench_dir``, newest round
+    first.  Rounds compare as numbers: as strings, r10 would sort before r3."""
+    if not os.path.isdir(bench_dir):
+        return []
+    rounds = []
+    for name in os.listdir(bench_dir):
+        match = re.fullmatch(r"quiet_scaling_r(\d+)\.json", name)
+        if match:
+            rounds.append((int(match.group(1)), name))
+    return [os.path.join(bench_dir, name) for _, name in sorted(rounds, reverse=True)]
 
 
 def main() -> None:
@@ -239,23 +253,13 @@ def main() -> None:
     # scaling_bench.py, scripts/skew_bench.py) so the round's BENCH json
     # records that evidence without re-measuring under unknown load
     bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
-    for name in (
-        "quiet_scaling_r10.json",
-        "quiet_scaling_r9.json",
-        "quiet_scaling_r8.json",
-        "quiet_scaling_r7.json",
-        "quiet_scaling_r6.json",
-        "quiet_scaling_r4.json",
-        "quiet_scaling_r3.json",
-    ):
-        scaling_path = os.path.join(bench_dir, name)
-        if os.path.exists(scaling_path):
-            try:
-                with open(scaling_path) as fh:
-                    result["scaling"] = json.load(fh)
-            except (OSError, ValueError):
-                continue
-            break
+    for scaling_path in scaling_record_paths(bench_dir):
+        try:
+            with open(scaling_path) as fh:
+                result["scaling"] = json.load(fh)
+        except (OSError, ValueError):
+            continue
+        break
     skew_path = os.path.join(bench_dir, "skew_r5.json")
     if os.path.exists(skew_path):
         try:

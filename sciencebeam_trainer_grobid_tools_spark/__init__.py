@@ -13,7 +13,6 @@ Layout:
               corpus-level Spark operators (dedup, similarity, textstats)
   sources/    synthetic corpus generator, table IO + resume helpers
   plans/      end-to-end Spark pipelines (the flagship extraction plan)
-  functions/  Spark column-expression helpers
   streaming/  incremental / resumable execution
   zipcache    stat-guarded zip directory reloads, installed in PySpark
               workers only

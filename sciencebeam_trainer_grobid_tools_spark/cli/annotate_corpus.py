@@ -21,7 +21,6 @@ import argparse
 import logging
 from typing import Optional
 
-from ..plans.pipeline import annotate_documents
 from ..streaming.resume import run_resumable
 from . import shared
 
@@ -59,8 +58,7 @@ def add_main_args(parser: argparse.ArgumentParser) -> None:
                         help="oversized-document guard threshold in bytes: "
                              "bigger payloads become accounted "
                              "oversized_document error rows instead of "
-                             "stalling a core (default: env "
-                             "SPARK_GRAFT_MAX_DOC_BYTES or 64 MiB; 0 "
+                             "stalling a core (default: 64 MiB; 0 "
                              "disables)")
     spark_group = parser.add_argument_group("spark")
     spark_group.add_argument("--spark-cpus", type=int, default=None)

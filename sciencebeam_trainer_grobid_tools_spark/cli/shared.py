@@ -337,7 +337,7 @@ def run_pipeline_from_args(
         xml_path=args.xml_path,
         xml_filename_regex=args.xml_filename_regex,
         flavor_chain=make_chain(matcher_config),
-        xml_mapping_text=xml_mapping_text,
+        xml_mapping=mapping,
         tag_to_tei_path_mapping=tag_to_tei_path_mapping,
         container_path=container_path,
         fields=_arg_set(args, "fields"),
@@ -360,7 +360,6 @@ def run_pipeline_from_args(
         preserve_sub_tags=getattr(args, "preserve_sub_tags", False),
         no_preserve_sub_fields=_arg_set(args, "no_preserve_sub_fields"),
         no_preserve_fields=_arg_set(args, "no_preserve_fields"),
-        xml_mapping_overrides=args.xml_mapping_overrides,
         limit=limit,
         resume=args.resume,
     )

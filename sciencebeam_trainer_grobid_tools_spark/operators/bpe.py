@@ -1,31 +1,17 @@
 """Corpus-scale BPE tokenizer training (Sennrich, Haddow, Birch 2016,
 "Neural Machine Translation of Rare Words with Subword Units").
 
-Training a tokenizer IS a corpus-scale job: the corpus folds into a
-(word, count) table once, and every merge iteration is a pair-count
-aggregation over that table — at web scale the distinct-word table is
-10^7-10^8 rows, which is exactly the regime where the iteration belongs
-in Spark rather than a driver-side dict.
+The corpus folds into a (word, count) table once, in Spark; the merge
+iterations then run over that table.
 
 Design:
 
-- ``bpe_train`` reduces the corpus to word counts (ONE shuffle over the
-  corpus — the only time the corpus is read), seeds each word as its
-  character symbols plus an end-of-word sentinel, then iterates: pair
-  counts (codegen explode + partial-aggregated sum, weighted by word
-  count), deterministic best pair (max count, lexicographic tie-break —
-  retraining reproduces the model), and a codegen ``aggregate`` fold
-  applying the merge left-to-right non-overlapping to every word.  The
-  per-iteration driver traffic is ONE (pair, count) row — the model
-  statistic; the word table stays in Spark, persisted per iteration and
-  released as soon as the next materializes (lineage stays one step
-  deep).
-- ``bpe_encode_stats`` applies the learned merge list to documents.
-  Encoding is data-dependent sequential rewriting per token — the
-  honest Pandas UDF case — so it runs as ONE Arrow-batched
-  ``mapInPandas`` with the merge list broadcast in the closure,
-  emitting (doc_id, n_tokens, n_subwords).  No shuffle at all: encode
-  is a map.
+- ``bpe_train_collected`` reduces the corpus to word counts (ONE shuffle
+  over the corpus — the only time the corpus is read), collects that
+  table and runs the strict-Sennrich merge loop driver-side:
+  deterministic best pair (max count, lexicographic tie-break —
+  retraining reproduces the model), applied left-to-right
+  non-overlapping to every word.
 - ``bpe_vocab_table`` materializes the vocabulary ARTIFACT the encoder
   ships with: id 0 = ``<unk>``, the corpus's seed alphabet in
   lexicographic order, then one merged symbol per merge in merge order
@@ -67,122 +53,6 @@ def _seed_symbols() -> "F.Column":
     )
 
 
-def _apply_merge(syms, a: str, b: str):
-    """Left-to-right non-overlapping single-rule application as a codegen
-    fold: append x, unless the accumulator ends with ``a`` and x == b —
-    then replace that tail element with the merged symbol."""
-    merged = F.lit(a + b)
-    return F.aggregate(
-        syms,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.try_element_at(acc, F.lit(-1)) == F.lit(a)) & (x == F.lit(b)),
-            F.concat(
-                F.slice(acc, F.lit(1), F.size(acc) - F.lit(1)),
-                F.array(merged),
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def _select_disjoint(cands, batch: int) -> List[Tuple[str, str]]:
-    """Greedy symbol-disjoint selection from (a, b) candidates in rank
-    order: a candidate is taken iff none of {a, b, a+b} collides with a
-    previously-taken pair's {a, b, a+b}.  Disjointness is what makes the
-    batched counts exact: applying one taken merge can neither create
-    nor destroy an adjacency of another (the rewrite only touches the
-    taken pair's own symbols), so every taken pair's round-start count
-    is its true count at application time, in any application order."""
-    selected: List[Tuple[str, str]] = []
-    used: set = set()
-    for a, b in cands:
-        if {a, b, a + b} & used:
-            continue
-        selected.append((a, b))
-        used |= {a, b, a + b}
-        if len(selected) >= batch:
-            break
-    return selected
-
-
-def bpe_train(
-    df: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    min_pair_count: int = 2,
-    batch: int = 1,
-) -> List[Tuple[str, str]]:
-    """The learned merge list, most-frequent first.  Stops early when no
-    pair reaches ``min_pair_count`` (the corpus is fully compressed).
-
-    Latency honesty: each round is ONE Spark job ending in a small
-    collect, so a production vocabulary is ``~n_merges / batch``
-    sequential jobs over the persisted word table — at 50k merges with
-    ``batch=1`` the driver round-trip latency (seconds per job)
-    dominates, not the data.  Iterating in Spark only pays off when the
-    word table itself is cluster-sized (10^7-10^8 distinct words); for
-    vocabularies that fit driver memory use
-    :func:`bpe_train_collected` (the standard practice — the
-    (word, count) table, not the corpus, is all BPE ever needs).
-
-    ``batch > 1`` is the standard distributed-BPE amortization: each
-    round collects the top ``4 * batch`` candidate pairs and greedily
-    takes up to ``batch`` SYMBOL-DISJOINT ones (no symbol of a taken
-    pair — nor its merged concatenation — appears in another taken
-    pair).  Disjointness keeps every taken pair's round-start count
-    exact under the other taken merges, so each round's selections are
-    individually correct; the sequence can still differ from strict
-    Sennrich order because later rounds see ``batch`` merges at once
-    (rounds may take fewer than ``batch`` when the candidate pool
-    conflicts).  ``batch=1`` IS strict Sennrich."""
-    if batch < 1:
-        raise ValueError("bpe_train: batch must be >= 1, got %r" % batch)
-    words = _word_counts(df, text_col).select(
-        _seed_symbols().alias("syms"), F.col("n")
-    )
-    words = words.persist()
-    words.count()
-    merges: List[Tuple[str, str]] = []
-    while len(merges) < n_merges:
-        pairs = words.select(
-            F.col("n"),
-            F.explode(
-                F.when(
-                    F.size("syms") >= 2,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("syms") - 1),
-                        lambda i: F.struct(
-                            F.get("syms", i - 1).alias("a"),
-                            F.get("syms", i).alias("b"),
-                        ),
-                    ),
-                ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-            ).alias("p"),
-        )
-        best = (
-            pairs.groupBy("p.a", "p.b")
-            .agg(F.sum("n").alias("c"))
-            .orderBy(F.col("c").desc(), F.col("a"), F.col("b"))
-            .limit(1 if batch == 1 else 4 * batch)
-            .collect()
-        )
-        cands = [(r["a"], r["b"]) for r in best if r["c"] >= min_pair_count]
-        if not cands:
-            break
-        selected = _select_disjoint(cands, min(batch, n_merges - len(merges)))
-        merges.extend(selected)
-        col = F.col("syms")
-        for a, b in selected:
-            col = _apply_merge(col, a, b)
-        nxt = words.select(col.alias("syms"), "n")
-        nxt = nxt.persist()
-        nxt.count()
-        words.unpersist()
-        words = nxt
-    words.unpersist()
-    return merges
-
-
 def bpe_train_collected(
     df: DataFrame,
     n_merges: int,
@@ -190,13 +60,12 @@ def bpe_train_collected(
     min_pair_count: int = 2,
 ) -> List[Tuple[str, str]]:
     """Strict-Sennrich merge loop DRIVER-side over the collected
-    (word, count) table — identical output to ``bpe_train(batch=1)``,
-    and the right tool whenever the distinct-word table fits in driver
-    memory (<~10^7 rows): the corpus still reduces in Spark (ONE
-    shuffle, the only corpus read), but the 50k-merge iteration runs at
-    dict speed with zero per-merge job latency.  The collect is the
-    documented bound: at true web scale (10^8+ distinct words) use the
-    in-Spark loop instead."""
+    (word, count) table; returns the learned merge list, most-frequent
+    first.  Stops early when no pair reaches ``min_pair_count``.  The corpus
+    still reduces in Spark (ONE shuffle, the only corpus read), but the
+    50k-merge iteration runs at dict speed with zero per-merge job
+    latency.  The collect is the documented bound: the distinct-word
+    table must fit in driver memory (<~10^7 rows)."""
     rows = _word_counts(df, text_col).collect()
     vocab = {
         tuple(list(r["word"]) + [END_OF_WORD]): r["n"] for r in rows
@@ -235,7 +104,7 @@ UNK = "<unk>"
 
 def _merge_word(syms: list, merge_list: list) -> list:
     """Apply every merge, in order, left-to-right non-overlapping —
-    the shared sequential core of the encode paths."""
+    the sequential core of ``bpe_encode``."""
     for a, b in merge_list:
         i, nxt = 0, []
         while i < len(syms):
@@ -325,98 +194,3 @@ def bpe_encode(
     return df.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     ).mapInPandas(batches, "doc_id %s, token_ids array<int>" % id_type)
-
-
-def bpe_encode_stats(
-    df: DataFrame,
-    merges: Sequence[Tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-document subword statistics under the learned merges:
-    (doc_id, n_tokens, n_subwords) — the compression the tokenizer
-    achieves, which is what corpus-mixing recipes budget on.  The output
-    id field keeps the INPUT id column's type (a string-keyed corpus
-    stays string-keyed — no silent bigint coercion)."""
-    import pandas as pd
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    merge_list = [tuple(m) for m in merges]
-
-    def batches(it):
-        for pdf in it:
-            out = []
-            for row in pdf.itertuples(index=False):
-                text = row.text or ""
-                words = [w for w in text.replace("\n", " ").split(" ") if w]
-                n_sub = 0
-                for w in words:
-                    n_sub += len(
-                        _merge_word(list(w) + [END_OF_WORD], merge_list)
-                    )
-                out.append(
-                    {
-                        "doc_id": row.doc_id,
-                        "n_tokens": len(words),
-                        "n_subwords": n_sub,
-                    }
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "n_tokens", "n_subwords"])
-
-    return df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")).mapInPandas(
-        batches, "doc_id %s, n_tokens int, n_subwords int" % id_type
-    )
-
-
-def bpe_unk_stats(
-    df: DataFrame,
-    merges: Sequence[Tuple[str, str]],
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Held-out-corpus encoder health check: per document,
-    (doc_id, n_subwords, n_unk, unk_rate) under the learned merges +
-    vocabulary artifact.  A held-out document whose characters were all
-    seen at training time has ``unk_rate = 0.0``; unseen scripts show up
-    here BEFORE the token-id stream silently fills with ``<unk>``.
-
-    Same plan shape as ``bpe_encode``: ONE Arrow ``mapInPandas``, vocab
-    and merges ride the closure, no shuffle.  NULL text encodes to the
-    empty document (0 subwords, rate 0.0)."""
-    import pandas as pd
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    merge_list = [tuple(m) for m in merges]
-    known = {r["token"] for r in vocab.collect()} - {UNK}
-
-    def batches(it):
-        for pdf in it:
-            out = []
-            for row in pdf.itertuples(index=False):
-                text = row.text or ""
-                words = [w for w in text.replace("\n", " ").split(" ") if w]
-                n_sub = n_unk = 0
-                for w in words:
-                    for s in _merge_word(list(w) + [END_OF_WORD], merge_list):
-                        n_sub += 1
-                        if s not in known:
-                            n_unk += 1
-                out.append(
-                    {
-                        "doc_id": row.doc_id,
-                        "n_subwords": n_sub,
-                        "n_unk": n_unk,
-                        "unk_rate": (n_unk / n_sub) if n_sub else 0.0,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "n_subwords", "n_unk", "unk_rate"]
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).mapInPandas(
-        batches,
-        "doc_id %s, n_subwords int, n_unk int, unk_rate double" % id_type,
-    )

@@ -2,7 +2,6 @@
 
 All stages are Catalyst expressions (whole-stage codegen; no Python UDFs):
 
-- exact:     hash-groupBy on a normalized md5 fingerprint;
 - minhash:   word-shingles -> per-seed minima -> LSH band buckets ->
              candidate pairs -> exact Jaccard verification, rendered from
              one SQL template for both hash families (xxhash64 for
@@ -10,9 +9,8 @@ All stages are Catalyst expressions (whole-stage codegen; no Python UDFs):
              self-join is keyed by (band, band_hash) — at 10^12 docs this
              is the textbook near-dup plan (band count and rows/band trade
              recall vs shuffle width);
-- simhash:   per-token 64-bit hashes, bitwise majority vote folded to one
-             long; near-dups = small hamming distance (cheap xor+popcount
-             self-join within LSH-prefix buckets);
+- simhash:   per-token md5 bits, bitwise majority vote per document, in
+             the DuckDB-reproducible bit-string form;
 - n-gram Jaccard: exact similarity on candidate pairs.
 
 Design note: a naive all-pairs similarity join is O(n^2) and unusable at
@@ -28,22 +26,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 def normalized_text(text: Column) -> Column:
     return F.lower(F.replace(text, F.lit("\n"), F.lit(" ")))
-
-
-def exact_duplicate_groups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Groups of documents with byte-identical normalized text."""
-    fp = F.md5(normalized_text(F.col(text_col))).alias("fingerprint")
-    return (
-        df.select(F.col(id_col), fp)
-        .groupBy("fingerprint")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min(id_col).alias("keep_id"),
-        )
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def word_shingles(text: Column, k: int = 5) -> Column:
@@ -302,40 +284,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash_table(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_bits: int = 64,
-) -> DataFrame:
-    """SimHash signatures: explode tokens -> per-token xxhash64 -> bitwise
-    majority vote (64 partial-aggregable sums, map-side combined) -> fold to
-    one long.  One shuffle keyed by the document id; at corpus scale this is
-    a plain aggregation, no UDF.  Empty tokens are dropped AFTER the explode
-    (a codegen'd row filter) — filtering inside the array via the ``filter``
-    HOF is interpreted and measured ~1.7x slower."""
-    exploded = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("tok"),
-    ).filter(F.col("tok") != "")
-    hashed = exploded.select("doc_id", F.xxhash64("tok").alias("h"))
-    votes = hashed.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias("bit%d" % i)
-            for i in range(num_bits)
-        ]
-    )
-    sig = F.lit(0).cast("long")
-    for i in range(num_bits):
-        sig = sig.bitwiseOR(
-            F.when(F.col("bit%d" % i) > 0, F.lit(1 << i if i < 63 else -(1 << 63)).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-        )
-    return votes.select("doc_id", sig.alias("simhash"))
-
-
 def portable_simhash_table(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -347,9 +295,9 @@ def portable_simhash_table(
     any engine with lowercase-hex md5), majority vote per document, emitted
     as a '0'/'1' bit-string column.
 
-    Same aggregation shape as :func:`simhash_table` (num_bits partial-
-    aggregable sums, one shuffle keyed by doc_id) but every value is
-    reproducible in DuckDB, so the driver's gate can hash-check it.
+    num_bits partial-aggregable sums, one shuffle keyed by doc_id, and
+    every value is reproducible in DuckDB, so the driver's gate can
+    hash-check it.
     Ties (vote sum == 0) resolve to '0' in both engines.
     """
     exploded = df.select(
@@ -373,67 +321,6 @@ def portable_simhash_table(
                 for j in range(num_bits)
             ]
         ).alias("simhash_bits"),
-    )
-
-
-def simhash_near_duplicates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 6,
-    prefix_bits: int = 16,
-    num_probes: int = 4,
-) -> DataFrame:
-    """Near-dup pairs by simhash hamming distance, equality-keyed via
-    multi-probe rotated-prefix buckets.
-
-    Probe p buckets on the top ``prefix_bits`` of the signature rotated left
-    by ``p * 64 / num_probes`` bits; a pair collides in probe p iff its
-    differing bits all avoid that probe's window.  With the default 4 probes
-    of 16 bits the windows tile all 64 bits, so any pair with hamming
-    distance <= 3 is GUARANTEED to share at least one bucket (pigeonhole:
-    3 differing bits cannot hit all 4 disjoint windows); beyond that recall
-    degrades gracefully instead of the round-1 fixed-prefix cliff.  Each
-    probe is an equality join — no similarity cross-join at any scale.
-    """
-    sigs = simhash_table(df, id_col=id_col, text_col=text_col).select(
-        "doc_id", F.col("simhash").alias("sig")
-    )
-    step = 64 // num_probes
-    rot = []
-    for p in range(num_probes):
-        r = p * step
-        rotated = (
-            F.col("sig")
-            if r == 0
-            else F.shiftleft("sig", r).bitwiseOR(F.shiftrightunsigned("sig", 64 - r))
-        )
-        rot.append(
-            F.struct(
-                F.lit(p).alias("probe"),
-                F.shiftrightunsigned(rotated, 64 - prefix_bits).alias("bucket"),
-            )
-        )
-    probed = sigs.select(
-        "doc_id", "sig", F.explode(F.array(*rot)).alias("pb")
-    ).select("doc_id", "sig", "pb.probe", "pb.bucket")
-    left = probed.alias("l")
-    right = probed.alias("r")
-    hamming = F.bit_count(F.col("l.sig").bitwiseXOR(F.col("r.sig")))
-    return (
-        left.join(
-            right,
-            (F.col("l.probe") == F.col("r.probe"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_id_a"),
-            F.col("r.doc_id").alias("doc_id_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
     )
 
 
@@ -900,7 +787,7 @@ def duplicate_clusters(
     Rows with a null id are dropped; self-pairs are ignored; ids may be
     any orderable type (the representative is the MIN).  Singleton
     documents (no pair) are not emitted — left-join the corpus and
-    coalesce to self, or use :func:`dedup_by_clusters`.
+    coalesce to self.
     """
     a = F.col(id_a_col)
     b = F.col(id_b_col)
@@ -967,24 +854,4 @@ def duplicate_clusters(
             F.col("n").alias("doc_id"),
             F.coalesce(F.col("cluster_id"), F.col("n")).alias("cluster_id"),
         )
-    )
-
-
-def dedup_by_clusters(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    id_a_col: str = "doc_id_a",
-    id_b_col: str = "doc_id_b",
-) -> DataFrame:
-    """Keep-one-representative dedup: drop every document that belongs to
-    a near-duplicate cluster (per :func:`duplicate_clusters`) and is not
-    its cluster's minimum id.  Singletons survive untouched (they never
-    enter the label table, so the LEFT ANTI join keeps them); the corpus
-    never shuffles on anything but the id-keyed anti-join."""
-    losers = duplicate_clusters(pairs, id_a_col, id_b_col).filter(
-        F.col("doc_id") != F.col("cluster_id")
-    )
-    return df.join(
-        losers.select(F.col("doc_id").alias(id_col)), id_col, "left_anti"
     )

@@ -2,7 +2,7 @@
 carries alongside the extracted text: ``<link rel="canonical">`` (the
 page's OWN dedup hint — recrawl pipelines fold variants onto the
 declared canonical before content hashing), ``<title>``, and the
-OpenGraph/description meta tags used for training-data enrichment.
+OpenGraph meta tags used for training-data enrichment.
 
 All pure-Catalyst regexp projections — zero shuffles, zero Python;
 attribute order is handled by matching the tag whole and extracting the
@@ -82,11 +82,4 @@ def og_property(html: Column, prop: str) -> Column:
         _META_TAG_RE,
         _attr_contains_re("property", "og:%s" % prop.lower()),
         "content",
-    )
-
-
-def meta_description(html: Column) -> Column:
-    """content of the first ``<meta name=description>`` ('' if none)."""
-    return _tag_attr(
-        html, _META_TAG_RE, _attr_contains_re("name", "description"), "content"
     )

@@ -53,15 +53,6 @@ RSQUO = "’"
 LDQUO = "“"
 RDQUO = "”"
 
-
-class SpecialChars:
-    """Mirrors the reference's fix_jats_xml.SpecialChars names."""
-
-    LSQUO = LSQUO
-    RSQUO = RSQUO
-    LDQUO = LDQUO
-    RDQUO = RDQUO
-
 LEFT_QUOTE_CHARS = {'"', LSQUO, LDQUO}
 RIGHT_BY_LEFT_QUOTE_CHAR = {'"': '"', LSQUO: RSQUO, LDQUO: RSQUO}
 
@@ -101,10 +92,6 @@ def _parent_map(root: ET.Element) -> Dict[int, Tuple[ET.Element, int]]:
         for parent in root.iter()
         for index, child in enumerate(parent)
     }
-
-
-def clone_node(node: ET.Element) -> ET.Element:
-    return ET.fromstring(ET.tostring(node, encoding="unicode"))
 
 
 def text_content(node: ET.Element) -> str:

@@ -56,11 +56,6 @@ _ANCHOR_RE = r"(?i)<a\s[^>]*>"
 _NOFOLLOW_RE = (
     r"(?i)rel\s*=\s*(\"[^\"]*nofollow|'[^']*nofollow|[^\"'\s>]*nofollow)"
 )
-_META_TAG_RE = r"(?i)<meta\s[^>]*>"
-_NAME_ROBOTS_RE = r"(?i)name\s*=\s*(\"robots\"|'robots'|robots(?=[\s/>]))"
-_CONTENT_NOINDEX_RE = (
-    r"(?i)content\s*=\s*(\"[^\"]*noindex|'[^']*noindex|[^\"'\s>]*noindex)"
-)
 
 
 def _clean_href(v: Column) -> Column:
@@ -92,18 +87,6 @@ def extract_outlinks(html: Column, skip_nofollow: bool = False) -> Column:
             followed, lambda t: F.regexp_extract(t, _HREF_VAL_RE, 1)
         )
     return F.filter(F.transform(raw, _clean_href), lambda h: h != "")
-
-
-def meta_robots_noindex(html: Column) -> Column:
-    """True when the page carries ``<meta name=robots
-    content=...noindex...>`` in any attribute ORDER, case or quoting —
-    the page-level crawl-policy flag a compliant corpus pipeline drops
-    before indexing/training.  Pure codegen (regexp + exists)."""
-    tags = F.regexp_extract_all(html.cast("string"), F.lit(_META_TAG_RE), 0)
-    return F.exists(
-        tags,
-        lambda t: t.rlike(_NAME_ROBOTS_RE) & t.rlike(_CONTENT_NOINDEX_RE),
-    )
 
 
 def host_edges(
@@ -309,7 +292,6 @@ def anchor_text_table(
 
 
 _SITEMAP_LOC_RE = r"(?is)<loc[^>]*>\s*([^<\s][^<]*?)\s*</loc>"
-_SITEMAP_INDEX_RE = r"(?is)<sitemapindex[\s>]"
 
 
 def sitemap_locs(xml: Column) -> Column:
@@ -318,9 +300,3 @@ def sitemap_locs(xml: Column) -> Column:
     crawl-frontier feed that complements outlink extraction.  Pure
     codegen ``regexp_extract_all``."""
     return F.regexp_extract_all(xml.cast("string"), F.lit(_SITEMAP_LOC_RE), 1)
-
-
-def is_sitemap_index(xml: Column) -> Column:
-    """True for ``<sitemapindex>`` files (their locs are MORE sitemaps
-    to fetch, not page URLs — the caller routes on this)."""
-    return xml.cast("string").rlike(_SITEMAP_INDEX_RE)

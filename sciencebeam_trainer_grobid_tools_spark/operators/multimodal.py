@@ -1,15 +1,14 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing: opaque binary payloads.
 
-Image/audio/video payloads are carried as ``binary`` columns with struct
-metadata; decode / feature-extraction runs as Arrow-batched ``mapInPandas``
-over bounded batches (the same physical shape as the HTML kernel, so the
-partitioning/skew story is shared).
+Image/audio/video payloads are carried as ``binary`` columns; per-payload
+work runs as Arrow-batched ``mapInPandas`` over bounded batches (the same
+physical shape as the HTML kernel, so the partitioning/skew story is
+shared).
 
-The actual codecs are NOT available in this environment, so the decode step
-is stubbed: ``decode_stub="fake"`` produces deterministic pseudo-features
-from the payload bytes (testable plumbing), ``decode_stub="raise"`` raises
-``NotImplementedError`` the way a missing codec would.  The Spark-side
-contract — schema, batch shape, UDF signature — is real and tested.
+No codec is bundled: :func:`attach_fake_media` derives a deterministic
+stand-in payload, and :func:`media_payload_digests` checks that the binary
+column crosses the scan -> Arrow -> pandas transfer byte-exactly, the
+contract a real decoder would plug into.
 """
 
 from __future__ import annotations
@@ -18,11 +17,6 @@ import hashlib
 from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
-
-MEDIA_SCHEMA = (
-    "doc_id long, media_type string, n_bytes int, width int, height int, "
-    "channels int, sha1 string"
-)
 
 
 def attach_fake_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -33,121 +27,6 @@ def attach_fake_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
         F.encode(F.md5(F.col(text_col)), "utf-8").alias("payload"),
         F.lit("image/fake").alias("media_type"),
     )
-
-
-def extract_media_features(
-    media: DataFrame, decode_stub: str = "fake"
-) -> DataFrame:
-    """Decode + feature-extract each payload in Arrow batches."""
-    import pandas as pd
-
-    def decode_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                payload: bytes = row.payload
-                if decode_stub == "raise":
-                    raise NotImplementedError(
-                        "image decode requires a codec library not present in "
-                        "this environment; plug a real decoder here"
-                    )
-                digest = hashlib.sha1(payload).hexdigest()
-                rows.append(
-                    {
-                        "doc_id": row.doc_id,
-                        "media_type": row.media_type,
-                        "n_bytes": len(payload),
-                        # deterministic fake decode: dimensions from digest
-                        "width": 64 + int(digest[:2], 16),
-                        "height": 64 + int(digest[2:4], 16),
-                        "channels": 3,
-                        "sha1": digest,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "media_type",
-                    "n_bytes",
-                    "width",
-                    "height",
-                    "channels",
-                    "sha1",
-                ],
-            )
-
-    return media.mapInPandas(decode_batches, schema=MEDIA_SCHEMA)
-
-
-RESIZED_SCHEMA = MEDIA_SCHEMA + ", out_width int, out_height int"
-
-
-def resize_media(
-    media: DataFrame, max_side: int = 256, decode_stub: str = "fake"
-) -> DataFrame:
-    """Resize stage: decode -> scale to fit ``max_side`` (aspect preserved).
-
-    The geometry math is real; only the pixel transform is behind the stub
-    (a real decoder/encoder plugs into the same batch loop)."""
-    import pandas as pd
-
-    features = extract_media_features(media, decode_stub=decode_stub)
-
-    def resize_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            scale = (max_side / pdf[["width", "height"]].max(axis=1)).clip(upper=1.0)
-            out = pdf.copy()
-            out["out_width"] = (pdf["width"] * scale).round().astype("int32")
-            out["out_height"] = (pdf["height"] * scale).round().astype("int32")
-            yield out
-
-    return features.mapInPandas(resize_batches, schema=RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = "doc_id long, frame_index int, ts_ms long, frame_sha1 string"
-
-
-def sample_frames(
-    media: DataFrame, n_frames: int = 4, decode_stub: str = "fake"
-) -> DataFrame:
-    """Frame-sampling stage: one payload row -> ``n_frames`` typed frame rows
-    (uniform timestamps over a fake duration derived from the payload).
-
-    Demonstrates the 1->N expansion shape video ingestion needs — the output
-    row count is bounded per input (no unbounded explode), and a real
-    ffmpeg-style extractor drops into the same Arrow batch loop."""
-    import pandas as pd
-
-    def frame_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                payload: bytes = row.payload
-                if decode_stub == "raise":
-                    raise NotImplementedError(
-                        "frame extraction requires a video codec not present "
-                        "in this environment; plug a real extractor here"
-                    )
-                digest = hashlib.sha1(payload).hexdigest()
-                duration_ms = 1000 + int(digest[:4], 16)  # fake decode
-                for k in range(n_frames):
-                    ts_ms = duration_ms * k // max(n_frames - 1, 1)
-                    rows.append(
-                        {
-                            "doc_id": row.doc_id,
-                            "frame_index": k,
-                            "ts_ms": ts_ms,
-                            "frame_sha1": hashlib.sha1(
-                                payload + str(ts_ms).encode()
-                            ).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_index", "ts_ms", "frame_sha1"]
-            )
-
-    return media.mapInPandas(frame_batches, schema=FRAME_SCHEMA)
 
 
 def media_payload_digests(media: DataFrame, algo: str = "sha256") -> DataFrame:

@@ -1,8 +1,7 @@
 """robots.txt parsing + Robots Exclusion Protocol policy evaluation
-(RFC 9309) — the remaining crawl-policy component next to
-``linkgraph.extract_outlinks(skip_nofollow=)`` and
-``linkgraph.meta_robots_noindex``: a compliant corpus pipeline drops
-URLs a host's robots.txt disallows for its crawler.
+(RFC 9309) — the crawl-policy component next to
+``linkgraph.extract_outlinks(skip_nofollow=)``: a compliant corpus
+pipeline drops URLs a host's robots.txt disallows for its crawler.
 
 Two operators:
 

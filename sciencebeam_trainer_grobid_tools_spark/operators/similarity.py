@@ -945,98 +945,3 @@ def ivf_pq_topk(
         .limit(k)
         .select(F.col(id_col), F.round(F.col("_d"), round_digits).alias("adc_dist"))
     )
-
-
-def semantic_dedup(
-    df: DataFrame,
-    centroids: List[List[float]],
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_cell_size: int = None,
-) -> DataFrame:
-    """Semantic deduplication (the SemDeDup shape, Abbas et al. 2023:
-    k-means the embeddings, then dedup WITHIN clusters — the clustering is
-    what makes the quadratic comparison local).  A vector is dropped iff
-    some LOWER-id vector in the same cluster has cosine >= ``threshold``
-    with it; the lowest id of every duplicate set survives.  The rule is
-    deliberately non-iterative (u may itself be dropped by a still-lower
-    w — v stays dropped): deterministic, one pass, shard-local.  Known
-    recall limit, inherited from SemDeDup itself: near-duplicates split
-    across cluster boundaries are not compared (raise k-means quality or
-    lower k to trade recall vs cost).
-
-    ``max_cell_size`` bounds the HOT-CELL quadratic: real embedding
-    corpora cluster unevenly, and one giant k-means cell re-centralizes
-    the O(n_cell^2) cost the clustering was supposed to defuse (SemDeDup
-    itself caps cluster sizes for the same reason).  Cells larger than
-    the cap are re-split into ``ceil(n/max_cell_size)`` deterministic
-    sub-cells by an id-hash, so every compared block is <= ~max_cell_size
-    in expectation and the worst-case pair count per cell falls from
-    n^2 to ~n * max_cell_size.  The trade is the SAME recall trade the
-    cell boundary already makes — duplicates split across sub-cells of
-    an oversized cell are not compared — now with a bounded cost.
-    ``None`` (default) keeps every cell whole.
-
-    Returns the input rows + ``ivf_cell`` + ``semdedup_keep``.  Scale
-    design: assignment is :func:`ivf_assign` (no shuffle); the pairwise
-    stage self-joins ON THE (sub-)CELL KEY only — each block is
-    cell-local after one shuffle per side, the cosine is a codegen fold
-    (zero-norm vectors score cosine 0 — never anyone's duplicate, never
-    NaN), and only dropped IDS flow into the final null-producing join.
-    Cell sizes bound the quadratic term, exactly the SemDeDup argument —
-    with ``max_cell_size`` making the bound explicit."""
-    assigned = ivf_assign(df, centroids, vec_col=vec_col)
-    if max_cell_size is not None:
-        if max_cell_size < 1:
-            raise ValueError(
-                "semantic_dedup: max_cell_size must be >= 1, got %r"
-                % max_cell_size
-            )
-        # one tiny (cell, count) aggregate, broadcast back; oversized
-        # cells get a deterministic id-hash sub-cell in [0, n_splits)
-        sizes = assigned.groupBy("ivf_cell").agg(
-            F.count(F.lit(1)).alias("_cell_n")
-        )
-        n_splits = F.greatest(
-            F.ceil(F.col("_cell_n") / F.lit(float(max_cell_size))), F.lit(1)
-        ).cast("long")
-        keyed = (
-            assigned.join(F.broadcast(sizes), "ivf_cell")
-            .withColumn(
-                "_subcell",
-                F.pmod(F.xxhash64(F.col(id_col)), n_splits).cast("int"),
-            )
-            .drop("_cell_n")
-        )
-    else:
-        keyed = assigned.withColumn("_subcell", F.lit(0))
-    left = keyed.select(
-        F.col("ivf_cell").alias("_c"),
-        F.col("_subcell").alias("_sc"),
-        F.col(id_col).alias("_id_a"),
-        F.col(vec_col).alias("_va"),
-    )
-    right = keyed.select(
-        F.col("ivf_cell").alias("_c"),
-        F.col("_subcell").alias("_sc"),
-        F.col(id_col).alias("_id_b"),
-        F.col(vec_col).alias("_vb"),
-    )
-    cos = dot(F.col("_va"), F.col("_vb")) / F.greatest(
-        embedding_norm(F.col("_va")) * embedding_norm(F.col("_vb")),
-        F.lit(1e-30),
-    )
-    dropped = (
-        left.join(right, ["_c", "_sc"])
-        .filter(F.col("_id_a") < F.col("_id_b"))
-        .filter(cos >= threshold)
-        .select(F.col("_id_b").alias(id_col))
-        .distinct()
-    )
-    marked = assigned.join(
-        dropped.withColumn("_dropped", F.lit(True)), id_col, "left"
-    )
-    return marked.withColumn(
-        "semdedup_keep", F.coalesce(~F.col("_dropped"), F.lit(True))
-    ).drop("_dropped")

@@ -55,46 +55,3 @@ def normalize_text(
             )
 
     return df.select(id_col, text_col).mapInPandas(run, schema)
-
-
-def compression_ratio(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    level: int = 6,
-) -> DataFrame:
-    """zlib compression ratio per document — the classic
-    templated/repetitive-text detector (RedPajama-v2 ships this exact
-    signal in its ccnet quality family; highly-repetitive machine text
-    compresses far below natural prose, so a LOW ratio flags it).
-
-    ratio = deflate(utf8 bytes).len / raw utf8 len, rounded 6; empty or
-    NULL text yields NULL (no bytes to judge — never a fake 0 that a
-    threshold would misread as infinitely repetitive).  Honest-Python
-    case (no SQL engine exposes deflate): ONE Arrow ``mapInPandas``,
-    no shuffle, id type derived from the input schema; compute-only,
-    rows never leave their scan partitions."""
-    import pandas as pd
-    import zlib
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = "%s %s, compression_ratio double" % (id_col, id_type)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            def ratio(t):
-                if t is None:
-                    return None
-                raw = t.encode("utf-8")
-                if not raw:
-                    return None
-                return round(len(zlib.compress(raw, level)) / len(raw), 6)
-
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "compression_ratio": pdf[text_col].map(ratio),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(run, schema)

@@ -80,17 +80,6 @@ def cleanliness_columns(text: Column) -> "dict[str, Column]":
     }
 
 
-def cleanliness_features(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-document :func:`cleanliness_columns` projection."""
-    cols = cleanliness_columns(F.col(text_col))
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        *(expr.alias(name) for name, expr in cols.items()),
-    )
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / punctuation / sentence-shape features + a quality flag."""
     text = F.col(text_col)
@@ -119,31 +108,6 @@ def normalized_fingerprint(text: Column, length: int = 16) -> Column:
     """Whitespace/case-insensitive content fingerprint (md5-based)."""
     normalized = F.lower(F.replace(text, F.lit("\n"), F.lit(" ")))
     return F.substring(F.md5(normalized), 1, length)
-
-
-# --- identifier extraction (the fix-jats scalar suite, reference F12:
-# fix_jats_xml.py:80-99,263-330) as portable column expressions ---
-
-DOI_PATTERN = r"\b(10\.\d{4,}(?:\.\d+)*/[^\s\"<>]+)"
-PMID_PATTERN = r"\bPMID[:\s]*(\d{1,10})\b"
-PMCID_PATTERN = r"\b(PMC\d{1,10})\b"
-ARXIV_PATTERN = r"\barXiv[:\s]*(\d{4}\.\d{4,5}(?:v\d+)?)\b"
-
-
-def extract_doi(text: Column) -> Column:
-    return F.regexp_extract(text, DOI_PATTERN, 1)
-
-
-def extract_pmid(text: Column) -> Column:
-    return F.regexp_extract(text, PMID_PATTERN, 1)
-
-
-def extract_pmcid(text: Column) -> Column:
-    return F.regexp_extract(text, PMCID_PATTERN, 1)
-
-
-def extract_arxiv_id(text: Column) -> Column:
-    return F.regexp_extract(text, ARXIV_PATTERN, 1)
 
 
 def unigram_logprob_features(
@@ -822,9 +786,8 @@ def perplexity_buckets(
 # profiling, in the fixed-profile weighted form CLD-family classifiers use)
 
 # character trigrams with rough frequency-rank weights per language —
-# deliberately ASCII-only and small: the point of the EXPRESSION path is
-# that a fixed profile compiles to pure codegen (no shuffle, no join);
-# production-sized profiles (10^4+ n-grams) use the TABLE path below.
+# deliberately ASCII-only and small: a fixed profile compiles to pure
+# codegen (no shuffle, no join).
 TRIGRAM_PROFILES = {
     "de": {
         " de": 3, "der": 3, "die": 2, "ie ": 2, "und": 3, " un": 2,
@@ -890,87 +853,3 @@ def trigram_lang_id(text: Column) -> Column:
     for lang in sorted(scores):
         guess = guess.when(scores[lang] == best, F.lit(lang))
     return F.when(best > 0, guess).otherwise(F.lit("unknown"))
-
-
-def trigram_profile_table(spark) -> "DataFrame":
-    """TRIGRAM_PROFILES as a (lang, tri, weight) DataFrame — the TABLE
-    path's model input (and the shape a real 10^4+-n-gram profile
-    arrives in)."""
-    rows = [
-        (lang, tri, float(w))
-        for lang, profile in sorted(TRIGRAM_PROFILES.items())
-        for tri, w in sorted(profile.items())
-    ]
-    return spark.createDataFrame(rows, "lang string, tri string, weight double")
-
-
-def trigram_lang_features_table(
-    df: DataFrame,
-    profiles: "DataFrame",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The TABLE path for production-sized profiles: explode each
-    document into (position, trigram) pairs JVM-side (sequence +
-    transform over substring — no Python), keep only PROFILE trigrams
-    via a pre-shuffle broadcast semi join (the corpus-wide shuffle then
-    carries profile hits only, not every window of every document),
-    reduce each (doc, trigram) position set to its greedy left-to-right
-    NON-OVERLAPPING count with a codegen ``aggregate`` fold — the exact
-    semantics of the expression path's replace-length idiom, including
-    on self-overlapping trigrams like ``' y '`` — inner-join the
-    ``broadcast()`` profile table, and sum weight*count per (doc, lang).
-    Returns one row per document with a score column per language (docs
-    with no profile hit keep score 0 via the left join back to the id
-    spine) — same normalization and same counting semantics as the
-    expression path, so the two paths agree exactly (differential
-    pytest covers self-overlapping inputs)."""
-    from pyspark.sql.functions import broadcast
-
-    padded = _padded_lower(F.col(text_col))
-    pairs = df.select(
-        F.col(id_col),
-        F.length(padded).alias("_plen"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.length(padded) - 2, F.lit(0))),
-                lambda i: F.struct(
-                    i.alias("pos"), padded.substr(i, F.lit(3)).alias("tri")
-                ),
-            )
-        ).alias("pt"),
-    ).select(
-        id_col, "_plen", F.col("pt.pos").alias("pos"), F.col("pt.tri").alias("tri")
-    )
-    hits = pairs.join(broadcast(profiles.select("tri").distinct()), "tri")
-    # greedy left-to-right selection over the sorted match positions —
-    # exactly what a single-pass replace() counts: take a match at p only
-    # when it starts at/after the end of the previously taken match
-    zero = F.struct(F.lit(0).alias("cnt"), F.lit(0).alias("nxt"))
-    greedy = F.aggregate(
-        F.sort_array(F.col("_ps")),
-        zero,
-        lambda acc, p: F.when(
-            p >= acc["nxt"],
-            F.struct((acc["cnt"] + 1).alias("cnt"), (p + 3).alias("nxt")),
-        ).otherwise(acc),
-    )["cnt"]
-    counts = (
-        hits.groupBy(id_col, "_plen", "tri")
-        .agg(F.collect_list("pos").alias("_ps"))
-        .select(id_col, "_plen", "tri", greedy.alias("c"))
-    )
-    scored = (
-        counts.join(broadcast(profiles), "tri")
-        .groupBy(id_col, "_plen")
-        .pivot("lang", sorted(TRIGRAM_PROFILES))
-        .agg(F.sum(F.col("weight") * F.col("c")))
-    )
-    spine = df.select(id_col, F.length(padded).alias("_plen"))
-    out = spine.join(scored, [id_col, "_plen"], "left")
-    denom = F.greatest(F.col("_plen"), F.lit(1)).cast("double")
-    for lang in sorted(TRIGRAM_PROFILES):
-        out = out.withColumn(
-            "score_" + lang, F.coalesce(F.col(lang), F.lit(0.0)) / denom
-        )
-    return out.drop("_plen", *sorted(TRIGRAM_PROFILES))

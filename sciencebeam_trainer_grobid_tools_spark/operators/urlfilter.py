@@ -15,8 +15,6 @@ Operators:
   wholesale).
 - :func:`filter_blocked_domains` — drop rows whose host (or any parent
   domain) is blocklisted.
-- :func:`url_badword_score` — count of flagged terms in the full URL
-  (the RefinedWeb URL word-score shape, simplified to a count).
 
 Scale design (the 100 TB test): the CORPUS never shuffles.  The match
 runs at HOST granularity: distinct hosts (one shuffle of bare host
@@ -29,7 +27,7 @@ per-row computed host column.  Page rows therefore stay in their scan
 partitions end to end.  If the blocked-host set ever outgrew broadcast
 range (most of the corpus blocklisted), drop the second hint and AQE
 falls back to a shuffled anti join — the documented degradation, not the
-design point.  ``url_badword_score`` is per-row codegen, zero shuffles.
+design point.
 """
 
 from __future__ import annotations
@@ -107,17 +105,6 @@ def filter_blocked_domains(
         df.withColumn(_HOST, url_host(F.col(url_col)))
         .join(F.broadcast(blocked_hosts), _HOST, "left_anti")
         .drop(_HOST)
-    )
-
-
-def url_badword_score(url: Column, terms: Sequence[str]) -> Column:
-    """Number of flagged terms appearing in the lowercased URL (0 when
-    ``terms`` is empty) — threshold it or feed it to a classifier."""
-    low = F.lower(url)
-    if not terms:
-        return F.lit(0)
-    return sum(
-        F.contains(low, F.lit(str(t).lower())).cast("int") for t in terms
     )
 
 

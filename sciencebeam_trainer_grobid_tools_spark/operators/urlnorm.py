@@ -105,12 +105,6 @@ def canonical_url(url: Column) -> Column:
     return u
 
 
-def with_canonical_url(
-    df: DataFrame, url_col: str = "url", out_col: str = "canonical_url"
-) -> DataFrame:
-    return df.withColumn(out_col, canonical_url(F.col(url_col)))
-
-
 def _with_staged_canonical(
     df: DataFrame, src: Column, out_col: str, tmp_prefix: str
 ) -> tuple:
@@ -199,9 +193,17 @@ def _with_staged_canonical(
 def _with_staged_dedup_key(
     df: DataFrame, url_col: str, html_col: Optional[str], out_col: str
 ) -> tuple:
-    """Append the dedup key of :func:`canonical_dedup_key` (html hint
-    mode) or :func:`canonical_url` (url mode) as ``out_col`` via the
-    staged column graph.  Returns ``(df, temp_col_names)``.
+    """Append the dedup key as ``out_col`` via the staged column graph.
+    Returns ``(df, temp_col_names)``.
+
+    Url mode (``html_col=None``): :func:`canonical_url` of the url.  Hint
+    mode: the page-declared key, ``coalesce(nullif(canonical_url(
+    canonical_hint(html)), ''), canonical_url(url))`` — the canonicalized
+    ``<link rel=canonical>`` hint when the page declares one, else the
+    canonicalized url.  It folds AMP/mobile/session variants the url
+    normalizer alone cannot see (they live on DIFFERENT urls but declare
+    the SAME canonical); the hint runs through the same normalizer, since
+    declared canonicals carry tracking params and case-variant hosts too.
 
     In hint mode every row pays both regex chains: the url's canonical form
     is a staged column, computed even where the hint wins the ``coalesce``.
@@ -229,25 +231,6 @@ def _with_staged_dedup_key(
     return df, temps
 
 
-def canonical_dedup_key(url: Column, html: Column) -> Column:
-    """The page-declared dedup key: the canonicalized
-    ``<link rel=canonical>`` hint when the page declares one, else the
-    canonicalized URL — the composition documented in ``htmlmeta`` that
-    folds AMP/mobile/session variants the URL normalizer alone cannot
-    see (the variants live on DIFFERENT URLs but declare the SAME
-    canonical).  The hint itself runs through :func:`canonical_url`
-    (declared canonicals carry tracking params and case-variant hosts
-    just like crawled URLs); an unparseable hint passes through
-    unchanged, matching the normalizer's never-throw contract.  Still a
-    pure Catalyst expression — zero Python, fuses into the scan."""
-    from .htmlmeta import canonical_hint
-
-    return F.coalesce(
-        F.nullif(canonical_url(canonical_hint(html)), F.lit("")),
-        canonical_url(url),
-    )
-
-
 def dedup_by_canonical_url(
     df: DataFrame,
     url_col: str = "url",
@@ -262,9 +245,9 @@ def dedup_by_canonical_url(
     ``'earliest'`` the oldest; ties break on the raw url (deterministic).
     One shuffle, keyed by the canonical string; the window carries the
     full row only within its own key group.  ``html_col`` switches the
-    grouping key to the page-declared canonical (the
-    :func:`canonical_dedup_key` composition), built through the staged
-    column graph; ``key`` overrides the grouping expression entirely
+    grouping key to the page-declared canonical (the hint-mode key of
+    :func:`_with_staged_dedup_key`), built through the staged column
+    graph; ``key`` overrides the grouping expression entirely
     (an opaque caller Column — no staging).  A caller column named like
     a temporary column raises :class:`TempColumnCollisionError`.
     """

@@ -4,16 +4,17 @@ hashed linear quality classifier.
 The three document-quality families every published web-scale pretraining
 pipeline composes after dedup:
 
-- :func:`gopher_quality_features` — the repetition-independent subset of
-  the Gopher rules (Rae et al. 2021, "Scaling Language Models", App. A):
-  word-count band, mean-word-length band, symbol-to-word ratio, bullet /
-  ellipsis line ratios, alphabetic-word ratio, required-stopword count.
-  (The Gopher REPETITION rules live in ``dedup.repetition_features``.)
-- :func:`c4_clean` — the C4 cleaning pass (Raffel et al. 2020, §2.2):
-  keep only lines that end in terminal punctuation, have >= 5 words and
-  do not mention "javascript"; drop pages with < 3 sentences, a "{", or
-  "lorem ipsum".  (C4's bad-word page filter needs an external word list
-  and is intentionally not bundled; compose it as one extra line/page
+- Gopher quality rules (:func:`gopher_filter`) — the
+  repetition-independent subset of the Gopher rules (Rae et al. 2021,
+  "Scaling Language Models", App. A): word-count band, mean-word-length
+  band, symbol-to-word ratio, bullet / ellipsis line ratios,
+  alphabetic-word ratio, required-stopword count.  (The Gopher
+  REPETITION rules live in ``dedup.repetition_features``.)
+- C4 cleaning (:func:`c4_filter`; Raffel et al. 2020, §2.2): keep only
+  lines that end in terminal punctuation, have >= 5 words and do not
+  mention "javascript"; drop pages with < 3 sentences, a "{", or "lorem
+  ipsum".  (C4's bad-word page filter needs an external word list and is
+  intentionally not bundled; compose it as one extra line/page
   predicate.)
 - :func:`hashed_classifier_score` — fastText-shaped linear classifier
   inference (Joulin et al. 2016; the CCNet/LLaMA quality-classifier
@@ -144,49 +145,6 @@ def _gopher_keep_expr(
     )
 
 
-def gopher_quality_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_ratio: float = 0.9,
-    max_ellipsis_ratio: float = 0.3,
-    min_alpha_ratio: float = 0.8,
-    min_stopword_hits: int = 2,
-) -> DataFrame:
-    """Per-document Gopher rule statistics plus the combined ``g_keep``.
-
-    Defaults are the published Gopher thresholds; every statistic is also
-    emitted so callers can re-threshold without recomputing (``g_keep``
-    compares the ROUNDED emitted values, so re-thresholding the output
-    columns reproduces it exactly)."""
-    stats = _gopher_stat_columns(F.col(text_col))
-    out = df.select(
-        F.col(id_col).alias("doc_id"),
-        *(expr.alias(name) for name, expr in stats.items()),
-    )
-    emitted = {name: F.col(name) for name in stats}
-    return out.withColumn(
-        "g_keep",
-        _gopher_keep_expr(
-            emitted,
-            min_words,
-            max_words,
-            min_mean_word_len,
-            max_mean_word_len,
-            max_symbol_ratio,
-            max_bullet_ratio,
-            max_ellipsis_ratio,
-            min_alpha_ratio,
-            min_stopword_hits,
-        ),
-    )
-
-
 def gopher_filter(
     df: DataFrame,
     text_col: str = "text",
@@ -203,7 +161,7 @@ def gopher_filter(
     """Gopher rules as an IN-PLACE row filter for pipeline composition:
     keeps every column, adds none, and stays a pure codegen predicate —
     zero shuffles, fuses into the surrounding stage.  Thresholds the
-    exact rounded statistics :func:`gopher_quality_features` emits."""
+    exact rounded ``g_*`` statistics :func:`web_filter_features` emits."""
     return df.filter(
         _gopher_keep_expr(
             _gopher_stat_columns(F.col(text_col)),
@@ -267,45 +225,6 @@ def c4_filter(
         _, clean2, _, _, _ = _c4_parts(F.col(text_col), min_line_words)
         out = out.withColumn(text_col, clean2)
     return out
-
-
-def c4_clean(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_line_words: int = 5,
-    min_sentences: int = 3,
-) -> DataFrame:
-    """C4 cleaning (Raffel et al. 2020 §2.2) as one per-row projection.
-
-    Line rule (applied to the whitespace-trimmed line, original line kept
-    verbatim in the output): ends in terminal punctuation AND has at
-    least ``min_line_words`` words AND does not contain "javascript"
-    (case-insensitive).  Page rule: the cleaned text must contain at
-    least ``min_sentences`` sentence-terminal characters, and the
-    ORIGINAL page must contain neither "{" nor "lorem ipsum".
-
-    Output: ``doc_id``, line/sentence counts, the page-rule flags,
-    ``c4_keep``, and ``clean_text`` (kept lines re-joined with ``\\n``;
-    empty string when no line survives — the document is never lost, the
-    caller filters on ``c4_keep``).
-    """
-
-    kept, clean, n_sentences, has_brace, has_lorem = _c4_parts(
-        F.col(text_col), min_line_words
-    )
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(F.split(F.col(text_col), "\n")).alias("c4_total_lines"),
-        F.size(kept).alias("c4_kept_lines"),
-        n_sentences.cast("int").alias("c4_sentences"),
-        has_brace.alias("c4_has_brace"),
-        has_lorem.alias("c4_has_lorem"),
-        (
-            (n_sentences >= min_sentences) & ~has_brace & ~has_lorem
-        ).alias("c4_keep"),
-        clean.alias("clean_text"),
-    )
 
 
 # Column-plan memo for the derived-weight projection: the ~60 expression

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.annotate import TargetAnnotation
 from ..operators.checks import check_document
-from ..operators.targets import parse_xml_mapping_string, xml_string_to_target_annotations
+from ..operators.targets import xml_string_to_target_annotations
 from ..operators.tei_render import render_tei_xml
 from ..plans.flavors import AnnotatorChain
 from ..sources.fs import write_text_file
@@ -176,7 +176,7 @@ def run_auto_annotate(
     xml_path: str,
     xml_filename_regex: str,
     flavor_chain: AnnotatorChain,
-    xml_mapping_text: str,
+    xml_mapping: Dict[str, Dict[str, str]],
     tag_to_tei_path_mapping: Dict[str, str],
     container_path: str = "text/front",
     fields: Optional[Set[str]] = None,
@@ -190,12 +190,14 @@ def run_auto_annotate(
     preserve_sub_tags: bool = False,
     no_preserve_sub_fields: Optional[Set[str]] = None,
     no_preserve_fields: Optional[Set[str]] = None,
-    xml_mapping_overrides: Optional[Dict[str, str]] = None,
     limit: Optional[int] = None,
     resume: bool = False,
 ) -> Dict[str, int]:
     """Run a flavor over a directory of raw training-TEI files paired with
     target-XML files, writing annotated TEI per input file.
+
+    ``xml_mapping`` is the parsed mapping with any overrides already
+    applied (``parse_xml_mapping_string`` + ``get_xml_mapping_with_overrides``).
 
     Returns ``{"passed": n, "failed": m}``; failing documents (per the
     reference's checks, annotation/checks.py:137-175) are written to
@@ -222,11 +224,7 @@ def run_auto_annotate(
     ).join(xml_files, on="xml_name", how="inner")
 
     mapping, selected_fields = get_filtered_xml_mapping_and_fields(
-        get_xml_mapping_with_overrides(
-            parse_xml_mapping_string(xml_mapping_text), xml_mapping_overrides
-        ),
-        fields,
-        sub_fields=sub_fields,
+        xml_mapping, fields, sub_fields=sub_fields
     )
     out_root = os.path.abspath(output_path)
     failed_root = os.path.abspath(failed_output_path) if failed_output_path else None

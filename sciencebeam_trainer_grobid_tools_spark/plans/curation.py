@@ -144,8 +144,8 @@ def curate_corpus(
                 "dedup_key must be url/canonical_hint, got %r" % dedup_key
             )
         # html_col (instead of a prebuilt key Column) lets the dedup build
-        # the canonical_dedup_key composition through its staged column
-        # graph — same values, linear expression tree (see urlnorm)
+        # the page-declared canonical key through its staged column graph
+        # — a linear expression tree (see urlnorm)
         out = dedup_by_canonical_url(
             out, url_col=url_col, ts_col=ts_col, keep=keep, html_col=hint_col
         )

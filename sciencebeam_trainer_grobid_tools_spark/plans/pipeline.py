@@ -7,7 +7,7 @@ apply untouched)::
       -> left_anti join against completed urls        (resume, reference S2)
       -> repartition(n, xxhash64(url))                (salted spread vs skew)
       -> mapInPandas(annotate_batch)                  (the custom kernel)
-      -> observe(metrics) / filtered writes (passed / failed)
+      -> observe(metrics)
 
 The per-document kernel reproduces the reference's operator chain:
 HTML/TEI -> lines (S3/S5), tokenize (F6), target extraction (P1-P6),
@@ -44,16 +44,10 @@ SPAN_TYPE = "array<struct<field:string,start:int,end:int,text:string>>"
 # (auto_annotate_utils.py:740-757).  Documents whose payload exceeds this
 # byte threshold are routed to the failed/error output instead of the
 # kernel; the payload is nulled JVM-side so the bytes never cross Arrow
-# into Python.  Override with SPARK_GRAFT_MAX_DOC_BYTES (0 disables).
+# into Python.  Override with ``annotate_documents(max_doc_bytes=)`` or the
+# CLI's ``--max-doc-bytes`` (0 disables).
 DEFAULT_MAX_DOC_BYTES = 64 * 1024 * 1024
 
-
-def _resolve_max_doc_bytes(max_doc_bytes) -> int:
-    import os
-
-    if max_doc_bytes is not None:
-        return int(max_doc_bytes)
-    return int(os.environ.get("SPARK_GRAFT_MAX_DOC_BYTES", DEFAULT_MAX_DOC_BYTES))
 
 ANNOTATED_SCHEMA = (
     "url string, lang string, extracted_text string, "
@@ -205,8 +199,8 @@ def annotate_documents(
     ``kernel_counter``: optional Spark accumulator incremented per document
     actually fed through the kernel — used by tests to assert the expensive
     stage runs exactly once per chunk.
-    ``max_doc_bytes``: oversized-document guard threshold (None -> env
-    ``SPARK_GRAFT_MAX_DOC_BYTES`` -> 64 MiB default; 0 disables).  The size
+    ``max_doc_bytes``: oversized-document guard threshold (None ->
+    ``DEFAULT_MAX_DOC_BYTES``, 64 MiB; 0 disables).  The size
     measured is that of the column the kernel will actually consume — html
     when present, else the text fallback — so a small-html/giant-text row is
     still processed (its unconsumed text is dropped JVM-side regardless of
@@ -220,7 +214,7 @@ def annotate_documents(
 
     columns = set(docs.columns)
     has_target = "target_xml" in columns
-    max_bytes = _resolve_max_doc_bytes(max_doc_bytes)
+    max_bytes = DEFAULT_MAX_DOC_BYTES if max_doc_bytes is None else int(max_doc_bytes)
 
     def annotate_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         # the package installs the guard on import in a worker; a custom
@@ -342,59 +336,3 @@ def spans_table(annotated: DataFrame) -> DataFrame:
         F.col("span.end").alias("end"),
         F.col("span.text").alias("text"),
     )
-
-
-def write_outputs(annotated: DataFrame, output_dir: str) -> None:
-    """Partitioned-by-outcome write (reference S6/S7 semantics: passing docs
-    to one location, failing docs to another — annotation/annotator.py:185-196).
-
-    SINGLE write job with Hive partitioning on ``passed``: the kernel runs
-    exactly once and each outcome lands in its own directory
-    (``documents/passed=true/``, ``documents/passed=false/``), with no
-    ``cache()`` of the full annotated table (at 100 TB that cache —
-    including ``tei_xml`` strings — is pure memory/disk pressure).
-    Readers use :func:`read_annotated` / :func:`read_failed`, whose outcome
-    filter is satisfied by PARTITION PRUNING — the other outcome's files are
-    never opened.
-
-    ``passed`` is coalesced to false before partitioning: a null outcome
-    would otherwise land in ``passed=__HIVE_DEFAULT_PARTITION__`` and be
-    invisible to BOTH readers (a silently-dropped document)."""
-    annotated.withColumn(
-        "passed", F.coalesce(F.col("passed"), F.lit(False))
-    ).write.mode("overwrite").partitionBy("passed").parquet(
-        output_dir.rstrip("/") + "/documents"
-    )
-
-
-def _annotated_column_order(read_columns) -> list:
-    """Written-frame column order for a read-back outcome table: partition
-    discovery appends the ``passed`` partition column last, so restore the
-    canonical ANNOTATED_COLUMNS position for every known column (extra
-    columns keep their read order, appended at the end)."""
-    known = [c for c in ANNOTATED_COLUMNS if c in read_columns]
-    extras = [c for c in read_columns if c not in known]
-    return known + extras
-
-
-def _read_outcome(spark, output_dir: str, passed: bool) -> DataFrame:
-    # Hive partition inference types the `passed` directory values as STRING
-    # ("true"/"false"); filter on the string (still a pure partition filter —
-    # pruned, the other outcome's files never open) and cast back to boolean
-    # so the reader's schema matches what write_outputs was given.
-    docs = spark.read.parquet(output_dir.rstrip("/") + "/documents")
-    return (
-        docs.filter(F.col("passed") == F.lit("true" if passed else "false"))
-        .withColumn("passed", F.col("passed").cast("boolean"))
-        .select(*_annotated_column_order(docs.columns))
-    )
-
-
-def read_annotated(spark, output_dir: str) -> DataFrame:
-    """Passing documents from a :func:`write_outputs` directory (pruned scan)."""
-    return _read_outcome(spark, output_dir, passed=True)
-
-
-def read_failed(spark, output_dir: str) -> DataFrame:
-    """Failing documents from a :func:`write_outputs` directory (pruned scan)."""
-    return _read_outcome(spark, output_dir, passed=False)

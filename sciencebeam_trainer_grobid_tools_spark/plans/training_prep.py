@@ -23,8 +23,7 @@ composed here in the only safe order):
   validation text leak its subword statistics into the model's input
   representation (the same reason eval decontamination exists);
   validation encodes under the train-derived artifact, with unseen
-  symbols mapping to ``<unk>`` — ``bpe_unk_stats`` is the health
-  check when the corpus is multilingual;
+  symbols mapping to ``<unk>``;
 - packing is per split: windows never mix train and validation
   documents, and ``doc_spans`` keeps the boundaries inside each
   window so the trainer can mask cross-document attention.
@@ -35,9 +34,7 @@ Scale shape (the per-operator docstrings carry depth):
 - the split is a pure per-row codegen draw — zero shuffles;
 - BPE training reduces the train split to a (word, count) table in ONE
   corpus shuffle; the merge loop runs driver-side over that table
-  (``bpe_train_collected`` — the standard practice; swap
-  ``operators.bpe.bpe_train`` in when the distinct-word table itself
-  is cluster-sized);
+  (``bpe_train_collected`` — the standard practice);
 - encode is a map (one Arrow stage, no shuffle); its output is
   persisted per split because packing makes multiple passes over the
   token table (lengths, offsets, fragments) and re-running the Arrow
@@ -60,7 +57,6 @@ from typing import Dict, List, Mapping, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.bpe import (
-    UNK,
     bpe_encode,
     bpe_train_collected,
     bpe_vocab_table,

@@ -3,8 +3,8 @@ on-disk format the north-star corpus ships in (`input_hint`: an Iceberg
 table of Common-Crawl-style pages; this module is the seam that turns
 raw WARC bytes into that table).
 
-Two parsers over a column of concatenated WARC/1.0 records, plus a
-record builder:
+A record builder and a parser over a column of concatenated WARC/1.0
+records:
 
 - :func:`warc_record_expr` — pure-Catalyst record builder (headers +
   Content-Length + payload with the spec's CRLF framing).  Used by the
@@ -15,38 +15,21 @@ record builder:
   configuration.  CAVEAT (documented, pinned by a test): the split step
   assumes payloads do not embed ``"WARC/1.0\\r\\n"`` at a record
   boundary position — real crawl payloads can (a page quoting a WARC
-  file); use the stream parser below when that matters.
-- :func:`parse_warc_stream` — the honest parser: ONE Arrow
-  ``mapInPandas`` stage walking each blob sequentially, consuming
-  exactly ``Content-Length`` BYTES per record (slicing in bytes, per
-  spec — multi-byte UTF-8 payloads slice correctly).  Exact for
-  arbitrary payloads including embedded version markers; malformed
-  framing degrades per-record (``well_formed=false``), never throws.
+  file); such a record surfaces as ``length_ok=false``.
 
 Scale design (the 100 TB test): Common Crawl ships ~64k gzip files per
 crawl with one gzip MEMBER per record — gzip is not splittable, so each
 file is one input partition and parallelism comes from the file count
-(the CC reality).  Blob bytes never cross an exchange: both parsers are
-per-row projections in the scan stage, record rows explode in place,
-and the downstream table write partitions however the caller asks.  A
-record larger than the Arrow batch budget is the same oversized-payload
-problem the flagship guards against; parse_warc_stream holds at most
-one blob's records in flight per batch row.
+(the CC reality).  Blob bytes never cross an exchange: the parser is a
+per-row projection in the scan stage, record rows explode in place, and
+the downstream table write partitions however the caller asks.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Union
-
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 _MARKER = "WARC/1.0\r\n"
-
-RECORD_SCHEMA = (
-    "rec_index int, warc_type string, target_uri string, "
-    "warc_date string, content_length long, payload string, "
-    "well_formed boolean"
-)
 
 
 def warc_record_expr(
@@ -68,29 +51,14 @@ def warc_record_expr(
     )
 
 
-def build_warc_record(
-    uri: str, date: str, payload: str, warc_type: str = "response"
-) -> str:
-    """Python twin of :func:`warc_record_expr` (tests build fixtures with
-    it and assert byte parity against the codegen builder)."""
-    body = payload.encode("utf-8")
-    return (
-        _MARKER
-        + "WARC-Type: %s\r\n" % warc_type
-        + "WARC-Target-URI: %s\r\n" % uri
-        + "WARC-Date: %s\r\n" % date
-        + "Content-Length: %d\r\n\r\n" % len(body)
-    ) + payload + "\r\n\r\n"
-
-
 def _header(rec: Column, name: str) -> Column:
     return F.regexp_extract(rec, r"%s: ([^\r\n]+)" % name, 1)
 
 
 def parse_warc_records_expr(records: Column) -> Column:
-    """Concatenated WARC records -> ``array<struct>`` (RECORD_SCHEMA
-    fields minus rec_index/well_formed — the codegen path assumes
-    well-formed framing; see the module caveat).  The payload slice is
+    """Concatenated WARC records -> ``array<struct<warc_type, target_uri,
+    warc_date, content_length, payload, length_ok>>`` (the codegen path
+    assumes well-formed framing; see the module caveat).  The payload slice is
     Content-Length-bounded in BYTES: the payload region is isolated by
     framing (after the first blank line, minus the closing CRLF CRLF),
     then kept only when its byte length matches the declared header —
@@ -120,99 +88,3 @@ def parse_warc_records_expr(records: Column) -> Column:
         )
 
     return F.transform(recs, _struct)
-
-
-def _parse_blob(blob: Union[bytes, str]) -> List[dict]:
-    """Sequential Content-Length-driven walk of one WARC blob.  Operates
-    on BYTES (the spec's Content-Length unit); returns one dict per
-    record.  Framing damage flips well_formed and resynchronizes at the
-    next version marker instead of throwing."""
-    data = blob.encode("utf-8") if isinstance(blob, str) else bytes(blob)
-    marker = _MARKER.encode()
-    out: List[dict] = []
-    pos = 0
-    idx = 0
-    while pos < len(data):
-        if not data[pos:].startswith(marker):
-            # resynchronize: everything up to the next marker is damage.
-            # Mid-blob the damage attributes to the PREVIOUS record; a
-            # blob that starts mid-record has no previous record, so the
-            # skipped leading bytes surface as a well_formed=False
-            # placeholder instead of silently vanishing (the 'malformed
-            # framing degrades per-record' contract).
-            nxt = data.find(marker, pos)
-            if out:
-                out[-1]["well_formed"] = False
-            else:
-                out.append(_record(idx, {}, b"", False))
-                idx += 1
-            if nxt < 0:
-                break
-            pos = nxt
-            continue
-        hdr_start = pos + len(marker)
-        hdr_end = data.find(b"\r\n\r\n", hdr_start)
-        if hdr_end < 0:
-            out.append(_record(idx, {}, b"", False))
-            break
-        headers = {}
-        for line in data[hdr_start:hdr_end].split(b"\r\n"):
-            k, sep, v = line.partition(b": ")
-            if sep:
-                headers[k.decode("utf-8", "replace")] = v.decode("utf-8", "replace")
-        try:
-            clen = int(headers.get("Content-Length", ""))
-        except ValueError:
-            clen = -1
-        body_start = hdr_end + 4
-        if clen < 0 or body_start + clen > len(data):
-            out.append(_record(idx, headers, b"", False))
-            idx += 1
-            nxt = data.find(marker, body_start)
-            if nxt < 0:
-                break
-            pos = nxt
-            continue
-        body = data[body_start : body_start + clen]
-        tail_ok = data[body_start + clen : body_start + clen + 4] == b"\r\n\r\n"
-        out.append(_record(idx, headers, body, tail_ok))
-        idx += 1
-        pos = body_start + clen + (4 if tail_ok else 0)
-    return out
-
-
-def _record(idx: int, headers: dict, body: bytes, ok: bool) -> dict:
-    return {
-        "rec_index": idx,
-        "warc_type": headers.get("WARC-Type", ""),
-        "target_uri": headers.get("WARC-Target-URI", ""),
-        "warc_date": headers.get("WARC-Date", ""),
-        "content_length": len(body),
-        "payload": body.decode("utf-8", "replace"),
-        "well_formed": ok,
-    }
-
-
-def parse_warc_stream(
-    df: DataFrame, records_col: str = "warc", id_col: str = "doc_id"
-) -> DataFrame:
-    """Explode a column of concatenated WARC records into one row per
-    record via the honest byte-exact parser — ONE Arrow ``mapInPandas``
-    stage, no shuffle (record rows stay in their blob's partition), id
-    field type derived from the input schema."""
-    import pandas as pd
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = "%s %s, %s" % (id_col, id_type, RECORD_SCHEMA)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = [id_col] + [f.split()[0] for f in RECORD_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[records_col]):
-                for rec in _parse_blob(blob):
-                    rec[id_col] = rid
-                    rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, records_col).mapInPandas(run, schema)

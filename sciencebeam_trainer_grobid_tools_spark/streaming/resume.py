@@ -3,25 +3,20 @@
 The reference resumes by skipping inputs whose output file already exists
 (auto_annotate_utils.py:517-529,701-716).  The engine's equivalent is
 snapshot-based: the output table's ``url`` set IS the checkpoint, and resume
-is a ``left_anti`` join (plans.pipeline.resume_filter).  Two drivers:
+is a ``left_anti`` join (plans.pipeline.resume_filter).
 
-- ``run_resumable``: batch driver that processes the remaining documents in
-  bounded chunks, appending to the output directory; killing it at any chunk
-  boundary loses no work, and restart picks up exactly the unprocessed urls.
-  Like the reference, which filters its file list once and then fans the
-  documents out, it plans once per run: it reads the completed url set
-  once, numbers the remaining distinct urls into a persisted ``(url,
-  chunk)`` plan with exact chunk sizes, and writes each chunk as one job
-  that semi-joins (broadcast) its slice of the plan.  There is no
-  per-chunk re-read of the growing output and no termination probe.  The
-  plan lives only as long as the run: a restart reads the output's url set
-  again and recomputes it.
-  A per-run manifest (JSON) records partition lineage + counters (the
-  north_rule's "resumable from checkpoint with per-partition lineage").
-- ``stream_annotate``: Structured Streaming variant — ``readStream`` over the
-  input directory with ``maxFilesPerTrigger``, the same annotate kernel via
-  ``mapInPandas`` (stateless per row, so no watermark needed), checkpointed
-  ``writeStream`` to parquet.
+``run_resumable`` is the driver: it processes the remaining documents in
+bounded chunks, appending to the output directory; killing it at any chunk
+boundary loses no work, and restart picks up exactly the unprocessed urls.
+Like the reference, which filters its file list once and then fans the
+documents out, it plans once per run: it reads the completed url set once,
+numbers the remaining distinct urls into a persisted ``(url, chunk)`` plan
+with exact chunk sizes, and writes each chunk as one job that semi-joins
+(broadcast) its slice of the plan.  There is no per-chunk re-read of the
+growing output and no termination probe.  The plan lives only as long as
+the run: a restart reads the output's url set again and recomputes it.
+A per-run manifest (JSON) records partition lineage + counters (the
+north_rule's "resumable from checkpoint with per-partition lineage").
 """
 
 from __future__ import annotations
@@ -169,30 +164,3 @@ def run_resumable(
     finally:
         numbered.unpersist(blocking=True)
     return {"chunks": n_chunks, "rows": total_rows}
-
-
-def stream_annotate(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 4,
-    **annotate_kwargs,
-):
-    """Structured Streaming variant: incremental parquet-file source ->
-    annotate kernel -> checkpointed parquet sink.  Returns the query handle
-    (caller awaits/stops)."""
-    static_schema = spark.read.parquet(input_dir).schema
-    stream = (
-        spark.readStream.schema(static_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    annotated = annotate_documents(stream, **annotate_kwargs)
-    return (
-        annotated.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )

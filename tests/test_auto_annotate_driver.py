@@ -83,7 +83,7 @@ def run_header_job(spark, tmp_path, **kwargs):
         xml_path=str(tmp_path / "xml"),
         xml_filename_regex=TEI_FILENAME_REGEX,
         flavor_chain=default_flavor(config),
-        xml_mapping_text=mapping_text,
+        xml_mapping=mapping,
         tag_to_tei_path_mapping=HEADER_TAG_TO_TEI_PATH_MAPPING,
         source_pattern="*.header.tei.xml",
     )
@@ -264,7 +264,7 @@ class TestRunAutoAnnotateSegmentation:
             xml_path=str(tmp_path / "xml"),
             xml_filename_regex=r"/(.*).segmentation.tei.xml/\1.xml/",
             flavor_chain=segmentation_flavor(config),
-            xml_mapping_text=DEFAULT_XML_MAPPING,
+            xml_mapping=parse_xml_mapping_string(DEFAULT_XML_MAPPING),
             tag_to_tei_path_mapping=SEGMENTATION_TAG_TO_TEI_PATH_MAPPING,
             container_path="text",
             source_pattern="*.segmentation.tei.xml",
@@ -296,7 +296,7 @@ class TestRunAutoAnnotateSegmentation:
             xml_path=str(tmp_path / "xml"),
             xml_filename_regex=r"/(.*).segmentation.tei.xml/\1.xml/",
             flavor_chain=segmentation_flavor(config),
-            xml_mapping_text=DEFAULT_XML_MAPPING,
+            xml_mapping=parse_xml_mapping_string(DEFAULT_XML_MAPPING),
             tag_to_tei_path_mapping=SEGMENTATION_TAG_TO_TEI_PATH_MAPPING,
             container_path="text",
             source_pattern="*.segmentation.tei.xml",
@@ -448,7 +448,7 @@ class TestRunAutoAnnotateReference:
             xml_path=str(tmp_path / "xml"),
             xml_filename_regex=r"/(.*).references.tei.xml/\1.xml/",
             flavor_chain=reference_flavor(config, segment_references=True),
-            xml_mapping_text=REFERENCE_XML_MAPPING,
+            xml_mapping=parse_xml_mapping_string(REFERENCE_XML_MAPPING),
             tag_to_tei_path_mapping=REFERENCE_TEI_MAPPING,
             container_path="text/back/listBibl",
             source_pattern="*.references.tei.xml",
@@ -504,7 +504,7 @@ class TestRunAutoAnnotateFulltext:
             xml_path=str(tmp_path / "xml"),
             xml_filename_regex=r"/(.*).fulltext.tei.xml/\1.xml/",
             flavor_chain=fulltext_flavor(config),
-            xml_mapping_text=FULLTEXT_XML_MAPPING,
+            xml_mapping=parse_xml_mapping_string(FULLTEXT_XML_MAPPING),
             tag_to_tei_path_mapping=FULLTEXT_TEI_MAPPING,
             container_path="text/body",
             source_pattern="*.fulltext.tei.xml",
@@ -570,7 +570,7 @@ author_aff.match-prefix-regex = ({author_aff-label})\\s*[\\.-]*\\s*$
             xml_path=str(tmp_path / "xml"),
             xml_filename_regex=r"/(.*).affiliation.tei.xml/\1.xml/",
             flavor_chain=affiliation_flavor(config),
-            xml_mapping_text=self.AFF_MAPPING,
+            xml_mapping=parse_xml_mapping_string(self.AFF_MAPPING),
             tag_to_tei_path_mapping=self.AFF_TEI_MAPPING,
             container_path="text/front",
             source_pattern="*.affiliation.tei.xml",
@@ -630,7 +630,7 @@ table.sub.table-caption = ./caption
             xml_path=str(tmp_path / "xml"),
             xml_filename_regex=r"/(.*).table.tei.xml/\1.xml/",
             flavor_chain=table_flavor(config),
-            xml_mapping_text=self.TABLE_MAPPING,
+            xml_mapping=parse_xml_mapping_string(self.TABLE_MAPPING),
             tag_to_tei_path_mapping=self.TABLE_TEI_MAPPING,
             container_path="text",
             source_pattern="*.table.tei.xml",
@@ -689,7 +689,7 @@ figure.sub.figure-caption = ./caption
             xml_path=str(tmp_path / "xml"),
             xml_filename_regex=r"/(.*).figure.tei.xml/\1.xml/",
             flavor_chain=figure_flavor(config),
-            xml_mapping_text=self.FIGURE_MAPPING,
+            xml_mapping=parse_xml_mapping_string(self.FIGURE_MAPPING),
             tag_to_tei_path_mapping=self.FIGURE_TEI_MAPPING,
             container_path="text",
             source_pattern="*.figure.tei.xml",

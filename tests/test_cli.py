@@ -106,6 +106,32 @@ class TestHeaderCli:
         out = (tmp_path / "tei-auto" / "document1.header.tei.xml").read_text()
         assert xpath_text(out, ".//docTitle/titlePart") == TITLE_1
 
+    def test_mapping_parsed_once_per_run(self, spark, tmp_path, monkeypatch):
+        import sys
+
+        from sciencebeam_trainer_grobid_tools_spark.operators import targets
+
+        original = targets.parse_xml_mapping_string
+        calls = []
+
+        def counting(*args, **kwargs):
+            calls.append(1)
+            return original(*args, **kwargs)
+
+        # every driver-side binding of the parser, wherever it was imported
+        for name, module in list(sys.modules.items()):
+            if (
+                name.startswith("sciencebeam_trainer_grobid_tools_spark")
+                and getattr(module, "parse_xml_mapping_string", None) is original
+            ):
+                monkeypatch.setattr(module, "parse_xml_mapping_string", counting)
+        write_header_pair(tmp_path, "<note>%s</note>" % TITLE_1, target_xml(TITLE_1))
+        counters = auto_annotate_header.main(
+            header_argv(tmp_path, "--fields", "title")
+        )
+        assert counters == {"passed": 1, "failed": 0}
+        assert len(calls) == 1
+
     def test_complex_matcher_annotates_title(self, spark, tmp_path):
         write_header_pair(tmp_path, "<note>%s</note>" % TITLE_1, target_xml(TITLE_1))
         counters = auto_annotate_header.main(

@@ -1,5 +1,5 @@
-"""Corpus-scale operator tests: dedup, similarity, textstats, multimodal,
-resumable execution."""
+"""Corpus-scale operator tests: dedup, similarity, textstats, resumable
+execution."""
 
 import math
 
@@ -7,10 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from sciencebeam_trainer_grobid_tools_spark.operators import dedup, similarity, textstats
-from sciencebeam_trainer_grobid_tools_spark.operators.multimodal import (
-    attach_fake_media,
-    extract_media_features,
-)
 from sciencebeam_trainer_grobid_tools_spark.plans.session import build_session
 
 
@@ -39,12 +35,6 @@ _MINHASH_FAMILIES = [dedup.minhash_candidate_pairs, dedup.portable_minhash_pairs
 
 
 class TestDedup:
-    def test_exact_duplicate_groups(self, docs):
-        groups = dedup.exact_duplicate_groups(docs).collect()
-        assert len(groups) == 1
-        assert groups[0]["n_docs"] == 2
-        assert groups[0]["keep_id"] == 0
-
     def test_minhash_finds_near_duplicates(self, docs):
         pairs = {
             (r["doc_id_a"], r["doc_id_b"]): r["jaccard"]
@@ -157,55 +147,6 @@ class TestDedup:
         }
         assert pairs[(0, 1)] == 1.0
 
-    def test_simhash_hamming_close_for_near_dups(self, docs):
-        sigs = {r["doc_id"]: r["simhash"] for r in dedup.simhash_table(docs).collect()}
-        assert sigs[0] == sigs[1]
-        ham_near = bin((sigs[0] ^ sigs[2]) & ((1 << 64) - 1)).count("1")
-        ham_far = bin((sigs[0] ^ sigs[3]) & ((1 << 64) - 1)).count("1")
-        assert ham_near < ham_far
-
-    def test_simhash_near_duplicate_pairs(self, docs):
-        pairs = {
-            (r["doc_id_a"], r["doc_id_b"])
-            for r in dedup.simhash_near_duplicates(docs, max_hamming=10).collect()
-        }
-        assert (0, 1) in pairs
-
-    def test_simhash_multiprobe_guaranteed_recall(self, spark):
-        """4 probes x 16 disjoint rotated windows tile all 64 bits, so every
-        pair at hamming <= 3 MUST share a bucket (pigeonhole) — the round-1
-        fixed-prefix version missed pairs differing in the top 16 bits.
-        Verified against exact all-pairs hamming on a seeded corpus."""
-        import itertools
-        import random
-
-        rng = random.Random(99)
-        words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
-        rows = []
-        for i in range(40):
-            base = [words[rng.randrange(len(words))] for _ in range(60)]
-            rows.append((i, " ".join(base)))
-            # a near-clone with a couple of word swaps (small hamming)
-            clone = list(base)
-            for _ in range(2):
-                clone[rng.randrange(len(clone))] = words[rng.randrange(len(words))]
-            rows.append((100 + i, " ".join(clone)))
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        sigs = {r["doc_id"]: r["simhash"] for r in dedup.simhash_table(docs).collect()}
-        exact = {
-            (a, b)
-            for a, b in itertools.combinations(sorted(sigs), 2)
-            if bin((sigs[a] ^ sigs[b]) & ((1 << 64) - 1)).count("1") <= 3
-        }
-        assert exact, "seeded corpus must contain hamming<=3 pairs"
-        found = {
-            (r["doc_id_a"], r["doc_id_b"])
-            for r in dedup.simhash_near_duplicates(docs, max_hamming=3).collect()
-        }
-        assert exact <= found
-        assert found == exact  # max_hamming filter makes them equal
-
-
 class TestDuplicateClusters:
     """Connected components over near-dup pairs (large-star/small-star,
     Kiveris et al. 2014): transitive closure of the pair relation, label
@@ -287,21 +228,6 @@ class TestDuplicateClusters:
         )
         assert out.columns == ["doc_id", "cluster_id"]
         assert out.count() == 0
-
-    def test_dedup_by_clusters_keeps_representatives_and_singletons(
-        self, spark
-    ):
-        docs = spark.createDataFrame(
-            [(i, "t%d" % i) for i in range(6)], "doc_id long, text string"
-        )
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3)], "doc_id_a long, doc_id_b long"
-        )
-        kept = sorted(
-            r["doc_id"] for r in dedup.dedup_by_clusters(docs, pairs).collect()
-        )
-        assert kept == [0, 1, 4, 5]
-
 
 class TestRemoveRepeatedSpans:
     """Exact-substring dedup (ExactSubstr rule): drop every token inside a
@@ -616,7 +542,7 @@ class TestBpe:
             [(1, "low lower lowest low low"), (2, "newer newest new low")],
             "doc_id long, text string",
         )
-        merges = bpe.bpe_train(df, n_merges=3)
+        merges = bpe.bpe_train_collected(df, n_merges=3)
         assert merges == [("l", "o"), ("lo", "w"), ("low", "</w>")]
 
     def test_differential_vs_reference(self, spark):
@@ -636,13 +562,16 @@ class TestBpe:
             for w in text.split():
                 word_counts[w] = word_counts.get(w, 0) + 1
         for n_merges in (5, 12):
-            got = bpe.bpe_train(df, n_merges=n_merges)
+            got = bpe.bpe_train_collected(df, n_merges=n_merges)
             want = self._ref_train(word_counts, n_merges)
             assert got == want, n_merges
-        # encode stats agree with the reference segmentation lengths
-        merges = bpe.bpe_train(df, n_merges=12)
-        stats = {
-            r["doc_id"]: r for r in bpe.bpe_encode_stats(df, merges).collect()
+        # encoded lengths agree with the reference segmentation lengths
+        merges = bpe.bpe_train_collected(df, n_merges=12)
+        n_subwords = {
+            r["doc_id"]: len(r["token_ids"])
+            for r in bpe.bpe_encode(
+                df, merges, bpe.bpe_vocab_table(df, merges)
+            ).collect()
         }
 
         def ref_encode_len(word):
@@ -660,33 +589,16 @@ class TestBpe:
             return len(syms)
 
         for doc_id, text in rows:
-            words = text.split()
-            assert stats[doc_id]["n_tokens"] == len(words)
-            assert stats[doc_id]["n_subwords"] == sum(
-                ref_encode_len(w) for w in words
+            assert n_subwords[doc_id] == sum(
+                ref_encode_len(w) for w in text.split()
             )
-
-    def test_encode_stats_preserves_id_type(self, spark):
-        # a string-keyed corpus must stay string-keyed (the output schema
-        # derives from the input id column, not a hardcoded bigint)
-        from sciencebeam_trainer_grobid_tools_spark.operators import bpe
-
-        df = spark.createDataFrame(
-            [("urn:a", "low lower low"), ("urn:b", "new lower")],
-            "doc_id string, text string",
-        )
-        merges = bpe.bpe_train(df, n_merges=2)
-        out = bpe.bpe_encode_stats(df, merges)
-        assert out.schema["doc_id"].dataType.simpleString() == "string"
-        got = {r["doc_id"]: r["n_tokens"] for r in out.collect()}
-        assert got == {"urn:a": 3, "urn:b": 2}
 
     def test_early_stop_when_compressed(self, spark):
         from sciencebeam_trainer_grobid_tools_spark.operators import bpe
 
         df = spark.createDataFrame([(1, "ab ab")], "doc_id long, text string")
         # 'ab</w>' fully merges in 2 steps; further merges must stop early
-        merges = bpe.bpe_train(df, n_merges=50)
+        merges = bpe.bpe_train_collected(df, n_merges=50)
         assert len(merges) <= 3
 
     def test_vocab_table_layout(self, spark):
@@ -695,7 +607,7 @@ class TestBpe:
         df = spark.createDataFrame(
             [(1, "low lower low"), (2, "new lower")], "doc_id long, text string"
         )
-        merges = bpe.bpe_train(df, n_merges=3)
+        merges = bpe.bpe_train_collected(df, n_merges=3)
         vocab = {
             r["token"]: r["token_id"]
             for r in bpe.bpe_vocab_table(df, merges, "text").collect()
@@ -712,7 +624,7 @@ class TestBpe:
 
     def test_encode_ids_differential_vs_reference(self, spark):
         """Encoded id sequences match the pure-python reference at two
-        merge budgets, and len(token_ids) agrees with encode_stats."""
+        merge budgets."""
         import random
 
         from sciencebeam_trainer_grobid_tools_spark.operators import bpe
@@ -725,7 +637,7 @@ class TestBpe:
         ]
         df = spark.createDataFrame(rows, "doc_id long, text string")
         for n_merges in (4, 10):
-            merges = bpe.bpe_train(df, n_merges=n_merges)
+            merges = bpe.bpe_train_collected(df, n_merges=n_merges)
             vocab_df = bpe.bpe_vocab_table(df, merges, "text")
             tok2id = {r["token"]: r["token_id"] for r in vocab_df.collect()}
             got = {
@@ -755,11 +667,6 @@ class TestBpe:
                 return out
 
             assert got == {i: ref_ids(t) for i, t in rows}, n_merges
-            stats = {
-                r["doc_id"]: r["n_subwords"]
-                for r in bpe.bpe_encode_stats(df, merges).collect()
-            }
-            assert {i: len(ids) for i, ids in got.items()} == stats
 
     def test_encode_unseen_chars_map_to_unk(self, spark):
         from sciencebeam_trainer_grobid_tools_spark.operators import bpe
@@ -767,7 +674,7 @@ class TestBpe:
         train = spark.createDataFrame(
             [(1, "low low lower")], "doc_id long, text string"
         )
-        merges = bpe.bpe_train(train, n_merges=2)
+        merges = bpe.bpe_train_collected(train, n_merges=2)
         vocab_df = bpe.bpe_vocab_table(train, merges, "text")
         # 'z' and 'q' never appeared at training time
         test = spark.createDataFrame([(9, "zq")], "doc_id long, text string")
@@ -782,110 +689,10 @@ class TestBpe:
         df = spark.createDataFrame(
             [("urn:a", "low lower low")], "doc_id string, text string"
         )
-        merges = bpe.bpe_train(df, n_merges=2)
+        merges = bpe.bpe_train_collected(df, n_merges=2)
         out = bpe.bpe_encode(df, merges, bpe.bpe_vocab_table(df, merges))
         assert out.schema["doc_id"].dataType.simpleString() == "string"
         assert out.schema["token_ids"].dataType.simpleString() == "array<int>"
-
-    @staticmethod
-    def _ref_train_batched(word_counts, n_merges, batch, min_pair_count=2):
-        # python replica of the batched rule: top-4*batch candidate pool
-        # per round, greedy symbol-disjoint selection (a taken pair's
-        # {a, b, a+b} blocks later candidates), all taken merges applied
-        # before the next count round
-        vocab = {tuple(list(w) + ["</w>"]): n for w, n in word_counts.items()}
-        merges = []
-        while len(merges) < n_merges:
-            pairs = {}
-            for syms, n in vocab.items():
-                for i in range(len(syms) - 1):
-                    pairs[(syms[i], syms[i + 1])] = (
-                        pairs.get((syms[i], syms[i + 1]), 0) + n
-                    )
-            ranked = sorted(
-                ((-c, a, b) for (a, b), c in pairs.items())
-            )[: 4 * batch]
-            cands = [(a, b) for nc, a, b in ranked if -nc >= min_pair_count]
-            if not cands:
-                break
-            selected, used = [], set()
-            for a, b in cands:
-                if {a, b, a + b} & used:
-                    continue
-                selected.append((a, b))
-                used |= {a, b, a + b}
-                if len(selected) >= min(batch, n_merges - len(merges)):
-                    break
-            merges.extend(selected)
-            for a, b in selected:
-                new_vocab = {}
-                for syms, n in vocab.items():
-                    i, out = 0, []
-                    while i < len(syms):
-                        if (
-                            i + 1 < len(syms)
-                            and syms[i] == a
-                            and syms[i + 1] == b
-                        ):
-                            out.append(a + b)
-                            i += 2
-                        else:
-                            out.append(syms[i])
-                            i += 1
-                    new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + n
-                vocab = new_vocab
-        return merges
-
-    def test_batched_differential_vs_reference(self, spark):
-        import random
-
-        from sciencebeam_trainer_grobid_tools_spark.operators import bpe
-
-        rng = random.Random(33)
-        pool = ["river", "riverbank", "banker", "rank", "ranker", "ink", "rivet"]
-        rows = [
-            (i, " ".join(rng.choice(pool) for _ in range(rng.randint(3, 10))))
-            for i in range(25)
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        word_counts = {}
-        for _, text in rows:
-            for w in text.split():
-                word_counts[w] = word_counts.get(w, 0) + 1
-        for batch in (2, 4):
-            got = bpe.bpe_train(df, n_merges=9, batch=batch)
-            want = self._ref_train_batched(word_counts, 9, batch)
-            assert got == want, batch
-        # batch=1 stays strict Sennrich
-        assert bpe.bpe_train(df, n_merges=6, batch=1) == self._ref_train(
-            word_counts, 6
-        )
-
-    def test_collected_matches_spark_loop(self, spark):
-        import random
-
-        from sciencebeam_trainer_grobid_tools_spark.operators import bpe
-
-        rng = random.Random(5)
-        pool = ["alpha", "alphabet", "beta", "betatron", "gamma", "gam"]
-        rows = [
-            (i, " ".join(rng.choice(pool) for _ in range(rng.randint(2, 8))))
-            for i in range(20)
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        assert bpe.bpe_train_collected(df, n_merges=10) == bpe.bpe_train(
-            df, n_merges=10
-        )
-
-    def test_invalid_batch_raises(self, spark):
-        import pytest as _pytest
-
-        from sciencebeam_trainer_grobid_tools_spark.operators import bpe
-
-        df = spark.createDataFrame([(1, "ab")], "doc_id long, text string")
-        with _pytest.raises(ValueError, match="batch"):
-            bpe.bpe_train(df, n_merges=1, batch=0)
-
 
 class TestRepetitionAndDecontamination:
     def test_repetition_features_planted(self, spark):
@@ -1485,155 +1292,9 @@ class TestPq:
         assert "isin" in plan.lower() or "IN (" in plan  # cell pruning filter
 
 
-class TestSemanticDedup:
-    def _grouped(self, spark, groups=4, per=5, dim=8, noise=0.01, seed=3):
-        import random
-
-        rng = random.Random(seed)
-        base = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(groups)]
-        rows = [
-            (i, [float(v + rng.gauss(0, noise)) for v in base[i % groups]])
-            for i in range(groups * per)
-        ]
-        return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    def test_keeps_lowest_id_per_semantic_group(self, spark):
-        df = self._grouped(spark)
-        cents = similarity.ivf_train(df, n_cells=4, iters=2, dim=8)
-        out = similarity.semantic_dedup(df, cents, threshold=0.99).collect()
-        kept = sorted(r["vec_id"] for r in out if r["semdedup_keep"])
-        assert kept == [0, 1, 2, 3]  # one representative per planted group
-        assert len(out) == 20  # nothing is silently filtered, only flagged
-
-    def test_distinct_vectors_all_survive(self, spark):
-        import random
-
-        rng = random.Random(11)
-        rows = [
-            (i, [float(rng.gauss(0, 1)) for _ in range(8)]) for i in range(12)
-        ]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        cents = similarity.ivf_train(df, n_cells=3, iters=1, dim=8)
-        out = similarity.semantic_dedup(df, cents, threshold=0.99).collect()
-        assert all(r["semdedup_keep"] for r in out)
-
-    def test_pairwise_rule_is_non_iterative(self, spark):
-        """v is dropped when a lower-id u is within threshold even if u was
-        itself dropped by a still-lower w (documented one-pass rule)."""
-        # chain: w=0 ~ u=1 ~ v=2 but w and v less similar; all one cluster
-        rows = [
-            (0, [1.0, 0.0]),
-            (1, [0.96, 0.28]),   # cos(0,1) ~ 0.96
-            (2, [0.85, 0.527]),  # cos(1,2) ~ 0.964, cos(0,2) ~ 0.85
-        ]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        cents = [[1.0, 0.0]]  # single cluster: all compared
-        out = {
-            r["vec_id"]: r["semdedup_keep"]
-            for r in similarity.semantic_dedup(df, cents, threshold=0.95).collect()
-        }
-        assert out == {0: True, 1: False, 2: False}
-
-    def test_cell_local_join_plan(self, spark):
-        df = self._grouped(spark)
-        cents = similarity.ivf_train(df, n_cells=4, iters=0, dim=8)
-        plan = (
-            similarity.semantic_dedup(df, cents, threshold=0.99)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "CartesianProduct" not in plan  # the join is cell-keyed
-
-    def test_zero_norm_vectors_never_flagged_and_never_nan(self, spark):
-        # two identical all-zero vectors: cosine is defined as 0 (guarded
-        # denominator), so both survive — deterministically, not via a
-        # silent NaN comparison
-        rows = [
-            (0, [0.0, 0.0]),
-            (1, [0.0, 0.0]),
-            (2, [1.0, 0.0]),
-            (3, [1.0, 0.001]),
-        ]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        out = {
-            r["vec_id"]: r["semdedup_keep"]
-            for r in similarity.semantic_dedup(
-                df, [[1.0, 0.0]], threshold=0.95
-            ).collect()
-        }
-        assert out == {0: True, 1: True, 2: True, 3: False}
-
-    def test_max_cell_size_bounds_hot_cell_pairs(self, spark):
-        """A deliberately skewed clustering (every vector in one cell) must
-        re-split: candidate pair count falls from n^2/2 to ~n*cap/2, and
-        the compared blocks are the deterministic id-hash sub-cells."""
-        from pyspark.sql import functions as F
-
-        n, cap = 60, 10
-        df = self._grouped(spark, groups=6, per=10, dim=8)
-        cents = [[0.0] * 8]  # one cell: the hot-cell worst case
-        # replicate the operator's sub-cell derivation to count pairs
-        splits = -(-n // cap)
-        sub = df.select(
-            "vec_id", F.pmod(F.xxhash64("vec_id"), F.lit(splits)).alias("sc")
-        )
-        sizes = [r["c"] for r in sub.groupBy("sc").agg(
-            F.count(F.lit(1)).alias("c")).collect()]
-        bounded_pairs = sum(s * (s - 1) // 2 for s in sizes)
-        assert bounded_pairs < n * (n - 1) // 2  # strictly fewer than n^2/2
-        # and the operator's output under the cap only drops pairs that
-        # share a sub-cell (recall trade is exactly the sub-cell boundary)
-        unbounded = {
-            r["vec_id"]: r["semdedup_keep"]
-            for r in similarity.semantic_dedup(
-                df, cents, threshold=0.99
-            ).collect()
-        }
-        capped = {
-            r["vec_id"]: r["semdedup_keep"]
-            for r in similarity.semantic_dedup(
-                df, cents, threshold=0.99, max_cell_size=cap
-            ).collect()
-        }
-        subcell = {r["vec_id"]: r["sc"] for r in sub.collect()}
-        assert len(capped) == n
-        # planted duplicate groups are i % 6: a capped drop must be a real
-        # duplicate (dropped unbounded too) with a same-group, same-sub-cell
-        # lower id — the recall trade is EXACTLY the sub-cell boundary
-        for vid, keep in capped.items():
-            if not keep:
-                assert unbounded[vid] is False
-                assert any(
-                    o < vid and o % 6 == vid % 6 and subcell[o] == subcell[vid]
-                    for o in range(n)
-                ), vid
-        # and conversely every same-group, same-sub-cell pair was caught
-        for vid in range(n):
-            if any(
-                o < vid and o % 6 == vid % 6 and subcell[o] == subcell[vid]
-                for o in range(n)
-            ):
-                assert capped[vid] is False, vid
-
-    def test_max_cell_size_noop_when_cells_fit(self, spark):
-        # a cap larger than every cell must reproduce the unbounded result
-        df = self._grouped(spark)
-        cents = similarity.ivf_train(df, n_cells=4, iters=2, dim=8)
-        a = {
-            r["vec_id"]: r["semdedup_keep"]
-            for r in similarity.semantic_dedup(df, cents, threshold=0.99).collect()
-        }
-        b = {
-            r["vec_id"]: r["semdedup_keep"]
-            for r in similarity.semantic_dedup(
-                df, cents, threshold=0.99, max_cell_size=1000
-            ).collect()
-        }
-        assert a == b
-
-    def test_max_cell_size_invalid_raises(self, spark):
-        df = self._grouped(spark)
-        with pytest.raises(ValueError, match="max_cell_size"):
-            similarity.semantic_dedup(df, [[0.0] * 8], max_cell_size=0)
+def _cleanliness(df):
+    cols = textstats.cleanliness_columns(F.col("text"))
+    return df.select("doc_id", *(expr.alias(name) for name, expr in cols.items()))
 
 
 class TestTextstats:
@@ -1659,7 +1320,7 @@ class TestTextstats:
         )
         got = {
             r["doc_id"]: r
-            for r in textstats.cleanliness_features(df).collect()
+            for r in _cleanliness(df).collect()
         }
         assert got[1]["replacement_chars"] == 1
         assert got[1]["control_ratio"] == round(1 / 6, 6)
@@ -1673,7 +1334,7 @@ class TestTextstats:
     def test_cleanliness_plan_is_pure_codegen(self, spark):
         df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
         plan = (
-            textstats.cleanliness_features(df)
+            _cleanliness(df)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -1691,22 +1352,6 @@ class TestTextstats:
             ).collect()
         ]
         assert fps[0] == fps[1]
-
-
-class TestMultimodal:
-    def test_media_feature_plumbing(self, docs):
-        features = extract_media_features(attach_fake_media(docs)).collect()
-        assert len(features) == 5
-        for row in features:
-            assert row["n_bytes"] == 32  # md5 hex digest bytes
-            assert 64 <= row["width"] <= 64 + 255
-            assert row["channels"] == 3
-
-    def test_decode_stub_raises(self, docs):
-        with pytest.raises(Exception):
-            extract_media_features(
-                attach_fake_media(docs), decode_stub="raise"
-            ).collect()
 
 
 class TestResumable:
@@ -1851,78 +1496,6 @@ class TestReadCompletedUrls:
         with pytest.raises(CompletedOutputUnreadable):
             run_resumable(spark, docs, str(tmp_path / "out"), chunk_size=5)
         assert sorted(p.name for p in location.glob("part-*")) == [part.name]
-
-
-class TestIdentifierExtraction:
-    def test_extracts_ids_from_text(self, spark):
-        df = spark.createDataFrame(
-            [
-                (0, "see doi: 10.1234/abc.def and PMID: 12345 plus PMC67890"),
-                (1, "preprint arXiv:2101.12345v2 online"),
-                (2, "no identifiers here"),
-            ],
-            "doc_id long, text string",
-        )
-        row0, row1, row2 = df.select(
-            textstats.extract_doi(F.col("text")).alias("doi"),
-            textstats.extract_pmid(F.col("text")).alias("pmid"),
-            textstats.extract_pmcid(F.col("text")).alias("pmcid"),
-            textstats.extract_arxiv_id(F.col("text")).alias("arxiv"),
-        ).collect()
-        assert row0["doi"] == "10.1234/abc.def"
-        assert row0["pmid"] == "12345"
-        assert row0["pmcid"] == "PMC67890"
-        assert row1["arxiv"] == "2101.12345v2"
-        assert row2["doi"] == "" and row2["pmid"] == ""
-
-
-class TestMultimodalStages:
-    def test_resize_fits_max_side_preserving_aspect(self, spark, docs):
-        from sciencebeam_trainer_grobid_tools_spark.operators.multimodal import (
-            attach_fake_media,
-            resize_media,
-        )
-
-        out = resize_media(attach_fake_media(docs), max_side=100).collect()
-        assert len(out) == docs.count()
-        for row in out:
-            assert max(row["out_width"], row["out_height"]) <= 100
-            # aspect preserved within rounding
-            if row["width"] >= row["height"]:
-                assert row["out_width"] >= row["out_height"]
-            else:
-                assert row["out_height"] >= row["out_width"]
-
-    def test_sample_frames_bounded_expansion(self, spark, docs):
-        from sciencebeam_trainer_grobid_tools_spark.operators.multimodal import (
-            attach_fake_media,
-            sample_frames,
-        )
-
-        frames = sample_frames(attach_fake_media(docs), n_frames=4)
-        rows = frames.collect()
-        assert len(rows) == docs.count() * 4
-        by_doc = {}
-        for row in rows:
-            by_doc.setdefault(row["doc_id"], []).append(row)
-        for doc_rows in by_doc.values():
-            ts = [r["ts_ms"] for r in sorted(doc_rows, key=lambda r: r["frame_index"])]
-            assert ts[0] == 0 and ts == sorted(ts)
-            assert len({r["frame_sha1"] for r in doc_rows}) == len(doc_rows)
-
-    def test_raise_stub_propagates(self, spark, docs):
-        import pytest as _pytest
-        from py4j.protocol import Py4JJavaError
-        from sciencebeam_trainer_grobid_tools_spark.operators.multimodal import (
-            attach_fake_media,
-            sample_frames,
-        )
-
-        with _pytest.raises(Exception) as exc_info:
-            sample_frames(attach_fake_media(docs), decode_stub="raise").collect()
-        assert "NotImplementedError" in str(exc_info.value) or "codec" in str(
-            exc_info.value
-        )
 
 
 class TestPii:
@@ -2508,14 +2081,15 @@ class TestWinnowing:
 
 
 class TestBpeHeldOut:
-    """Held-out encoder health (bpe_unk_stats) + vocabulary stability
-    under retraining — the artifact contract a training run depends on."""
+    """Held-out encoder health (``<unk>`` share of the encoded ids) +
+    vocabulary stability under retraining — the artifact contract a
+    training run depends on."""
 
     def _model(self, spark, rows, n_merges=3):
         from sciencebeam_trainer_grobid_tools_spark.operators import bpe
 
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        merges = bpe.bpe_train(df, n_merges=n_merges)
+        merges = bpe.bpe_train_collected(df, n_merges=n_merges)
         return df, merges, bpe.bpe_vocab_table(df, merges)
 
     def test_unk_stats_differential(self, spark):
@@ -2531,9 +2105,15 @@ class TestBpeHeldOut:
             (13, None),               # NULL -> empty doc, rate 0.0
         ]
         held = spark.createDataFrame(held_rows, "doc_id long, text string")
+        unk_id = {r["token"]: r["token_id"] for r in vocab_df.collect()}["<unk>"]
+
+        def stats(ids):
+            n_unk = sum(1 for i in ids if i == unk_id)
+            return (len(ids), n_unk, (n_unk / len(ids)) if ids else 0.0)
+
         got = {
-            r["doc_id"]: (r["n_subwords"], r["n_unk"], r["unk_rate"])
-            for r in bpe.bpe_unk_stats(held, merges, vocab_df).collect()
+            r["doc_id"]: stats(list(r["token_ids"]))
+            for r in bpe.bpe_encode(held, merges, vocab_df).collect()
         }
 
         def ref(text):
@@ -2590,7 +2170,7 @@ class TestBpeHeldOut:
         rows = [(1, "low lower low"), (2, "new lower wide")]
         extended = rows + [(3, "grüße zürich")]
         df = spark.createDataFrame(extended, "doc_id long, text string")
-        merges = bpe.bpe_train(df, n_merges=4)
+        merges = bpe.bpe_train_collected(df, n_merges=4)
         vocab = {
             r["token"]: r["token_id"]
             for r in bpe.bpe_vocab_table(df, merges).collect()

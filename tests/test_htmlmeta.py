@@ -1,5 +1,5 @@
 """HTML metadata extraction (operators/htmlmeta.py): canonical link,
-title, OpenGraph and description across attribute orders, plus the
+title and OpenGraph across attribute orders, plus the
 urlnorm composition and plan shape."""
 
 import pytest
@@ -41,14 +41,12 @@ class TestExtraction:
                 htmlmeta.canonical_hint(F.col("html")).alias("canon"),
                 htmlmeta.page_title(F.col("html")).alias("title"),
                 htmlmeta.og_property(F.col("html"), "title").alias("og"),
-                htmlmeta.meta_description(F.col("html")).alias("desc"),
             )
             .collect()[0]
         )
         assert row.canon == "https://example.com/canon"
         assert row.title == "The Example Page"
         assert row.og == "OG Title"
-        assert row.desc == "A page about examples."
 
     def test_absent_tags_yield_empty_strings(self, spark):
         row = (
@@ -57,11 +55,10 @@ class TestExtraction:
                 htmlmeta.canonical_hint(F.col("html")).alias("canon"),
                 htmlmeta.page_title(F.col("html")).alias("title"),
                 htmlmeta.og_property(F.col("html"), "title").alias("og"),
-                htmlmeta.meta_description(F.col("html")).alias("desc"),
             )
             .collect()[0]
         )
-        assert (row.canon, row.title, row.og, row.desc) == ("", "", "", "")
+        assert (row.canon, row.title, row.og) == ("", "", "")
 
     def test_non_canonical_links_ignored(self, spark):
         html = '<link rel="stylesheet" href="https://x/css"><link rel="canonical" href="https://x/c">'
@@ -113,7 +110,7 @@ class TestAdversarialMarkup:
             "<HTML><HEAD>"
             "<LINK REL='canonical' HREF='https://e.com/canon'>"
             "<META PROPERTY='og:title' CONTENT='Single OG'>"
-            "<meta name=description content=bareword>"
+            "<meta property=og:type content=bareword>"
             "</HEAD></HTML>"
         )
         row = (
@@ -121,13 +118,13 @@ class TestAdversarialMarkup:
             .select(
                 htmlmeta.canonical_hint(F.col("html")).alias("canon"),
                 htmlmeta.og_property(F.col("html"), "title").alias("og"),
-                htmlmeta.meta_description(F.col("html")).alias("desc"),
+                htmlmeta.og_property(F.col("html"), "type").alias("og_type"),
             )
             .collect()[0]
         )
         assert row.canon == "https://e.com/canon"
         assert row.og == "Single OG"
-        assert row.desc == "bareword"
+        assert row.og_type == "bareword"
 
     def test_unquoted_canonical_href(self, spark):
         page = "<link rel=canonical href=https://e.com/c>"
@@ -141,10 +138,10 @@ class TestAdversarialMarkup:
     def test_double_quoted_still_first_priority(self, spark):
         # a double-quoted value containing an apostrophe must not be
         # misread by the single-quote form
-        page = '<meta name="description" content="it\'s fine">'
+        page = '<meta property="og:title" content="it\'s fine">'
         got = (
             _df(spark, [page])
-            .select(htmlmeta.meta_description(F.col("html")).alias("d"))
+            .select(htmlmeta.og_property(F.col("html"), "title").alias("d"))
             .collect()[0].d
         )
         assert got == "it's fine"

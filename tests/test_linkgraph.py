@@ -168,25 +168,6 @@ class TestCrawlPolicy:
         assert len(all_links) == 3
         assert [r.l for r in followed] == ["https://ok.com/x"]
 
-    def test_meta_robots_noindex_flag(self, spark):
-        cases = [
-            ('<meta name="robots" content="noindex, nofollow">', True),
-            ('<META NAME="robots" CONTENT="NOINDEX">', True),
-            ('<meta name="robots" content="index, follow">', False),
-            ('<meta name="viewport" content="noindex">', False),
-            ("no meta at all", False),
-        ]
-        df = spark.createDataFrame(
-            [(i, h) for i, (h, _) in enumerate(cases)], "i long, html string"
-        )
-        got = {
-            r.i: r.f
-            for r in df.select(
-                "i", linkgraph.meta_robots_noindex(F.col("html")).alias("f")
-            ).collect()
-        }
-        assert got == {i: exp for i, (_, exp) in enumerate(cases)}
-
     def test_nofollow_path_stays_codegen(self, spark):
         df = spark.createDataFrame([("<a href=\"https://a.com/\">",)], "html string")
         plan = (
@@ -215,15 +196,13 @@ class TestSitemaps:
             [(0, urlset), (1, index)], "i long, xml string"
         )
         got = {
-            r.i: (r.locs, r.idx)
+            r.i: r.locs
             for r in df.select(
-                "i",
-                linkgraph.sitemap_locs(F.col("xml")).alias("locs"),
-                linkgraph.is_sitemap_index(F.col("xml")).alias("idx"),
+                "i", linkgraph.sitemap_locs(F.col("xml")).alias("locs")
             ).collect()
         }
-        assert got[0] == (["https://a.com/1", "https://a.com/2"], False)
-        assert got[1] == (["https://a.com/sitemap1.xml"], True)
+        assert got[0] == ["https://a.com/1", "https://a.com/2"]
+        assert got[1] == ["https://a.com/sitemap1.xml"]
 
     def test_sitemap_ops_pure_codegen(self, spark):
         df = spark.createDataFrame([("<urlset/>",)], "xml string")
@@ -294,31 +273,11 @@ class TestAdversarialMarkup:
         ).collect()[0].l
         assert followed == ["https://ok.com/x"]
 
-    def test_meta_robots_order_case_quoting(self, spark):
-        cases = [
-            ('<meta content="noindex" name="robots">', True),   # reversed order
-            ("<META NAME='robots' CONTENT='NOINDEX,nofollow'>", True),
-            ("<meta name=robots content=noindex>", True),
-            ("<meta name=robotsy content=noindex>", False),     # name must be robots
-            ('<meta name="robots" content="all">', False),
-        ]
-        df = spark.createDataFrame(
-            [(i, h) for i, (h, _) in enumerate(cases)], "i long, html string"
-        )
-        got = {
-            r.i: r.f
-            for r in df.select(
-                "i", linkgraph.meta_robots_noindex(F.col("html")).alias("f")
-            ).collect()
-        }
-        assert got == {i: exp for i, (_, exp) in enumerate(cases)}
-
     def test_adversarial_paths_stay_codegen(self, spark):
         df = spark.createDataFrame([("<a href=https://a.com/>",)], "html string")
         for col in (
             linkgraph.extract_outlinks(F.col("html")),
             linkgraph.extract_outlinks(F.col("html"), skip_nofollow=True),
-            linkgraph.meta_robots_noindex(F.col("html")),
         ):
             plan = (
                 df.select(col.alias("c"))

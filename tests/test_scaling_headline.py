@@ -53,3 +53,11 @@ def test_even_sample_count_takes_the_mean_of_the_middle_pair():
     assert headline["per_protocol"]["4c_to_16c"]["median"] == 0.7
     assert headline["best_protocol_median"] == 0.845
     assert headline["meets_target"] is True
+
+
+def test_bench_embeds_the_newest_scaling_record():
+    import bench
+
+    paths = bench.scaling_record_paths(os.path.join(REPO, "BENCH"))
+    assert os.path.basename(paths[0]) == "quiet_scaling_r11.json"
+    assert os.path.basename(paths[1]) == "quiet_scaling_r10.json"

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sciencebeam_trainer_grobid_tools_spark.plans.pipeline import (
+    ANNOTATED_COLUMNS,
     annotate_documents,
     resume_filter,
     spans_table,
@@ -34,6 +35,7 @@ def annotated(spark):
 
 class TestSparkPipeline:
     def test_row_count_and_no_errors(self, annotated):
+        assert list(annotated.columns) == list(ANNOTATED_COLUMNS)
         rows = annotated.collect()
         assert len(rows) == N_DOCS
         assert all(r["error"] is None for r in rows)
@@ -79,79 +81,6 @@ class TestSparkPipeline:
             .filter(F.col("n1") != F.col("n2"))
         )
         assert joined.count() == 0
-
-
-class TestWriteOutputs:
-    def test_single_pass_partitioned_write(self, spark, tmp_path):
-        """S6/S7 sink: ONE write job partitioned by outcome — the kernel runs
-        exactly once per document (no cache + double filtered write), and
-        readers of either outcome open only that outcome's partition dir."""
-        import os
-
-        from sciencebeam_trainer_grobid_tools_spark.plans.pipeline import (
-            read_annotated,
-            read_failed,
-            write_outputs,
-        )
-
-        docs = corpus_dataframe(spark, 20, seed=11, partitions=2)
-        counter = spark.sparkContext.accumulator(0)
-        annotated = annotate_documents(docs, repartition=4, kernel_counter=counter)
-        out = str(tmp_path / "out")
-        write_outputs(annotated, out)
-        # single pass: every document fed through the kernel exactly once
-        assert counter.value == 20
-
-        # Hive-partitioned layout on outcome
-        part_dirs = sorted(
-            d for d in os.listdir(out + "/documents") if d.startswith("passed=")
-        )
-        assert part_dirs and set(part_dirs) <= {"passed=false", "passed=true"}
-
-        passed = read_annotated(spark, out)
-        failed = read_failed(spark, out)
-        assert passed.count() + failed.count() == 20
-        assert passed.schema["passed"].dataType.simpleString() == "boolean"
-        assert passed.filter(~F.col("passed")).count() == 0
-        # the outcome filter is satisfied by partition pruning, not a scan
-        plan = passed._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan
-
-    def test_null_passed_lands_in_failed_and_column_order_roundtrips(
-        self, spark, tmp_path
-    ):
-        """A null ``passed`` must NOT fall into passed=__HIVE_DEFAULT_PARTITION__
-        (invisible to both readers): it is coalesced to false at write time.
-        Read-back column order must match the written frame (partition
-        discovery appends the partition column last; the readers restore
-        the canonical position)."""
-        from sciencebeam_trainer_grobid_tools_spark.plans.pipeline import (
-            ANNOTATED_COLUMNS,
-            read_annotated,
-            read_failed,
-            write_outputs,
-        )
-
-        docs = corpus_dataframe(spark, 6, seed=13, partitions=2)
-        annotated = annotate_documents(docs, repartition=2)
-        assert list(annotated.columns) == list(ANNOTATED_COLUMNS)
-        with_null = annotated.withColumn(
-            "passed",
-            F.when(F.col("url").contains("0"), F.lit(None)).otherwise(
-                F.col("passed")
-            ),
-        )
-        n_nulled = with_null.filter(F.col("passed").isNull()).count()
-        assert n_nulled >= 1
-        out = str(tmp_path / "out_null")
-        write_outputs(with_null, out)
-        passed = read_annotated(spark, out)
-        failed = read_failed(spark, out)
-        # nothing silently dropped; nulls landed on the failed side
-        assert passed.count() + failed.count() == 6
-        assert failed.count() >= n_nulled
-        assert list(passed.columns) == list(ANNOTATED_COLUMNS)
-        assert list(failed.columns) == list(ANNOTATED_COLUMNS)
 
 
 class TestOversizedDocGuard:

@@ -103,48 +103,3 @@ class TestNormalize:
     def test_changed_flag_enables_sparse_rewrite(self, spark):
         out = textnorm.normalize_text(_df(spark, CASES))
         assert out.where(F.col("changed")).count() == 2
-
-
-class TestCompressionRatio:
-    def test_differential_vs_zlib(self, spark):
-        import zlib
-        from sciencebeam_trainer_grobid_tools_spark.operators.textnorm import (
-            compression_ratio,
-        )
-
-        texts = ["abc " * 200, "The quick brown fox jumps over the lazy dog.",
-                 "x", "", None]
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-        )
-        got = {r.doc_id: r.compression_ratio for r in compression_ratio(df).collect()}
-        for i, t in enumerate(texts):
-            if not t:
-                assert got[i] is None
-            else:
-                raw = t.encode("utf-8")
-                assert got[i] == round(len(zlib.compress(raw, 6)) / len(raw), 6)
-
-    def test_repetitive_text_compresses_below_prose(self, spark):
-        from sciencebeam_trainer_grobid_tools_spark.operators.textnorm import (
-            compression_ratio,
-        )
-
-        prose = (
-            "Different words appear rarely twice within genuinely varied "
-            "sentences about markets, rivers, telescopes and history."
-        )
-        df = spark.createDataFrame(
-            [(0, "spam " * 100), (1, prose * 5)], "doc_id long, text string"
-        )
-        got = {r.doc_id: r.compression_ratio for r in compression_ratio(df).collect()}
-        assert got[0] < got[1] < 1.0
-
-    def test_single_arrow_stage(self, spark):
-        from sciencebeam_trainer_grobid_tools_spark.operators.textnorm import (
-            compression_ratio,
-        )
-
-        df = spark.createDataFrame([(0, "abc")], "doc_id long, text string")
-        plan = compression_ratio(df)._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan and plan.count("MapInPandas") == 1

@@ -1,6 +1,6 @@
 """Trigram-profile language ID (operators/textstats.py): hand-computed
-counts, natural-language classification, expression-vs-table-path
-differential, deterministic tie-break, plan shape."""
+counts, natural-language classification, deterministic tie-break, plan
+shape."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -92,34 +92,3 @@ class TestTrigramLangId:
         )
         assert "Exchange" not in plan
         assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
-
-
-class TestTablePath:
-    def test_matches_expression_path_exactly(self, spark):
-        df = _df(spark)
-        scores = ts.trigram_lang_scores(F.col("text"))
-        expr_rows = {
-            r.doc_id: tuple(round(r["s_" + l], 9) for l in sorted(ts.TRIGRAM_PROFILES))
-            for r in df.select(
-                "doc_id", *(scores[l].alias("s_" + l) for l in sorted(scores))
-            ).collect()
-        }
-        tbl = ts.trigram_lang_features_table(df, ts.trigram_profile_table(spark))
-        tbl_rows = {
-            r.doc_id: tuple(
-                round(r["score_" + l], 9) for l in sorted(ts.TRIGRAM_PROFILES)
-            )
-            for r in tbl.collect()
-        }
-        assert expr_rows == tbl_rows
-
-    def test_profile_join_is_broadcast(self, spark):
-        plan = (
-            ts.trigram_lang_features_table(
-                _df(spark), ts.trigram_profile_table(spark)
-            )
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "BroadcastHashJoin" in plan

@@ -105,28 +105,6 @@ class TestFilterBlockedDomains:
         assert "EvalPython" not in plan
 
 
-class TestUrlBadwordScore:
-    def test_counts_terms(self, spark):
-        df = _urls(spark, ["http://x.com/free-CASINO-poker", "http://y.com/a"])
-        got = [
-            r["s"]
-            for r in df.orderBy("doc_id")
-            .select(
-                urlfilter.url_badword_score(
-                    F.col("url"), ["casino", "poker", "pills"]
-                ).alias("s")
-            )
-            .collect()
-        ]
-        assert got == [2, 0]
-
-    def test_empty_terms(self, spark):
-        df = _urls(spark, ["http://x.com/a"])
-        assert df.select(
-            urlfilter.url_badword_score(F.col("url"), []).alias("s")
-        ).collect()[0]["s"] == 0
-
-
 class TestHostSplit:
     def test_host_colocation_and_determinism(self, spark):
         urls = [

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sciencebeam_trainer_grobid_tools_spark.operators import urlnorm
+from sciencebeam_trainer_grobid_tools_spark.operators.htmlmeta import canonical_hint
 from sciencebeam_trainer_grobid_tools_spark.plans.session import build_session
 
 
@@ -54,6 +55,19 @@ CASES = [
 ]
 
 
+def _with_canonical_url(df, out_col="canonical_url"):
+    return df.withColumn(out_col, urlnorm.canonical_url(F.col("url")))
+
+
+def _nested_dedup_key(url, html):
+    """Row-wise spec of the hint-mode dedup key: the canonicalized
+    declared canonical when the page has one, else the canonical url."""
+    return F.coalesce(
+        F.nullif(urlnorm.canonical_url(canonical_hint(html)), F.lit("")),
+        urlnorm.canonical_url(url),
+    )
+
+
 class TestCanonicalUrl:
     def test_canonicalization_table(self, spark):
         df = spark.createDataFrame(
@@ -61,7 +75,7 @@ class TestCanonicalUrl:
         )
         got = {
             r["i"]: r["canonical_url"]
-            for r in urlnorm.with_canonical_url(df).collect()
+            for r in _with_canonical_url(df).collect()
         }
         for i, (raw, want) in enumerate(CASES):
             assert got[i] == want, "%r -> %r, want %r" % (raw, got[i], want)
@@ -81,7 +95,7 @@ class TestCanonicalUrl:
         df = spark.createDataFrame(
             [(i, r) for i, r in enumerate(raws)], "i int, url string"
         )
-        once = urlnorm.with_canonical_url(df, out_col="c1")
+        once = _with_canonical_url(df, out_col="c1")
         twice = once.withColumn("c2", urlnorm.canonical_url(F.col("c1")))
         for r in twice.collect():
             assert r["c1"] == r["c2"], (raws[r["i"]], r["c1"], r["c2"])
@@ -89,7 +103,7 @@ class TestCanonicalUrl:
     def test_is_pure_catalyst(self, spark):
         df = spark.createDataFrame([(1, "http://a.com/x")], "i int, url string")
         plan = (
-            urlnorm.with_canonical_url(df)
+            _with_canonical_url(df)
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "Python" not in plan and "Exchange" not in plan
@@ -186,16 +200,15 @@ class TestSnapshotDiff:
 
 
 class TestCanonicalDedupKey:
-    def _keys(self, spark, rows):
+    """The hint-mode key ``dedup_by_canonical_url(html_col=)`` groups on."""
+
+    def _keyed(self, spark, rows):
         df = spark.createDataFrame(rows, "url string, html string")
-        return [
-            r["k"]
-            for r in df.select(
-                urlnorm.canonical_dedup_key(
-                    F.col("url"), F.col("html")
-                ).alias("k")
-            ).collect()
-        ]
+        keyed, temps = urlnorm._with_staged_dedup_key(df, "url", "html", "k")
+        return keyed.drop(*temps)
+
+    def _keys(self, spark, rows):
+        return [r["k"] for r in self._keyed(spark, rows).collect()]
 
     def test_declared_canonical_wins_and_is_normalized(self, spark):
         keys = self._keys(
@@ -219,9 +232,8 @@ class TestCanonicalDedupKey:
         assert keys == ["http://site.com/b"]
 
     def test_pure_codegen(self, spark):
-        df = spark.createDataFrame([("u", "h")], "url string, html string")
         plan = (
-            df.select(urlnorm.canonical_dedup_key(F.col("url"), F.col("html")))
+            self._keyed(spark, [("u", "h")])
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -284,8 +296,7 @@ class TestStagedCanonicalKey:
         keyed, _ = urlnorm._with_staged_dedup_key(df, "url", "html", "k")
         bad = (
             keyed.withColumn(
-                "nested",
-                urlnorm.canonical_dedup_key(F.col("url"), F.col("html")),
+                "nested", _nested_dedup_key(F.col("url"), F.col("html"))
             )
             .filter(~F.col("k").eqNullSafe(F.col("nested")))
             .count()
@@ -298,7 +309,7 @@ class TestStagedCanonicalKey:
             "doc_id"
         ).collect()
         b = urlnorm.dedup_by_canonical_url(
-            df, key=urlnorm.canonical_dedup_key(F.col("url"), F.col("html"))
+            df, key=_nested_dedup_key(F.col("url"), F.col("html"))
         ).orderBy("doc_id").collect()
         assert a == b
         # schema unchanged: no staged temp columns leak

@@ -1,7 +1,6 @@
-"""WARC record building/parsing (sources/warc.py): builder parity,
-codegen-vs-stream differential, byte-unit Content-Length, the
-embedded-marker adversary that separates the two parsers, malformed
-framing degradation, and plan shape."""
+"""WARC record building/parsing (sources/warc.py): builder parity with a
+python spec of the record framing, parse round-trip, byte-unit
+Content-Length, the embedded-marker caveat, and plan shape."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,13 +20,26 @@ def spark():
 DATE = "2026-08-17T12:00:00Z"
 
 
+def _build_record(uri, date, payload, warc_type="response"):
+    """The WARC/1.0 record framing ``warc.warc_record_expr`` must emit:
+    version line, three headers, Content-Length in BYTES, blank line,
+    payload, closing CRLF CRLF."""
+    return (
+        "WARC/1.0\r\n"
+        + "WARC-Type: %s\r\n" % warc_type
+        + "WARC-Target-URI: %s\r\n" % uri
+        + "WARC-Date: %s\r\n" % date
+        + "Content-Length: %d\r\n\r\n" % len(payload.encode("utf-8"))
+    ) + payload + "\r\n\r\n"
+
+
 def _blob_df(spark, payloads):
     """One blob per payload list: each payload becomes one record."""
     rows = [
         (
             i,
             "".join(
-                warc.build_warc_record(
+                _build_record(
                     "https://example.org/%d/%d" % (i, j), DATE, p
                 )
                 for j, p in enumerate(ps)
@@ -54,82 +66,16 @@ class TestBuilder:
             "text",
         ).collect()
         for row in built:
-            assert row.rec == warc.build_warc_record(
+            assert row.rec == _build_record(
                 "https://e.org/%d" % row.doc_id, DATE, row.text
             )
 
-    def test_content_length_is_bytes_not_chars(self):
-        rec = warc.build_warc_record("u", DATE, "é")  # 1 char, 2 bytes
+    def test_content_length_is_bytes_not_chars(self, spark):
+        df = spark.createDataFrame([("é",)], "text string")  # 1 char, 2 bytes
+        rec = df.select(
+            warc.warc_record_expr(F.lit("u"), F.lit(DATE), F.col("text"))
+        ).collect()[0][0]
         assert "Content-Length: 2\r\n" in rec
-
-
-class TestStreamParser:
-    def test_round_trip_fields_and_payloads(self, spark):
-        df = _blob_df(spark, [["alpha beta", "gamma"], ["solo"]])
-        rows = warc.parse_warc_stream(df).orderBy("doc_id", "rec_index").collect()
-        assert [(r.doc_id, r.rec_index, r.payload, r.well_formed) for r in rows] == [
-            (0, 0, "alpha beta", True),
-            (0, 1, "gamma", True),
-            (1, 0, "solo", True),
-        ]
-        assert rows[0].target_uri == "https://example.org/0/0"
-        assert rows[0].warc_date == DATE
-        assert rows[0].content_length == 10
-
-    def test_multibyte_payload_slices_by_bytes(self, spark):
-        df = _blob_df(spark, [["café crème", "next"]])
-        rows = warc.parse_warc_stream(df).orderBy("rec_index").collect()
-        assert rows[0].payload == "café crème"
-        assert rows[0].content_length == 12  # 10 chars, 12 bytes
-        assert rows[1].payload == "next"
-        assert all(r.well_formed for r in rows)
-
-    def test_embedded_marker_payload_is_exact(self, spark):
-        # the adversary: a page QUOTING a WARC file — the version marker
-        # appears inside the payload at a record-boundary-looking spot
-        evil = "quoted dump:\r\n\r\nWARC/1.0\r\nWARC-Type: fake\r\n\r\nnot real"
-        df = _blob_df(spark, [[evil, "after"]])
-        rows = warc.parse_warc_stream(df).orderBy("rec_index").collect()
-        assert len(rows) == 2
-        assert rows[0].payload == evil
-        assert rows[1].payload == "after"
-        assert all(r.well_formed for r in rows)
-
-    def test_bad_content_length_degrades_and_resyncs(self, spark):
-        good = warc.build_warc_record("u1", DATE, "first")
-        broken = good.replace("Content-Length: 5", "Content-Length: 9999")
-        blob = broken + warc.build_warc_record("u2", DATE, "second")
-        df = spark.createDataFrame([(0, blob)], "doc_id long, warc string")
-        rows = warc.parse_warc_stream(df).orderBy("rec_index").collect()
-        assert [r.well_formed for r in rows] == [False, True]
-        assert rows[1].payload == "second"
-
-    def test_non_numeric_length_and_truncated_header(self, spark):
-        blob = "WARC/1.0\r\nWARC-Type: response\r\nContent-Length: xyz\r\n\r\nbody"
-        df = spark.createDataFrame([(0, blob)], "doc_id long, warc string")
-        rows = warc.parse_warc_stream(df).collect()
-        assert len(rows) == 1 and not rows[0].well_formed
-        blob2 = "WARC/1.0\r\nWARC-Type: response"  # no header terminator
-        df2 = spark.createDataFrame([(0, blob2)], "doc_id long, warc string")
-        rows2 = warc.parse_warc_stream(df2).collect()
-        assert len(rows2) == 1 and not rows2[0].well_formed
-
-    def test_id_type_derived_from_schema(self, spark):
-        df = spark.createDataFrame(
-            [("k1", warc.build_warc_record("u", DATE, "x"))],
-            "doc_id string, warc string",
-        )
-        out = warc.parse_warc_stream(df)
-        assert dict(out.dtypes)["doc_id"] == "string"
-        assert out.collect()[0].doc_id == "k1"
-
-    def test_single_arrow_stage_no_shuffle(self, spark):
-        df = _blob_df(spark, [["a"], ["b"]])
-        plan = (
-            warc.parse_warc_stream(df)._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "Exchange" not in plan
-        assert plan.count("MapInPandas") == 1
 
 
 class TestCodegenParser:
@@ -141,27 +87,28 @@ class TestCodegenParser:
             ).alias("rec_index", "rec"),
         ).select("doc_id", "rec_index", "rec.*")
 
-    def test_matches_stream_parser_on_well_formed_blobs(self, spark):
-        df = _blob_df(
-            spark,
-            [["alpha beta", "gamma delta"], ["one"], ["café", "", "tail"]],
-        )
-        cg = {
+    def test_round_trips_well_formed_blobs(self, spark):
+        payloads = [["alpha beta", "gamma delta"], ["one"], ["café", "", "tail"]]
+        df = _blob_df(spark, payloads)
+        got = {
             (r.doc_id, r.rec_index): (
-                r.warc_type, r.target_uri, r.warc_date, r.content_length, r.payload
+                r.warc_type, r.target_uri, r.warc_date, r.content_length,
+                r.payload, r.length_ok,
             )
             for r in self._parse_expr(df).collect()
         }
-        st = {
-            (r.doc_id, r.rec_index): (
-                r.warc_type, r.target_uri, r.warc_date, r.content_length, r.payload
+        want = {
+            (i, j): (
+                "response", "https://example.org/%d/%d" % (i, j), DATE,
+                len(p.encode("utf-8")), p, True,
             )
-            for r in warc.parse_warc_stream(df).collect()
+            for i, ps in enumerate(payloads)
+            for j, p in enumerate(ps)
         }
-        assert cg == st and len(cg) == 6
+        assert got == want
 
     def test_length_ok_flags_declared_vs_actual(self, spark):
-        good = warc.build_warc_record("u", DATE, "12345")
+        good = _build_record("u", DATE, "12345")
         tampered = good.replace("Content-Length: 5", "Content-Length: 4")
         df = spark.createDataFrame(
             [(0, good), (1, tampered)], "doc_id long, warc string"
@@ -171,35 +118,15 @@ class TestCodegenParser:
         assert rows[1].length_ok is False
 
     def test_embedded_marker_caveat_is_real(self, spark):
-        # pins the documented divergence: the split-based codegen parser
-        # over-splits on an embedded marker; the stream parser does not
+        # pins the documented caveat: the split-based codegen parser
+        # over-splits on an embedded marker, and every fragment says so
         evil = "quote:\r\n\r\nWARC/1.0\r\nWARC-Type: fake\r\n\r\nnot real"
         df = _blob_df(spark, [[evil]])
-        assert self._parse_expr(df).count() > 1
-        assert warc.parse_warc_stream(df).count() == 1
+        rows = self._parse_expr(df).collect()
+        assert len(rows) > 1
+        assert not any(r.length_ok for r in rows)
 
     def test_no_python_in_plan(self, spark):
         df = _blob_df(spark, [["a"]])
         plan = self._parse_expr(df)._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
-
-
-class TestLeadingDamage:
-    def test_blob_starting_mid_record_surfaces_placeholder(self, spark):
-        # a blob that begins mid-record (e.g. a range read landing inside a
-        # record) must NOT pretend everything parsed clean: the skipped
-        # leading bytes surface as a well_formed=False placeholder record
-        good = warc.build_warc_record("u2", DATE, "second")
-        blob = "trailing half of some earlier record\r\n\r\n" + good
-        df = spark.createDataFrame([(0, blob)], "doc_id long, warc string")
-        rows = warc.parse_warc_stream(df).orderBy("rec_index").collect()
-        assert [r.well_formed for r in rows] == [False, True]
-        assert rows[0].payload == "" and rows[0].warc_type == ""
-        assert rows[1].payload == "second"
-
-    def test_all_damage_blob_yields_one_placeholder(self, spark):
-        df = spark.createDataFrame(
-            [(0, "no markers anywhere")], "doc_id long, warc string"
-        )
-        rows = warc.parse_warc_stream(df).collect()
-        assert len(rows) == 1 and not rows[0].well_formed

@@ -33,9 +33,15 @@ def _rows(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _features(df):
+    """The Gopher ``g_*`` and C4 ``c4_*`` columns at the published
+    thresholds."""
+    return webfilters.web_filter_features(df, classifier=False)
+
+
 class TestGopher:
     def test_good_document_keeps(self, spark):
-        got = webfilters.gopher_quality_features(_rows(spark, [(1, GOOD)])).collect()[0]
+        got = _features(_rows(spark, [(1, GOOD)])).collect()[0]
         assert got["g_words"] == 55
         assert got["g_symbol_ratio"] == 0.0
         assert got["g_alpha_ratio"] == 1.0
@@ -43,7 +49,7 @@ class TestGopher:
         assert got["g_keep"] is True
 
     def test_word_count_band(self, spark):
-        got = webfilters.gopher_quality_features(
+        got = _features(
             _rows(spark, [(1, "too short to pass the fifty word minimum")])
         ).collect()[0]
         assert got["g_words"] == 8
@@ -51,7 +57,7 @@ class TestGopher:
 
     def test_symbol_ratio_counts_hashes_and_ellipses(self, spark):
         # 5 words; '#' + '##' (two matches) + '...' = 4 symbol hits
-        got = webfilters.gopher_quality_features(
+        got = _features(
             _rows(spark, [(1, "alpha # beta ## more...")])
         ).collect()[0]
         assert got["g_symbol_ratio"] == round(4 / 5, 6)
@@ -59,19 +65,19 @@ class TestGopher:
 
     def test_bullet_and_ellipsis_line_ratios(self, spark):
         text = "- first bullet\n* second bullet\nplain line\ntrailing thought..."
-        got = webfilters.gopher_quality_features(_rows(spark, [(1, text)])).collect()[0]
+        got = _features(_rows(spark, [(1, text)])).collect()[0]
         assert got["g_bullet_ratio"] == 0.5
         assert got["g_ellipsis_ratio"] == 0.25
 
     def test_alpha_ratio_and_stopwords(self, spark):
-        got = webfilters.gopher_quality_features(
+        got = _features(
             _rows(spark, [(1, "123 456 789 word")])
         ).collect()[0]
         assert got["g_alpha_ratio"] == 0.25
         assert got["g_stopword_hits"] == 0
 
     def test_empty_document_no_divide_by_zero(self, spark):
-        got = webfilters.gopher_quality_features(_rows(spark, [(1, "")])).collect()[0]
+        got = _features(_rows(spark, [(1, "")])).collect()[0]
         assert got["g_words"] == 0
         assert got["g_mean_word_len"] == 0.0
         assert got["g_keep"] is False
@@ -79,11 +85,9 @@ class TestGopher:
     def test_rethresholding_uses_emitted_columns(self, spark):
         """Thresholds compare the ROUNDED emitted statistics (documented):
         loosening min_words re-admits the short doc."""
-        got = webfilters.gopher_quality_features(
-            _rows(spark, [(1, "five of the and that have words with be to")]),
-            min_words=5,
-        ).collect()[0]
-        assert got["g_keep"] is True
+        df = _rows(spark, [(1, "five of the and that have words with be to")])
+        assert _features(df).collect()[0]["g_keep"] is False
+        assert webfilters.gopher_filter(df, min_words=5).count() == 1
 
 
 class TestC4Clean:
@@ -97,7 +101,7 @@ class TestC4Clean:
     )
 
     def test_line_rules(self, spark):
-        got = webfilters.c4_clean(_rows(spark, [(1, self.TEXT)])).collect()[0]
+        got = _features(_rows(spark, [(1, self.TEXT)])).collect()[0]
         assert got["c4_total_lines"] == 6
         # kept: line 1, quoted line, final line
         assert got["c4_kept_lines"] == 3
@@ -112,14 +116,14 @@ class TestC4Clean:
             (3, self.TEXT.replace("proper", "Lorem Ipsum filler")),  # lorem
             (4, "One sentence only here and it is long enough."),  # < 3 sentences
         ]
-        got = {r["doc_id"]: r for r in webfilters.c4_clean(_rows(spark, rows)).collect()}
+        got = {r["doc_id"]: r for r in _features(_rows(spark, rows)).collect()}
         assert got[1]["c4_keep"] is True
         assert got[2]["c4_has_brace"] is True and got[2]["c4_keep"] is False
         assert got[3]["c4_has_lorem"] is True and got[3]["c4_keep"] is False
         assert got[4]["c4_sentences"] == 1 and got[4]["c4_keep"] is False
 
     def test_no_surviving_lines_yields_empty_string_not_null(self, spark):
-        got = webfilters.c4_clean(_rows(spark, [(1, "tiny.\nno")])).collect()[0]
+        got = _features(_rows(spark, [(1, "tiny.\nno")])).collect()[0]
         assert got["c4_kept_lines"] == 0
         assert got["clean_text"] == ""
         assert got["c4_keep"] is False
@@ -180,9 +184,9 @@ class TestHashedClassifier:
         assert "EvalPython" not in plan
 
     def test_gopher_c4_zero_shuffle(self, spark):
-        """Gopher + C4 are per-row projections: no Exchange in either plan."""
+        """Gopher + C4 are per-row filters: no Exchange in either plan."""
         df = _rows(spark, [(1, GOOD)])
-        for fn in (webfilters.gopher_quality_features, webfilters.c4_clean):
+        for fn in (webfilters.gopher_filter, webfilters.c4_filter):
             plan = fn(df)._jdf.queryExecution().executedPlan().toString()
             assert "Exchange" not in plan, fn.__name__
 
@@ -191,14 +195,18 @@ class TestWebFilterFeatures:
     def test_matches_individual_operators(self, spark):
         df = _rows(spark, [(1, "The quick brown fox runs to the barn."), (2, "")])
         combo = {r["doc_id"]: r for r in webfilters.web_filter_features(df).collect()}
-        g = {r["doc_id"]: r for r in webfilters.gopher_quality_features(df).collect()}
-        c4 = {r["doc_id"]: r for r in webfilters.c4_clean(df).collect()}
+        rules = {r["doc_id"]: r for r in _features(df).collect()}
+        g_kept = {r["doc_id"] for r in webfilters.gopher_filter(df).collect()}
+        c4_kept = {r["doc_id"]: r["text"] for r in webfilters.c4_filter(df).collect()}
         clf = {r["doc_id"]: r for r in webfilters.hashed_classifier_score(df).collect()}
         for i in (1, 2):
-            for col in ("g_words", "g_mean_word_len", "g_keep"):
-                assert combo[i][col] == g[i][col], (i, col)
-            for col in ("c4_kept_lines", "c4_sentences", "c4_keep", "clean_text"):
-                assert combo[i][col] == c4[i][col], (i, col)
+            for col in ("g_words", "g_mean_word_len", "g_keep", "c4_kept_lines",
+                        "c4_sentences", "c4_keep", "clean_text"):
+                assert combo[i][col] == rules[i][col], (i, col)
+            assert combo[i]["g_keep"] == (i in g_kept), i
+            assert combo[i]["c4_keep"] == (i in c4_kept), i
+            if i in c4_kept:
+                assert combo[i]["clean_text"] == c4_kept[i], i
         assert combo[1]["clf_score"] == clf[1]["clf_score"]
         assert combo[2]["clf_score"] is None  # zero-token: LEFT join null
 
